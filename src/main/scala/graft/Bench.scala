@@ -1,43 +1,35 @@
 package graft
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
+/** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR with
+  * the [[Profile]] protocol (a cold rep, then the min of 2 warm reps) and
   * prints one JSON line `{"metric":"total","value":…,"queries":{…}}`.
   *
-  * Each query runs twice: a cold pass (parquet footers, codegen JIT,
-  * persist() cache fill) and a warm pass. The headline `value`/`queries`
-  * are the WARM timings — they measure the plan, not one-time cache fill
-  * — with the cold total reported alongside as `total_cold` so regressions
-  * in either are attributable round over round.
+  * The headline `value`/`queries` are the WARM-min timings — they measure
+  * the plan, not one-time cache fill — with the cold total alongside as
+  * `total_cold`. Stdout carries only the [[headline]] subset (the line
+  * must fit a ~2 KB tail capture); `bench_full.json` in the working
+  * directory gets every query's warm-min (`queries`), cold, warm spread
+  * and task seconds, plus `warm_shares_cache`: the queries whose warm
+  * reps ran against intermediates an earlier rep persisted (their
+  * standalone cost is the cold column). Failures are LOUD — a query that
+  * throws gets an entry in `errors` and -1 timings.
   *
-  * Output discipline: the capture window on the driver side is tail-limited
-  * (~2 KB — round 4's 108-entry per-query map overflowed it and the round
-  * recorded `parsed: null`), so the final stdout line carries only a fixed
-  * HEADLINE subset of per-query timings plus suite totals, and the full
-  * per-query warm/cold detail is written to `bench_full.json` in the
-  * working directory. Failures are LOUD — a query that throws contributes
-  * an entry to `"errors"` (control characters stripped so the line stays
-  * parseable JSON) and a -1 timing instead of a silent wall-time.
+  * Calibration: q01 is re-timed cold at the start, middle and end of the
+  * suite, so ambient host load is measured inside the run; compare runs
+  * as row/calibration ratios. Wall budget: GRAFT_BENCH_WALL_BUDGET_SEC
+  * (default 2900 s); once 75 % of it is spent, the remaining queries run
+  * their cold rep only (listed in `degraded_single_rep`), so a slow host
+  * yields a degraded artifact instead of a killed run.
   */
 object Bench {
 
-  /** Representative queries for the compact headline line: one per engine
-    * family (TPC-H-ish agg/join, time-series resample/window, TA
-    * recurrences, dedup/LSH/kNN, flagship search, packing, streaming,
-    * multimodal). The full suite is still timed; see bench_full.json.
+  /** Queries on the compact stdout line: the heavy rows plus one
+    * representative per operator family (TPC-H-ish agg/join, time-series,
+    * TA recurrences, dedup/LSH/kNN, flagship search, packing, streaming,
+    * multimodal, classifier, manifests). Every query is still timed; see
+    * bench_full.json.
     */
-  private val headline = Seq(
-    // Trimmed to one entry per operator family (round 9, re-trimmed
-    // round 12, re-trimmed HARD round 15: the r14 driver line outgrew
-    // the ~2 KB tail capture and the round recorded `parsed: null` —
-    // the round-4 failure mode recurring. 55 entries + the calibration
-    // and evidence fields was too much; the list is now the heavy rows
-    // plus one representative per family, ~0.9 KB, leaving room for the
-    // extended q204 per-rep evidence). Dropped names (r15: q23/q28/q49/
-    // q52/q60/q75/q99/q105/q111/q116/q127/q131/q142/q152/q157/q168/
-    // q170/q174/q196/q199/q212/q213/q215/q219/q222/q223/q261/q262/q269
-    // — every one sub-second or family-represented) keep their full
-    // per-round numbers in bench_full_r{N}.json, which is now ALWAYS
-    // written and committed.
+  private[graft] val headline = Seq(
     "q01_pricing_summary", "q06_broadcast_join",
     "q27_ema", "q42_ngram_jaccard", "q61_flagship_cosine",
     "q101_flagship_lsh", "q103_stream_upsert", "q107_dedup_clusters",
@@ -49,490 +41,72 @@ object Bench {
     "q240_dup_prevalence_banded", "q256_simhash_banded",
     "q259_jaccard_pairs_banded", "q260_bpe_phrase_1k",
     "q263_kmeans_lloyd", "q270_dedup_keep_best", "q273_dedup_lm_eval",
-    // Round-15 family representatives: image perceptual-hash dedup,
-    // learned quality classifier, streaming selection gate.
     "q285_image_phash_pairs", "q287_quality_classifier",
     "q289_stream_quality_gate",
-    // Round-16 family representatives: cross-modal release manifest,
-    // video fingerprint tier, dedup policy audit.
     "q293_release_manifest_multimodal", "q294_video_phash_pairs",
     "q296_dedup_policy_audit",
-    // Round-17 family representatives: on-arrival media dedup gate,
-    // manifest-vs-audit policy check.
     "q298_stream_media_gate", "q299_policy_manifest_check")
 
-  private def sanitize(s: String): String =
-    String.valueOf(s).replaceAll("[\\p{Cntrl}]", " ")
-      .replace("\\", "\\\\").replace("\"", "'").take(120)
-
-  /** Round tag for the always-written versioned artifact (round-14
-    * verdict #4: the env-var opt-in copy left the driver host clobbering
-    * the committed artifact — the versioned write must be unconditional).
-    * Overridable via GRAFT_BENCH_ROUND, and [[writeVersioned]] backs up
-    * a pre-existing DIFFERENT r{N} file to `.prev.json` before
-    * overwriting (round-15 ADVICE: a stale constant must not silently
-    * clobber a committed artifact — nothing is ever lost even if the
-    * fallback isn't bumped next round).
-    */
-  private val BenchRound =
-    sys.env.get("GRAFT_BENCH_ROUND").flatMap(_.toIntOption).getOrElse(18)
-
-  /** Wall budget for the WHOLE bench run (round-16 verdict #2: the r16
-    * driver run was killed at its harness timeout — rc=124, no summary
-    * line, the round's primary perf artifact lost). Every optional
-    * instrument (warm revisit, cold revisit, stage profiles) checks the
-    * remaining budget before each rep and SKIPS — loudly, into the
-    * artifact's *_skipped fields — rather than running the suite into
-    * the kill. The default leaves headroom under the harness's ~1h
-    * budget for sbt startup + session init before main() and the
-    * artifact write after.
-    */
   private val WallBudgetSec =
     sys.env.get("GRAFT_BENCH_WALL_BUDGET_SEC").flatMap(_.toIntOption)
       .getOrElse(2900)
 
-  private def writeVersioned(path: java.nio.file.Path, content: String): Unit = {
-    if (java.nio.file.Files.exists(path) &&
-        java.nio.file.Files.readString(path) != content) {
-      val bak = path.resolveSibling(
-        path.getFileName.toString.stripSuffix(".json") + ".prev.json")
-      java.nio.file.Files.copy(path, bak,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      System.err.println(s"[bench] NOTE: $path existed with different " +
-        s"content — preserved as $bak before overwriting")
-    }
-    java.nio.file.Files.writeString(path, content)
-  }
+  private val WarmReps = 2
 
   def main(args: Array[String]): Unit = {
     val wallT0 = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - wallT0) / 1e9
-    def remainingSec: Double = WallBudgetSec - elapsedSec
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = Profile.sfDir
     val spark = Session.get()
     val counters = new TaskCounters
     spark.sparkContext.addSparkListener(counters)
-    // Warm the JVM/session once so even "cold" timings measure the query,
-    // not first-ever class loading.
-    SparkEntry.queries.get("q01_pricing_summary")
-      .foreach(fn => fn(spark, sfDir).count())
-    def time(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, String) = {
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        ((System.nanoTime() - t0) / 1e9, null)
-      } catch {
-        case e: Throwable =>
-          (-1.0, sanitize(e.getClass.getSimpleName + ": " + e.getMessage))
-      }
-    }
-    // q204 rep timing (round-14 verdict #1): identical wall measurement
-    // to time(), plus action-side evidence completion — the search wall
-    // and the task-counter deltas for the WHOLE rep (listener bus
-    // drained on both edges so the deltas cover exactly this rep's
-    // tasks). Wall ≫ Δtask-run-time fingerprints a driver-side
-    // single-thread stall; Δtask-time tracking wall fingerprints a
-    // genuinely slower distributed stage.
-    def timeQ204(): (Double, String) = {
-      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-      val before = counters.snapshot()
-      val t0 = System.nanoTime()
-      try {
-        val df = ExtraQueries.q204Pipeline(spark, sfDir)
-        val tS = System.nanoTime()
-        df.count()
-        val tEnd = System.nanoTime()
-        org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-        val dl = counters.snapshot().minus(before)
-        ExtraQueries.Q204Evidence.completeLast((tEnd - t0) / 1e9,
-          (tEnd - tS) / 1e9, dl.runMs, dl.gcMs, dl.schedDelayMs, dl.tasks)
-        ((tEnd - t0) / 1e9, null)
-      } catch {
-        case e: Throwable =>
-          (-1.0, sanitize(e.getClass.getSimpleName + ": " + e.getMessage))
-      }
-    }
-    // ONE warm rep per query (round-16 verdict #2: the suite outgrew the
-    // driver's wall budget and the round lost its primary artifact — the
-    // second warm rep was ~335 s of the overrun). The min-of-2 discipline
-    // the second rep provided is preserved WHERE IT MATTERS by the
-    // end-of-suite revisit pass: every row whose single warm rep reads
-    // > 1 s, drifted round-over-round, or read WORSE than its own cold
-    // rep (a stall fingerprint — warm ≤ cold on a healthy row) is
-    // re-timed minutes later and keeps the min. Sub-second rows ride the
-    // drift trigger. Methodology disclosed in the artifact ("warm_reps").
-    // Between queries, drop any cached/localCheckpointed RDD blocks a
-    // query left behind (ContextCleaner reclaims them asynchronously —
-    // too late for the NEXT query's timing, which then runs under memory
-    // pressure it didn't create).
-    def dropLeakedBlocks(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
-    }
-    // Self-normalizing calibration (round-13 verdict #2): the SAME pinned
-    // query (q01) re-timed at the start, middle, and end of the suite,
-    // emitted in the artifact — so ambient host elevation (the uniform
-    // ~1.1× driver-vs-local per-row ratio argued in prose every round) is
-    // measured INSIDE the run. Compare rounds as row/calibration ratios.
-    def calibRep(): Double = {
-      val (t, _) = time(SparkEntry.queries("q01_pricing_summary"))
-      dropLeakedBlocks()
-      t
-    }
-    ExtraQueries.Q204Evidence.clear() // artifact reflects THIS run only
+    Profile.warmUp(spark, sfDir)
+    def calibRep(): Double = Profile.measure(spark, counters, sfDir,
+      "q01_pricing_summary", SparkEntry.queries("q01_pricing_summary"),
+      warmReps = 0).coldS
     val calibStart = calibRep()
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
     var calibMid = -1.0
-    // Backstop inside the main pass itself: if the budget is nearly gone
-    // mid-pass (a pathological host), remaining queries run ONE rep
-    // (cold == warm, flagged in `degraded_single_rep`) — a degraded
-    // number in the artifact beats rc=124 losing the whole run.
     val degraded = scala.collection.mutable.ArrayBuffer[String]()
-    val firstPass = names.zipWithIndex.map { case ((name, fn), i) =>
+    val results = names.zipWithIndex.map { case ((name, fn), i) =>
       if (i == names.size / 2) calibMid = calibRep()
-      val tm: () => (Double, String) =
-        if (name == "q204_flagship_pca") () => timeQ204() else () => time(fn)
-      val (cold, coldErr) = tm()
-      val (warm, err) =
-        if (remainingSec < 0.25 * WallBudgetSec) { degraded += name; (cold, coldErr) }
-        else tm()
-      // Honest-numbers flag: a query that leaves persisted RDD blocks
-      // behind ran its warm rep against intermediates the cold rep
-      // materialized — its warm time measures the plan WITH a hot cache
-      // and understates standalone cost (q102: 1.9 s here vs 15.7 s with
-      // the persist refilled per rep, SCALING.md). The cache is still
-      // dropped between queries, so nothing leaks across queries; the
-      // flag marks which warm numbers carry the intra-query cache.
-      val cached = spark.sparkContext.getPersistentRDDs.nonEmpty
-      dropLeakedBlocks()
-      (name, cold, warm, err, cached)
+      val reps =
+        if (elapsedSec > 0.75 * WallBudgetSec) { degraded += name; 0 }
+        else WarmReps
+      Profile.measure(spark, counters, sfDir, name, fn, reps)
     }
-    // Revisit pass: the shared box stalls for multi-second stretches that
-    // poison whatever happened to be executing (measured: the same query
-    // 12.6 s in one run, 0.34 s in the next — BOTH its warm reps sat in
-    // one stall window because they run back-to-back). Stalls are
-    // transient, so re-timing the most expensive rows once more at the
-    // END of the suite — minutes later — recovers the plan's actual cost;
-    // a genuinely expensive query re-measures the same and keeps its
-    // number. METHODOLOGY (disclosed in the artifact): a revisited row's
-    // warm number is min-of-up-to-3 reps while everything else is
-    // min-of-2 — `revisit_first` records each revisited row's pre-revisit
-    // warm alongside, so round-over-round comparisons can be made
-    // like-for-like from the artifact alone.
-    // Threshold 1.0 s (was 2.0): the round-9 driver run had q61 poisoned
-    // at 1.36 s warm — real stall-affected rows sit below 2 s too, and a
-    // revisit rep costs about what the row itself does.
-    //
-    // Round-over-round DELTA trigger (round-10 verdict #2): the absolute
-    // threshold misses drift on sub-1 s rows — q206 drifted +0.69 s and
-    // q42 +0.25 s between driver rounds with neither plan touched, and
-    // nothing re-timed them. Read the PREVIOUS round's committed
-    // bench_full.json (this file is overwritten only at the END of the
-    // run, so at this point it still holds last round's numbers) and
-    // also revisit any row that regressed ≥ 0.25 s AND ≥ 25% against its
-    // prior warm value — a stall-poisoned row recovers its real number,
-    // a genuine regression re-measures the same and stays LOUD in the
-    // artifact's `revisited`/`revisit_first` fields.
-    // The regex only matches this file's own single-line serialization; a
-    // reformatted/foreign bench_full.json would silently disable drift
-    // detection (the exact failure mode the trigger exists to catch), so
-    // an empty parse WITH the file present is logged LOUDLY to stderr —
-    // stderr so the driver's stdout tail capture stays pure JSON.
-    val priorWarm: Map[String, Double] = try {
-      val p = java.nio.file.Paths.get("bench_full.json")
-      if (java.nio.file.Files.exists(p)) {
-        val txt = java.nio.file.Files.readString(p)
-        val qobj = """"queries":\{(.*?)\}""".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        val parsed = """"([^"]+)":(-?\d+(?:\.\d+)?)""".r.findAllMatchIn(qobj)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        if (parsed.isEmpty) System.err.println(
-          "[bench] WARNING: bench_full.json exists but no prior warm " +
-            "timings parsed — round-over-round drift detection is OFF " +
-            "this run (file reformatted?)")
-        parsed
-      } else Map.empty
-    } catch {
-      case e: Throwable =>
-        System.err.println("[bench] WARNING: failed reading prior " +
-          s"bench_full.json (${e.getClass.getSimpleName}) — drift " +
-          "detection is OFF this run")
-        Map.empty
-    }
-    val drifted = firstPass.filter { r =>
-      r._4 == null && priorWarm.get(r._1).exists(prev =>
-        prev > 0 && r._3 >= prev + 0.25 && r._3 >= prev * 1.25)
-    }.map(_._1).toSet
-    // Stall fingerprint: on a healthy row warm ≤ cold (same plan, hot
-    // JIT/footers). A single warm rep that reads WORSE than its own cold
-    // sat in a host stall — re-time it. Matters more now that warm is
-    // one rep (see above).
-    val stallFlagged = firstPass.filter { r =>
-      r._4 == null && r._2 > 0 &&
-        r._3 >= r._2 + 0.25 && r._3 >= r._2 * 1.25
-    }.map(_._1).toSet
-    // Time-boxed (round-16 verdict #2): candidates run costliest-first
-    // and the pass stops when the remaining wall budget must be kept for
-    // the cold pass + profiles (~420 s reserve); whatever didn't run is
-    // recorded in `revisit_skipped` — no silent caps.
-    val revisitCandidates = (firstPass.filter(r => r._4 == null && r._3 > 1.0)
-      .map(_._1).toSet ++ drifted ++ stallFlagged).toSeq
-      .sortBy(n => -firstPass.find(_._1 == n).map(_._3).getOrElse(0.0))
-    val revisitSkipped = scala.collection.mutable.ArrayBuffer[String]()
-    val revisited: Map[String, Double] = revisitCandidates.flatMap { name =>
-      if (remainingSec < 420) { revisitSkipped += name; None }
-      else {
-        val (t, err) = if (name == "q204_flagship_pca") timeQ204()
-          else time(SparkEntry.queries(name))
-        dropLeakedBlocks()
-        Some(name -> (if (err == null) t else -1.0))
-      }
-    }.toMap
-    val revisitNames = revisited.keySet
-    val revisitFirst: Map[String, Double] = firstPass
-      .filter(r => revisitNames(r._1)).map(r => r._1 -> r._3).toMap
-    val results = firstPass.map { case (name, cold, warm, err, cached) =>
-      revisited.get(name) match {
-        case Some(t) if t > 0 && t < warm => (name, cold, t, err, cached)
-        case _ => (name, cold, warm, err, cached)
-      }
-    }
-    // q204 stage profile (round-8 verdict #1: the driver bench measured
-    // q204 at 36.4 s warm vs a 2.9 s local minimum — unexplained, 17% of
-    // the warm total). Re-run q204 once AFTER the suite with per-stage
-    // wall-times (users_count / fit / artifact / search) so a driver-env
-    // outlier is attributable to a NAMED stage from the artifact alone,
-    // plus the JVM's resolved BLAS/LAPACK implementations — an f2j/Java
-    // fallback where the builder box has native BLAS is the prime
-    // suspect for a persistent environmental constant in the MLlib fit.
-    val profilesSkipped = scala.collection.mutable.ArrayBuffer[String]()
-    val q204Stages = scala.collection.mutable.LinkedHashMap[String, Double]()
-    if (remainingSec < 300) { profilesSkipped += "q204_stages" } else try {
-      // Run the profile in the SAME memory regime as the suite's own
-      // cold rep (round-15 verdict #1: the r15 profile rep fired with
-      // warm cache entries resident and read 25× task-CPU inflation —
-      // an incomparable regime): drop every persisted/cached block the
-      // suite left, give the ContextCleaner a GC cycle to reclaim
-      // localCheckpoint blocks, and only then fit. The evidence record
-      // itself now carries storage-occupancy + host-headroom at entry.
-      dropLeakedBlocks()
-      System.gc(); Thread.sleep(1000)
-      // Clear the fit-artifact cache: the suite's q204 rows measure
-      // the registered artifact-REUSE semantics (fit once per dataset,
-      // then search-only — round-10 verdict #3), so this profile is the
-      // one place a true refit's stage costs stay observable.
-      ExtraQueries.FitArtifacts.clear()
-      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-      val before = counters.snapshot()
-      val tRep0 = System.nanoTime()
-      val df = ExtraQueries.q204Pipeline(spark, sfDir, q204Stages)
-      val t0 = System.nanoTime()
-      df.count()
-      val tEnd = System.nanoTime()
-      q204Stages("search") = (tEnd - t0) / 1e9
-      org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-      val dl = counters.snapshot().minus(before)
-      ExtraQueries.Q204Evidence.completeLast((tEnd - tRep0) / 1e9,
-        (tEnd - t0) / 1e9, dl.runMs, dl.gcMs, dl.schedDelayMs, dl.tasks)
-    } catch { case _: Throwable => q204Stages("profile_error") = -1.0 }
-    dropLeakedBlocks()
-    // q61 stage profile (round-9 verdict #2: the driver read q61 at
-    // 30.21 s cold / 1.36 s warm vs 7.0/0.8 local — a stall row, since
-    // the plan is metric-symmetric with q60 and no r9 commit touched it).
-    // Standalone post-suite regime like q204_stages: windows build+count,
-    // cosine top-k, forecast+score (score recomputes top-k — unpersisted
-    // inside the registered plan too, so the row mirrors the real cost).
-    val q61Stages = scala.collection.mutable.LinkedHashMap[String, Double]()
-    if (remainingSec < 240) { profilesSkipped += "q61_stages" } else try {
-      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      def tSec[A](f: => A): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      val wins = Flagship.embeddedWindows(Flagship.filledSeries(spark, sfDir),
-        ExtraQueries.FlagSeqLen, ExtraQueries.FlagDim, None).persist(lvl)
-      var nWins = 0L
-      q61Stages("windows") = tSec { nWins = wins.count() }
-      val top = graft.ohlcv.Forecast.evaluate(wins, "user_id",
-        ExtraQueries.FlagSeqLen, ExtraQueries.FlagPred, ExtraQueries.FlagStride,
-        2, "cosine_dist",
-        queryCountHint = Some(nWins / ExtraQueries.FlagStride + 1024))
-      q61Stages("topk") = tSec(top.count())
-      q61Stages("score") = tSec(graft.ohlcv.Forecast
-        .forecastAndScore(top, wins, "user_id",
-          ExtraQueries.FlagSeqLen, ExtraQueries.FlagPred,
-          broadcastTop = (nWins / ExtraQueries.FlagStride + 1024) <= (1L << 18))
-        .count())
-    } catch { case _: Throwable => q61Stages("profile_error") = -1.0 }
-    dropLeakedBlocks()
     val calibEnd = calibRep()
-    // ---------------------------------------------------------------
-    // COLD revisit pass (round-15 verdict #1): the warm path has had a
-    // revisit + calibration instrument since round 10; the cold path had
-    // NONE, so a driver cold total of 1136 s vs 541 s local could not be
-    // separated from host noise by artifact alone (r15: seven rows
-    // absorbed ~580 s of bursts — q269 read 306 s against 3.7 s local).
-    // At suite end, re-measure COLD — fresh session, shared caches
-    // dropped, per-(dataset,params) fit artifacts cleared before EVERY
-    // rep so refits are true refits — (a) the worst cold rows and (b)
-    // every row whose cold reading exceeds 5× its counterpart in the
-    // committed local artifact (bench_local_r{N}.json), bracketed by a
-    // cold q01 calibration pair. A stall-poisoned row recovers its real
-    // number; a genuine regression re-measures the same and stays loud.
-    // ---------------------------------------------------------------
-    val localCold: (String, Map[String, Double]) = try {
-      val fs = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("bench_local_r\\d+\\.json"))
-      if (fs.isEmpty) ("none", Map.empty[String, Double])
-      else {
-        val f = fs.maxBy(x => "\\d+".r.findFirstIn(x.getName).get.toInt)
-        val txt = java.nio.file.Files.readString(f.toPath)
-        val cobj = """"cold":\{(.*?)\}""".r
-          .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-        val parsed = """"([^"]+)":(-?\d+(?:\.\d+)?)""".r.findAllMatchIn(cobj)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        // Loud on format drift (round-16 ADVICE low): an empty parse with
-        // the file PRESENT silently turns the >5× cold-outlier trigger
-        // into a no-op — exactly the regression this filter exists to
-        // catch. stderr so the stdout tail capture stays pure JSON.
-        if (parsed.isEmpty) System.err.println(
-          s"[bench] NOTE: ${f.getName} exists but no cold timings " +
-            "parsed — the >5x cold-outlier revisit trigger is OFF this " +
-            "run (file reformatted?)")
-        (f.getName, parsed)
-      }
-    } catch { case _: Throwable => ("unreadable", Map.empty[String, Double]) }
-    def clearFitCaches(): Unit = {
-      ExtraQueries.FitArtifacts.clear()
-      ExtraQueries.PcaFit.clear()
-      ClassifierQueries.ClfFit.clear()
-      TuningQueries.LloydFit.clear()
-      TuningQueries.DoremiFit.clear()
-      ForecastQueries.CohortFit.clear()
-    }
-    val coldSession = spark.newSession()
-    def coldRep(name: String): Double = {
-      dropLeakedBlocks()
-      clearFitCaches()
-      val t0 = System.nanoTime()
-      try {
-        SparkEntry.queries(name)(coldSession, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case _: Throwable => -1.0 }
-    }
-    val coldCalibBefore = coldRep("q01_pricing_summary")
-    val okRows = results.filter(_._4 == null)
-    val worstCold = okRows.sortBy(-_._2).take(5).map(_._1)
-    val coldOver5x = okRows.filter { r =>
-      r._2 >= 1.0 && localCold._2.get(r._1).exists(lc => lc > 0 && r._2 > 5 * lc)
-    }.map(_._1)
-    // Time-boxed like the warm revisit (round-16 verdict #2: this pass's
-    // unguarded ~16 cold re-runs were part of the r16 overrun): each rep
-    // checks the remaining wall budget (reserve: closing calibration +
-    // artifact write) and skips the rest loudly into
-    // `cold_revisit_skipped`.
-    val coldRevisitCandidates = (worstCold ++ coldOver5x).distinct.take(16)
-    val coldRevisitSkipped = scala.collection.mutable.ArrayBuffer[String]()
-    val coldRevisitNames = scala.collection.mutable.ArrayBuffer[String]()
-    val coldRevisited: Seq[(String, Double)] = coldRevisitCandidates.flatMap { n =>
-      if (remainingSec < 120) { coldRevisitSkipped += n; None }
-      else { coldRevisitNames += n; Some(n -> coldRep(n)) }
-    }
-    val coldCalibAfter = coldRep("q01_pricing_summary")
-    dropLeakedBlocks()
-    val coldFirst: Map[String, Double] =
-      okRows.filter(r => coldRevisitNames.contains(r._1))
-        .map(r => r._1 -> r._2).toMap
-    // q204 per-rep evidence (round-13 verdict #1): one record per
-    // q204Pipeline invocation this run, in order — the suite's
-    // cold/warm1/warm2 reps, any revisit, then the post-suite refit
-    // profile. `cached=1` means the rep reused the fit artifact;
-    // `persisted` is the resident block count at rep entry; `hash` is
-    // the fit-matrix fingerprint (drift across reps = plan-identity
-    // instability, the round-9 failure mode).
-    val q204Ev = ExtraQueries.Q204Evidence.snapshot()
-    val q204EvJson = q204Ev.map { r =>
-      val sw = r.stageWalls
-        .map { case (k, v) => "\"" + k + "\":" + f"$v%.2f" }
-        .mkString("{", ",", "}")
-      // Action-side fields exist only for reps Bench itself completed.
-      val act = if (r.wall < 0) "" else
-        s""","wall":${f"${r.wall}%.2f"},"search":${f"${r.searchWall}%.2f"},"task_run_ms":${r.taskRunMs},"task_gc_ms":${r.taskGcMs},"task_sched_ms":${r.taskSchedDelayMs},"tasks":${r.tasks}"""
-      s"""{"cached":${if (r.fitCached) 1 else 0},"persisted":${r.persistedAtEntry},"storage_mb":${r.storageUsedMb},"host_avail_mb":${r.hostAvailMb},"hash":"${r.fitHash}","stages":$sw$act}"""
-    }.mkString("[", ",", "]")
-    val q204FitDrift = if (q204Ev.map(_.fitHash).distinct.size > 1) 1 else 0
-    def implName(f: => Any): String =
-      try f.getClass.getSimpleName catch { case _: Throwable => "unavailable" }
-    val blas = implName(dev.ludovic.netlib.blas.BLAS.getInstance())
-    val lapack = implName(dev.ludovic.netlib.lapack.LAPACK.getInstance())
+
     def r2(v: Double): String = f"$v%.2f"
     def jmap(xs: Seq[(String, String)]): String =
       xs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val ok = results.filter(_._4 == null)
-    val warmTotal = ok.map(_._3).sum
-    val coldTotal = ok.map(_._2).sum
-    // Cold total with each revisited row's CLEANER reading substituted —
-    // the burst-corrected suite number, alongside the raw total so both
-    // survive in the artifact (methodology disclosed like revisit_first).
-    val coldRevisitMap = coldRevisited.toMap
-    val coldTotalRevised = ok.map { r =>
-      coldRevisitMap.get(r._1) match {
-        case Some(t) if t > 0 && t < r._2 => t
-        case _ => r._2
-      }
-    }.sum
-    val errs = results.filter(_._4 != null).map(r => r._1 -> ("\"" + r._4 + "\""))
-    val errField = if (errs.isEmpty) "" else s""","errors":${jmap(errs.take(5))}"""
-    val cachedNames = results.filter(_._5).map(_._1)
-    // Full per-query detail — too large for the driver's tail capture, so
-    // it goes to a file (committed next round as bench evidence).
-    // "warm_shares_cache" lists the queries whose warm timing ran against
-    // intra-query persisted intermediates (see the flag above): for their
-    // standalone cost read the cold column or SCALING.md.
-    val scratch = graft.streaming.StreamHarness.scratchRootName
-    // The streaming family's measured floor (round-9 verdict #6): ~1.5 s
-    // per query of AvailableNow micro-batch machinery (one data batch +
-    // one mandatory watermark-flush batch), accepted as the semantic
-    // minimum. One artifact number so rounds compare it directly.
-    val streamFamily = Set("q103_stream_upsert", "q106_stream_ema",
-      "q112_stream_ohlcv", "q118_stream_sliding", "q124_stream_sessions",
-      "q131_stream_join", "q137_stream_enrich", "q151_stream_dedup",
-      "q175_stream_holt", "q190_late_data", "q201_stream_kalman",
-      "q209_stream_decontam", "q289_stream_quality_gate",
-      "q295_stream_dsir_gate", "q298_stream_media_gate")
-    val streamFamilyTotal = ok.filter(r => streamFamily(r._1)).map(_._3).sum
-    val calibField = s""""calibration":{"start":${r2(calibStart)},"mid":${r2(calibMid)},"end":${r2(calibEnd)}}"""
     def jarr(xs: Seq[String]): String =
       xs.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val budgetField = s""""wall_budget_sec":$WallBudgetSec,"elapsed_sec":${r2(elapsedSec)},"warm_reps":1,"revisit_skipped":${jarr(revisitSkipped.toSeq.sorted)},"cold_revisit_skipped":${jarr(coldRevisitSkipped.toSeq.sorted)},"degraded_single_rep":${jarr(degraded.toSeq.sorted)},"profiles_skipped":${jarr(profilesSkipped.toSeq)}"""
-    val coldFields = s""""cold_revisited":${jmap(coldRevisited.sortBy(_._1).map(kv => kv._1 -> r2(kv._2)))},"cold_first":${jmap(coldFirst.toSeq.sortBy(_._1).map(kv => kv._1 -> r2(kv._2)))},"cold_calibration":{"before":${r2(coldCalibBefore)},"after":${r2(coldCalibAfter)}},"cold_local_ref":"${localCold._1}""""
-    val full = s"""{"metric":"total","value":${r2(warmTotal)},"unit":"sec","queries":${jmap(results.map(r => r._1 -> r2(r._3)))},"cold":${jmap(results.map(r => r._1 -> r2(r._2)))},$coldFields,"warm_shares_cache":${cachedNames.map("\"" + _ + "\"").mkString("[", ",", "]")},"revisited":${revisitNames.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")},"revisit_first":${jmap(revisitFirst.toSeq.sortBy(_._1).map(kv => kv._1 -> r2(kv._2)))},"q204_stages":${jmap(q204Stages.toSeq.map(kv => kv._1 -> r2(kv._2)))},"q204_evidence":$q204EvJson,"q204_fit_drift":$q204FitDrift,"q61_stages":${jmap(q61Stages.toSeq.map(kv => kv._1 -> r2(kv._2)))},$calibField,$budgetField,"stream_family_total":${r2(streamFamilyTotal)},"blas":"$blas","lapack":"$lapack","stream_scratch":"$scratch","total_cold":${r2(coldTotal)},"total_cold_revised":${r2(coldTotalRevised)},"sf":"$sfDir"$errField}"""
+    def col(f: Profile.Rec => Double): String =
+      jmap(results.map(r => r.query -> r2(f(r))))
+    val ok = results.filter(_.ok)
+    val warmTotal = ok.map(_.warmMinS).sum
+    val coldTotal = ok.map(_.coldS).sum
+    val errs = results.filterNot(_.ok).map(r => r.query -> ("\"" + r.error + "\""))
+    val errField = if (errs.isEmpty) "" else s""","errors":${jmap(errs.take(5))}"""
+    val cachedNames = results.filter(_.persistedAfter > 0).map(_.query)
+    val calibField = s""""calibration":{"start":${r2(calibStart)},"mid":${r2(calibMid)},"end":${r2(calibEnd)}}"""
+    val totals = s""""total_cold":${r2(coldTotal)},"sf":"$sfDir"$errField"""
+    val full = s"""{"metric":"total","value":${r2(warmTotal)},"unit":"sec",""" +
+      s""""queries":${col(_.warmMinS)},"cold":${col(_.coldS)},""" +
+      s""""spread":${col(_.warmSpreadS)},"task_s":${col(_.taskS)},""" +
+      s""""warm_shares_cache":${jarr(cachedNames)},$calibField,""" +
+      s""""wall_budget_sec":$WallBudgetSec,"elapsed_sec":${r2(elapsedSec)},""" +
+      s""""warm_reps":$WarmReps,"degraded_single_rep":${jarr(degraded.toSeq)},$totals}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"), full + "\n")
-    // Versioned artifact, ALWAYS written (round-14 verdict #4: the
-    // env-var opt-in left the driver host clobbering only the legacy
-    // name and losing its own full detail). The driver's end-of-round
-    // run lands in bench_full_r{N}.json and gets committed by the
-    // driver; the builder's clean local run is additionally copied to
-    // the SPARK_GRAFT_BENCH_COPY path (e.g. bench_local_r15.json) so
-    // the two never collide.
-    writeVersioned(
-      java.nio.file.Paths.get(s"bench_full_r$BenchRound.json"), full + "\n")
-    sys.env.get("SPARK_GRAFT_BENCH_COPY").foreach { p =>
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), full + "\n")
-    }
-    val head = results.filter(r => headline.contains(r._1))
-    // Stdout gets the COMPACT evidence form ("h104" = cache hit with 104
-    // resident blocks at entry, "m0" = miss with none) — the full per-rep
-    // array with fit hashes lives in bench_full.json; the ~2 KB tail
-    // capture can't afford the long form.
-    val q204EvCompact = q204Ev.map { r =>
-      val base = (if (r.fitCached) "h" else "m") + r.persistedAtEntry
-      // Completed reps append the wall/search walls and the task-counter
-      // deltas (run/gc/sched-delay, in seconds) — the wall-vs-task-time
-      // split readable straight off the driver's captured line.
-      if (r.wall < 0) base
-      else base + f":w${r.wall}%.1f/s${r.searchWall}%.1f/t${r.taskRunMs / 1e3}%.1f/g${r.taskGcMs / 1e3}%.1f/d${r.taskSchedDelayMs / 1e3}%.1f"
-    }.mkString(",")
-    println(s"""{"metric":"total","value":${r2(warmTotal)},"unit":"sec","queries":${jmap(head.map(r => r._1 -> r2(r._3)))},"n_queries":${results.size},"n_headline":${head.size},"n_warm_shares_cache":${cachedNames.size},"cold_calib":{"before":${r2(coldCalibBefore)},"after":${r2(coldCalibAfter)}},"n_cold_revisited":${coldRevisited.size},"budget":{"wall":$WallBudgetSec,"elapsed":${r2(elapsedSec)},"n_rev_skip":${revisitSkipped.size},"n_cold_skip":${coldRevisitSkipped.size},"n_degraded":${degraded.size},"prof_skip":${profilesSkipped.size}},"q204_stages":${jmap(q204Stages.toSeq.map(kv => kv._1 -> r2(kv._2)))},"q204_ev":"$q204EvCompact","q204_fit_drift":$q204FitDrift,"q61_stages":${jmap(q61Stages.toSeq.map(kv => kv._1 -> r2(kv._2)))},$calibField,"stream_family_total":${r2(streamFamilyTotal)},"blas":"$blas","stream_scratch":"$scratch","total_cold":${r2(coldTotal)},"total_cold_revised":${r2(coldTotalRevised)},"sf":"$sfDir"$errField}""")
+
+    val head = results.filter(r => headline.contains(r.query))
+    println(s"""{"metric":"total","value":${r2(warmTotal)},"unit":"sec",""" +
+      s""""queries":${jmap(head.map(r => r.query -> r2(r.warmMinS)))},""" +
+      s""""n_queries":${results.size},"n_headline":${head.size},""" +
+      s""""n_warm_shares_cache":${cachedNames.size},""" +
+      s""""budget":{"wall":$WallBudgetSec,"elapsed":${r2(elapsedSec)},"n_degraded":${degraded.size}},""" +
+      s"""$calibField,$totals}""")
     spark.stop()
   }
 }

@@ -23,8 +23,7 @@ object DevForcedScale {
     DevScaling.buildBlowup(spark, base, out, factor)
     SparkEntry.queries("q01_pricing_summary")(spark, base).count()
     def drop(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.sharedState.cacheManager.clearCache()
+      Profile.dropPersisted(spark)
       ClassifierQueries.ClfFit.clear()
     }
     def time(name: String, dir: String): Double = {

@@ -91,11 +91,6 @@ object DevScaling {
     ()
   }
 
-  private def dropLeakedBlocks(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    spark.sharedState.cacheManager.clearCache()
-  }
-
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 10
     val names = if (args.length > 1) args(1).split(",").toSeq else DefaultQueries
@@ -108,11 +103,11 @@ object DevScaling {
       val fn = SparkEntry.queries(name)
       var rows = 0L
       rows = fn(spark, dir).count() // cold rep: JIT + file listing
-      dropLeakedBlocks(spark)
+      Profile.dropPersisted(spark)
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
         rows = fn(spark, dir).count()
-        dropLeakedBlocks(spark)
+        Profile.dropPersisted(spark)
         (System.nanoTime() - t0) / 1e9
       }
       (times.min, rows)

@@ -69,8 +69,7 @@ object ExtraQueries {
     * (Encode.pcaMatrix: canonicalized + 1e-9-quantized), reuse is
     * VALUE-IDENTICAL to refit — the dynamic oracle reads the same
     * literals either way — so this is an amortization, not a semantics
-    * change. Bench clears the cache before its post-suite q204 stage
-    * profile so the artifact still records a true refit's cost.
+    * change (ArtifactSpec pins miss → hit and refit equality).
     */
   private[graft] object FitArtifacts {
     private val cache = new java.util.concurrent.ConcurrentHashMap[
@@ -78,73 +77,6 @@ object ExtraQueries {
     def get(key: String): Option[Array[Array[Double]]] = Option(cache.get(key))
     def put(key: String, m: Array[Array[Double]]): Unit = cache.put(key, m)
     private[graft] def clear(): Unit = cache.clear()
-  }
-
-  /** Per-invocation evidence trail for q204 (round-13 verdict #1: the
-    * driver-warm 7.42 s vs 0.5 s local could not be attributed because
-    * the artifact recorded nothing about the warm reps themselves).
-    * Every q204Pipeline call appends one record:
-    *   - `fitCached`: whether this invocation hit [[FitArtifacts]]
-    *     (false ⇒ it re-ran users_count/fit/artifact);
-    *   - `persistedAtEntry`: persisted RDD block count at entry — for a
-    *     warm rep, whether the cold rep's intra-query persist was still
-    *     resident on this host;
-    *   - `fitHash`: 12-hex MD5 of the fit matrix actually used, so
-    *     literal drift across reps/refits (the round-9 plan-identity
-    *     failure mode) is directly observable from the artifact.
-    * Ring-capped so spec JVMs that call q204 repeatedly don't grow it.
-    */
-  private[graft] object Q204Evidence {
-    /** One record per q204Pipeline invocation. The fit-side fields
-      * (`fitCached`/`persistedAtEntry`/`fitHash`/`stageWalls`) are
-      * written by the pipeline itself; the action-side fields (wall,
-      * search wall, and the SparkListener task-counter deltas — round-14
-      * verdict #1: the artifact must separate a driver-side
-      * single-thread stall, wall ≫ task-time, from a distributed-stage
-      * slowdown, task-time ∝ wall) are filled in by the CALLER via
-      * [[completeLast]] after it runs the action, because the returned
-      * frame is lazy and only the caller sees the count() finish. A
-      * record never completed (spec JVMs, Verify) keeps the -1
-      * sentinels and the bench JSON emits the fit-side fields only.
-      */
-    final case class Rec(fitCached: Boolean, persistedAtEntry: Int,
-        fitHash: String, stageWalls: Seq[(String, Double)] = Nil,
-        wall: Double = -1.0, searchWall: Double = -1.0,
-        taskRunMs: Long = -1L, taskGcMs: Long = -1L,
-        taskSchedDelayMs: Long = -1L, tasks: Long = -1L,
-        // Memory regime at rep ENTRY (round-15 verdict #1): storage
-        // memory in use and host MemAvailable, MB — so a slow rep is
-        // attributable to memory pressure from the artifact alone.
-        storageUsedMb: Long = -1L, hostAvailMb: Long = -1L)
-    private val buf = scala.collection.mutable.ArrayBuffer[Rec]()
-    def add(r: Rec): Unit = buf.synchronized {
-      buf += r
-      if (buf.size > 64) buf.remove(0, buf.size - 64)
-    }
-    /** Fill the action-side fields of the most recent record. */
-    def completeLast(wall: Double, searchWall: Double, taskRunMs: Long,
-        taskGcMs: Long, taskSchedDelayMs: Long, tasks: Long): Unit =
-      buf.synchronized {
-        if (buf.nonEmpty) {
-          val r = buf.last
-          buf(buf.size - 1) = r.copy(wall = wall, searchWall = searchWall,
-            taskRunMs = taskRunMs, taskGcMs = taskGcMs,
-            taskSchedDelayMs = taskSchedDelayMs, tasks = tasks)
-        }
-      }
-    def snapshot(): Seq[Rec] = buf.synchronized(buf.toSeq)
-    private[graft] def clear(): Unit = buf.synchronized(buf.clear())
-  }
-
-  /** Short, stable fingerprint of a fit matrix: MD5 over the quantized
-    * entries' canonical string form, first 12 hex chars. Two reps that
-    * used value-identical literals — the premise behind artifact reuse
-    * and plan-cache identity — hash identically.
-    */
-  private[graft] def matrixHash(m: Array[Array[Double]]): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val s = m.map(_.mkString(",")).mkString(";")
-    md.digest(s.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
   }
 
   /** q204's fit-sample modulus for U users: keep ~targetUsers series in
@@ -161,28 +93,14 @@ object ExtraQueries {
   private[graft] val FlagStride = 24
   private[graft] val FlagDim = 6
 
-  /** q204's exact registered pipeline, with optional per-stage wall-time
-    * capture (used by Bench's post-suite q204 profile — round-8 verdict
-    * item 1: the driver bench measured 36.4 s warm vs a 2.9 s local
-    * minimum, and the artifact must attribute the gap to a NAMED stage).
-    * Stages recorded when `stages` is non-null: `users_count` (the
-    * fit-modulus distinct count), `fit` (window pipeline + MLlib PCA),
-    * `artifact` (S5 matrix save/load round-trip). The returned frame is
-    * lazy — the caller times its action as the `search` stage.
+  /** [[FitArtifacts]] key of q204's fit: the dir and every fit parameter. */
+  private[graft] def q204FitKey(d: String): String =
+    s"$d|pca|$FlagSeqLen|$FlagDim|frac0.35"
+
+  /** q204's exact registered pipeline: fit (or reuse) the PCA matrix,
+    * then build the lazy scored-query frame over it.
     */
-  def q204Pipeline(s: SparkSession, d: String,
-      stages: scala.collection.mutable.Map[String, Double] = null): DataFrame = {
-    // Stage walls are ALWAYS captured into the per-rep evidence record
-    // (round-14 verdict #1 — previously only the post-suite profile rep
-    // had them); the optional `stages` map additionally mirrors them for
-    // Bench's q204_stages field.
-    val walls = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      walls(name) = (System.nanoTime() - t0) / 1e9
-      if (stages != null) stages(name) = walls(name)
-      r
-    }
+  def q204Pipeline(s: SparkSession, d: String): DataFrame = {
     // Fit pass: sample at the SERIES level so the key filter prunes
     // before the window pipeline even runs, then thin rows with an
     // explicit fraction (no count() pass, no persist of the wide z-array
@@ -196,63 +114,42 @@ object ExtraQueries {
     // Artifact reuse (see [[FitArtifacts]]): the key is (dir, every fit
     // parameter); the modulus itself derives deterministically from the
     // dir's corpus, so a cache hit skips the users-count pass too.
-    val fitKey = s"$d|pca|$FlagSeqLen|$FlagDim|frac0.35"
-    val persistedAtEntry = s.sparkContext.getPersistentRDDs.size
-    val memAtEntry = (MemState.storageUsedMb(s), MemState.hostAvailMb())
-    val cacheHit = FitArtifacts.get(fitKey).isDefined
-    val m = FitArtifacts.get(fitKey) match {
-      case Some(cached) =>
-        if (stages != null) stages("fit_cached") = 1.0
-        cached
-      case None =>
-        val users = timed("users_count") {
-          Tables.events(s, d).select("user_id").distinct().count()
-        }
-        val fitted = timed("fit") {
-          // Persist the fit's z-window frame (round-18, guide §5):
-          // RowMatrix.computePrincipalComponents makes TWO passes over
-          // the sample (Gramian + column means), each of which re-ran
-          // the resample→ffill→slidingZscored window pipeline — the
-          // dominant cold-rep cost (q204 cold 18.1 s, fit stage 2.5 s
-          // of it, driver r17 run). One materialization, cached passes,
-          // identical sample rows (same plan → same partitioning → same
-          // per-partition sample RNG draws), unpersisted before return.
-          val zwins = Windows.slidingZscored(
-            Flagship.filledSeries(s, d)
-              .filter(col("user_id") % lit(fitModulus(users)) === 0),
-            "user_id", "idx", "close", FlagSeqLen)
-            .filter(col("scale") > 1e-6)
-            .select(col("zvalues").cast("array<double>").as("z"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try Encode.pcaMatrix(zwins, "z", FlagSeqLen, FlagDim,
-            sampleFraction = Some(0.35))
-          finally { zwins.unpersist(false); () }
-        }
-        val loaded = timed("artifact") {
-          val path = java.nio.file.Files
-            .createTempDirectory("graft_q204").toString + "/pca_matrix"
-          Encode.saveMatrix(s, fitted, path)
-          Encode.loadMatrix(s, path)
-        }
-        FitArtifacts.put(fitKey, loaded)
-        loaded
+    val fitKey = q204FitKey(d)
+    val m = FitArtifacts.get(fitKey).getOrElse {
+      val users = Tables.events(s, d).select("user_id").distinct().count()
+      // Persist the fit's z-window frame (round-18, guide §5):
+      // RowMatrix.computePrincipalComponents makes TWO passes over
+      // the sample (Gramian + column means), each of which re-ran
+      // the resample→ffill→slidingZscored window pipeline — the
+      // dominant cold-rep cost (q204 cold 18.1 s, fit stage 2.5 s
+      // of it, driver r17 run). One materialization, cached passes,
+      // identical sample rows (same plan → same partitioning → same
+      // per-partition sample RNG draws), unpersisted before return.
+      val zwins = Windows.slidingZscored(
+        Flagship.filledSeries(s, d)
+          .filter(col("user_id") % lit(fitModulus(users)) === 0),
+        "user_id", "idx", "close", FlagSeqLen)
+        .filter(col("scale") > 1e-6)
+        .select(col("zvalues").cast("array<double>").as("z"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val fitted =
+        try Encode.pcaMatrix(zwins, "z", FlagSeqLen, FlagDim,
+          sampleFraction = Some(0.35))
+        finally { zwins.unpersist(false); () }
+      val path = java.nio.file.Files
+        .createTempDirectory("graft_q204").toString + "/pca_matrix"
+      Encode.saveMatrix(s, fitted, path)
+      val loaded = Encode.loadMatrix(s, path)
+      FitArtifacts.put(fitKey, loaded)
+      loaded
     }
     PcaFit.put(d, m)
-    // `build` is the driver-side plan construction (scoredQueries runs
-    // eager planning work like count hints); everything after it is the
-    // caller's action — the `search` wall completeLast records.
-    val df = timed("build") {
-      Flagship.scoredQueries(s, d, metric = "l1", seqLen = FlagSeqLen,
-        predWindow = FlagPred, stride = FlagStride, k = 2, embedDim = FlagDim,
-        projection = Some(m))
-        .select(col("q_key"), col("q_start"),
-          pround(col("mae_err"), 6).as("mae_err"))
-        .orderBy("q_key", "q_start")
-    }
-    Q204Evidence.add(Q204Evidence.Rec(cacheHit, persistedAtEntry,
-      matrixHash(m), walls.toSeq,
-      storageUsedMb = memAtEntry._1, hostAvailMb = memAtEntry._2))
-    df
+    Flagship.scoredQueries(s, d, metric = "l1", seqLen = FlagSeqLen,
+      predWindow = FlagPred, stride = FlagStride, k = 2, embedDim = FlagDim,
+      projection = Some(m))
+      .select(col("q_key"), col("q_start"),
+        pround(col("mae_err"), 6).as("mae_err"))
+      .orderBy("q_key", "q_start")
   }
 
   /** DuckDB L1 over two list expressions (numeric struct indices —

@@ -488,8 +488,9 @@ object ForecastQueries {
               |FROM rec WHERE rn >= 10 ORDER BY user_id, ts_us""".stripMargin)))
 
   // ------------------------------------------------------------------
-  // Pair-correlation cores (q177 exact / q207 cohort-LSH screen), shared
-  // with the DevRecall recall-at-support harness.
+  // Pair-correlation cores (q177 exact / q207 cohort-LSH screen); their
+  // recall at the significance bar is in SCALING.md "Recall at the
+  // significance bar (round 7)".
   // ------------------------------------------------------------------
 
   /** Quantized hourly log returns: (user_id, bucket_s, r_q). */
@@ -597,8 +598,8 @@ object ForecastQueries {
     * support floor and sweep P.
     */
   /** Dense quantized-return rows with the time-folded dimension column —
-    * stage 1 of [[pairCorrLsh]] (split out so DevQ207Profile times the
-    * registered plan's own segments, not a reimplementation).
+    * stage 1 of [[pairCorrLsh]] (stage walls: PLANS.md "Round 10 —
+    * q207_pair_corr_lsh stage profile + trim").
     */
   private[graft] def lshDense(s: SparkSession, d: String, minSupport: Int,
       dim: Int): DataFrame =
@@ -641,11 +642,12 @@ object ForecastQueries {
     // prune) feeds FOUR plan consumers (both signature self-join sides
     // via sigs, ra, rb); without a persist Spark computes it four times
     // (no ReusedExchange fires — the consumers sit under different join
-    // operators; measured 4.1 s → 2.0 s standalone at sf0.1,
-    // DevQ207Profile, PLANS.md round 10). Both frames are small: r is
-    // the pruned per-(user, hour) return table, sigs is U × T rows. The
-    // eager sigs.count() materializes both in one tiny job so the main
-    // job's concurrent consumers can't race the cache fill.
+    // operators; measured 4.1 s → 2.0 s standalone at sf0.1, PLANS.md
+    // "Round 10 — q207_pair_corr_lsh stage profile + trim"). Both frames
+    // are small: r is the pruned per-(user, hour) return table, sigs is
+    // U × T rows. The eager sigs.count() materializes both in one tiny
+    // job so the main job's concurrent consumers can't race the cache
+    // fill.
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val r0 = lshDense(s, d, minSupport, dim)
     val r = if (persistFrames) r0.persist(lvl) else r0
@@ -658,20 +660,6 @@ object ForecastQueries {
     val pairs = broadcast(cand).join(ra, "u").join(rb, Seq("v", "bucket_s"))
     pairTopCorr(pairs, minSupport, k)
   }
-
-  // Stage accessors for DevQ207Profile — each re-derives P(U) exactly the
-  // way the registered query does, so the profiled frames are the
-  // registered plan's own segments.
-  private[graft] def devStageUsers(s: SparkSession, d: String): Long =
-    Tables.events(s, d).select("user_id").distinct().count()
-  private[graft] def devStageDense(s: SparkSession, d: String): DataFrame =
-    lshDense(s, d, 8, 64)
-  private[graft] def devStageSigs(s: SparkSession, d: String): DataFrame =
-    lshSigs(devStageDense(s, d), cohortPlanes(devStageUsers(s, d)), 16, 64)
-  private[graft] def devStageCand(s: SparkSession, d: String): DataFrame =
-    lshCand(devStageSigs(s, d))
-  private[graft] def devStageFull(s: SparkSession, d: String): DataFrame =
-    pairCorrLsh(s, d, 8, cohortPlanes(devStageUsers(s, d)))
 
   /** DuckDB mirror of [[pairCorrLsh]] for the given parameters. */
   private def pairCorrLshSql(minSupport: Int, p: Int, t: Int = 16,
@@ -782,7 +770,7 @@ object ForecastQueries {
     // scored iff hashed together — sustained co-movement collides by
     // construction; recall measured at 10× with the support floor raised
     // to n ≥ 24 (where exact truth is signal, not 8-sample accidents) is
-    // in SCALING.md's recall table (DevRecall harness).
+    // in SCALING.md "Recall at the significance bar (round 7)".
     Q("q207_pair_corr_lsh",
       (s, d) => {
         // One cheap column-pruned distinct-count of users — the screen's

@@ -737,26 +737,22 @@ object PipelineQueries {
     * the experiment trail: task count is NOT the floor — 2 vs 32
     * partitions measured equal — and per-round cost grows 0.26→0.50 s
     * over the 64 rounds with vocabulary-driven pair-type growth on
-    * both tiers). `stages` (optional, the q204Pipeline pattern)
-    * accumulates pool/accept/apply wall so DevBpePhase always profiles
-    * the production kernels (round-12 ADVICE #4).
+    * both tiers).
     */
   private[graft] def phraseBpeMerges(s: SparkSession, d: String,
-      levels: Int = PhraseBpeLevels,
-      stages: scala.collection.mutable.Map[String, Double] = null)
+      levels: Int = PhraseBpeLevels)
       : Seq[(Long, Long, String, String, Long)] =
-    phraseBpeMergesOn(s, phraseSeqs(s, d), levels, stages)
+    phraseBpeMergesOn(s, phraseSeqs(s, d), levels)
 
   /** Dispatch over a caller-supplied seed state — the tier gauge itself,
     * exposed so LocalTierParitySpec can force the distributed route
     * (budget=0 sys-prop) through the SAME entry the registry uses. */
   private[graft] def phraseBpeMergesOn(s: SparkSession,
-      seedDf: DataFrame, levels: Int = PhraseBpeLevels,
-      stages: scala.collection.mutable.Map[String, Double] = null)
+      seedDf: DataFrame, levels: Int = PhraseBpeLevels)
       : Seq[(Long, Long, String, String, Long)] =
     collectSmallState(seedDf) match {
-      case Some(st) => phraseBpeMergesLocal(st, levels, stages)
-      case None => phraseBpeMergesDistributed(s, seedDf, levels, stages)
+      case Some(st) => phraseBpeMergesLocal(st, levels)
+      case None => phraseBpeMergesDistributed(s, seedDf, levels)
     }
 
   /** Local tier of [[phraseBpeMerges]]: the same kernels the RDD loop
@@ -772,15 +768,8 @@ object PipelineQueries {
     * on the SYMBOL STRINGS exactly as distributed (≤W entries per round).
     */
   private[graft] def phraseBpeMergesLocal(state0: Array[(String, Long)],
-      levels: Int = PhraseBpeLevels,
-      stages: scala.collection.mutable.Map[String, Double] = null)
+      levels: Int = PhraseBpeLevels)
       : Seq[(Long, Long, String, String, Long)] = {
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (stages != null)
-        stages(name) = stages.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
-      r
-    }
     val symId = scala.collection.mutable.HashMap.empty[String, Int]
     val symName = scala.collection.mutable.ArrayBuffer.empty[String]
     def idOf(sym: String): Int =
@@ -821,13 +810,11 @@ object PipelineQueries {
         i += 1
       }
     }
-    timed("pool") {
-      var di = 0
-      while (di < seqs.length) { bump(seqs(di), freqs(di), 1L); di += 1 }
-    }
+    var si = 0
+    while (si < seqs.length) { bump(seqs(si), freqs(si), 1L); si += 1 }
     while (round < PhraseBpeRoundCap && tot < PhraseBpeTarget && !exhausted) {
       round += 1
-      val pool = timed("pool") {
+      val pool = {
         // Bounded top-W (round-18, the localTopW rationale): W-capped
         // heap under the SAME (cnt DESC, l, r) total order, resolving
         // symbol names only inside comparisons — replaces building a
@@ -860,7 +847,7 @@ object PipelineQueries {
         }
         arr
       }
-      val accepted = timed("accept") { phraseBpeAccept(pool, levels) }
+      val accepted = phraseBpeAccept(pool, levels)
       require(accepted.size <= PhraseBpeBatchCap,
         s"phrase-BPE round $round accepted ${accepted.size} > $PhraseBpeBatchCap")
       if (accepted.isEmpty) exhausted = true
@@ -876,72 +863,70 @@ object PipelineQueries {
           m.update((idOf(l).toLong << 32) | (idOf(r).toLong & 0xffffffffL),
             idOf(phraseSym(l, r)))
         }
-        timed("apply") {
-          // One pass per sequence: scan for the first merge site with an
-          // allocation-free contains; an untouched sequence (the common
-          // case in late rounds) keeps its array and contributes no
-          // count updates. A touched one replays the greedy scan from
-          // that site (the prefix had no hits, so the rewrite is
-          // identical to scanning from 0) and applies the count delta
-          // ONLY at merge-site boundaries: pairs interior to an
-          // unchanged stretch are identical in the old and new sequence
-          // and cancel, so touching them would be 2 wasted map ops per
-          // position. The boundary algebra per step, with (po, pn, pc) =
-          // (last old symbol consumed, last new symbol appended,
-          // last step was a merge):
-          //   copy x:        if pc { sub (po, x); add (pn, x) }
-          //   merge (a,b)→M: sub (a, b);
-          //                  if a prev exists { sub (po, a); add (pn, M) }
-          //                  (when !pc, po == pn, so this is the plain
-          //                   c-a → c-M neighbor swap; when pc it is the
-          //                   back-to-back-merge M0-M adjacency)
-          // which together account exactly for every pair that differs
-          // between the old and new sequence — verified against a full
-          // recount by LocalTierParitySpec's delta-invariant test.
-          var di = 0
-          while (di < seqs.length) {
-            val ss = seqs(di)
-            if (ss.length >= 2) {
-              var i = 0
-              while (i < ss.length - 1 && !m.contains(pairKey(ss(i), ss(i + 1)))) i += 1
-              if (i < ss.length - 1) {
-                val f = freqs(di)
-                @inline def adj(a: Int, b: Int, sign: Long): Unit = {
-                  val k = pairKey(a, b)
-                  val c = cnt.getOrElse(k, 0L) + sign * f
-                  if (c == 0L) cnt -= k else cnt.update(k, c)
-                }
-                val sb = new scala.collection.mutable.ArrayBuffer[Int](ss.length)
-                var j = 0
-                while (j < i) { sb += ss(j); j += 1 }
-                var po = if (i > 0) ss(i - 1) else -1
-                var pn = po
-                var pc = false
-                var havePrev = i > 0
-                while (j < ss.length) {
-                  val merged = if (j + 1 < ss.length)
-                    m.get(pairKey(ss(j), ss(j + 1)))
-                  else None
-                  merged match {
-                    case Some(lr) =>
-                      adj(ss(j), ss(j + 1), -1L)
-                      if (havePrev) { adj(po, ss(j), -1L); adj(pn, lr, 1L) }
-                      sb += lr
-                      po = ss(j + 1); pn = lr; pc = true; havePrev = true
-                      j += 2
-                    case None =>
-                      val x = ss(j)
-                      if (pc) { adj(po, x, -1L); adj(pn, x, 1L) }
-                      sb += x
-                      po = x; pn = x; pc = false; havePrev = true
-                      j += 1
-                  }
-                }
-                seqs(di) = sb.toArray
+        // One pass per sequence: scan for the first merge site with an
+        // allocation-free contains; an untouched sequence (the common
+        // case in late rounds) keeps its array and contributes no
+        // count updates. A touched one replays the greedy scan from
+        // that site (the prefix had no hits, so the rewrite is
+        // identical to scanning from 0) and applies the count delta
+        // ONLY at merge-site boundaries: pairs interior to an
+        // unchanged stretch are identical in the old and new sequence
+        // and cancel, so touching them would be 2 wasted map ops per
+        // position. The boundary algebra per step, with (po, pn, pc) =
+        // (last old symbol consumed, last new symbol appended,
+        // last step was a merge):
+        //   copy x:        if pc { sub (po, x); add (pn, x) }
+        //   merge (a,b)→M: sub (a, b);
+        //                  if a prev exists { sub (po, a); add (pn, M) }
+        //                  (when !pc, po == pn, so this is the plain
+        //                   c-a → c-M neighbor swap; when pc it is the
+        //                   back-to-back-merge M0-M adjacency)
+        // which together account exactly for every pair that differs
+        // between the old and new sequence — verified against a full
+        // recount by LocalTierParitySpec's delta-invariant test.
+        var di = 0
+        while (di < seqs.length) {
+          val ss = seqs(di)
+          if (ss.length >= 2) {
+            var i = 0
+            while (i < ss.length - 1 && !m.contains(pairKey(ss(i), ss(i + 1)))) i += 1
+            if (i < ss.length - 1) {
+              val f = freqs(di)
+              @inline def adj(a: Int, b: Int, sign: Long): Unit = {
+                val k = pairKey(a, b)
+                val c = cnt.getOrElse(k, 0L) + sign * f
+                if (c == 0L) cnt -= k else cnt.update(k, c)
               }
+              val sb = new scala.collection.mutable.ArrayBuffer[Int](ss.length)
+              var j = 0
+              while (j < i) { sb += ss(j); j += 1 }
+              var po = if (i > 0) ss(i - 1) else -1
+              var pn = po
+              var pc = false
+              var havePrev = i > 0
+              while (j < ss.length) {
+                val merged = if (j + 1 < ss.length)
+                  m.get(pairKey(ss(j), ss(j + 1)))
+                else None
+                merged match {
+                  case Some(lr) =>
+                    adj(ss(j), ss(j + 1), -1L)
+                    if (havePrev) { adj(po, ss(j), -1L); adj(pn, lr, 1L) }
+                    sb += lr
+                    po = ss(j + 1); pn = lr; pc = true; havePrev = true
+                    j += 2
+                  case None =>
+                    val x = ss(j)
+                    if (pc) { adj(po, x, -1L); adj(pn, x, 1L) }
+                    sb += x
+                    po = x; pn = x; pc = false; havePrev = true
+                    j += 1
+                }
+              }
+              seqs(di) = sb.toArray
             }
-            di += 1
           }
+          di += 1
         }
         // Delta-invariant audit (spec-only, sys-prop gated): after every
         // round the delta-maintained map must equal a from-scratch
@@ -974,15 +959,8 @@ object PipelineQueries {
     * [[phraseBpeMerges]], unchanged semantics. */
   private[graft] def phraseBpeMergesDistributed(s: SparkSession,
       seedDf: DataFrame,
-      levels: Int = PhraseBpeLevels,
-      stages: scala.collection.mutable.Map[String, Double] = null)
+      levels: Int = PhraseBpeLevels)
       : Seq[(Long, Long, String, String, Long)] = {
-    def timed[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (stages != null)
-        stages(name) = stages.getOrElse(name, 0.0) + (System.nanoTime() - t0) / 1e9
-      r
-    }
     val out = scala.collection.mutable.ArrayBuffer[(Long, Long, String, String, Long)]()
     // Partitioning/AQE deliberately NOT pinned: an experiment pinning the
     // loop to 1 non-adaptive partition bought nothing at sf0.1 (the
@@ -992,9 +970,7 @@ object PipelineQueries {
     // octaves (30× ratio 8.05 pinned vs 1.37 natural) — the state keeps
     // its natural partitioning so per-round work stays distributed at
     // scale.
-    var cur = timed("seed") {
-      seedDf.rdd.map(r => (r.getString(0), r.getLong(1)))
-    }
+    var cur = seedDf.rdd.map(r => (r.getString(0), r.getLong(1)))
     // cur's parent state: dead once a pool job materializes cur's
     // localCheckpoint (which truncates the lineage), but needed until
     // then. Dropping it keeps the loop's cache footprint at ~2 states
@@ -1007,9 +983,9 @@ object PipelineQueries {
     var exhausted = false
     while (round < PhraseBpeRoundCap && tot < PhraseBpeTarget && !exhausted) {
       round += 1
-      val pool = timed("pool") { phraseBpePoolRdd(cur) }
+      val pool = phraseBpePoolRdd(cur)
       if (prevState != null) { prevState.unpersist(false); prevState = null }
-      val accepted = timed("accept") { phraseBpeAccept(pool, levels) }
+      val accepted = phraseBpeAccept(pool, levels)
       // Loud totality guard, not a silent truncation: acceptance is
       // naturally matching-bounded (observed ≤ 47/round); a corpus that
       // blows past the cap needs a re-derived batch bound, not a quietly
@@ -1024,12 +1000,9 @@ object PipelineQueries {
         // LAZY localCheckpoint: the new state materializes as a side
         // effect of the NEXT round's pair-count job instead of paying a
         // dedicated materialization job per round.
-        val next = timed("apply") {
-          val n = phraseBpeApplyRdd(s, cur,
-            accepted.map { case (l, r, _, _) => (l, r) })
-          n.localCheckpoint()
-          n
-        }
+        val next = phraseBpeApplyRdd(s, cur,
+          accepted.map { case (l, r, _, _) => (l, r) })
+        next.localCheckpoint()
         prevState = cur
         cur = next
         tot += accepted.size
@@ -2021,9 +1994,10 @@ object PipelineQueries {
     // dupPos rows by construction: count-per-gram is the same number
     // either way, and the inner join against the DISTINCT duplicated
     // grams keeps exactly the positions the window filter kept. The
-    // unchanged q206 oracle pins it.
+    // unchanged q206 oracle pins it. Both consumers re-derive the gram
+    // stream from the documents: nothing is cached, so nothing outlives
+    // the query.
     val grams = substrGrams(docs, L)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val dup = grams
       .groupBy("gram").agg(count(lit(1)).as("__cnt"))
       .filter(col("__cnt") >= 2)
@@ -2037,11 +2011,11 @@ object PipelineQueries {
   /** [[exactSubstrSpans]] with the 100 TB shuffle key: the heavy
     * all-positions aggregation shuffles (doc_id, pos, xxhash64(gram)) —
     * a fixed 8-byte key instead of an L-char string. Measured at sf0.1
-    * (DevShuffle, compression off): 91.3 → 58.6 MiB total, 65 → 38.5
-    * bytes/record — the key itself narrows ~4× (30 B → 8 B) but
-    * doc_id+pos+row overhead dilute the total to ~1.7× per record, and
-    * default lz4 narrows the gap further on THIS corpus because
-    * repetitive ASCII grams compress well; on a high-entropy 100 TB
+    * (SCALING.md "Shuffle width", compression off): 91.3 → 58.6 MiB
+    * total, 65 → 38.5 bytes/record — the key itself narrows ~4×
+    * (30 B → 8 B) but doc_id+pos+row overhead dilute the total to ~1.7×
+    * per record, and default lz4 narrows the gap further on THIS corpus
+    * because repetitive ASCII grams compress well; on a high-entropy 100 TB
     * corpus the hash key's advantage is the uncompressed one.
     * Hash-duplicated positions (a small superset of the truly
     * duplicated ones) then join back to the documents on doc_id, the
@@ -4970,7 +4944,7 @@ object PipelineQueries {
     // q42's twin: exact n-gram Jaccard pairs (J ≥ 0.5, same schema as
     // q42 incl. the jaccard value) with the minhash band join as the
     // candidate proposer instead of PPJoin's prefix index. q42's 100×
-    // wall is measured LINEAR in its verify mass (DevQ42Probe:
+    // wall is measured LINEAR in its verify mass (SCALING.md round 11:
     // candidates 117.5× for 100× data — output-sensitive, not a bend),
     // but the banded proposer reaches the same J ≥ 0.5 verify with a
     // candidate set bounded by band collisions, which is the registered
@@ -5010,13 +4984,13 @@ object PipelineQueries {
     // shape: per round ONE pair aggregation over the (enc, freq) state +
     // a ≤W-row pool collect; wall is round-bound, not merge-bound
     // (q221's sequential floor would pay ~0.1 s × 1024 of scheduling).
-    // MEASURED round budget (DevBpePhase on the round-14 RDD loop,
-    // sf0.1): pool jobs dominate the wall (acceptance 0.1 s TOTAL —
-    // O(|pool|) one-pass dominance — and the lazy apply folds into the
-    // next pool job), with per-round cost growing 0.26 → 0.50 s across
-    // the 64 rounds as merges diversify the pair-type space; task count
-    // and Catalyst re-planning both measured as NON-floors (PLANS.md
-    // round 14). The registered wall (25.9 s warm, bench-identical) IS
+    // MEASURED round budget (SCALING.md "q260 — phrase-BPE at ≥1k
+    // merges", round-14 RDD loop, sf0.1): pool jobs dominate the wall
+    // (acceptance 0.1 s TOTAL — O(|pool|) one-pass dominance — and the
+    // lazy apply folds into the next pool job), with per-round cost
+    // growing 0.26 → 0.50 s across the 64 rounds as merges diversify the
+    // pair-type space; task count and Catalyst re-planning both measured
+    // as NON-floors (PLANS.md round 14). The registered wall (25.9 s warm, bench-identical) IS
     // rounds × pair-aggregation-job cost, the documented semantics of a
     // trainer whose every round depends on the previous one's state.
     Q("q260_bpe_phrase_1k",

@@ -4,13 +4,14 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Cumulative task-level counters for the bench's q204 evidence trail
-  * (round-14 verdict #1): executor run time, JVM GC time, scheduler
-  * delay, and task count, summed over every task end the listener bus
-  * delivers. Bench snapshots the counters around a rep (after draining
-  * the bus) and records the deltas — the wall/task-time split that
-  * separates a driver-side single-thread stall (wall ≫ Δtask-time)
-  * from a distributed-stage slowdown (Δtask-time ∝ wall).
+/** Cumulative task-level counters behind [[Profile]]'s per-query records:
+  * executor run time, JVM GC time, scheduler delay, task count, shuffle
+  * bytes written and bytes spilled to disk, summed over every task end
+  * the listener bus delivers. A caller snapshots the counters around a
+  * rep (after draining the bus) and records the deltas — the wall/task
+  * split that separates a driver-side single-thread stall
+  * (wall ≫ Δtask-time) from a distributed-stage slowdown
+  * (Δtask-time ∝ wall).
   *
   * Scheduler delay uses the web-UI formula: task wall (finish − launch)
   * minus executor run + deserialize + result-serialize time, floored at
@@ -18,39 +19,13 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * rather than executing.
   */
 object TaskCounters {
-  final case class Snap(runMs: Long, gcMs: Long, schedDelayMs: Long, tasks: Long) {
+  final case class Snap(runMs: Long, gcMs: Long, schedDelayMs: Long,
+      tasks: Long, shuffleWriteBytes: Long, spillBytes: Long) {
     def minus(o: Snap): Snap =
-      Snap(runMs - o.runMs, gcMs - o.gcMs,
-        schedDelayMs - o.schedDelayMs, tasks - o.tasks)
+      Snap(runMs - o.runMs, gcMs - o.gcMs, schedDelayMs - o.schedDelayMs,
+        tasks - o.tasks, shuffleWriteBytes - o.shuffleWriteBytes,
+        spillBytes - o.spillBytes)
   }
-}
-
-/** Point-in-time memory state for the evidence records (round-15
-  * verdict #1: the post-suite q204 profile's 25× task-CPU inflation
-  * could not be separated from memory pressure because the artifact
-  * recorded neither storage occupancy nor host headroom).
-  */
-object MemState {
-  /** Block-manager storage memory in use (local mode: the one executor),
-    * MB. getExecutorMemoryStatus values are (maxMem, remainingMem).
-    */
-  def storageUsedMb(s: org.apache.spark.sql.SparkSession): Long =
-    try s.sparkContext.getExecutorMemoryStatus.values
-      .map { case (max, remaining) => max - remaining }.sum / (1024L * 1024L)
-    catch { case _: Throwable => -1L }
-
-  /** Host MemAvailable from /proc/meminfo, MB; −1 when unreadable (the
-    * field is Linux-specific — exactly the host this bench runs on).
-    */
-  def hostAvailMb(): Long =
-    try {
-      val src = scala.io.Source.fromFile("/proc/meminfo")
-      try src.getLines().collectFirst {
-        case l if l.startsWith("MemAvailable:") =>
-          l.trim.split("\\s+")(1).toLong / 1024L
-      }.getOrElse(-1L)
-      finally src.close()
-    } catch { case _: Throwable => -1L }
 }
 
 final class TaskCounters extends SparkListener {
@@ -60,9 +35,12 @@ final class TaskCounters extends SparkListener {
   val gcMs = new AtomicLong(0L)
   val schedDelayMs = new AtomicLong(0L)
   val tasks = new AtomicLong(0L)
+  val shuffleWriteBytes = new AtomicLong(0L)
+  val spillBytes = new AtomicLong(0L)
 
   def snapshot(): Snap =
-    Snap(runMs.get(), gcMs.get(), schedDelayMs.get(), tasks.get())
+    Snap(runMs.get(), gcMs.get(), schedDelayMs.get(), tasks.get(),
+      shuffleWriteBytes.get(), spillBytes.get())
 
   override def onTaskEnd(end: SparkListenerTaskEnd): Unit = {
     val info = end.taskInfo
@@ -74,6 +52,8 @@ final class TaskCounters extends SparkListener {
         m.executorDeserializeTime - m.resultSerializationTime
       schedDelayMs.addAndGet(math.max(0L, delay))
       tasks.incrementAndGet()
+      shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      spillBytes.addAndGet(m.diskBytesSpilled)
     }
   }
 }

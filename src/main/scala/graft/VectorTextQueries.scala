@@ -205,7 +205,7 @@ object VectorTextQueries {
               |WHERE n_inter::DOUBLE / (x.n + y.n - n_inter) >= 0.5
               |ORDER BY id_a, id_b""".stripMargin),
       // PPJoin's 100× wall (52.80, SCALING.md) is measured LINEAR in its
-      // candidate-verify mass (DevQ42Probe: candidates 117.5× for 100×
+      // candidate-verify mass (SCALING.md round 11: candidates 117.5× for 100×
       // data — output-sensitive, not an algorithmic bend), but the mass
       // itself tracks prefix-collision geometry with no cap. The
       // registered scale path reaches the same J ≥ 0.5 verified pairs

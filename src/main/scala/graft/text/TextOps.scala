@@ -76,7 +76,7 @@ object TextOps {
     * corpus-sized exchanges. The earlier explode → Window → distinct
     * formulation shuffled every gram row by id and paid two interpreted
     * WindowExec passes (measured ~3.1 s warm at sf0.1 vs ~0.6 s for
-    * this shape, DevQ105Profile / PLANS.md round 10); at 100 TB the
+    * this shape, PLANS.md "Round 10 — q105_winnowing"); at 100 TB the
     * fingerprint scan should be embarrassingly parallel map work, and
     * now is. The 60-bit hash is bit-identical to
     * `conv(substring(md5(g), 1, 15), 16, 10)` — oracle parity holds.

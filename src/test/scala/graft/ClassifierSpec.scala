@@ -147,8 +147,8 @@ class ClassifierSpec extends SparkSpec {
     // side rides nbDocScores, whose tokenize pass is localCheckpointed —
     // the block stays resident while the MOST RECENT execution's plan is
     // referenced and is reclaimed by the ContextCleaner on dereference
-    // (cleaner latency, not a CacheManager leak — DevLeakProbe's
-    // GC-settled reading). Pin the bound: after a GC settle, at most one
+    // (cleaner latency, not a CacheManager leak — PLANS.md "Round-15
+    // leak sweep", GC-settled). Pin the bound: after a GC settle, at most one
     // checkpoint block remains from this test's q288 run.
     System.gc(); Thread.sleep(1000)
     val added = spark.sparkContext.getPersistentRDDs.keySet -- residentBefore

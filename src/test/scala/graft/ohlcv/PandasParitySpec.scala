@@ -3,10 +3,11 @@ package graft.ohlcv
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-/** Parity against pandas-computed goldens over the ACTUAL reference corpus
-  * (first 300 rows of `/root/reference/data/bitstamp/BTC-USD_1h.csv`,
-  * read-only): the operators must reproduce the exact pandas calls the
-  * reference makes — SURVEY.md §5 item 2.
+/** Parity against pandas-computed goldens over the committed 300-row
+  * hourly fixture `src/test/resources/ohlcv_1h_300.csv` (reference CSV
+  * layout, with missing hours, a flat zero-volume run and NaN bars;
+  * tools/gen_ohlcv_fixture.py): the operators must reproduce the exact
+  * pandas calls the reference makes — SURVEY.md §5 item 2.
   */
 class PandasParitySpec extends SparkSpec {
   import spark.implicits._
@@ -14,7 +15,7 @@ class PandasParitySpec extends SparkSpec {
   private val G = PandasGoldens.values
 
   private lazy val bars = Ingest.readCsv(spark,
-      "/root/reference/data/bitstamp/BTC-USD_1h.csv", "BTC/USD")
+      getClass.getResource("/ohlcv_1h_300.csv").getPath, "BTC/USD")
     .orderBy("datetime")
     .limit(G("n_rows").toInt)
     .cache()

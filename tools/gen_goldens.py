@@ -1,11 +1,19 @@
 #!/usr/bin/env python3
 """Regenerate src/test/scala/graft/ohlcv/PandasGoldens.scala: pandas-computed
-expected values over the first 300 rows of the reference BTC corpus, using
-the exact pandas calls the reference makes (resample closed/label=right,
-ewm adjust=False min_periods, rolling ddof=0, ta RSI/MACD formulas)."""
+expected values over the committed 300-row hourly OHLCV fixture
+src/test/resources/ohlcv_1h_300.csv (gaps, a flat run and NaN bars; see
+tools/gen_ohlcv_fixture.py), using the exact pandas calls the reference
+makes (resample closed/label=right, ewm adjust=False min_periods, rolling
+ddof=0, ta RSI/MACD formulas).
+
+Usage: python3 tools/gen_goldens.py
+"""
+from pathlib import Path
+
 import pandas as pd
 
-df = pd.read_csv('/root/reference/data/bitstamp/BTC-USD_1h.csv', nrows=300,
+ROOT = Path(__file__).resolve().parents[1]
+df = pd.read_csv(ROOT / 'src/test/resources/ohlcv_1h_300.csv', nrows=300,
                  parse_dates=['datetime']).set_index('datetime')
 g = {}
 
@@ -90,7 +98,7 @@ for bar in [19, 150]:
     g[f'dpo20_bar{bar}'] = float(dpo.iloc[bar])
 
 # CCI(20) with mean-absolute-deviation around the window mean.
-# Bars inside the fully-flat stretch (~137-170) are excluded: there CCI is
+# Bars inside the fully-flat stretch (130-175) are excluded: there CCI is
 # 0/0 and pandas' two mean implementations (Kahan'd rolling.mean vs numpy
 # mean inside apply) disagree at 1e-14, making the value pure noise.
 tp = (high + low + close) / 3
@@ -222,7 +230,7 @@ lines = ',\n    '.join(f'"{k}" -> {_lit(v)}' for k, v in g.items())
 scala = f'''package graft.ohlcv
 
 /** GENERATED by tools/gen_goldens.py from pandas {pd.__version__} over the
-  * first 300 rows of the reference corpus BTC-USD_1h.csv — the exact
+  * 300-row fixture src/test/resources/ohlcv_1h_300.csv — the exact
   * pandas calls the reference makes (resample right/right, ewm
   * adjust=False min_periods, rolling ddof=0, ta RSI/MACD formulas).
   * Do not edit by hand.
@@ -233,5 +241,5 @@ object PandasGoldens {{
     {lines})
 }}
 '''
-open('/root/repo/src/test/scala/graft/ohlcv/PandasGoldens.scala', 'w').write(scala)
+(ROOT / 'src/test/scala/graft/ohlcv/PandasGoldens.scala').write_text(scala)
 print('golden keys:', len(g))

@@ -1,8 +1,8 @@
 #!/bin/bash
 # Run a compiled graft main without sbt (avoids the sbt lock; classes must
-# already be compiled by sbt). Usage: tools/run_main.sh graft.DevTimeQ args...
+# already be compiled by sbt). Usage: tools/run_main.sh graft.Profile q204_flagship_pca ...
 SCALA_LIB=$(find "$HOME/.cache/coursier" -name "scala-library-2.13.*.jar" 2>/dev/null | sort -V | tail -1)
-exec java -Xmx96g --add-modules=jdk.incubator.vector \
+exec java -Xmx${SPARK_DRIVER_MEM:-4g} --add-modules=jdk.incubator.vector \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
