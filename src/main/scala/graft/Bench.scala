@@ -9,10 +9,11 @@ package graft
   * `total_cold`. Stdout carries only the [[headline]] subset (the line
   * must fit a ~2 KB tail capture); `bench_full.json` in the working
   * directory gets every query's warm-min (`queries`), cold, warm spread
-  * and task seconds, plus `warm_shares_cache`: the queries whose warm
-  * reps ran against intermediates an earlier rep persisted (their
-  * standalone cost is the cold column). Failures are LOUD — a query that
-  * throws gets an entry in `errors` and -1 timings.
+  * and task seconds, its largest compiled whole-stage method
+  * (`max_method_bytes`, see [[Profile]]), plus `warm_shares_cache`: the
+  * queries whose warm reps ran against intermediates an earlier rep
+  * persisted (their standalone cost is the cold column). Failures are
+  * LOUD — a query that throws gets an entry in `errors` and -1 timings.
   *
   * Calibration: q01 is re-timed cold at the start, middle and end of the
   * suite, so ambient host load is measured inside the run; compare runs
@@ -95,6 +96,7 @@ object Bench {
     val full = s"""{"metric":"total","value":${r2(warmTotal)},"unit":"sec",""" +
       s""""queries":${col(_.warmMinS)},"cold":${col(_.coldS)},""" +
       s""""spread":${col(_.warmSpreadS)},"task_s":${col(_.taskS)},""" +
+      s""""max_method_bytes":${jmap(results.map(r => r.query -> r.maxMethodBytes.toString))},""" +
       s""""warm_shares_cache":${jarr(cachedNames)},$calibField,""" +
       s""""wall_budget_sec":$WallBudgetSec,"elapsed_sec":${r2(elapsedSec)},""" +
       s""""warm_reps":$WarmReps,"degraded_single_rep":${jarr(degraded.toSeq)},$totals}"""

@@ -47,9 +47,9 @@ object Flagship {
     projection match {
       case Some(m) =>
         // Learned linear encoder (PCA / any trained projection): e = z·Mᵀ
-        // with M broadcast as plan literals — the z array feeds a
-        // sequential dot per component, mirrored exactly by the oracle's
-        // list_dot_product over the same literals.
+        // in one matrix–vector kernel that carries M as a single plan
+        // constant — each component is the sequential dot the oracle's
+        // list_dot_product computes over the same matrix rows.
         require(m.length == embedDim && m.head.length == seqLen,
           s"projection must be $embedDim x $seqLen")
         Windows.slidingZscored(series, "user_id", "idx", "close", seqLen)

@@ -1,15 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graft.ListenerBridge
+import org.apache.spark.sql.graft.{CodegenStats, ListenerBridge}
 
 /** The one measurement protocol for registered queries, shared by this
   * main and [[Bench]]: a cold rep, then `warmReps` warm reps, each a
   * `count()` of the query's frame. A [[Rec]] carries the row count, the
   * cold wall, the fastest warm wall and the warm spread (max − min), the
   * [[TaskCounters]] deltas of the fastest warm rep (of the cold rep when
-  * there are none), and `persisted_after`: the persisted RDDs still
-  * resident when the last rep ends (intra-query caches and leaks alike).
+  * there are none), `persisted_after`: the persisted RDDs still
+  * resident when the last rep ends (intra-query caches and leaks alike),
+  * and `max_method_bytes`: the largest compiled whole-stage method of any
+  * SQL execution the reps ran — past [[CodegenStats.HugeMethodLimit]]
+  * that stage runs interpreted.
   * Whatever the query left behind is then dropped, so the next query
   * starts from an empty cache.
   *
@@ -27,7 +30,7 @@ object Profile {
 
   final case class Rec(query: String, rows: Long, coldS: Double,
       warmMinS: Double, warmSpreadS: Double, tasks: TaskCounters.Snap,
-      persistedAfter: Int, error: String = null) {
+      persistedAfter: Int, maxMethodBytes: Int, error: String = null) {
     def ok: Boolean = error == null
     def taskS: Double = tasks.runMs / 1e3
     def json: String = {
@@ -38,7 +41,8 @@ object Profile {
         s""""task_s":${s(taskS)},"gc_s":${s(tasks.gcMs / 1e3)},""" +
         s""""sched_delay_s":${s(tasks.schedDelayMs / 1e3)},"tasks":${tasks.tasks},""" +
         s""""shuffle_write_bytes":${tasks.shuffleWriteBytes},""" +
-        s""""spill_bytes":${tasks.spillBytes},"persisted_after":$persistedAfter$err}"""
+        s""""spill_bytes":${tasks.spillBytes},"persisted_after":$persistedAfter,""" +
+        s""""max_method_bytes":$maxMethodBytes$err}"""
     }
   }
 
@@ -72,16 +76,18 @@ object Profile {
       (rows, wall, counters.snapshot().minus(before))
     }
     try {
-      val cold = rep()
-      val warm = Seq.fill(warmReps)(rep())
+      val ((cold, warm), maxMethodBytes) = CodegenStats.largestMethodDuring(spark) {
+        val cold = rep()
+        (cold, Seq.fill(warmReps)(rep()))
+      }
       val best = if (warm.isEmpty) cold else warm.minBy(_._2)
       val spread = if (warm.isEmpty) 0.0 else warm.map(_._2).max - warm.map(_._2).min
       Rec(name, cold._1, cold._2, best._2, spread, best._3,
-        spark.sparkContext.getPersistentRDDs.size)
+        spark.sparkContext.getPersistentRDDs.size, maxMethodBytes)
     } catch {
       case e: Throwable =>
         Rec(name, -1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0),
-          spark.sparkContext.getPersistentRDDs.size, sanitize(e))
+          spark.sparkContext.getPersistentRDDs.size, -1, sanitize(e))
     } finally dropPersisted(spark)
   }
 

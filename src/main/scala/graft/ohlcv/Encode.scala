@@ -40,8 +40,9 @@ object Encode {
 
   /** Decoder for [[linearProject]]: right pseudo-inverse Mᵀ(MMᵀ)⁻¹ of the
     * outDim × inLen projection, computed driver-side (outDim² solve) and
-    * applied as a literal matrix — `decode(e) = e · (M⁺)ᵀ` is the
+    * applied with the same kernel — `decode(e) = e · (M⁺)ᵀ` is the
     * minimum-norm pre-image, exact when the window lies in M's row space.
+    * M must have full row rank; a rank-deficient M fails with a message.
     */
   def pseudoInverse(matrix: Array[Array[Double]]): Array[Array[Double]] = {
     val outDim = matrix.length
@@ -51,9 +52,12 @@ object Encode {
     val g = Array.tabulate(outDim, outDim) { (i, j) =>
       var s = 0.0; var t = 0; while (t < inLen) { s += matrix(i)(t) * matrix(j)(t); t += 1 }; s
     }
-    // Gauss-Jordan with partial pivoting on [G | M].
+    // Gauss-Jordan with partial pivoting on [G | M]. A pivot at round-off
+    // size relative to G's largest diagonal means M is rank-deficient:
+    // dividing by it would return Inf/NaN entries, so fail instead.
     val aug = Array.tabulate(outDim, outDim + inLen)((i, j) =>
       if (j < outDim) g(i)(j) else matrix(i)(j - outDim))
+    val minPivot = 1e-12 * g.indices.map(i => g(i)(i)).max
     var r = 0
     while (r < outDim) {
       var piv = r
@@ -61,6 +65,9 @@ object Encode {
       while (rr < outDim) { if (math.abs(aug(rr)(r)) > math.abs(aug(piv)(r))) piv = rr; rr += 1 }
       val tmp = aug(r); aug(r) = aug(piv); aug(piv) = tmp
       val d = aug(r)(r)
+      require(math.abs(d) > minPivot,
+        s"pseudoInverse: the $outDim x $inLen matrix is rank-deficient " +
+          s"(pivot $d at step $r), so M Mᵀ has no inverse")
       var c = 0
       while (c < outDim + inLen) { aug(r)(c) /= d; c += 1 }
       var r2 = 0
@@ -78,29 +85,20 @@ object Encode {
     Array.tabulate(inLen, outDim)((i, j) => aug(j)(outDim + i))
   }
 
-  /** Fixed linear projection `arr · M` (inLen → outDim) with a literal
-    * projection matrix — the PCA/ random-projection family. The matrix is
-    * broadcast as literals inside the plan; rows never leave executors.
-    *
-    * Each component is a native codegen'd [[org.apache.spark.sql.graft.ArrayDot]]
-    * against a constant-folded literal row — a bare primitive loop in the
-    * generated code — instead of the interpreted HOF chain
-    * `aggregate(zip_with(...))` (same sequential summation order, so
-    * results and the DuckDB `list_dot_product` oracle stay bit-identical;
-    * measured ~2× on q204's uncached transform+search stage).
+  /** Fixed linear projection `arr · Mᵀ` (inLen → outDim), the PCA /
+    * random-projection family, as one native kernel:
+    * [[org.apache.spark.sql.graft.MatVecStrict]] (`graft_project`). The
+    * matrix travels in the plan as one content-hashed constant, rendered
+    * `matrix[outDim x inLen#hash]` in plan strings; the generated code
+    * runs one nested loop over it, small enough for the JIT at 64 × 256.
+    * Each component is the sequential sum `Σ arr[i]·M[r][i]`, so results
+    * and the DuckDB `list_dot_product` oracle stay bit-identical. Strict:
+    * a NULL, too-short/long or NULL-holding input gives `outDim` NULL
+    * components instead of a silent partial sum. A matrix that is empty
+    * or ragged is rejected here, when the column is built.
     */
-  def linearProject(arr: Column, matrix: Array[Array[Double]]): Column = {
-    // Strict variant (ADVICE r9 #2): the skip-nulls ArrayDot would turn
-    // a too-short or null-holding input into a silent partial sum; the
-    // strict dot makes it an observable NULL component instead (and
-    // costs nothing — same codegen loop plus one length check). Callers
-    // feed fixed-width z-score windows, so well-formed data is
-    // unaffected bit-for-bit.
-    import org.apache.spark.sql.graft.GraftExpressions.arrayDotStrict
-    array(matrix.toIndexedSeq.map { r =>
-      arrayDotStrict(arr, array(r.toIndexedSeq.map(lit): _*))
-    }: _*)
-  }
+  def linearProject(arr: Column, matrix: Array[Array[Double]]): Column =
+    org.apache.spark.sql.graft.GraftExpressions.matVecStrict(arr, matrix)
 
   /** Deterministic pseudo-random projection matrix (outDim × inLen) seeded
     * by `seed` — a public Johnson–Lindenstrauss-style stand-in when no
@@ -124,8 +122,8 @@ object Encode {
   /** S5 model-artifact persistence (reference checkpoint load,
     * `notebooks/test.ipynb:573` / `train.py:85-91`): the projection
     * matrix round-trips through a tiny parquet table `(row, col, value)` —
-    * a format any engine can read, loaded once and broadcast into plan
-    * literals via [[linearProject]].
+    * a format any engine can read — loaded once and handed to
+    * [[linearProject]], whose kernel carries it as one plan constant.
     */
   def saveMatrix(spark: org.apache.spark.sql.SparkSession,
       matrix: Array[Array[Double]], path: String): Unit = {
@@ -138,12 +136,23 @@ object Encode {
       .write.mode("overwrite").parquet(path)
   }
 
+  /** Inverse of [[saveMatrix]]. The table must hold every `(row, col)` of
+    * its `rows × cols` shape exactly once: a missing, duplicate or
+    * negative index, or an empty table, fails here rather than loading a
+    * zero-filled or truncated matrix.
+    */
   def loadMatrix(spark: org.apache.spark.sql.SparkSession, path: String): Array[Array[Double]] = {
     val entries = spark.read.parquet(path)
       .select("row", "col", "value").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+    require(entries.nonEmpty, s"loadMatrix: no entries under $path")
     val nRows = entries.map(_._1).max + 1
     val nCols = entries.map(_._2).max + 1
+    val cells = entries.map(e => (e._1, e._2))
+    require(cells.forall(c => c._1 >= 0 && c._2 >= 0) &&
+      entries.length.toLong == nRows.toLong * nCols && cells.distinct.length == entries.length,
+      s"loadMatrix: $path holds ${entries.length} entries (${cells.distinct.length} distinct), " +
+        s"want each of the $nRows x $nCols cells exactly once")
     val m = Array.ofDim[Double](nRows, nCols)
     entries.foreach { case (i, j, v) => m(i)(j) = v }
     m
@@ -153,7 +162,8 @@ object Encode {
     * the outDim × inLen principal-component matrix. The sample (not the
     * full corpus) is bounded by `maxRows`, so the driver-side SVD stays
     * constant-size while the projection itself is applied distributively
-    * via [[linearProject]].
+    * via [[linearProject]]'s kernel, which ships the matrix to executors
+    * as one plan constant.
     */
   def pcaMatrix(windows: DataFrame, arrCol: String, inLen: Int, outDim: Int,
       maxRows: Int = 4096, sampleFraction: Option[Double] = None): Array[Array[Double]] = {
@@ -203,10 +213,12 @@ object Encode {
     // is statistical, not absolute: a component sitting within the drift
     // width (~1e-13) of a 0.5e-9 grid midpoint can still round
     // differently across refits; at ~1e-13/1e-9 ≈ 1e-4 per entry that is
-    // rare, not impossible. Reproducible literals are what let Spark's
+    // rare, not impossible. A reproducible matrix is what lets Spark's
     // cache manager recognize a refit pipeline as the already-persisted
-    // plan (a one-ulp drift invalidates every downstream cached frame) —
-    // a midpoint round merely costs that rerun one cache rebuild, never
+    // plan: [[linearProject]]'s kernel holds the matrix as one constant
+    // compared by content (`Arrays.deepEquals`), so equal values match
+    // and a one-ulp drift invalidates every downstream cached frame — a
+    // midpoint round merely costs that rerun one cache rebuild, never
     // correctness, because the dynamic oracle always reads the same
     // quantized values the plan used. 1e-9 is ~4 orders above the drift
     // and ~7 below the components' scale.
@@ -219,10 +231,12 @@ object Encode {
     * preprocessing of ZCA/PCA-whitening and the Mahalanobis view of
     * nearest-neighbor search). Fit = [[pcaMatrix]] on the same bounded
     * sample, then ONE distributed variance pass over the sample's
-    * projections; the scaled rows are re-quantized to the same 1e-9 grid
-    * so the fit stays reproducible and the dynamic oracle reads the
-    * exact literals the plan used (the q204 discipline). `eps` guards
-    * near-zero-variance components from exploding the scale.
+    * projections ([[linearProject]]'s kernel); the scaled rows are
+    * re-quantized to the same 1e-9 grid so the fit stays reproducible
+    * (the kernel's content-equal matrix constant still matches a refit in
+    * the cache manager) and the dynamic oracle reads the exact values the
+    * plan used (the q204 discipline). `eps` guards near-zero-variance
+    * components from exploding the scale.
     */
   def whitenedPcaMatrix(windows: DataFrame, arrCol: String, inLen: Int,
       outDim: Int, maxRows: Int = 4096, sampleFraction: Option[Double] = None,

@@ -16,26 +16,20 @@ object Lsh {
 
   /** Sign pattern of `planes` random hyperplane projections packed into a
     * long (bit i = sign of dot(v, plane_i)). `mat` is planes × dim.
+    *
+    * The projections come from the strict matrix–vector kernel
+    * ([[graft.ohlcv.Encode.linearProject]]), so a too-short or
+    * NULL-holding vector projects to NULL components. Each bit has no
+    * otherwise-branch, so a NULL propagates through the OR and a NULL
+    * signature never equi-joins: the malformed row drops out observably
+    * instead of landing in a wrong bucket.
     */
   def hyperplaneSignature(vec: Column, mat: Array[Array[Double]]): Column = {
-    // Native codegen'd STRICT ArrayDot per plane (bare primitive loop)
-    // instead of the interpreted aggregate(zip_with(...)) HOF chain —
-    // identical sequential summation order, so signatures (and every
-    // oracle's list_dot_product mirror) are bit-identical. Strict
-    // matters here (ADVICE r9 #2): a too-short or null-holding vector
-    // under the skip-nulls ArrayDot would produce a PLAUSIBLE partial
-    // signature — collapsed sign bits, the exact failure mode
-    // embeddingNearDup guards against. The strict dot yields NULL, the
-    // bit below has no otherwise-branch so the NULL propagates through
-    // the bitwise OR, and a NULL signature never equi-joins: the
-    // malformed row drops out observably (oracle row-count mismatch)
-    // instead of landing in a wrong bucket.
-    val bits = mat.zipWithIndex.map { case (plane, i) =>
-      val planeLit = array(plane.toIndexedSeq.map(lit): _*)
-      val d = org.apache.spark.sql.graft.GraftExpressions.arrayDotStrict(vec, planeLit)
+    val proj = graft.ohlcv.Encode.linearProject(vec, mat)
+    mat.indices.map { i =>
+      val d = proj.getItem(i)
       when(d >= 0, shiftleft(lit(1L), i)).when(d < 0, lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
+    }.reduce((a, b) => a.bitwiseOR(b))
   }
 
   /** Attach an LSH bucket column to a vector table. */

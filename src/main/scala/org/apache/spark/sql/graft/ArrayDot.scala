@@ -183,6 +183,15 @@ object GraftExpressions {
     ExpressionUtils.column(ArrayDotStrict(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
+  /** `M·x` for every row as one strict kernel, [[MatVecStrict]]: an
+    * `array<double>` of `matrix.length` components, all NULL when `x` is
+    * NULL, not `matrix(0).length` long, or holds a NULL. The matrix is
+    * copied, so later writes to the caller's array cannot change the plan.
+    */
+  def matVecStrict(x: Column, matrix: Array[Array[Double]]): Column =
+    ExpressionUtils.column(MatVecStrict(
+      ExpressionUtils.expression(x), new ProjectionMatrix(matrix.map(_.clone))))
+
   def arrayL1(a: Column, b: Column): Column =
     ExpressionUtils.column(ArrayL1(
       ExpressionUtils.expression(a), ExpressionUtils.expression(b)))

@@ -23,8 +23,10 @@ class ProfileSpec extends SparkSpec {
     val js = new ObjectMapper().readTree(rec.json)
     Seq("query", "rows", "cold_s", "warm_min_s", "warm_spread_s", "task_s",
       "gc_s", "sched_delay_s", "shuffle_write_bytes", "spill_bytes",
-      "persisted_after").foreach(k => assert(js.has(k), s"record lacks $k"))
+      "persisted_after", "max_method_bytes").foreach(k => assert(js.has(k), s"record lacks $k"))
     assert(js.get("rows").asLong == rec.rows)
+    // q01 aggregates in a codegen stage, so some method was compiled.
+    assert(rec.maxMethodBytes > 0 && js.get("max_method_bytes").asInt == rec.maxMethodBytes)
     assert(!js.has("error"))
   }
 

@@ -21,6 +21,26 @@ class ArtifactSpec extends SparkSpec {
     assert(a == b)
   }
 
+  test("loadMatrix requires every (row, col) exactly once and rejects an empty table") {
+    val dir = Files.createTempDirectory("graft_artifact").toString
+    val m = Encode.randomProjectionMatrix(4, 3, 5L)
+    Encode.saveMatrix(spark, m, s"$dir/full")
+    val entries = spark.read.parquet(s"$dir/full")
+    // One cell dropped: the old loader zero-filled it.
+    entries.filter(!(col("row") === 1 && col("col") === 2))
+      .write.parquet(s"$dir/missing")
+    val e1 = intercept[IllegalArgumentException](Encode.loadMatrix(spark, s"$dir/missing"))
+    assert(e1.getMessage.contains("exactly once"), e1.getMessage)
+    // One cell twice (12 entries would otherwise pass a count check).
+    entries.filter(!(col("row") === 0 && col("col") === 0))
+      .union(entries.filter(col("row") === 2 && col("col") === 3))
+      .write.parquet(s"$dir/dup")
+    intercept[IllegalArgumentException](Encode.loadMatrix(spark, s"$dir/dup"))
+    entries.limit(0).write.parquet(s"$dir/empty")
+    val e2 = intercept[IllegalArgumentException](Encode.loadMatrix(spark, s"$dir/empty"))
+    assert(e2.getMessage.contains("no entries"), e2.getMessage)
+  }
+
   test("PcaFit keys fitted matrices by sf dir; ambiguous only multi-dir without context") {
     import graft.ExtraQueries.PcaFit
     PcaFit.clear()

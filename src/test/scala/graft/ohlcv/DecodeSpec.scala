@@ -56,4 +56,21 @@ class DecodeSpec extends SparkSpec {
       assert(math.abs(a - b) < 1e-9, s"$a vs $b")
     }
   }
+
+  test("linearProject rejects an empty or ragged matrix") {
+    val ragged = Array(Array(1.0, 2.0, 3.0), Array(1.0, 2.0))
+    val e = intercept[IllegalArgumentException](Encode.linearProject(col("w"), ragged))
+    assert(e.getMessage.contains("rectangular"), e.getMessage)
+    intercept[IllegalArgumentException](Encode.linearProject(col("w"), Array.empty[Array[Double]]))
+  }
+
+  test("pseudoInverse fails loudly on a rank-deficient matrix") {
+    val mat = Encode.randomProjectionMatrix(len, dim, seed = 9L)
+    // Row 3 = row 0 + row 1: M Mᵀ is singular.
+    val deficient = mat.updated(3, mat(0).zip(mat(1)).map { case (a, b) => a + b })
+    val e = intercept[IllegalArgumentException](Encode.pseudoInverse(deficient))
+    assert(e.getMessage.contains("rank-deficient"), e.getMessage)
+    val zeroRow = mat.updated(2, Array.fill(len)(0.0))
+    intercept[IllegalArgumentException](Encode.pseudoInverse(zeroRow))
+  }
 }
