@@ -103,8 +103,9 @@ object ExtraQueries {
   def q204Pipeline(s: SparkSession, d: String): DataFrame = {
     // Fit pass: sample at the SERIES level so the key filter prunes
     // before the window pipeline even runs, then thin rows with an
-    // explicit fraction (no count() pass, no persist of the wide z-array
-    // frame). The user modulus is derived from the corpus (one
+    // explicit fraction, so pcaMatrix's single moments scan is the only
+    // pass over the window pipeline (no count() pass, no persist of the
+    // wide z-array frame). The user modulus is derived from the corpus (one
     // column-pruned distinct-count, the same planning action q207 pays)
     // so the fit SAMPLE IS CAPPED at ~215 series regardless of corpus
     // size — a 24-dim covariance converges long before that — instead of
@@ -117,25 +118,14 @@ object ExtraQueries {
     val fitKey = q204FitKey(d)
     val m = FitArtifacts.get(fitKey).getOrElse {
       val users = Tables.events(s, d).select("user_id").distinct().count()
-      // Persist the fit's z-window frame (round-18, guide §5):
-      // RowMatrix.computePrincipalComponents makes TWO passes over
-      // the sample (Gramian + column means), each of which re-ran
-      // the resample→ffill→slidingZscored window pipeline — the
-      // dominant cold-rep cost (q204 cold 18.1 s, fit stage 2.5 s
-      // of it, driver r17 run). One materialization, cached passes,
-      // identical sample rows (same plan → same partitioning → same
-      // per-partition sample RNG draws), unpersisted before return.
       val zwins = Windows.slidingZscored(
         Flagship.filledSeries(s, d)
           .filter(col("user_id") % lit(fitModulus(users)) === 0),
         "user_id", "idx", "close", FlagSeqLen)
         .filter(col("scale") > 1e-6)
         .select(col("zvalues").cast("array<double>").as("z"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val fitted =
-        try Encode.pcaMatrix(zwins, "z", FlagSeqLen, FlagDim,
-          sampleFraction = Some(0.35))
-        finally { zwins.unpersist(false); () }
+      val fitted = Encode.pcaMatrix(zwins, "z", FlagSeqLen, FlagDim,
+        sampleFraction = Some(0.35))
       val path = java.nio.file.Files
         .createTempDirectory("graft_q204").toString + "/pca_matrix"
       Encode.saveMatrix(s, fitted, path)
@@ -881,7 +871,8 @@ object ExtraQueries {
 
       // Learned-PCA encoder, end-to-end (SURVEY §7.2 step 5, the last
       // advertised encoder without its own oracle entry): fit PCA on the
-      // corpus's z-scored windows with MLlib, round-trip the component
+      // corpus's z-scored windows (one moments scan + a plain-Scala
+      // eigensolver, Encode.pcaMatrix), round-trip the component
       // matrix through the S5 parquet artifact, then run the FULL
       // flagship forecast with e = z·Mᵀ. The oracle is generated at dump
       // time (Q.oracleDyn) with the fitted matrix as list literals —
@@ -914,8 +905,9 @@ object ExtraQueries {
       // WHITENED-PCA encoder, end-to-end (round-11 verdict #7: a second
       // learned encoder strengthening the one place the engine
       // SUBSTITUTES for the reference's VAE rather than matches it).
-      // Fit = q204's PCA on the same capped sample, then one distributed
-      // variance pass scales each component to unit projection variance
+      // Fit = q204's PCA on the same capped sample; the fit's own
+      // co-moments give each component's projection variance, and each
+      // component is scaled to unit projection variance
       // (PCA-whitening — public preprocessing; L1/L2 in the whitened
       // space is the Mahalanobis view of neighbor search). Measured on
       // the reference's own corpus and protocol (BASELINE_REPRO.md):
@@ -943,9 +935,10 @@ object ExtraQueries {
   /** q262's registered pipeline — q204's flagship forecast with the
     * WHITENED learned projection (see the q262 registration comment).
     * Shares [[FitArtifacts]] (distinct key) and the S5 artifact
-    * round-trip; the whitening variance pass rides the same bounded
-    * sample as the PCA fit, so the whole fit stays constant-size on the
-    * driver while encoding stays a codegen'd literal projection.
+    * round-trip; the whitening variances come from the same single
+    * moments scan of the bounded sample as the PCA fit, so the whole fit
+    * stays constant-size on the driver while encoding stays one
+    * matrix–vector kernel.
     */
   def q262Pipeline(s: SparkSession, d: String): DataFrame = {
     val fitKey = s"$d|pca-whiten|$FlagSeqLen|$FlagDim|frac0.35"
@@ -953,21 +946,16 @@ object ExtraQueries {
       case Some(cached) => cached
       case None =>
         val users = Tables.events(s, d).select("user_id").distinct().count()
-        // Persist like q204's fit (round-18, guide §5) — here THREE
-        // passes ride the cache: pcaMatrix's Gramian + column means and
-        // the whitening variance pass (q262 cold first-rep read 32.7 s
-        // in the r17 driver run, almost all window-pipeline recompute).
+        // Like q204's fit, one scan of the window pipeline: the whitening
+        // variances come from the fit's own moments.
         val zwins = Windows.slidingZscored(
           Flagship.filledSeries(s, d)
             .filter(col("user_id") % lit(fitModulus(users)) === 0),
           "user_id", "idx", "close", FlagSeqLen)
           .filter(col("scale") > 1e-6)
           .select(col("zvalues").cast("array<double>").as("z"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val fitted =
-          try Encode.whitenedPcaMatrix(zwins, "z", FlagSeqLen, FlagDim,
-            sampleFraction = Some(0.35))
-          finally { zwins.unpersist(false); () }
+        val fitted = Encode.whitenedPcaMatrix(zwins, "z", FlagSeqLen, FlagDim,
+          sampleFraction = Some(0.35))
         val path = java.nio.file.Files
           .createTempDirectory("graft_q262").toString + "/whiten_matrix"
         Encode.saveMatrix(s, fitted, path)

@@ -40,6 +40,7 @@ object Profile {
         s""""warm_min_s":${s(warmMinS)},"warm_spread_s":${s(warmSpreadS)},""" +
         s""""task_s":${s(taskS)},"gc_s":${s(tasks.gcMs / 1e3)},""" +
         s""""sched_delay_s":${s(tasks.schedDelayMs / 1e3)},"tasks":${tasks.tasks},""" +
+        s""""jobs":${tasks.jobs},""" +
         s""""shuffle_write_bytes":${tasks.shuffleWriteBytes},""" +
         s""""spill_bytes":${tasks.spillBytes},"persisted_after":$persistedAfter,""" +
         s""""max_method_bytes":$maxMethodBytes$err}"""
@@ -86,7 +87,7 @@ object Profile {
         spark.sparkContext.getPersistentRDDs.size, maxMethodBytes)
     } catch {
       case e: Throwable =>
-        Rec(name, -1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0),
+        Rec(name, -1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0),
           spark.sparkContext.getPersistentRDDs.size, -1, sanitize(e))
     } finally dropPersisted(spark)
   }

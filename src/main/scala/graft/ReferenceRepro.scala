@@ -15,7 +15,7 @@ import graft.ohlcv.{Encode, Forecast, Ingest, TimeSeriesOps, Windows}
   *   - `all`: union of all 7 symbol CSVs, searched as ONE index space
   *     across symbols (the reference's ConcatDataset semantics, U2).
   *   - `pca`: LEARNED linear encoder instead of mean-pool — PCA fitted
-  *     with MLlib on the TRAIN windows' z-arrays only (the same
+  *     by Encode.pcaMatrix on the TRAIN windows' z-arrays only (the same
   *     leakage-free discipline as the reference's encoder, which is
   *     trained on train data), then applied to both sides. This is the
   *     q204 encoder at the reference's own geometry (256→64).

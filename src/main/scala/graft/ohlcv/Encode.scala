@@ -158,29 +158,57 @@ object Encode {
     m
   }
 
-  /** PCA projection learned with MLlib from a sample of windows: returns
-    * the outDim × inLen principal-component matrix. The sample (not the
-    * full corpus) is bounded by `maxRows`, so the driver-side SVD stays
-    * constant-size while the projection itself is applied distributively
-    * via [[linearProject]]'s kernel, which ships the matrix to executors
-    * as one plan constant.
+  /** PCA projection learned from a sample of windows: returns the
+    * outDim × inLen matrix whose rows are the leading principal
+    * components, sign-canonicalized and quantized to 1e-9. Each scan of
+    * the input is one `treeAggregate` ([[CoMoments.scan]]) that builds
+    * the row count, the mean and the co-moments; the driver decomposes
+    * the inLen × inLen covariance (divisor m − 1, as MLlib's `RowMatrix`)
+    * with [[SymmetricEigen]]. The sample is bounded by `maxRows`, so the
+    * driver side stays constant-size while the projection itself is
+    * applied distributively via [[linearProject]]'s kernel.
+    *
+    * Sampling, with `seed` 42 throughout:
+    *  - no `sampleFraction`: each partition stops adding rows to its
+    *    moments past `maxRows` but keeps counting. A total ≤ `maxRows`
+    *    is the whole input (a fraction-1.0 sample) and is fitted as is;
+    *    a larger total costs one more scan, over
+    *    `sample(maxRows / total)`.
+    *  - a `sampleFraction`: one scan over `sample(sampleFraction)`.
+    *
+    * Fails with a message naming it on a NULL window, a window whose
+    * length is not `inLen`, a NULL or non-finite element, fewer than 2
+    * sampled rows, a covariance that is not finite or whose
+    * eigendecomposition does not converge, and `outDim` outside
+    * [1, inLen].
     */
   def pcaMatrix(windows: DataFrame, arrCol: String, inLen: Int, outDim: Int,
-      maxRows: Int = 4096, sampleFraction: Option[Double] = None): Array[Array[Double]] = {
-    import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
-    import org.apache.spark.mllib.linalg.distributed.RowMatrix
-    // An explicit fraction skips the count() pass — one fewer full
-    // materialization of the window pipeline when the caller knows the
-    // rough corpus size (the fit only needs a few thousand rows).
-    val frac = sampleFraction.getOrElse(
-      math.min(1.0, maxRows.toDouble / math.max(1L, windows.count()).toDouble))
-    val sample = windows.select(col(arrCol)).sample(withReplacement = false, frac, seed = 42L)
-    val rows = sample.rdd.map { r =>
-      val seq = r.getSeq[Double](0)
-      OldVectors.dense(seq.toArray)
+      maxRows: Int = 4096, sampleFraction: Option[Double] = None): Array[Array[Double]] =
+    fitPca(windows, arrCol, inLen, outDim, maxRows, sampleFraction)._1
+
+  /** [[pcaMatrix]]'s matrix together with the moments it was fitted on. */
+  private def fitPca(windows: DataFrame, arrCol: String, inLen: Int, outDim: Int,
+      maxRows: Int, sampleFraction: Option[Double]): (Array[Array[Double]], CoMoments) = {
+    require(outDim >= 1 && outDim <= inLen,
+      s"pcaMatrix: outDim $outDim is outside [1, $inLen]")
+    val z = windows.select(col(arrCol))
+    def scan(df: DataFrame, cap: Long) = CoMoments.scan(df, arrCol, inLen, cap, "pcaMatrix")
+    def sample(frac: Double) = z.sample(withReplacement = false, frac, seed = 42L)
+    val mom = sampleFraction match {
+      case Some(frac) => scan(sample(frac), Long.MaxValue)
+      case None =>
+        val all = scan(z, maxRows)
+        if (all.seen <= maxRows) all
+        else scan(sample(maxRows.toDouble / all.seen.toDouble), Long.MaxValue)
     }
-    val mat = new RowMatrix(rows)
-    val pc = mat.computePrincipalComponents(outDim) // inLen × outDim
+    require(mom.rows >= 2, s"pcaMatrix: ${mom.rows} sampled rows, need at least 2")
+    val cov = mom.covariance
+    require(cov.forall(_.forall(java.lang.Double.isFinite)),
+      s"pcaMatrix: the covariance of ${mom.rows} rows is not finite")
+    val pcs = try SymmetricEigen.decompose(cov)._2 catch {
+      case e: ArithmeticException => throw new ArithmeticException(
+        s"pcaMatrix: the $inLen x $inLen covariance of ${mom.rows} rows: ${e.getMessage}")
+    }
     // Sign-canonicalize each component BEFORE quantizing: an eigenvector
     // is defined only up to sign, and under near-degenerate eigenvalues
     // a refit can legitimately flip it. Forcing the largest-magnitude
@@ -195,7 +223,7 @@ object Encode {
     // unless both sit at a shared midpoint — the already-documented rare
     // residual, no longer a second unbounded one.
     val canon = Array.tabulate(outDim) { i =>
-      val colv = Array.tabulate(inLen)(j => pc(j, i))
+      val colv = pcs(i)
       var best = 0
       var bestQ = math.rint(math.abs(colv(0)) * 1e9)
       var j = 1
@@ -206,12 +234,13 @@ object Encode {
       }
       if (colv(best) < 0) colv.map(-_) else colv
     }
-    // Quantize the canonicalized components to 1e-9: the covariance
-    // treeAggregate sums in task-completion order, so refitting the same
-    // data can drift the raw components by ~1e-13 ulps run to run. Under
-    // quantization the fit is reproducible IN PRACTICE — the guarantee
-    // is statistical, not absolute: a component sitting within the drift
-    // width (~1e-13) of a 0.5e-9 grid midpoint can still round
+    // Quantize the canonicalized components to 1e-9: the Chan merge of
+    // the per-partition moments runs in task-completion order, and the
+    // Welford update in the rows' order within a partition, so refitting
+    // the same data can drift the raw components by ~1e-13 ulps run to
+    // run. Under quantization the fit is reproducible IN PRACTICE — the
+    // guarantee is statistical, not absolute: a component sitting within
+    // the drift width (~1e-13) of a 0.5e-9 grid midpoint can still round
     // differently across refits; at ~1e-13/1e-9 ≈ 1e-4 per entry that is
     // rare, not impossible. A reproducible matrix is what lets Spark's
     // cache manager recognize a refit pipeline as the already-persisted
@@ -222,16 +251,18 @@ object Encode {
     // correctness, because the dynamic oracle always reads the same
     // quantized values the plan used. 1e-9 is ~4 orders above the drift
     // and ~7 below the components' scale.
-    Array.tabulate(outDim, inLen)((i, j) => math.rint(canon(i)(j) * 1e9) / 1e9)
+    (Array.tabulate(outDim, inLen)((i, j) => math.rint(canon(i)(j) * 1e9) / 1e9), mom)
   }
 
   /** WHITENED PCA projection (PCA-whitening, public knowledge: scale each
     * principal component by the inverse standard deviation of the data's
     * projection onto it, making the latent space isotropic — the standard
     * preprocessing of ZCA/PCA-whitening and the Mahalanobis view of
-    * nearest-neighbor search). Fit = [[pcaMatrix]] on the same bounded
-    * sample, then ONE distributed variance pass over the sample's
-    * projections ([[linearProject]]'s kernel); the scaled rows are
+    * nearest-neighbor search). Fit = [[pcaMatrix]]'s single scan; the
+    * population variance of component i is `mᵢᵀ(C/count)mᵢ`, read from
+    * that fit's own co-moments C with the quantized row mᵢ, so the
+    * variances describe exactly the sampled windows the components were
+    * learned from and no second pass runs. The scaled rows are
     * re-quantized to the same 1e-9 grid so the fit stays reproducible
     * (the kernel's content-equal matrix constant still matches a refit in
     * the cache manager) and the dynamic oracle reads the exact values the
@@ -241,34 +272,10 @@ object Encode {
   def whitenedPcaMatrix(windows: DataFrame, arrCol: String, inLen: Int,
       outDim: Int, maxRows: Int = 4096, sampleFraction: Option[Double] = None,
       eps: Double = 1e-9): Array[Array[Double]] = {
-    // Resolve the sampling fraction ONCE and pass it down to pcaMatrix:
-    // the default branch counts the window pipeline, and computing it
-    // twice would both pay a second full materialization and — if the
-    // two counts ever disagreed (a racing write under the source) —
-    // silently de-sync the whitening sample from the fit sample
-    // (round-12 ADVICE #3).
-    val frac = sampleFraction.getOrElse(
-      math.min(1.0, maxRows.toDouble / math.max(1L, windows.count()).toDouble))
-    val m = pcaMatrix(windows, arrCol, inLen, outDim, maxRows, Some(frac))
-    // Same deterministic sample as the fit (fraction + seed), so the
-    // whitening variances describe exactly the windows the components
-    // were learned from.
-    val sample = windows.select(col(arrCol).as("__z"))
-      .sample(withReplacement = false, frac, seed = 42L)
-      .select(linearProject(col("__z"), m).as("__e"))
-      .select((0 until outDim).map(i =>
-        element_at(col("__e"), i + 1).as(s"c$i")): _*)
-    val varRow = sample.select((0 until outDim).map(i =>
-      var_pop(col(s"c$i")).as(s"v$i")): _*).head()
-    Array.tabulate(outDim, inLen) { (i, j) =>
-      // var_pop over zero rows is NULL — fail loudly instead of NPE-ing
-      // deep inside Row.getDouble (an empty sample means the fit itself
-      // was vacuous; no whitening scale is defensible).
-      require(!varRow.isNullAt(i),
-        s"whitenedPcaMatrix: empty projection sample (frac=$frac) — " +
-          s"component $i has no variance to whiten by")
-      val scale = 1.0 / math.sqrt(varRow.getDouble(i) + eps)
-      math.rint(m(i)(j) * scale * 1e9) / 1e9
+    val (m, mom) = fitPca(windows, arrCol, inLen, outDim, maxRows, sampleFraction)
+    Array.tabulate(outDim) { i =>
+      val scale = 1.0 / math.sqrt(mom.projectedVariance(m(i)) + eps)
+      m(i).map(v => math.rint(v * scale * 1e9) / 1e9)
     }
   }
 }

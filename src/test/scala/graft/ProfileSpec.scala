@@ -22,9 +22,10 @@ class ProfileSpec extends SparkSpec {
     assert(rec.warmSpreadS >= 0 && rec.tasks.tasks > 0, rec.json)
     val js = new ObjectMapper().readTree(rec.json)
     Seq("query", "rows", "cold_s", "warm_min_s", "warm_spread_s", "task_s",
-      "gc_s", "sched_delay_s", "shuffle_write_bytes", "spill_bytes",
+      "gc_s", "sched_delay_s", "tasks", "jobs", "shuffle_write_bytes", "spill_bytes",
       "persisted_after", "max_method_bytes").foreach(k => assert(js.has(k), s"record lacks $k"))
     assert(js.get("rows").asLong == rec.rows)
+    assert(rec.tasks.jobs > 0 && js.get("jobs").asLong == rec.tasks.jobs, rec.json)
     // q01 aggregates in a codegen stage, so some method was compiled.
     assert(rec.maxMethodBytes > 0 && js.get("max_method_bytes").asInt == rec.maxMethodBytes)
     assert(!js.has("error"))

@@ -62,4 +62,56 @@ class EncodeSpec extends SparkSpec {
     val m = Encode.pcaMatrix(df, "values", inLen = 8, outDim = 2)
     assert(w.flatten.toSeq != m.flatten.toSeq)
   }
+
+  // ---- loud input validation: each bad input fails naming pcaMatrix ----
+
+  /** Every message on the cause chain: a failing task surfaces as a
+    * SparkException wrapping the executor's exception. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  private def good(i: Int): Seq[Option[Double]] =
+    Seq.tabulate(8)(j => Some(math.sin(i * 0.7 + j) * (1 + i % 5)))
+
+  private def fitFails(rows: Seq[Option[Seq[Option[Double]]]], want: String,
+      outDim: Int = 2): Unit = {
+    val df = rows.map(Tuple1(_)).toDF("values")
+    val e = intercept[Exception](Encode.pcaMatrix(df, "values", inLen = 8, outDim = outDim))
+    val msg = messages(e)
+    assert(msg.contains("pcaMatrix") && msg.contains(want), msg)
+  }
+
+  private val goodRows = (0 until 40).map(i => Some(good(i)))
+
+  test("pcaMatrix fails naming itself on a NULL window") {
+    fitFails(goodRows :+ None, "NULL window in 'values'")
+  }
+
+  test("pcaMatrix fails naming itself on a window whose length is not inLen") {
+    fitFails(goodRows :+ Some(good(99).take(7)), "has 7 elements, want 8")
+    fitFails(goodRows :+ Some(good(99) :+ Some(1.0)), "has 9 elements, want 8")
+  }
+
+  test("pcaMatrix fails naming itself on a NULL element instead of reading it as 0.0") {
+    fitFails(goodRows :+ Some(good(99).updated(3, None)), "NULL element at index 3")
+  }
+
+  test("pcaMatrix fails naming itself on a non-finite value") {
+    fitFails(goodRows :+ Some(good(99).updated(5, Some(Double.NaN))), "non-finite value NaN at index 5")
+    fitFails(goodRows :+ Some(good(99).updated(0, Some(Double.PositiveInfinity))),
+      "non-finite value Infinity at index 0")
+  }
+
+  test("pcaMatrix fails naming itself on a covariance that is not finite") {
+    // Finite inputs whose squares overflow the co-moments.
+    fitFails((0 until 40).map(i => Some(good(i).map(_.map(_ * 1e200)))),
+      "covariance of 40 rows is not finite")
+  }
+
+  test("pcaMatrix keeps its failures for < 2 sampled rows and outDim outside [1, inLen]") {
+    fitFails(goodRows.take(1), "1 sampled rows, need at least 2")
+    fitFails(Nil, "0 sampled rows, need at least 2")
+    fitFails(goodRows, "outDim 0 is outside [1, 8]", outDim = 0)
+    fitFails(goodRows, "outDim 9 is outside [1, 8]", outDim = 9)
+  }
 }
