@@ -148,49 +148,26 @@ object ClassifierQueries {
     }
   }
 
-  /** Cell budget for the fit's exact local tier (round-17 optimization).
-    * The GD loop is 3 driver-blocking jobs × E epochs over the persisted
-    * feature table — pure job latency when the table is small (sf0.1:
-    * ~300k cells), and every per-doc number is quantized to µ-unit
-    * BIGINTs BEFORE any cross-doc sum, so the arithmetic is order-free
-    * and a driver loop over the collected cells is exactly the
-    * distributed trajectory (same Math.exp/log/floor doubles per doc,
-    * same integer sums — pinned by LocalTierParitySpec). The gauge is a
-    * count() on the persisted feature table — the CC/PageRank pattern
-    * (round-18, VERDICT #6 / ADVICE r17: the old `limit(budget+1)`
-    * probe pulled up to ~4M Rows onto the driver just to discard them
-    * past the budget, via the executeTake sequential-ramp the Dedup
-    * comment documents as a measured loss) — and the DISTRIBUTED tier
-    * reuses the same persisted frame instead of recomputing the
-    * tokenize pass. Past the budget (100 TB: N·B cells) the loop runs
-    * unchanged. 0 disables. A sys-prop of the same name (lowercased,
-    * dots) overrides per-JVM so specs can force the distributed tier.
+  /** The fit's [[LocalTier.Clf]] dispatch: every per-doc number is
+    * quantized to µ-unit BIGINTs BEFORE any cross-doc sum, so a driver
+    * loop over the collected cells is exactly the distributed trajectory.
+    * The gauge counts the persisted feature table, which the distributed
+    * loop then reads instead of re-running the tokenize pass; with the
+    * local tier disabled nothing is persisted or counted.
     */
-  private def LocalClfMaxCells: Int =
-    sys.props.get("graft.local.clf.max.cells").orElse(
-      sys.env.get("GRAFT_LOCAL_CLF_MAX_CELLS")).flatMap(_.toIntOption)
-      .getOrElse(4 << 20)
-
   private[graft] def clfFitRun(s: SparkSession, d: String)
       : (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long]) = {
-    if (LocalClfMaxCells > 0) {
-      // Persist + count-gauge: the distributed loop needs the persisted
-      // frame anyway (it is reused 2·E times), and under the budget the
-      // collect reads cached rows in one parallel pass.
-      val bt = featureTable(s, d)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val nCells = bt.count()
-      if (nCells <= LocalClfMaxCells) {
-        val cells = bt.collect().map(r =>
-          (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-        bt.unpersist(false)
-        return clfFitLocal(cells)
+    val bt = featureTable(s, d)
+    val gauged = LocalTier.Clf.budget > 0
+    if (gauged) bt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      LocalTier.collect(LocalTier.Clf, bt)(LocalTier.Gauge(bt.count())) { rows =>
+        Some(rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))))
+      } match {
+        case Some(cells) => clfFitLocal(cells)
+        case None => clfFitDistributedOn(s, bt)
       }
-      System.err.println(s"[clf] NOTE: feature table ($nCells cells) " +
-        s"exceeds local budget ($LocalClfMaxCells) — distributed GD loop")
-      return clfFitDistributedOn(s, bt, alreadyPersisted = true)
-    }
-    clfFitDistributed(s, d)
+    } finally { if (gauged) bt.unpersist(); () }
   }
 
   /** Local tier of the fit: same per-doc µ-unit quantization (the same
@@ -250,18 +227,9 @@ object ClassifierQueries {
     (rows.toSeq, wq)
   }
 
-  /** The distributed GD loop — the 100 TB tier, unchanged semantics. */
-  private[graft] def clfFitDistributed(s: SparkSession, d: String)
-      : (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long]) =
-    clfFitDistributedOn(s, featureTable(s, d), alreadyPersisted = false)
-
-  /** Loop body over a caller-supplied feature table: when the count
-    * gauge already persisted it ([[clfFitRun]]), the doc_id repartition
-    * reads the cache instead of re-running the tokenize pass, and the
-    * gauge's cache entry is released alongside the loop's own.
-    */
-  private[graft] def clfFitDistributedOn(s: SparkSession, bt0: DataFrame,
-      alreadyPersisted: Boolean)
+  /** The distributed GD loop over a feature table — the 100 TB tier,
+    * unchanged semantics. */
+  private[graft] def clfFitDistributedOn(s: SparkSession, bt0: DataFrame)
       : (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long]) = {
     import s.implicits._
     val B = ClfBuckets
@@ -328,7 +296,6 @@ object ClassifierQueries {
       (rows.toSeq, wq)
     } finally {
       bt.unpersist()
-      if (alreadyPersisted) bt0.unpersist()
       ()
     }
   }

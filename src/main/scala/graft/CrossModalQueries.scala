@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Queries.Q
 import graft.Rounding.{dround, sqlRound}
 import graft.VectorTextQueries.sqlToks
+import graft.sim.Graph
 import graft.text.TextOps
 
 /** Cross-modal compositions (round-15 verdict #2/#5): the release
@@ -168,12 +169,8 @@ object CrossModalQueries {
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
     for (r <- 1 to rounds) {
-      val nm = edges
-        .join(labels.select(col("id").as("src"), col("lbl")), "src")
-        .groupBy(col("dst").as("id")).agg(min("lbl").as("__nm"))
-      val next = labels.join(nm, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("__nm"), col("lbl"))).as("lbl"))
+      val next = Graph.minLabelRound(edges, labels, "lbl")
+        .select("id", "lbl")
         .localCheckpoint(true)
       if (r > 1) CheckpointRelease.release(labels)
       labels = next
@@ -209,18 +206,16 @@ object CrossModalQueries {
       val localLosers = pAgg.getLong(1)
       val labels = boundedMinLabels(p, AuditRounds)
       try {
-        // Fixed-point check: one more neighbor-min pass; any improvable
+        // Fixed-point check: one more min-label round; any improved
         // label means clusters deeper than AuditRounds hops exist. The
-        // same pass folds the bounded-CC loser count (lbl ≠ id).
+        // same pass folds the bounded-CC loser count (the audited label
+        // __old ≠ id).
         val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
           .union(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-        val nm = edges
-          .join(labels.select(col("id").as("src"), col("lbl")), "src")
-          .groupBy(col("dst").as("id")).agg(min("lbl").as("__nm"))
-        val lAgg = labels.join(nm, Seq("id"), "left")
+        val lAgg = Graph.minLabelRound(edges, labels, "lbl")
           .agg(
-            sum(when(col("__nm") < col("lbl"), 1L).otherwise(0L)).as("chg"),
-            sum(when(col("lbl") =!= col("id"), 1L).otherwise(0L)).as("ccl"))
+            sum(when(col("lbl") < col("__old"), 1L).otherwise(0L)).as("chg"),
+            sum(when(col("__old") =!= col("id"), 1L).otherwise(0L)).as("ccl"))
           .collect().head
         val changed = if (lAgg.isNullAt(0)) 0L else lAgg.getLong(0)
         val ccLosers = if (lAgg.isNullAt(1)) 0L else lAgg.getLong(1)

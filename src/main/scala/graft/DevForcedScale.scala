@@ -3,17 +3,15 @@ package graft
 /** Dev-only (round-18, VERDICT r17 #2): measure the DISTRIBUTED tier of
   * the local-tier operators at sf0.1 and at a 30× blow-up, so the 100 TB
   * code path stays pinned in SCALING.md even though the bench-scale runs
-  * all take the local tier. Forces the distributed dispatch through the
-  * sys-prop budget overrides (the JVM-local twin of GRAFT_LOCAL_*=0).
+  * all take the local tier. Forces the distributed dispatch by setting
+  * every [[LocalTier]] budget to 0.
   *
   * Usage: runMain graft.DevForcedScale [factor]
   */
 object DevForcedScale {
   private val Names = Seq("q107_dedup_clusters", "q221_bpe_train",
     "q260_bpe_phrase_1k", "q136_pagerank", "q287_quality_classifier")
-  private val Props = Seq("graft.local.cc.max.edges",
-    "graft.local.bpe.max.rows", "graft.local.pr.max.edges",
-    "graft.local.clf.max.cells")
+  private val Props = LocalTier.All.map(_.prop)
 
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(30)

@@ -185,47 +185,19 @@ object PipelineQueries {
       .withColumn("enc", regexp_replace(col("w"), "(.)", ";$1;"))
       .localCheckpoint(true)
 
-  /** Small-state budget for the BPE trainer loops' exact local tier
-    * (round-17 optimization). Every trainer round is ONE Spark job over
-    * the (enc, freq) state — pure job latency when the state is a few
-    * thousand rows, which it is at every bench SF (q221/q230: the
-    * word-TYPE table, 31 rows; q260: the distinct doc-sequence table,
-    * ≤5k rows / ~3 MB at sf0.1) — and the rounds are sequential by
-    * construction, so the scheduler floor multiplies by 32–64. When the
-    * materialized seed fits the budget (ONE bounded agg on the already-
-    * checkpointed seed decides), the loop runs on the driver with the
-    * SAME kernels (pair counts, the shared total order, the literal
-    * replace / batch-merge scan) — bit-identical trajectories, pinned by
-    * the unrolled-CTE oracles and BpeLocalParitySpec. Past the budget
-    * (a 100 TB vocabulary / corpus state) the distributed loops run
-    * unchanged. 0 disables the local tier.
+  /** The BPE trainers' [[LocalTier.Bpe]] dispatch: one agg (rows + total
+    * chars) on the already-checkpointed seed gauges it — q221/q230's
+    * word-TYPE table is 31 rows, q260's doc-sequence table ≤5k rows at
+    * sf0.1 — and within budget the local loops run the SAME kernels over
+    * the collected state (bit-identical trajectories, pinned by the
+    * unrolled-CTE oracles). None ⇒ stay distributed.
     */
-  private[graft] def LocalBpeMaxRows: Long =
-    sys.props.get("graft.local.bpe.max.rows").orElse(
-      sys.env.get("GRAFT_LOCAL_BPE_MAX_ROWS")).flatMap(_.toLongOption)
-      .getOrElse(2000000L)
-  private[graft] def LocalBpeMaxChars: Long =
-    sys.props.get("graft.local.bpe.max.chars").orElse(
-      sys.env.get("GRAFT_LOCAL_BPE_MAX_CHARS")).flatMap(_.toLongOption)
-      .getOrElse(64000000L)
-
-  /** Collect a checkpointed (enc, freq) trainer state when it fits the
-    * local budget: one bounded agg job (count + total chars) decides, one
-    * collect pulls ≤ LocalBpeMaxRows rows. None ⇒ stay distributed.
-    */
-  private def collectSmallState(df: DataFrame): Option[Array[(String, Long)]] = {
-    if (LocalBpeMaxRows <= 0) return None
-    val h = df.agg(count(lit(1)).as("n"),
-      coalesce(sum(length(col("enc"))), lit(0L)).as("ch")).head()
-    if (h.getLong(0) <= LocalBpeMaxRows && h.getLong(1) <= LocalBpeMaxChars)
-      Some(df.select("enc", "freq").collect()
-        .map(r => (r.getString(0), r.getLong(1))))
-    else {
-      System.err.println(s"[bpe] NOTE: trainer state ${h.getLong(0)} rows/" +
-        s"${h.getLong(1)} chars exceeds local budget — distributed loop")
-      None
-    }
-  }
+  private def collectSmallState(df: DataFrame): Option[Array[(String, Long)]] =
+    LocalTier.collect(LocalTier.Bpe, df.select("enc", "freq")) {
+      val h = df.agg(count(lit(1)).as("n"),
+        coalesce(sum(length(col("enc"))), lit(0L)).as("ch")).head()
+      LocalTier.Gauge(h.getLong(0), h.getLong(1))
+    }(rows => Some(rows.map(r => (r.getString(0), r.getLong(1)))))
 
   /** Local mirror of [[bpePairCounts]] / [[phraseBpePoolRdd]]'s pair
     * aggregation: adjacent-symbol counts over the ";sym;;sym;" encoding.

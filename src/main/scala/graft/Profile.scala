@@ -12,7 +12,9 @@ import org.apache.spark.sql.graft.{CodegenStats, ListenerBridge}
   * resident when the last rep ends (intra-query caches and leaks alike),
   * and `max_method_bytes`: the largest compiled whole-stage method of any
   * SQL execution the reps ran — past [[CodegenStats.HugeMethodLimit]]
-  * that stage runs interpreted.
+  * that stage runs interpreted, and `tiers`: the last [[LocalTier]]
+  * decision of each iterative operator the reps ran (`local` or
+  * `distributed`, with its gauge).
   * Whatever the query left behind is then dropped, so the next query
   * starts from an empty cache.
   *
@@ -30,7 +32,8 @@ object Profile {
 
   final case class Rec(query: String, rows: Long, coldS: Double,
       warmMinS: Double, warmSpreadS: Double, tasks: TaskCounters.Snap,
-      persistedAfter: Int, maxMethodBytes: Int, error: String = null) {
+      persistedAfter: Int, maxMethodBytes: Int,
+      tiers: Seq[(String, LocalTier.Decision)], error: String = null) {
     def ok: Boolean = error == null
     def taskS: Double = tasks.runMs / 1e3
     def json: String = {
@@ -43,7 +46,8 @@ object Profile {
         s""""jobs":${tasks.jobs},""" +
         s""""shuffle_write_bytes":${tasks.shuffleWriteBytes},""" +
         s""""spill_bytes":${tasks.spillBytes},"persisted_after":$persistedAfter,""" +
-        s""""max_method_bytes":$maxMethodBytes$err}"""
+        s""""max_method_bytes":$maxMethodBytes,""" +
+        s""""tiers":{${tiers.map { case (op, d) => s""""$op":${d.json}""" }.mkString(",")}}$err}"""
     }
   }
 
@@ -76,6 +80,7 @@ object Profile {
       ListenerBridge.waitUntilListenerBusEmpty(spark)
       (rows, wall, counters.snapshot().minus(before))
     }
+    LocalTier.drain()
     try {
       val ((cold, warm), maxMethodBytes) = CodegenStats.largestMethodDuring(spark) {
         val cold = rep()
@@ -84,11 +89,11 @@ object Profile {
       val best = if (warm.isEmpty) cold else warm.minBy(_._2)
       val spread = if (warm.isEmpty) 0.0 else warm.map(_._2).max - warm.map(_._2).min
       Rec(name, cold._1, cold._2, best._2, spread, best._3,
-        spark.sparkContext.getPersistentRDDs.size, maxMethodBytes)
+        spark.sparkContext.getPersistentRDDs.size, maxMethodBytes, LocalTier.drain())
     } catch {
       case e: Throwable =>
         Rec(name, -1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0),
-          spark.sparkContext.getPersistentRDDs.size, -1, sanitize(e))
+          spark.sparkContext.getPersistentRDDs.size, -1, LocalTier.drain(), sanitize(e))
     } finally dropPersisted(spark)
   }
 

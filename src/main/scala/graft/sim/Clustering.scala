@@ -7,10 +7,11 @@ import org.apache.spark.sql.graft.GraftExpressions.arraySqDiff
 import org.apache.spark.storage.StorageLevel
 
 /** Iterative clustering driven from the driver with O(iterations) tiny
-  * actions — the same loop discipline as
+  * actions — the loop discipline of the distributed tier of
   * [[graft.text.Dedup.connectedComponents]]: per-iteration state is a
   * persisted DataFrame, the driver sees only a change COUNT, and no
-  * vector data ever leaves the executors.
+  * vector data ever leaves the executors. (k-means has no local tier;
+  * the operators that do are dispatched by [[graft.LocalTier]].)
   */
 object Clustering {
 

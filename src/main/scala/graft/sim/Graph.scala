@@ -1,52 +1,79 @@
 package graft.sim
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointRelease
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
+
+import graft.LocalTier
 
 /** Distributed graph analytics over edge DataFrames.
   *
   * Companion to [[graft.text.Dedup.connectedComponents]] (cluster
   * detection): here PageRank scores rank nodes WITHIN a component — e.g.
   * picking the most-central duplicate as a cluster's keeper instead of
-  * min-id.
+  * min-id. Both operators share the edge-list tier dispatch
+  * ([[edgeTiers]]) and the min-label round ([[minLabelRound]]).
   */
 object Graph {
 
-  /** Fixed-point PageRank (Brin & Page 1998) over an undirected edge
-    * list, damping 0.85, `iters` power iterations.
-    *
-    * Determinism by construction: ranks are 1e-9-unit fixed-point LONGS
-    * and every step is integral —
-    * `r₀ = 1e9 div n`,
-    * `rₜ₊₁(v) = 15e7 div n + (85 · Σ_{u→v} (rₜ(u) div deg(u))) div 100` —
-    * so the result is bit-identical regardless of aggregation order,
-    * partitioning, or engine (float PageRank would drift by summation
-    * order). The div-truncation loss (< deg·1e-9 per node per step) is
-    * far below any ranking-relevant difference.
-    *
-    * Shape at 100 TB: `deg` and the undirected edge list persist across
-    * iterations; each iteration is one equi-join of edges against the
-    * (nodes-sized) rank table plus one hash aggregation on dst — the
-    * standard Pregel-style plan. Only `n` (node count) reaches the
-    * driver.
-    *
-    * Output: (id, r) for every node with ≥ 1 edge; Σr ≈ 1e9.
+  /** The symmetric distinct edge list (src, dst) of `pairs`, persisted
+    * and counted once — the frame both tiers of CC and PageRank read —
+    * and, when [[LocalTier]] takes the local tier for `tier`, its rows as
+    * id pairs (the edges are then released). The local tier needs BIGINT
+    * ids and no null id; otherwise the persisted edges are left to the
+    * caller's distributed loop, which unpersists them.
     */
-  /** Edge budget for the exact local tier (round-17 optimization; the
-    * [[graft.text.Dedup.connectedComponents]] pattern). The distributed
-    * loop is ~4 + 2·iters driver-blocking jobs; with integral fixed-point
-    * arithmetic the local replay is bit-identical, so when the
-    * materialized undirected edge list (which the distributed loop needs
-    * anyway) gauges under the budget, one bounded collect pulls it from
-    * the cache and the power iterations run on the driver. Past the
-    * budget the distributed loop runs unchanged on the same persisted
-    * frame. 0 disables.
+  private[graft] def edgeTiers(tier: LocalTier.Tier, pairs: DataFrame,
+      a: String, b: String): (DataFrame, Option[Array[(Long, Long)]]) = {
+    val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
+      .union(pairs.select(col(b).as("src"), col(a).as("dst")))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = edges.count()
+    val local =
+      if (Seq(a, b).exists(c => pairs.schema(c).dataType != LongType)) None
+      else LocalTier.collect(tier, edges)(LocalTier.Gauge(n)) { rows =>
+        if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
+          System.err.println(s"[${tier.op}] NOTE: edge list contains null " +
+            "ids — distributed loop")
+          None
+        } else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
+      }
+    if (local.isDefined) edges.unpersist(false)
+    (edges, local)
+  }
+
+  /** A local tier's (id, `valueCol`) BIGINT result as a LocalRelation, so
+    * downstream joins broadcast it instead of shuffling. */
+  private[graft] def idFrame(s: SparkSession, rows: Array[(Long, Long)],
+      valueCol: String): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField(valueCol, LongType)))
+    val out = new java.util.ArrayList[Row](rows.length)
+    rows.foreach { case (id, v) => out.add(Row(id, v)) }
+    s.createDataFrame(out, schema)
+  }
+
+  /** One min-label round: every vertex takes the least of its own label
+    * and its in-neighbours' — edges(src, dst) ⋈ labels(id, `label`) on
+    * src, min label by dst, then `least(label, coalesce(nmin, label))`.
+    * Returns (id, `label`, __old = the label before the round), so a
+    * caller counts changes with a filter on the frame it materializes
+    * anyway instead of a second join.
     */
-  private def LocalPrMaxEdges: Int =
-    sys.props.get("graft.local.pr.max.edges").orElse(
-      sys.env.get("GRAFT_LOCAL_PR_MAX_EDGES")).flatMap(_.toIntOption)
-      .getOrElse(1 << 20)
+  private[graft] def minLabelRound(edges: DataFrame, labels: DataFrame,
+      label: String): DataFrame = {
+    val nmin = edges
+      .join(labels.select(col("id").as("src"), col(label)), "src")
+      .groupBy(col("dst").as("id"))
+      .agg(min(label).as("__nmin"))
+    labels.join(nmin, Seq("id"), "left")
+      .select(col("id"),
+        least(col(label), coalesce(col("__nmin"), col(label))).as(label),
+        col(label).as("__old"))
+  }
 
   /** Local tier: the same integral recurrence over a collected edge
     * list — LocalTierParitySpec pins local ≡ distributed.
@@ -77,46 +104,40 @@ object Graph {
     ranks.toArray
   }
 
+  /** Fixed-point PageRank (Brin & Page 1998) over an undirected edge
+    * list, damping 0.85, `iters` power iterations.
+    *
+    * Determinism by construction: ranks are 1e-9-unit fixed-point LONGS
+    * and every step is integral —
+    * `r₀ = 1e9 div n`,
+    * `rₜ₊₁(v) = 15e7 div n + (85 · Σ_{u→v} (rₜ(u) div deg(u))) div 100` —
+    * so the result is bit-identical regardless of aggregation order,
+    * partitioning, or engine (float PageRank would drift by summation
+    * order). The div-truncation loss (< deg·1e-9 per node per step) is
+    * far below any ranking-relevant difference.
+    *
+    * Shape at 100 TB: `deg` and the undirected edge list persist across
+    * iterations; each iteration is one equi-join of edges against the
+    * (nodes-sized) rank table plus one hash aggregation on dst — the
+    * standard Pregel-style plan. Only `n` (node count) reaches the
+    * driver.
+    *
+    * Output: (id, r) for every node with ≥ 1 edge; Σr ≈ 1e9.
+    */
   def pageRankFixedPoint(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    // Materialize the undirected edge list once and gauge it with a
-    // count — not a limit().collect() probe, whose executeTake ramps the
-    // final stage up in sequential waves (the q270 finding, Dedup.scala).
-    val und = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .union(edges.select(col(dstCol).as("src"), col(srcCol).as("dst")))
-      .distinct()
-      .persist(lvl)
-    val nUnd = und.count()
-    val bothLong = edges.schema(srcCol).dataType == LongType &&
-      edges.schema(dstCol).dataType == LongType
-    if (bothLong && LocalPrMaxEdges > 0 && nUnd <= 2L * LocalPrMaxEdges) {
-      val arr = und.collect() // cached rows, bounded by the gauge above
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val ranks = pageRankLocal(arr.map(r => (r.getLong(0), r.getLong(1))), iters)
-        und.unpersist(false)
-        val schema = StructType(Seq(StructField("id", LongType),
-          StructField("r", LongType)))
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row](ranks.length)
-        ranks.foreach { case (id, r) => rows.add(org.apache.spark.sql.Row(id, r)) }
-        return edges.sparkSession.createDataFrame(rows, schema)
-      }
-      // Distinct diagnosis (ADVICE r17): under budget, null-id guard.
-      System.err.println("[graph] NOTE: edge list contains null ids — " +
-        "distributed PageRank loop")
-    } else if (bothLong && LocalPrMaxEdges > 0)
-      System.err.println(s"[graph] NOTE: edge list ($nUnd) exceeds local " +
-        "budget — distributed PageRank loop")
-    pageRankDistributed(edges.sparkSession, und, iters)
+    val (und, local) = edgeTiers(LocalTier.Pr, edges, srcCol, dstCol)
+    local match {
+      case Some(arr) => idFrame(edges.sparkSession, pageRankLocal(arr, iters), "r")
+      case None => pageRankDistributed(edges.sparkSession, und, iters)
+    }
   }
 
   /** The distributed Pregel-style loop over the materialized undirected
     * edge list — the 100 TB tier, unchanged semantics. Unpersists `und`
     * before returning.
     */
-  private[graft] def pageRankDistributed(
-      s: org.apache.spark.sql.SparkSession, und: DataFrame,
+  private[graft] def pageRankDistributed(s: SparkSession, und: DataFrame,
       iters: Int): DataFrame = {
     val lvl = StorageLevel.MEMORY_AND_DISK
     val deg = und.groupBy("src").agg(count(lit(1)).as("deg")).persist(lvl)
@@ -128,8 +149,13 @@ object Graph {
     }
     val base = 150000000L / n
     var ranks = deg.select(col("src").as("id"), lit(1000000000L / n).as("r"))
-    for (i <- 1 to iters) {
-      ranks = und
+    for (_ <- 1 to iters) {
+      // Truncate lineage each iteration: a single lazy plan of k chained
+      // join+agg stages makes Catalyst re-optimize a plan that doubles
+      // in depth every round — fine at 5 iterations, pathological at 50.
+      // The checkpointed frame is nodes-sized; results are unchanged
+      // (every step is exact integer arithmetic).
+      val next = und
         .join(ranks, und("src") === ranks("id"))
         .join(deg, "src")
         .select(col("dst"), expr("r div deg").as("__c"))
@@ -137,12 +163,12 @@ object Graph {
         .agg(sum("__c").as("__s"))
         .select(col("dst").as("id"),
           (lit(base) + expr("(85 * __s) div 100")).as("r"))
-      // Truncate lineage each iteration: a single lazy plan of k chained
-      // join+agg stages makes Catalyst re-optimize a plan that doubles
-      // in depth every round — fine at 5 iterations, pathological at 50.
-      // The checkpointed frame is nodes-sized; results are unchanged
-      // (every step is exact integer arithmetic).
-      ranks = ranks.localCheckpoint(true)
+        .localCheckpoint(true)
+      // The superseded round is dead once its successor is materialized;
+      // release its blocks now rather than at GC (no-op on the first
+      // round's projection of `deg`).
+      CheckpointRelease.release(ranks)
+      ranks = next
     }
     und.unpersist()
     deg.unpersist()

@@ -3,7 +3,9 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.LocalTier
 import graft.Rounding.pround
+import graft.sim.Graph
 
 /** Document deduplication operators: exact, MinHash+LSH, SimHash, n-gram
   * Jaccard, embedding-cosine near-dup (public-knowledge algorithms:
@@ -277,29 +279,6 @@ object Dedup {
     verified.select(col("id_a"), col("id_b"), pround(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** Edge budget for [[connectedComponents]]' exact local tier (round-17
-    * optimization). The min-label loop costs ~5 sequential driver-blocking
-    * jobs per invocation (edges persist+agg, then join+persist+count per
-    * round) — pure job latency when the pair list is small, which it is by
-    * construction on every registered tier (near-dup pairs are the
-    * SURVIVORS of banding + verification). When the symmetrized edge list
-    * (materialized once — the distributed loop needs it anyway) gauges
-    * under the budget, one bounded collect pulls it from the cache and an
-    * exact min-root union-find labels components on the driver; the
-    * result is a LocalRelation, so downstream joins against the labels
-    * broadcast instead of shuffling. Past the budget (e.g. the 30×/100×
-    * octave media graphs, multi-million edges) the distributed loop runs
-    * unchanged on the same persisted frame — never an unbounded collect.
-    * 0 disables the local tier outright. Budget default: 1M pairs ≈
-    * 32 MB of longs on a driver provisioned for ≥8 GB broadcast
-    * relations; at 100 TB the banded pair tiers exceed it and stay
-    * distributed.
-    */
-  private def LocalCcMaxEdges: Int =
-    sys.props.get("graft.local.cc.max.edges").orElse(
-      sys.env.get("GRAFT_LOCAL_CC_MAX_EDGES")).flatMap(_.toIntOption)
-      .getOrElse(1 << 20)
-
   /** Exact union-find (union by min root, path compression) over a
     * collected edge list — the local tier of [[connectedComponents]].
     * Returns one (id, cluster=min reachable id) row per distinct node,
@@ -341,7 +320,7 @@ object Dedup {
     * driver sees only a per-round change COUNT, never rows.
     *
     * Adaptive local tier (round-17): when both id columns are BIGINT and
-    * the materialized edge list fits [[LocalCcMaxEdges]], the components
+    * the materialized edge list fits [[LocalTier.Cc]], the components
     * are computed exactly on the driver (see [[unionFindMin]]) —
     * identical labels (LocalTierParitySpec pins local ≡ distributed on
     * chain/star/dup fixtures and the registered tiers' oracles pin every
@@ -353,43 +332,13 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
       idB: String = "id_b", maxIter: Int = 25,
       roundsOut: java.util.concurrent.atomic.AtomicInteger = null): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // Materialize the symmetrized edge list ONCE (the distributed loop
-    // needs exactly this frame anyway) and gauge it with a count — NOT a
-    // limit().collect() probe: executeTake ramps the final stage up in
-    // sequential partition waves (1, 4, 16…), which measured SLOWER than
-    // the one parallel pass it replaced (q270: 5.7 → 6.7 s warm).
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
-      .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .distinct()
-      .persist(lvl)
-    val nEdges = edges.count()
-    val bothLong = pairs.schema(idA).dataType == LongType &&
-      pairs.schema(idB).dataType == LongType
-    if (bothLong && LocalCcMaxEdges > 0 && nEdges <= 2L * LocalCcMaxEdges) {
-      val arr = edges.collect() // cached rows, bounded by the gauge above
-      if (!arr.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        val labels = unionFindMin(arr.map(r => (r.getLong(0), r.getLong(1))))
-        edges.unpersist(false)
+    val (edges, local) = Graph.edgeTiers(LocalTier.Cc, pairs, idA, idB)
+    local match {
+      case Some(arr) =>
         if (roundsOut != null) roundsOut.set(1)
-        val schema = StructType(Seq(StructField("id", LongType),
-          StructField("cluster", LongType)))
-        val rows = new java.util.ArrayList[org.apache.spark.sql.Row](labels.length)
-        labels.foreach { case (id, cl) =>
-          rows.add(org.apache.spark.sql.Row(id, cl))
-        }
-        return pairs.sparkSession.createDataFrame(rows, schema)
-      }
-      // Distinct diagnosis (ADVICE r17): the count is UNDER budget —
-      // the fallthrough is the null-id guard, not the edge budget.
-      System.err.println("[dedup] NOTE: connectedComponents edge list " +
-        "contains null ids — distributed min-label loop")
-    } else if (bothLong && LocalCcMaxEdges > 0)
-      // stderr — stdout stays pure for Bench
-      System.err.println(s"[dedup] NOTE: connectedComponents edge list " +
-        s"($nEdges) exceeds local budget — distributed min-label loop")
-    connectedComponentsDistributed(edges, maxIter, roundsOut)
+        Graph.idFrame(pairs.sparkSession, unionFindMin(arr), "cluster")
+      case None => connectedComponentsDistributed(edges, maxIter, roundsOut)
+    }
   }
 
   /** The distributed min-label loop over the materialized symmetric edge
@@ -427,18 +376,10 @@ object Dedup {
     var converged = false
     var i = 1
     while (!converged && i < maxIter) {
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min("cluster").as("__nmin"))
-      // Carry the previous label through the update so convergence is a
+      // The round carries the previous label through, so convergence is a
       // FILTER+COUNT on the frame we already materialize — not an extra
       // next⋈labels join (one fewer shuffle per iteration).
-      val next = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("cluster"), coalesce(col("__nmin"), col("cluster"))).as("cluster"),
-          col("cluster").as("__old"))
-        .localCheckpoint(true)
+      val next = Graph.minLabelRound(edges, labels, "cluster").localCheckpoint(true)
       val changed = next.filter(col("cluster") < col("__old")).count()
       CheckpointRelease.release(ckpt)
       ckpt = next

@@ -163,7 +163,8 @@ class LocalTierParitySpec extends SparkSpec {
     val (trajL, wqL) = ClassifierQueries.clfFitLocal(
       ClassifierQueries.featureTableOf(Tables.documents(spark, d))
         .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))))
-    val (trajD, wqD) = ClassifierQueries.clfFitDistributed(spark, d)
+    val (trajD, wqD) = ClassifierQueries.clfFitDistributedOn(spark,
+      ClassifierQueries.featureTableOf(Tables.documents(spark, d)))
     assert(trajL == trajD)
     assert(wqL.toSeq == wqD.toSeq)
   }
@@ -184,10 +185,10 @@ class LocalTierParitySpec extends SparkSpec {
   // ---------------------------------------- forced-distributed dispatch
   // Round-18 (VERDICT r17 #2): the sf0.1 bench exercises only the LOCAL
   // tier of these operators, so a regression in the 100 TB code path
-  // would otherwise be invisible. These tests zero the budgets through
-  // the sys-prop override (the JVM-local twin of GRAFT_LOCAL_*=0) and
-  // drive the PUBLIC dispatch — proving the gauge itself routes to the
-  // distributed tier and that the distributed result still matches.
+  // would otherwise be invisible. These tests zero the LocalTier
+  // sys-prop budgets and drive the PUBLIC dispatch — proving the gauge
+  // itself routes to the distributed tier and that the distributed
+  // result still matches.
 
   private def withProp[A](k: String, v: String)(f: => A): A = {
     sys.props(k) = v
@@ -212,6 +213,20 @@ class LocalTierParitySpec extends SparkSpec {
       sortedLabels(graft.sim.Graph.pageRankFixedPoint(df, "id_a", "id_b", 5))
     }
     assert(local == dist)
+  }
+
+  test("forced-distributed (budget=0): pageRankFixedPoint releases each superseded round's checkpoint") {
+    val df = ccFixture(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)))
+    val local = sortedLabels(graft.sim.Graph.pageRankFixedPoint(df, "id_a", "id_b", 5))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    val ranks = withProp("graft.local.pr.max.edges", "0") {
+      graft.sim.Graph.pageRankFixedPoint(df, "id_a", "id_b", 5)
+    }
+    // only the returned ranks checkpoint may stay resident
+    val after = spark.sparkContext.getPersistentRDDs.size
+    assert(after <= before + 1, s"persisted RDDs $before -> $after")
+    assert(sortedLabels(ranks) == local)
+    org.apache.spark.sql.graft.CheckpointRelease.release(ranks)
   }
 
   test("forced-distributed (budget=0): phraseBpeMerges dispatch matches local tier") {

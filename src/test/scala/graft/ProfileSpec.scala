@@ -23,7 +23,9 @@ class ProfileSpec extends SparkSpec {
     val js = new ObjectMapper().readTree(rec.json)
     Seq("query", "rows", "cold_s", "warm_min_s", "warm_spread_s", "task_s",
       "gc_s", "sched_delay_s", "tasks", "jobs", "shuffle_write_bytes", "spill_bytes",
-      "persisted_after", "max_method_bytes").foreach(k => assert(js.has(k), s"record lacks $k"))
+      "persisted_after", "max_method_bytes", "tiers").foreach(k => assert(js.has(k), s"record lacks $k"))
+    // q01 runs no iterative operator
+    assert(js.get("tiers").size == 0, rec.json)
     assert(js.get("rows").asLong == rec.rows)
     assert(rec.tasks.jobs > 0 && js.get("jobs").asLong == rec.tasks.jobs, rec.json)
     // q01 aggregates in a codegen stage, so some method was compiled.
@@ -42,6 +44,19 @@ class ProfileSpec extends SparkSpec {
     assert(rec.persistedAfter > 0, rec.json)
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       "measure left the query's persisted frame behind")
+  }
+
+  test("tiers carries each iterative operator's tier decision and gauge") {
+    val cc: Profile.QueryFn = (s, _) => {
+      import s.implicits._
+      graft.text.Dedup.connectedComponents(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))
+    }
+    val rec = withCounters(Profile.measure(spark, _, sf, "cc", cc, warmReps = 1))
+    assert(rec.ok, rec.json)
+    val tiers = new ObjectMapper().readTree(rec.json).get("tiers")
+    assert(tiers.size == 1, rec.json)
+    assert(tiers.get("cc").get("tier").asText == "local", rec.json)
+    assert(tiers.get("cc").get("gauge").asLong == 4L, rec.json)
   }
 
   test("a failing query yields an error record with -1 timings, not an exception") {
