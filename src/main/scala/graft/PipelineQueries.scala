@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CheckpointRelease
 
 import graft.Queries.Q
 import graft.Rounding.{pround, sqlRound}
@@ -176,7 +177,8 @@ object PipelineQueries {
       .agg(sum("freq").as("cnt"))
 
   /** The corpus's alphanumeric word-type frequency table with the
-    * boundary-safe ";sym;" initial encoding (shared BPE base). */
+    * boundary-safe ";sym;" initial encoding (shared BPE base). The
+    * trainer that builds it releases the checkpoint when it returns. */
   private def bpeWords(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(explode(TextOps.tokens(col("text"))).as("w"))
@@ -275,13 +277,13 @@ object PipelineQueries {
     merges.toSeq
   }
 
-  private def bpeMerges(s: SparkSession, d: String,
+  private[graft] def bpeMerges(s: SparkSession, d: String,
       k: Int): Seq[(Long, String, String, Long)] = {
     val words = bpeWords(s, d)
-    collectSmallState(words) match {
+    try collectSmallState(words) match {
       case Some(st) => bpeMergesLocal(st, k)
       case None => bpeMergesDistributed(words, k)
-    }
+    } finally CheckpointRelease.release(words)
   }
 
   /** The distributed step loop — the 100 TB tier of [[bpeMerges]],
@@ -412,10 +414,10 @@ object PipelineQueries {
       rounds: Int = BpeBatchRounds)
       : Seq[(Long, Long, String, String, Long)] = {
     val words = bpeWords(s, d)
-    collectSmallState(words) match {
+    try collectSmallState(words) match {
       case Some(st) => bpeBatchedMergesLocal(st, rounds)
       case None => bpeBatchedMergesDistributed(words, rounds)
-    }
+    } finally CheckpointRelease.release(words)
   }
 
   /** Local tier of [[bpeBatchedMerges]]: same pair counts, same top-W
@@ -469,9 +471,14 @@ object PipelineQueries {
         val encK = accepted.foldLeft(col("enc")) { case (e, (l, r, _)) =>
           replace(e, lit(s";$l;;$r;"), lit(s";$l$r;"))
         }
-        cur = cur.withColumn("enc", encK).localCheckpoint(true)
+        val next = cur.withColumn("enc", encK).localCheckpoint(true)
+        // A round's checkpoint is released once its successor exists;
+        // the seed belongs to the caller.
+        if (cur ne words) CheckpointRelease.release(cur)
+        cur = next
       }
     }
+    if (cur ne words) CheckpointRelease.release(cur)
     out.toSeq
   }
 
@@ -562,6 +569,7 @@ object PipelineQueries {
     * symbols, grouped to (enc, freq). Sanitization keeps the ';'
     * boundary scheme provably collision-free on ANY corpus (on this one
     * it is the identity: every token is already [A-Za-z0-9]+).
+    * [[phraseBpeMerges]] releases the checkpoint when it returns.
     */
   private[graft] def phraseSeqs(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
@@ -713,8 +721,10 @@ object PipelineQueries {
     */
   private[graft] def phraseBpeMerges(s: SparkSession, d: String,
       levels: Int = PhraseBpeLevels)
-      : Seq[(Long, Long, String, String, Long)] =
-    phraseBpeMergesOn(s, phraseSeqs(s, d), levels)
+      : Seq[(Long, Long, String, String, Long)] = {
+    val seqs = phraseSeqs(s, d)
+    try phraseBpeMergesOn(s, seqs, levels) finally CheckpointRelease.release(seqs)
+  }
 
   /** Dispatch over a caller-supplied seed state — the tier gauge itself,
     * exposed so LocalTierParitySpec can force the distributed route
@@ -1758,9 +1768,6 @@ object PipelineQueries {
   /** q125's surviving corpus (every unclustered doc plus each simhash
     * cluster's min-id keeper) — shared by q125 and the q232 token
     * accounting so the APPLY rule has exactly one definition. */
-  private[graft] def dedupSurvivorsForDev(s: SparkSession, d: String): DataFrame =
-    dedupSurvivors(s, d)
-
   private def dedupSurvivors(s: SparkSession, d: String): DataFrame = {
     import graft.text.Dedup
     val docs = Tables.documents(s, d)

@@ -166,24 +166,4 @@ object Multimodal {
       }
     }(Encoders.row(outSchema))
   }
-
-  /** "Resize" stub expressed relationally: truncate/pad the payload to
-    * `targetBytes` (a real resize decodes + rescales; the plumbing —
-    * binary in, binary out, pushdown-friendly — is identical).
-    */
-  def resizePayload(payload: Column, targetBytes: Int): Column = {
-    val truncated = substring(payload, 1, targetBytes)
-    val pad = lit(Array.fill[Byte](targetBytes)(0))
-    substring(concat(truncated, pad), 1, targetBytes)
-  }
-
-  /** Partition-size guard for wide binary rows: repartition so each task
-    * holds ≈`targetRowsPerPartition` payloads — keeps executor memory flat
-    * when payloads are MBs (the knob a 100 TB media table actually needs).
-    */
-  def repartitionForPayloads(df: DataFrame, approxRows: Long,
-      targetRowsPerPartition: Long): DataFrame = {
-    val parts = math.max(1L, approxRows / math.max(1L, targetRowsPerPartition)).toInt
-    df.repartition(parts)
-  }
 }

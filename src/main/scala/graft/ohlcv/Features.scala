@@ -3,16 +3,22 @@ package graft.ohlcv
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.RunningEma
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Technical-analysis feature operators (SURVEY.md §2.5 W3–W5, §2.8 F14).
   *
-  * Rolling means are plain window frames (codegen'd); the EMA recurrence is
-  * the one genuinely sequential operator — implemented as an ordered
-  * per-partition scan (`mapPartitions`) because an `adjust=False` EMA has
-  * infinite lookback and cannot be a bounded SQL window frame. The scan is
-  * sequential *per series* but all series run in parallel, which is the
-  * maximum parallelism the semantics admit.
+  * Rolling means are plain window frames (codegen'd). The EMA recurrence
+  * has infinite lookback, so no bounded frame of a built-in aggregate
+  * expresses it; it is a running window function
+  * ([[org.apache.spark.sql.graft.RunningEma]]) that `WindowExec` updates
+  * row by row over an unbounded-preceding frame, inside the same
+  * partitioning and sort as the rolling columns. It is sequential *per
+  * series* but all series run in parallel, which is the maximum
+  * parallelism the semantics admit. The Wilder, adaptive and multi-alpha
+  * recurrences ([[withWilder]], [[withAdaptiveEma]],
+  * [[Indicators.withEmaMulti]]) are still ordered per-partition scans
+  * (`mapPartitions`).
   */
 object Features {
 
@@ -56,53 +62,20 @@ object Features {
     * `minPeriods` non-null observations have been consumed get null
     * (pandas `min_periods` counts observations, not rows — relevant when
     * smoothing a derived series with a null head, e.g. the MACD signal).
+    * A NULL or NaN input is skipped, not observed.
     *
-    * Physical shape: one shuffle (`repartition(keyCol)`) + in-partition
-    * sort, then a single streaming pass appending all EMA columns at once.
-    * State is O(#specs) doubles per series — safe at any series length.
+    * Physical shape: each spec is a running window function
+    * ([[org.apache.spark.sql.graft.RunningEma]]) over
+    * `PARTITION BY keyCol ORDER BY ordCol`, so it shares the hash
+    * partitioning and sort of every other window column of the key (the
+    * `sma`/`lag`/Bollinger columns) and adds no shuffle of its own. State
+    * is three values per spec and series — safe at any series length.
     */
   def withEma(df: DataFrame, keyCol: String, ordCol: String, valCol: String,
-      specs: Seq[(String, Double, Int)]): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++
-      specs.map { case (name, _, _) => StructField(name, DoubleType, nullable = true) })
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val valIdx = inSchema.fieldIndex(valCol)
-    val alphas = specs.map(_._2).toArray
-    val minPeriods = specs.map(_._3).toArray
-    val nSpecs = specs.length
-    val sorted = df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
-      var n = 0L
-      val ema = new Array[Double](nSpecs)
-      val hasEma = new Array[Boolean](nSpecs)
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k; n = 0L
-          java.util.Arrays.fill(hasEma, false)
-        }
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
-        val x = if (row.isNullAt(valIdx)) Double.NaN else row.getDouble(valIdx)
-        if (!x.isNaN) n += 1 // pandas min_periods counts observations
-        var j = 0
-        while (j < nSpecs) {
-          if (!x.isNaN) {
-            if (!hasEma(j)) { ema(j) = x; hasEma(j) = true }
-            else ema(j) = alphas(j) * x + (1 - alphas(j)) * ema(j)
-          }
-          out(inSchema.length + j) =
-            if (hasEma(j) && n >= minPeriods(j)) java.lang.Double.valueOf(ema(j)) else null
-          j += 1
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
-      }
-    }(Encoders.row(outSchema))
-  }
+      specs: Seq[(String, Double, Int)]): DataFrame =
+    df.select(col("*") +: specs.map { case (name, alpha, minPeriods) =>
+      RunningEma.over(col(valCol), col(keyCol), col(ordCol), alpha, minPeriods).as(name)
+    }: _*)
 
   /** Span-parameterized EMA (pandas `ewm(span=w)`): α = 2/(w+1). */
   def emaSpanSpec(name: String, span: Int): (String, Double, Int) =

@@ -17,27 +17,6 @@ object Forecast {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Follow-on fetch (J2) as a compositional step over the *windows* table
-    * itself: the follow-on of a match starting at `start_idx` with query
-    * window length `seqLen` and horizon `predWindow` is the RAW values of
-    * the window starting at `start_idx + seqLen`, truncated to
-    * `predWindow`. Requires `predWindow <= seqLen` (true for the
-    * reference's 192 ≤ 256); the join is an equi-join on
-    * (key, start_idx+seqLen) — hash-joinable, no range scan needed.
-    */
-  def withFollowOn(matches: DataFrame, windows: DataFrame, keyCol: String,
-      seqLen: Int, predWindow: Int): DataFrame = {
-    require(predWindow <= seqLen, "predWindow must be <= seqLen (follow-on is a window prefix)")
-    val follow = windows.select(
-      col(keyCol),
-      (col("start_idx") - seqLen).as("__match_start"),
-      slice(col("values"), 1, predWindow).as("follow_values"))
-    matches.join(follow,
-      matches(keyCol) === follow(keyCol) && matches("start_idx") === follow("__match_start"),
-      "inner")
-      .drop(follow(keyCol)).drop("__match_start")
-  }
-
   /** Scale transfer (F7, `test.ipynb:813,820`): re-standardize the
     * follow-on by the MATCH window's (center, scale), yielding the
     * forecast in the query's z-space.

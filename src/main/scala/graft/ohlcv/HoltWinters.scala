@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 /** Holt's linear-trend exponential smoothing (Holt 1957, the classical
   * double-exponential forecaster — public knowledge; the reference's
   * ecosystem exposes it as statsmodels `Holt`). Same distributed shape as
-  * [[Features.withEma]]: repartition by key, sort within partitions,
+  * [[Features.withWilder]]: repartition by key, sort within partitions,
   * one sequential mapPartitions scan — the recurrence is inherently
   * ordered, exactly the case SURVEY §2.10 sanctions for a raw scan. At
   * 100 TB this is one shuffle and a streaming pass; state is two doubles

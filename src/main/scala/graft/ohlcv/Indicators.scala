@@ -232,11 +232,12 @@ object Indicators {
       .withColumn("ichimoku_b", mid(w3))
   }
 
-  /** Append EMA columns over MULTIPLE input columns in one ordered scan —
-    * [[Features.withEma]] generalized so multi-series stages (TSI's
-    * momentum and |momentum|) pay one shuffle, not one per series.
+  /** Append EMA columns over MULTIPLE input columns in one ordered scan
+    * (one shuffle for all specs; TSI's momentum and |momentum|).
     * `specs`: (inCol, outCol, alpha, minPeriods); observation counting is
-    * per spec (a null input carries that spec's state).
+    * per spec (a null input carries that spec's state). Unlike the window
+    * function behind [[Features.withEma]], a NaN input counts as an
+    * observation here.
     */
   def withEmaMulti(df: DataFrame, keyCol: String, ordCol: String,
       specs: Seq[(String, String, Double, Int)]): DataFrame = {

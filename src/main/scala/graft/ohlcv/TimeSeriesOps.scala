@@ -123,6 +123,9 @@ object TimeSeriesOps {
     }
   }
 
+  /** Largest number of indices one generated array holds. */
+  val GapChunk: Int = 8192
+
   /** Per-key dense long range [loCol, hiCol] step `step`, generated in
     * ≤`chunk`-element bursts so generated arrays stay bounded regardless of
     * key span (a naive single `sequence(lo, hi)` materializes the whole
@@ -130,7 +133,7 @@ object TimeSeriesOps {
     * Output: (keyCol, __v:long).
     */
   def denseLongs(spans: DataFrame, keyCol: String, loCol: String, hiCol: String,
-      step: Long, chunk: Int = 8192): DataFrame = {
+      step: Long, chunk: Int = GapChunk): DataFrame = {
     val stride = step * chunk
     spans
       .withColumn("__chunk", explode(sequence(col(loCol), col(hiCol), lit(stride))))
@@ -141,17 +144,42 @@ object TimeSeriesOps {
       .select(col(keyCol), col("__v"))
   }
 
-  /** Gap-fill outer join + forward fill (reference `dataset.py:32-43`,
-    * J1+W2): make `idxCol` dense per key over [min, max], then ffill every
-    * column in `fillCols` with the last non-null earlier value.
+  /** Gap fill + forward fill (reference `dataset.py:32-43`, J1+W2): make
+    * `idxCol` dense per key over [min, max], then ffill every column in
+    * `fillCols` with the last non-null earlier value. Columns come out as
+    * key, idx, then the others in input order; a gap row's non-fill
+    * columns are NULL.
+    *
+    * One ordered window pass per key: it forward-fills the present rows
+    * and reads the next present index, and each row then emits itself and
+    * the gap rows up to that index, carrying its filled values. Gap rows
+    * are generated in bursts of at most [[GapChunk]] indices, as in
+    * [[denseLongs]], so no array grows with the gap. Rows with a NULL idx
+    * are dropped; a duplicate (key, idx) is kept twice; a NULL key never
+    * matches the dense index, so its range comes out once per index with
+    * every other column NULL.
     */
   def gapFillFfill(df: DataFrame, keyCol: String, idxCol: String,
       fillCols: Seq[String]): DataFrame = {
-    val spans = df.groupBy(keyCol).agg(min(idxCol).as("__lo"), max(idxCol).as("__hi"))
-    val scaffold = denseLongs(spans, keyCol, "__lo", "__hi", 1L)
-      .withColumnRenamed("__v", idxCol)
-    val joined = scaffold.join(df, Seq(keyCol, idxCol), "left")
-    ffill(joined, keyCol, idxCol, fillCols)
+    val key = col(keyCol)
+    val idx = col(idxCol)
+    val rest = df.columns.toSeq.filterNot(c => c == keyCol || c == idxCol)
+    val w = Window.partitionBy(keyCol).orderBy(idxCol)
+    val upTo = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val next = lead(idx, 1).over(w)
+    val present = df.filter(idx.isNotNull)
+      .select(key +: idx +: next.as("__next") +: rest.map { c =>
+        val v = when(key.isNotNull, col(c))
+        (if (fillCols.contains(c)) last(v, ignoreNulls = true).over(upTo) else v).as(c)
+      }: _*)
+      .filter(key.isNotNull || col("__next").isNull || col("__next") =!= idx)
+    val end = greatest(idx, col("__next") - 1)
+    present
+      .withColumn("__chunk", explode(sequence(idx, end, lit(GapChunk.toLong))))
+      .withColumn("__v", explode(sequence(col("__chunk"), least(end, col("__chunk") + (GapChunk - 1)))))
+      .select(key +: col("__v").as(idxCol) +: rest.map { c =>
+        if (fillCols.contains(c)) col(c) else when(col("__v") === idx, col(c)).as(c)
+      }: _*)
   }
 
   /** Forward fill (W2): `last(c, ignoreNulls)` over an unbounded-preceding

@@ -19,6 +19,13 @@ object Windows {
     * scale (window POPULATION std — `np.std` is ddof=0), zvalues
     * (`(x − center)/(scale + 1e-8)`).
     *
+    * `center`, `scale` and `zvalues` are native codegen'd kernels
+    * (`graft_asum`, `graft_asumsq`, `graft_zscore`), each one sequential
+    * loop over the window, so a row costs O(len) even when a consumer
+    * selects only `zvalues` and the optimizer inlines `center`/`scale`
+    * into it. `zvalues` is bit-identical to the `transform` lambda
+    * `x -> (x − center)/(scale + eps)` (NULL elements stay NULL).
+    *
     * Scale shape: one shuffle on keyCol; the 256× row amplification is
     * inherent to pattern extraction — downstream consumers should project
     * away `values` when only `zvalues` is needed.
@@ -37,8 +44,8 @@ object Windows {
       .withColumn("scale",
         sqrt(org.apache.spark.sql.graft.ArrayStatsExpressions
           .arraySumSqAround(col("values"), col("center")) / len))
-      .withColumn("zvalues",
-        transform(col("values"), x => (x - col("center")) / (col("scale") + lit(eps))))
+      .withColumn("zvalues", org.apache.spark.sql.graft.ArrayStatsExpressions
+        .arrayZscore(col("values"), col("center"), col("scale"), eps))
   }
 
   /** Inverse of the z-score: `v·scale + center` (reference

@@ -50,16 +50,6 @@ object StreamHarness {
       case None => java.nio.file.Files.createTempDirectory(prefix)
     }).toString
 
-  /** Which root [[scratchDir]] resolved to — bench evidence, so a run
-    * where /dev/shm was unavailable (checkpoint fsyncs hit real disk and
-    * the streaming family's fixed floor multiplies) is identifiable from
-    * bench_full.json instead of guessed at.
-    */
-  def scratchRootName: String = ramRoot match {
-    case Some(root) => s"ram:$root"
-    case None => s"disk:${System.getProperty("java.io.tmpdir")}"
-  }
-
   private val srcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val srcSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 

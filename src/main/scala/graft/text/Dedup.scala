@@ -108,11 +108,6 @@ object Dedup {
       .select("id_a", "id_b").distinct()
   }
 
-  /** Estimated Jaccard from minhash signatures for a candidate pair. */
-  def minhashJaccard(sigA: Column, sigB: Column): Column =
-    aggregate(zip_with(sigA, sigB, (x, y) => when(x === y, 1.0).otherwise(0.0)),
-      lit(0.0), (a, x) => a + x) / size(sigA)
-
   /** SimHash fingerprint over word shingles: each hash bit contributes
     * ±1 per shingle; fingerprint bit = sign of the sum. Bit positions are
     * unrolled at plan-build time (literal shifts), keeping every op a
@@ -435,8 +430,12 @@ object Dedup {
           .otherwise(raise_error(concat(
             lit(s"embeddingNearDup: expected dim=$dim, got "),
             size(col("__v")).cast("string"))).cast("array<double>"))
-        val sig = base.withColumn("__bucket",
-          graft.sim.Lsh.hyperplaneSignature(checked, mat))
+        // The signature is the generator input, not a projected column:
+        // the join's inferred isnotnull(__bucket) then filters the
+        // generated value instead of being pushed below as a second copy
+        // of the whole signature expression.
+        val sig = base.select(col("*"),
+          explode(array(graft.sim.Lsh.hyperplaneSignature(checked, mat))).as("__bucket"))
         (sig.select(col("__bucket"), col(idCol).as("id_a"), col("__v").as("va")),
           sig.select(col("__bucket"), col(idCol).as("id_b"), col("__v").as("vb")))
       }

@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryExecutionErrors
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType}
 
 /** Fused window-statistics expressions for the pattern-window pipeline.
@@ -138,6 +140,60 @@ case class ArrayZSliceSum(first: Expression, second: Expression, third: Expressi
     copy(first = f, second = s, third = t)
 }
 
+/** The z-scored window `[(x_i − center)/(scale + eps)]` in one pass — the
+  * elementwise result of `transform(arr, x -> (x − center)/(scale + eps))`,
+  * bit for bit: the same two IEEE operations per element, with the
+  * divisor formed once per row (the lambda formed the same double per
+  * element). A NULL element stays NULL. A zero divisor follows `Divide`:
+  * an error under ANSI mode (`failOnError`), else every element NULL.
+  *
+  * As a codegen'd expression it costs O(len) per row however the
+  * optimizer inlines `center`/`scale` into it; a lambda has no codegen,
+  * and with those inlined it re-sums the window for every element. The
+  * loop lives in [[ZscoreKernel]], which `eval` and the generated code
+  * share.
+  */
+case class ArrayZscore(first: Expression, second: Expression, third: Expression,
+    eps: Double, failOnError: Boolean = SQLConf.get.ansiEnabled)
+    extends TernaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(DoubleType), DoubleType, DoubleType)
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
+  override def prettyName: String = "graft_zscore"
+
+  override def nullSafeEval(a: Any, c: Any, s: Any): Any =
+    ZscoreKernel.zscore(a.asInstanceOf[ArrayData], c.asInstanceOf[Double],
+      s.asInstanceOf[Double] + eps, failOnError)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, c, s) =>
+      s"${ZscoreKernel.getClass.getName.stripSuffix("$")}.zscore($a, $c, $s + $eps, $failOnError)")
+
+  override protected def withNewChildrenInternal(
+      f: Expression, s: Expression, t: Expression): ArrayZscore =
+    copy(first = f, second = s, third = t)
+}
+
+object ZscoreKernel {
+  def zscore(x: ArrayData, center: Double, denom: Double, failOnError: Boolean): ArrayData = {
+    if (denom == 0.0 && failOnError) throw QueryExecutionErrors.divideByZeroError(null)
+    val n = x.numElements()
+    val out = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i)) out(i) = (x.getDouble(i) - center) / denom
+      i += 1
+    }
+    val z = UnsafeArrayData.fromPrimitiveArray(out)
+    i = 0
+    while (i < n) {
+      if (denom == 0.0 || x.isNullAt(i)) z.setNullAt(i)
+      i += 1
+    }
+    z
+  }
+}
+
 object ArrayStatsExpressions {
   def arraySum(a: Column): Column =
     ExpressionUtils.column(ArraySum(ExpressionUtils.expression(a)))
@@ -151,4 +207,8 @@ object ArrayStatsExpressions {
     ExpressionUtils.column(ArrayZSliceSum(
       ExpressionUtils.expression(a), ExpressionUtils.expression(center),
       ExpressionUtils.expression(scale), start, len))
+
+  def arrayZscore(a: Column, center: Column, scale: Column, eps: Double): Column =
+    ExpressionUtils.column(ArrayZscore(ExpressionUtils.expression(a),
+      ExpressionUtils.expression(center), ExpressionUtils.expression(scale), eps))
 }

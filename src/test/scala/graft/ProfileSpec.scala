@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.graft.CodegenStats
 
 /** The shared Profile/Bench measurement protocol at sf0.001. */
 class ProfileSpec extends SparkSpec {
@@ -70,5 +71,17 @@ class ProfileSpec extends SparkSpec {
   test("every Bench headline name is a registered query") {
     val missing = Bench.headline.filterNot(SparkEntry.queries.contains)
     assert(missing.isEmpty, s"unregistered headline names: $missing")
+  }
+
+  // q32's 4-plane LSH signature is evaluated once per row, below the
+  // bucket join, so its whole-stage method stays JIT-sized. Evaluated a
+  // second time in the join's inferred `isnotnull` filter, it made an
+  // 8,296-byte method that HotSpot never compiles.
+  test("q32_cos_neardup compiles every whole-stage method under HugeMethodLimit") {
+    val q = SparkEntry.queries("q32_cos_neardup")
+    val (rows, maxBytes) = CodegenStats.largestMethodDuring(spark)(q(spark, sf).collect())
+    assert(rows.nonEmpty)
+    assert(maxBytes > 0, "no whole-stage method was compiled")
+    assert(maxBytes < CodegenStats.HugeMethodLimit, s"largest method $maxBytes bytes")
   }
 }

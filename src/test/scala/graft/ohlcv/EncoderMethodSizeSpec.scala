@@ -8,9 +8,8 @@ import graft.{Flagship, SparkSpec}
   * encoder plan must stay JIT-sized. HotSpot never compiles a method past
   * 8,000 bytecode bytes, and a 64-row projection inlined as 64 literal dot
   * loops generated one (11,061 bytes), so the paper's hottest stage ran
-  * interpreted. (Here the kernel shares a projection with the z-score
-  * `transform`, which has no codegen, so that projection is generated per
-  * expression; LinearProjectSpec sizes the kernel inside a stage.)
+  * interpreted. The z-score (`graft_zscore`) and the projection kernel
+  * compile into the same whole-stage method here.
   */
 class EncoderMethodSizeSpec extends SparkSpec {
   import spark.implicits._

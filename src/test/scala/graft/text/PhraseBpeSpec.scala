@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.SparkSpec
+import graft.{LocalTier, PipelineQueries, SparkSpec}
 
 /** Semantic pins for q260_bpe_phrase_1k (the ≥1k-merge phrase-BPE
   * trainer). Hash-level engine/oracle parity lives in the DuckDB
@@ -81,4 +81,57 @@ class PhraseBpeSpec extends SparkSpec {
     }
   }
 
+  // The BPE trainers checkpoint their seed table (`bpeWords` /
+  // `phraseSeqs`) and must release it before they return, on both tiers:
+  // no persisted RDD outlives the call, and the merges stay the same.
+
+  private def withBudget[A](v: Option[String])(f: => A): A = {
+    val k = LocalTier.Bpe.prop
+    val old = sys.props.get(k)
+    v.foreach(sys.props(k) = _)
+    try f finally old match {
+      case Some(o) => sys.props(k) = o
+      case None => sys.props.remove(k)
+    }
+  }
+
+  /** Runs `train` on the local tier and on the forced-distributed tier;
+    * neither run leaves a persisted RDD behind. (The ids are compared, not
+    * the count: the ContextCleaner may drop an earlier test's RDD
+    * meanwhile.) */
+  private def bothTiers[A](name: String)(train: => Seq[A]): Unit = {
+    val sc = spark.sparkContext
+    val runs = Seq(None, Some("0")).map { budget =>
+      val before = sc.getPersistentRDDs.keySet
+      val merges = withBudget(budget)(train)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name (budget ${budget.getOrElse("default")}) left " +
+        s"persisted RDDs ${sc.getPersistentRDDs.filter(kv => left(kv._1)).values.mkString(", ")}")
+      merges
+    }
+    assert(runs.head.nonEmpty, s"$name learned no merges")
+    assert(runs.head == runs(1), s"$name: local and distributed merges differ")
+  }
+
+  test("bpeMerges releases its seed checkpoint on both tiers") {
+    bothTiers("bpeMerges")(PipelineQueries.bpeMerges(spark, sf, 6))
+  }
+
+  test("bpeBatchedMerges releases its seed checkpoint on both tiers") {
+    bothTiers("bpeBatchedMerges")(PipelineQueries.bpeBatchedMerges(spark, sf, rounds = 3))
+  }
+
+  test("phraseBpeMerges releases its seed checkpoint on both tiers") {
+    bothTiers("phraseBpeMerges")(PipelineQueries.phraseBpeMerges(spark, sf, levels = 2))
+  }
+
+  test("phraseBpeMergesOn leaves a caller's seed alone") {
+    val seed = PipelineQueries.phraseSeqs(spark, sf)
+    val rdd = org.apache.spark.sql.graft.CheckpointRelease.checkpointRdd(seed)
+    assert(rdd.isDefined)
+    try {
+      PipelineQueries.phraseBpeMergesOn(spark, seed, levels = 2)
+      assert(spark.sparkContext.getPersistentRDDs.contains(rdd.get.id))
+    } finally org.apache.spark.sql.graft.CheckpointRelease.release(seed)
+  }
 }
