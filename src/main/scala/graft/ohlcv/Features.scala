@@ -15,10 +15,12 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * row by row over an unbounded-preceding frame, inside the same
   * partitioning and sort as the rolling columns. It is sequential *per
   * series* but all series run in parallel, which is the maximum
-  * parallelism the semantics admit. The Wilder, adaptive and multi-alpha
-  * recurrences ([[withWilder]], [[withAdaptiveEma]],
-  * [[Indicators.withEmaMulti]]) are still ordered per-partition scans
-  * (`mapPartitions`).
+  * parallelism the semantics admit. The Wilder and adaptive recurrences
+  * ([[withWilder]], [[withAdaptiveEma]]) are still ordered per-partition
+  * scans (`mapPartitions`).
+  *
+  * [[withEma]] and [[withWilder]] read a NULL or NaN input as pandas and
+  * the `ta` loops read NaN; each states its rule.
   */
 object Features {
 
@@ -62,7 +64,11 @@ object Features {
     * `minPeriods` non-null observations have been consumed get null
     * (pandas `min_periods` counts observations, not rows — relevant when
     * smoothing a derived series with a null head, e.g. the MACD signal).
-    * A NULL or NaN input is skipped, not observed.
+    * A NULL or NaN input is a missing row, as in pandas' default
+    * `ignore_na=False`: it emits the carried EMA, and the weight of the
+    * carried EMA decays by (1−α) per row until the next observation
+    * (see [[org.apache.spark.sql.graft.RunningEma]]). Without missing rows
+    * the recurrence is the one above.
     *
     * Physical shape: each spec is a running window function
     * ([[org.apache.spark.sql.graft.RunningEma]]) over
@@ -128,7 +134,13 @@ object Features {
     * values, then `s_t = (s_{t−1}·(w−1) + x_t)/w`). Like [[withEma]] this
     * is the one genuinely sequential shape — an ordered per-key scan with
     * O(#specs) state — and all `specs` columns smooth in a single pass.
-    * `specs` maps input column (must be non-null double) → output column.
+    * `specs` maps input column (double) → output column.
+    *
+    * A NULL or NaN input is missing, as NaN in the `ta` loop: the seed is
+    * the mean of the values present among the first w (pandas `mean()`
+    * skips NaN; NULL when none is), and a missing value after the seed
+    * makes that row and every later row of the key NULL, the NaN that the
+    * loop's arithmetic carries forward.
     */
   def withWilder(df: DataFrame, keyCol: String, ordCol: String,
       specs: Seq[(String, String)], w: Int): DataFrame = {
@@ -144,11 +156,13 @@ object Features {
       var started = false
       var n = 0L
       val acc = new Array[Double](nSpecs)
+      val present = new Array[Long](nSpecs)
       rows.map { row =>
         val k = row.get(keyIdx)
         if (!started || k != curKey) {
           started = true; curKey = k; n = 0L
           java.util.Arrays.fill(acc, 0.0)
+          java.util.Arrays.fill(present, 0L)
         }
         val out = new Array[Any](outSchema.length)
         var i = 0
@@ -156,21 +170,31 @@ object Features {
         n += 1
         var j = 0
         while (j < nSpecs) {
-          val x = row.getDouble(valIdxs(j))
-          if (n < w) { acc(j) += x; out(inSchema.length + j) = null }
-          else if (n == w) {
-            acc(j) = (acc(j) + x) / w
-            out(inSchema.length + j) = java.lang.Double.valueOf(acc(j))
-          } else {
-            acc(j) = (acc(j) * (w - 1) + x) / w
-            out(inSchema.length + j) = java.lang.Double.valueOf(acc(j))
-          }
+          val x = doubleOrNaN(row, valIdxs(j))
+          if (n <= w) {
+            if (!x.isNaN) { acc(j) += x; present(j) += 1 }
+            if (n == w) acc(j) /= present(j)
+          } else acc(j) = (acc(j) * (w - 1) + x) / w
+          out(inSchema.length + j) =
+            if (n < w || acc(j).isNaN) null else java.lang.Double.valueOf(acc(j))
           j += 1
         }
         new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
       }
     }(Encoders.row(outSchema))
   }
+
+  /** A double cell as pandas holds it: NULL reads as NaN. */
+  private[ohlcv] def doubleOrNaN(row: Row, i: Int): Double =
+    if (row.isNullAt(i)) Double.NaN else row.getDouble(i)
+
+  /** Drop the first `n` rows of each key in `ordCol` order, by position,
+    * whatever their values. */
+  private[ohlcv] def dropHeadRows(df: DataFrame, keyCol: String, ordCol: String,
+      n: Int): DataFrame =
+    df.withColumn("__rn", row_number().over(Window.partitionBy(keyCol).orderBy(ordCol)))
+      .filter(col("__rn") > n)
+      .drop("__rn")
 
   /** True range: max(high−low, |high−prevClose|, |low−prevClose|). Null on
     * the first row of each key (no previous close).
@@ -185,14 +209,17 @@ object Features {
 
   /** ATR(w): Wilder-smoothed true range (reference pulls it via
     * `add_all_ta_features`, `core/data/preprocess.py:11-16`). The first
-    * row per key (undefined TR) is dropped from the output frame.
+    * row per key (undefined TR) is dropped from the output frame, and no
+    * other. A bar with a missing high, low or close, and the bar after a
+    * missing close, has a NULL true range, which [[withWilder]] reads as
+    * missing: left out of the seed mean, NULL ATR from there on.
     */
   def withAtr(df: DataFrame, keyCol: String, ordCol: String, w: Int = 14,
       highCol: String = "high", lowCol: String = "low",
       closeCol: String = "close", outCol: String = "atr"): DataFrame = {
-    val withTr = df
-      .withColumn("__tr", trueRange(keyCol, ordCol, highCol, lowCol, closeCol))
-      .filter(col("__tr").isNotNull)
+    val withTr = dropHeadRows(
+      df.withColumn("__tr", trueRange(keyCol, ordCol, highCol, lowCol, closeCol)),
+      keyCol, ordCol, 1)
     withWilder(withTr, keyCol, ordCol, Seq("__tr" -> outCol), w).drop("__tr")
   }
 

@@ -17,7 +17,12 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructT
   * oracle must reproduce summation order bit-for-bit, and ordered
   * per-key `mapPartitions` scans ONLY for the genuinely sequential
   * recurrences (NVI's gated product, PSAR's trend-flip state machine) —
-  * sequential per series, parallel across series, O(1) state.
+  * sequential per series, parallel across series, O(1) state. EMA stages
+  * (TSI, mass index, PVO, STC) are [[Features.withEma]] window columns.
+  *
+  * A NULL or NaN bar is missing, as NaN is to pandas and the `ta` loops:
+  * the scans read a NULL as NaN, and TSI, Ulcer, NVI and PSAR state how
+  * they carry a missing bar.
   */
 object Indicators {
 
@@ -76,6 +81,9 @@ object Indicators {
     * the close's percent change, otherwise it carries forward. A gated
     * sequential product — FP multiplication is not associative, so this
     * is an ordered per-key scan, exactly mirroring the oracle recursion.
+    * A NULL volume or close reads as NaN, as in the `ta` loop: a missing
+    * volume on this bar or the previous one fails the "dropped" test, so
+    * the index carries forward.
     */
   def withNvi(df: DataFrame, keyCol: String, ordCol: String,
       start: Double = 1000.0, outCol: String = "nvi"): DataFrame = {
@@ -98,8 +106,8 @@ object Indicators {
         if (!started || k != curKey) {
           started = true; curKey = k; nvi = start; first = true
         }
-        val c = row.getDouble(closeIdx)
-        val v = row.getDouble(volIdx)
+        val c = Features.doubleOrNaN(row, closeIdx)
+        val v = Features.doubleOrNaN(row, volIdx)
         if (!first && v < pv && pc != 0.0)
           nvi = nvi * (1.0 + (c - pc) / pc)
         first = false; pc = c; pv = v
@@ -113,19 +121,20 @@ object Indicators {
   }
 
   /** Ulcer index(w=14): percentage drawdown from the trailing-w max,
-    * ui = √(Σ dd²/w) over the trailing w drawdown rows. The drawdown
-    * series starts once the max window is full (rows before that are
-    * dropped, so the second window never sees nulls).
+    * ui = √(Σ dd²/w) over the trailing w drawdown rows. The first w − 1
+    * rows of each key, where the max window cannot be full, are dropped.
+    * As with pandas `rolling(w)`, a drawdown whose max window holds a
+    * NULL close is NULL, and so is an index whose window holds a NULL
+    * drawdown.
     */
   def withUlcer(df: DataFrame, keyCol: String, ordCol: String, w: Int = 14,
       valCol: String = "close", outCol: String = "ulcer"): DataFrame = {
     val frame = Window.partitionBy(keyCol).orderBy(ordCol).rowsBetween(-(w - 1), 0)
     val cnt = count(col(valCol)).over(frame)
     val rmax = max(col(valCol)).over(frame)
-    val base = df
-      .withColumn("__dd",
-        when(cnt === w, lit(100.0) * (col(valCol) - rmax) / rmax))
-      .filter(col("__dd").isNotNull)
+    val base = Features.dropHeadRows(
+      df.withColumn("__dd", when(cnt === w, lit(100.0) * (col(valCol) - rmax) / rmax)),
+      keyCol, ordCol, w - 1)
     val ddFrame = Window.partitionBy(keyCol).orderBy(ordCol).rowsBetween(-(w - 1), 0)
     base
       .withColumn("__dds", collect_list(col("__dd")).over(ddFrame))
@@ -232,57 +241,6 @@ object Indicators {
       .withColumn("ichimoku_b", mid(w3))
   }
 
-  /** Append EMA columns over MULTIPLE input columns in one ordered scan
-    * (one shuffle for all specs; TSI's momentum and |momentum|).
-    * `specs`: (inCol, outCol, alpha, minPeriods); observation counting is
-    * per spec (a null input carries that spec's state). Unlike the window
-    * function behind [[Features.withEma]], a NaN input counts as an
-    * observation here.
-    */
-  def withEmaMulti(df: DataFrame, keyCol: String, ordCol: String,
-      specs: Seq[(String, String, Double, Int)]): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++
-      specs.map { case (_, out, _, _) => StructField(out, DoubleType, nullable = true) })
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val valIdxs = specs.map(s => inSchema.fieldIndex(s._1)).toArray
-    val alphas = specs.map(_._3).toArray
-    val minPeriods = specs.map(_._4).toArray
-    val nSpecs = specs.length
-    val sorted = df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
-      val n = new Array[Long](nSpecs)
-      val ema = new Array[Double](nSpecs)
-      val hasEma = new Array[Boolean](nSpecs)
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k
-          java.util.Arrays.fill(hasEma, false)
-          java.util.Arrays.fill(n, 0L)
-        }
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
-        var j = 0
-        while (j < nSpecs) {
-          if (!row.isNullAt(valIdxs(j))) {
-            val x = row.getDouble(valIdxs(j))
-            n(j) += 1
-            if (!hasEma(j)) { ema(j) = x; hasEma(j) = true }
-            else ema(j) = alphas(j) * x + (1 - alphas(j)) * ema(j)
-          }
-          out(inSchema.length + j) =
-            if (hasEma(j) && n(j) >= minPeriods(j)) java.lang.Double.valueOf(ema(j)) else null
-          j += 1
-        }
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
-      }
-    }(Encoders.row(outSchema))
-  }
-
   /** Mass index(fast=9, slow=25): double-EMA ratio of the bar range,
     * mass = Σ over the trailing `slow` rows of EMA₉(high−low)/EMA₉(EMA₉).
     * The inner EMA emits after `fast` bars, the outer after `fast` more;
@@ -306,24 +264,22 @@ object Indicators {
   }
 
   /** TSI(slow=25, fast=13): 100 · EMA_fast(EMA_slow(Δclose)) /
-    * EMA_fast(EMA_slow(|Δclose|)). Both chains run in TWO multi-column
-    * scans (momentum + |momentum| together per stage). The first stage
-    * emits after `slow` diffs, the second after `fast` more.
+    * EMA_fast(EMA_slow(|Δclose|)), each stage a [[Features.withEma]]
+    * column. The first stage emits after `slow` diffs, the second after
+    * `fast` more. Each key's first row (no diff) is dropped, and no other:
+    * a diff next to a missing close is NULL, a missing row to the EMAs.
     */
   def withTsi(df: DataFrame, keyCol: String, ordCol: String,
       valCol: String = "close", slow: Int = 25, fast: Int = 13,
       outCol: String = "tsi"): DataFrame = {
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
-    val diffed = df
-      .withColumn("__m", col(valCol) - lag(valCol, 1).over(win))
-      .filter(col("__m").isNotNull)
+    val diffed = Features.dropHeadRows(
+      df.withColumn("__m", col(valCol) - lag(valCol, 1).over(win)), keyCol, ordCol, 1)
       .withColumn("__am", abs(col("__m")))
-    val aSlow = 2.0 / (slow + 1)
-    val aFast = 2.0 / (fast + 1)
-    val s1 = withEmaMulti(diffed, keyCol, ordCol,
-      Seq(("__m", "__ms", aSlow, slow), ("__am", "__as", aSlow, slow)))
-    val s2 = withEmaMulti(s1, keyCol, ordCol,
-      Seq(("__ms", "__msf", aFast, fast), ("__as", "__asf", aFast, fast)))
+    def ema(d: DataFrame, in: String, out: String, span: Int): DataFrame =
+      Features.withEma(d, keyCol, ordCol, in, Seq(Features.emaSpanSpec(out, span)))
+    val s1 = ema(ema(diffed, "__m", "__ms", slow), "__am", "__as", slow)
+    val s2 = ema(ema(s1, "__ms", "__msf", fast), "__as", "__asf", fast)
     s2.withColumn(outCol,
       when(col("__asf").isNotNull && col("__asf") =!= 0.0,
         lit(100.0) * col("__msf") / col("__asf")))
@@ -412,7 +368,9 @@ object Indicators {
     * the non-reversal sar is clamped to the prior two bars' lows
     * (highs). Output starts at each key's third bar (the loop needs two
     * priors); `psar_up_trend` reports the regime. Ordered per-key scan —
-    * the recurrence is genuinely sequential, O(1) state.
+    * the recurrence is genuinely sequential, O(1) state. A NULL high, low
+    * or close reads as NaN, as in the `ta` loop: every comparison with it
+    * is false, so on that bar the trend neither extends nor flips.
     */
   def withPsar(df: DataFrame, keyCol: String, ordCol: String,
       step: Double = 0.02, maxStep: Double = 0.2): DataFrame = {
@@ -441,9 +399,9 @@ object Indicators {
           started = true; curKey = k; n = 0L
           upTrend = true; af = step
         }
-        val h = row.getDouble(hIdx)
-        val l = row.getDouble(lIdx)
-        val c = row.getDouble(cIdx)
+        val h = Features.doubleOrNaN(row, hIdx)
+        val l = Features.doubleOrNaN(row, lIdx)
+        val c = Features.doubleOrNaN(row, cIdx)
         n += 1
         var emit: java.lang.Double = null
         var emitTrend: java.lang.Boolean = null

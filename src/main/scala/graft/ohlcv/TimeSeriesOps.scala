@@ -97,20 +97,28 @@ object TimeSeriesOps {
     * first/last meaning earliest/latest by timestamp inside the bucket.
     * When `emitEmpty`, interior gap buckets are emitted with null aggregates
     * (pandas emits NaN rows for empty buckets).
+    *
+    * A NULL or NaN value is missing, as NaN is to pandas' `first`, `last`,
+    * `max`, `min` and `sum`: open and close are the earliest and latest
+    * present values of the bucket, the other three skip it, and a column
+    * with no present value in the bucket aggregates to NULL.
     */
   def resampleOhlcv(df: DataFrame, keyCol: String, tsCol: String, deltaSec: Long,
       open: String = "open", high: String = "high", low: String = "low",
       close: String = "close", volume: String = "volume",
       emitEmpty: Boolean = true): DataFrame = {
     val bucketed = df.withColumn("__bucket", bucketRight(col(tsCol), deltaSec))
+    def present(c: String): Column = when(!isnan(col(c)), col(c))
+    // min_by/max_by skip a row whose ordering is NULL.
+    def presentAt(c: String): Column = when(present(c).isNotNull, col(tsCol))
     val agged = bucketed
       .groupBy(col(keyCol), col("__bucket").as(tsCol))
       .agg(
-        min_by(col(open), col(tsCol)).as(open),
-        max(col(high)).as(high),
-        min(col(low)).as(low),
-        max_by(col(close), col(tsCol)).as(close),
-        sum(col(volume)).as(volume))
+        min_by(col(open), presentAt(open)).as(open),
+        max(present(high)).as(high),
+        min(present(low)).as(low),
+        max_by(col(close), presentAt(close)).as(close),
+        sum(present(volume)).as(volume))
     if (!emitEmpty) agged
     else {
       // Dense bucket scaffold per key: sequence-join (J1 machinery), chunked

@@ -1,20 +1,29 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Add, AggregateWindowFunction, And, Ascending, AttributeReference, Expression, GreaterThanOrEqual, If, ImplicitCastInputTypes, IsNaN, IsNotNull, Literal, Multiply, Not, Or, SortOrder, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Add, AggregateWindowFunction, And, Ascending, AttributeReference, Divide, EqualTo, Expression, GreaterThanOrEqual, If, ImplicitCastInputTypes, IsNaN, IsNotNull, Literal, Multiply, Not, SortOrder, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, LongType}
 
-/** The `adjust=False` EMA `ema_t = α·x_t + (1−α)·ema_{t−1}`, seeded at the
-  * first observation, as a running window function.
+/** The EMA of pandas `ewm(adjust=False)` with its default `ignore_na=False`,
+  * as a running window function.
   *
-  * A NULL or NaN input is not an observation: it leaves the state as it
-  * is. The result is NULL until `minPeriods` observations have been seen
-  * (pandas' `min_periods` counts observations, not rows). The buffer is
-  * `(ema, has, n)` and the frame is fixed at `ROWS BETWEEN UNBOUNDED
-  * PRECEDING AND CURRENT ROW`, so `WindowExec` updates it one row at a
-  * time, in the same sorted pass as any other window column of the key.
+  * A NULL or NaN input is a missing row. The first observation seeds the
+  * EMA. From then on pandas keeps an old-value weight `w`: every row, a
+  * missing one too, multiplies it by (1−α); an observation `x` then sets
+  * `ema = (w·ema + α·x)/(w + α)` and resets `w` to 1, and a missing row
+  * keeps the EMA as it is. Where no row was missing since the last
+  * observation the update is written `α·x + (1−α)·ema`, which is pandas'
+  * value to within one ulp. An EMA that turns NaN (∞ − ∞) is unseeded, as
+  * in pandas: the next observation seeds it again.
+  *
+  * The result is NULL until `minPeriods` observations have been seen
+  * (pandas' `min_periods` counts observations, not rows) and while the
+  * EMA is unseeded. The buffer is `(ema, w, n)`, with `ema` NaN before
+  * the seed, and the frame is fixed at `ROWS BETWEEN UNBOUNDED PRECEDING
+  * AND CURRENT ROW`, so `WindowExec` updates it one row at a time, in the
+  * same sorted pass as any other window column of the key.
   */
 case class RunningEma(child: Expression, alpha: Double, minPeriods: Int)
     extends AggregateWindowFunction with UnaryLike[Expression] with ImplicitCastInputTypes {
@@ -24,22 +33,30 @@ case class RunningEma(child: Expression, alpha: Double, minPeriods: Int)
   override def prettyName: String = "graft_ema"
 
   private lazy val ema = AttributeReference("ema", DoubleType, nullable = false)()
-  private lazy val has = AttributeReference("has", BooleanType, nullable = false)()
+  private lazy val w = AttributeReference("w", DoubleType, nullable = false)()
   private lazy val n = AttributeReference("n", LongType, nullable = false)()
 
-  override lazy val aggBufferAttributes: Seq[AttributeReference] = Seq(ema, has, n)
+  override lazy val aggBufferAttributes: Seq[AttributeReference] = Seq(ema, w, n)
 
   override lazy val initialValues: Seq[Expression] =
-    Seq(Literal(0.0), Literal(false), Literal(0L))
+    Seq(Literal(Double.NaN), Literal(1.0), Literal(0L))
+
+  private lazy val seeded = Not(IsNaN(ema))
 
   override lazy val updateExpressions: Seq[Expression] = {
     val obs = And(IsNotNull(child), Not(IsNaN(child)))
+    val decayed = Multiply(w, Literal(1 - alpha))
     val step = Add(Multiply(Literal(alpha), child), Multiply(Literal(1 - alpha), ema))
-    Seq(If(obs, If(has, step, child), ema), Or(has, obs), If(obs, Add(n, Literal(1L)), n))
+    val afterGap = Divide(Add(Multiply(decayed, ema), Multiply(Literal(alpha), child)),
+      Add(decayed, Literal(alpha)))
+    Seq(
+      If(obs, If(seeded, If(EqualTo(w, Literal(1.0)), step, afterGap), child), ema),
+      If(obs, Literal(1.0), If(seeded, decayed, w)),
+      If(obs, Add(n, Literal(1L)), n))
   }
 
   override lazy val evaluateExpression: Expression =
-    If(And(has, GreaterThanOrEqual(n, Literal(minPeriods.toLong))), ema, Literal(null, DoubleType))
+    If(And(seeded, GreaterThanOrEqual(n, Literal(minPeriods.toLong))), ema, Literal(null, DoubleType))
 
   override protected def withNewChildInternal(newChild: Expression): RunningEma =
     copy(child = newChild)

@@ -87,6 +87,19 @@ class FeaturesSpec extends SparkSpec {
     assert(approx(out(6).getDouble(1), 15.0))
   }
 
+  test("withWilder: a missing value leaves the seed mean, then NULLs the rest of the key") {
+    val df = Seq[(String, Long, java.lang.Double)](("a", 0L, 1.0), ("a", 1L, null),
+      ("a", 2L, 3.0), ("a", 3L, 5.0), ("b", 0L, 1.0), ("b", 1L, 2.0), ("b", 2L, Double.NaN),
+      ("b", 3L, 4.0), ("c", 0L, null), ("c", 1L, null), ("c", 2L, 7.0))
+      .toDF("symbol", "idx", "x")
+    val out = Features.withWilder(df, "symbol", "idx", Seq("x" -> "wx"), w = 2)
+      .orderBy("symbol", "idx").select("wx").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    assert(out == Seq(None, Some(1.0), Some(2.0), Some(3.5),   // seed = mean of the one present
+      None, Some(1.5), None, None,                             // NaN after the seed: NULL onwards
+      None, None, None))                                       // no value to seed from
+  }
+
   private def bars(rows: (Long, Double, Double, Double, Double)*) =
     rows.map { case (i, h, l, c, v) => ("a", i, h, l, c, v) }
       .toDF("symbol", "idx", "high", "low", "close", "volume")

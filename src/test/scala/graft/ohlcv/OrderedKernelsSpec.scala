@@ -12,8 +12,9 @@ import graft.SparkSpec
 
 /** The per-series ordered kernels of the clean, features and windows
   * layers against the formulations they replaced, which are kept here as
-  * references: the EMA `mapPartitions` scan, the gap-fill scaffold join
-  * and the z-score `transform` lambda. Doubles compare by raw bits.
+  * references: the EMA `mapPartitions` scan (pandas' `ewm` loop),
+  * the gap-fill scaffold join and the z-score `transform` lambda. Doubles
+  * compare by raw bits.
   */
 class OrderedKernelsSpec extends SparkSpec {
   import spark.implicits._
@@ -40,8 +41,14 @@ class OrderedKernelsSpec extends SparkSpec {
 
   // ------------------------------------------------------------ EMA
 
-  /** The ordered per-partition scan `Features.withEma` ran before it
-    * became a window function. */
+  /** An ordered per-partition scan of pandas' `ewm(adjust=False)` loop
+    * with its default `ignore_na=False` (`ewm` in
+    * `pandas/_libs/window/aggregations.pyx`): a NULL or NaN value is
+    * missing; once seeded, every row decays the old weight by (1−α) and an
+    * observation combines `(w·ema + α·x)/(w + α)` and resets the weight
+    * to 1; a NaN EMA is unseeded. Where no row was missing since the last
+    * observation the update is `α·x + (1−α)·ema`, as in the scan
+    * `Features.withEma` ran before it became a window function. */
   private def scanEma(df: DataFrame, keyCol: String, ordCol: String, valCol: String,
       specs: Seq[(String, Double, Int)]): DataFrame = {
     val inSchema = df.schema
@@ -57,26 +64,34 @@ class OrderedKernelsSpec extends SparkSpec {
       var started = false
       var n = 0L
       val ema = new Array[Double](nSpecs)
-      val hasEma = new Array[Boolean](nSpecs)
+      val oldWt = new Array[Double](nSpecs)
       rows.map { row =>
         val k = row.get(keyIdx)
         if (!started || k != curKey) {
           started = true; curKey = k; n = 0L
-          java.util.Arrays.fill(hasEma, false)
+          java.util.Arrays.fill(ema, Double.NaN)
+          java.util.Arrays.fill(oldWt, 1.0)
         }
         val out = new Array[Any](outSchema.length)
         var i = 0
         while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
         val x = if (row.isNullAt(valIdx)) Double.NaN else row.getDouble(valIdx)
-        if (!x.isNaN) n += 1
+        val isObs = !x.isNaN
+        if (isObs) n += 1
         var j = 0
         while (j < nSpecs) {
-          if (!x.isNaN) {
-            if (!hasEma(j)) { ema(j) = x; hasEma(j) = true }
-            else ema(j) = alphas(j) * x + (1 - alphas(j)) * ema(j)
-          }
+          val a = alphas(j)
+          if (!ema(j).isNaN) {
+            val gap = oldWt(j) != 1.0
+            oldWt(j) *= (1 - a)
+            if (isObs) {
+              ema(j) = if (gap) (oldWt(j) * ema(j) + a * x) / (oldWt(j) + a)
+                else a * x + (1 - a) * ema(j)
+              oldWt(j) = 1.0
+            }
+          } else if (isObs) ema(j) = x
           out(inSchema.length + j) =
-            if (hasEma(j) && n >= minPeriods(j)) java.lang.Double.valueOf(ema(j)) else null
+            if (!ema(j).isNaN && n >= minPeriods(j)) java.lang.Double.valueOf(ema(j)) else null
           j += 1
         }
         new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row

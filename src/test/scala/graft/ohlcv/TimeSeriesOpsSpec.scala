@@ -45,6 +45,32 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(out(2).getAs[Double]("close") == 17.5)
   }
 
+  test("resampleOhlcv: a NaN or NULL value is skipped, as pandas skips NaN") {
+    val nan = Double.NaN
+    val df = Seq[(String, Timestamp, java.lang.Double, java.lang.Double, java.lang.Double,
+        java.lang.Double, java.lang.Double)](
+      ("a", ts("2024-01-01 00:10:00"), nan, 15.0, 9.0, 12.0, 1.0),
+      ("a", ts("2024-01-01 00:20:00"), 11.0, nan, 10.0, 13.0, nan),
+      ("a", ts("2024-01-01 00:30:00"), 12.0, 14.0, nan, 14.0, 2.0),
+      ("a", ts("2024-01-01 00:50:00"), 13.0, 16.0, 8.0, nan, 3.0),
+      ("a", ts("2024-01-01 01:10:00"), null, 5.0, 4.0, 4.5, 1.0),
+      ("a", ts("2024-01-01 01:20:00"), 4.2, 5.5, 4.1, null, 1.0),
+      ("a", ts("2024-01-01 02:10:00"), nan, nan, nan, nan, nan)
+    ).toDF("symbol", "datetime", "open", "high", "low", "close", "volume")
+    val out = TimeSeriesOps.resampleOhlcv(df, "symbol", "datetime", 3600)
+      .orderBy("datetime").collect()
+    def at(i: Int, c: String): java.lang.Double = out(i).getAs[java.lang.Double](c)
+    assert(out.length == 3)
+    // NaN open on the first bar, NaN close on the last: the next and the
+    // previous present values
+    assert(at(0, "open") == 11.0 && at(0, "close") == 14.0)
+    assert(at(0, "high") == 16.0 && at(0, "low") == 8.0 && at(0, "volume") == 6.0)
+    // the same with NULL
+    assert(at(1, "open") == 4.2 && at(1, "close") == 4.5)
+    // nothing present: NULL, never NaN
+    Seq("open", "high", "low", "close", "volume").foreach(c => assert(at(2, c) == null, c))
+  }
+
   test("dedupKeepLast keeps greatest arrival, not an arbitrary row") {
     val df = Seq(
       ("a", 1L, 10.0, 1L), ("a", 1L, 20.0, 2L), ("a", 1L, 15.0, 3L),
