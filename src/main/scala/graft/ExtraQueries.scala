@@ -1101,7 +1101,8 @@ object ExtraQueries {
        |  FROM agg)""".stripMargin
 
   /** Recursive-CTE EMA over `src(user_id, bucket_s, <valCol>, <rnCol>)`
-    * with the same per-step operation order as the mapPartitions scan.
+    * with the same per-step operation order as the RunningEma window
+    * function.
     */
   private[graft] def emaRec(name: String, src: String, valCol: String, rnCol: String,
       alphaSql: String): String =

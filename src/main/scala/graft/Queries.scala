@@ -463,7 +463,7 @@ object Queries {
           .orderBy("user_id", "bucket_s")
       },
       // Same α=2/6 constant and same per-step operation order as the
-      // mapPartitions scan → bit-identical EMA before rounding.
+      // RunningEma window function → bit-identical EMA before rounding.
       Some(s"""WITH RECURSIVE $HourlyCloseCte,
               |ord AS (SELECT user_id, bucket_s, close,
               |    row_number() OVER (PARTITION BY user_id ORDER BY bucket_s) AS rn

@@ -1,10 +1,10 @@
 package graft.ohlcv
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RunningEma
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField}
 
 /** Technical-analysis feature operators (SURVEY.md §2.5 W3–W5, §2.8 F14).
   *
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * partitioning and sort as the rolling columns. It is sequential *per
   * series* but all series run in parallel, which is the maximum
   * parallelism the semantics admit. The Wilder and adaptive recurrences
-  * ([[withWilder]], [[withAdaptiveEma]]) are still ordered per-partition
-  * scans (`mapPartitions`).
+  * ([[withWilder]], [[withAdaptiveEma]]) are [[OrderedScan]]s: one key
+  * exchange, one sort and one streaming pass.
   *
   * [[withEma]] and [[withWilder]] read a NULL or NaN input as pandas and
   * the `ta` loops read NaN; each states its rule.
@@ -144,29 +144,14 @@ object Features {
     */
   def withWilder(df: DataFrame, keyCol: String, ordCol: String,
       specs: Seq[(String, String)], w: Int): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++
-      specs.map { case (_, out) => StructField(out, DoubleType, nullable = true) })
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val valIdxs = specs.map(s => inSchema.fieldIndex(s._1)).toArray
+    val valIdxs = specs.map(s => df.schema.fieldIndex(s._1)).toArray
     val nSpecs = specs.length
-    val sorted = df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
+    OrderedScan(df, keyCol, ordCol,
+        specs.map { case (_, out) => StructField(out, DoubleType, nullable = true) }) { () =>
       var n = 0L
       val acc = new Array[Double](nSpecs)
       val present = new Array[Long](nSpecs)
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k; n = 0L
-          java.util.Arrays.fill(acc, 0.0)
-          java.util.Arrays.fill(present, 0L)
-        }
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
+      (row, out) => {
         n += 1
         var j = 0
         while (j < nSpecs) {
@@ -175,13 +160,11 @@ object Features {
             if (!x.isNaN) { acc(j) += x; present(j) += 1 }
             if (n == w) acc(j) /= present(j)
           } else acc(j) = (acc(j) * (w - 1) + x) / w
-          out(inSchema.length + j) =
-            if (n < w || acc(j).isNaN) null else java.lang.Double.valueOf(acc(j))
+          if (n >= w && !acc(j).isNaN) out(j) = acc(j)
           j += 1
         }
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** A double cell as pandas holds it: NULL reads as NaN. */
@@ -196,22 +179,28 @@ object Features {
       .filter(col("__rn") > n)
       .drop("__rn")
 
-  /** True range: max(high−low, |high−prevClose|, |low−prevClose|). Null on
-    * the first row of each key (no previous close).
+  /** True range: max(high−low, |high−prevClose|, |low−prevClose|), the
+    * `ta` library's `_true_range`: a row-wise pandas `max` that skips a
+    * missing term, so the bar after a missing close has high − low. A NULL
+    * or NaN term is missing (Spark's `greatest` would rank NaN highest).
+    * NULL when every term is missing, and on each key's first row (no
+    * previous close).
     */
   def trueRange(keyCol: String, ordCol: String, highCol: String, lowCol: String,
       closeCol: String): Column = {
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
     val pc = lag(closeCol, 1).over(win)
-    when(pc.isNotNull,
-      greatest(col(highCol) - col(lowCol), abs(col(highCol) - pc), abs(col(lowCol) - pc)))
+    def term(c: Column): Column = nanvl(c, lit(null).cast("double"))
+    when(row_number().over(win) > 1,
+      greatest(term(col(highCol) - col(lowCol)), term(abs(col(highCol) - pc)),
+        term(abs(col(lowCol) - pc))))
   }
 
   /** ATR(w): Wilder-smoothed true range (reference pulls it via
     * `add_all_ta_features`, `core/data/preprocess.py:11-16`). The first
     * row per key (undefined TR) is dropped from the output frame, and no
-    * other. A bar with a missing high, low or close, and the bar after a
-    * missing close, has a NULL true range, which [[withWilder]] reads as
+    * other. A bar whose true-range terms are all missing (see
+    * [[trueRange]]) has a NULL true range, which [[withWilder]] reads as
     * missing: left out of the seed mean, NULL ATR from there on.
     */
   def withAtr(df: DataFrame, keyCol: String, ordCol: String, w: Int = 14,
@@ -577,35 +566,21 @@ object Features {
     */
   def withAdaptiveEma(df: DataFrame, keyCol: String, ordCol: String,
       valCol: String, alphaCol: String, outCol: String): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields :+
-      StructField(outCol, DoubleType, nullable = true))
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val valIdx = inSchema.fieldIndex(valCol)
-    val alphaIdx = inSchema.fieldIndex(alphaCol)
-    val sorted = df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
+    val valIdx = df.schema.fieldIndex(valCol)
+    val alphaIdx = df.schema.fieldIndex(alphaCol)
+    OrderedScan(df, keyCol, ordCol, Seq(StructField(outCol, DoubleType, nullable = true))) { () =>
       var seeded = false
       var state = 0.0
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) { started = true; curKey = k; seeded = false }
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
-        val hasAlpha = !row.isNullAt(alphaIdx)
-        if (!seeded) {
-          if (hasAlpha) { state = row.getDouble(valIdx); seeded = true }
-        } else if (hasAlpha) {
-          state = state + row.getDouble(alphaIdx) * (row.getDouble(valIdx) - state)
+      (row, out) => {
+        if (!row.isNullAt(alphaIdx)) {
+          state =
+            if (seeded) state + row.getDouble(alphaIdx) * (row.getDouble(valIdx) - state)
+            else row.getDouble(valIdx)
+          seeded = true
         }
-        out(inSchema.length) =
-          if (seeded) java.lang.Double.valueOf(state) else null
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
+        if (seeded) out(0) = state
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** KAMA(er=10, fast=2, slow=30): Kaufman's adaptive moving average.

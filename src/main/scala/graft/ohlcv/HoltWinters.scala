@@ -1,17 +1,15 @@
 package graft.ohlcv
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.{DoubleType, StructField}
 
 /** Holt's linear-trend exponential smoothing (Holt 1957, the classical
   * double-exponential forecaster — public knowledge; the reference's
-  * ecosystem exposes it as statsmodels `Holt`). Same distributed shape as
-  * [[Features.withWilder]]: repartition by key, sort within partitions,
-  * one sequential mapPartitions scan — the recurrence is inherently
-  * ordered, exactly the case SURVEY §2.10 sanctions for a raw scan. At
-  * 100 TB this is one shuffle and a streaming pass; state is two doubles
-  * per key.
+  * ecosystem exposes it as statsmodels `Holt`), its additive seasonal
+  * extension and the local-level Kalman filter. Each is an
+  * [[OrderedScan]] — the recurrence is inherently ordered, exactly the
+  * case SURVEY §2.10 sanctions for a raw scan. At 100 TB this is one
+  * shuffle and a streaming pass; state is a few doubles per key.
   *
   * Recurrence (adjust-free, fitted level/trend emitted per row):
   * {{{
@@ -23,49 +21,48 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   *
   * The per-step operation ORDER is part of the contract: the q163 oracle
   * writes the identical expressions in a recursive CTE, so the smoothed
-  * path is bit-identical before rounding.
+  * path is bit-identical before rounding. The Holt and Kalman steps
+  * ([[HoltState.step]], [[KalmanState.step]]) are written once and also
+  * drive the streaming folds of [[graft.streaming.StreamingIngest]], so a
+  * stream equals the batch scan by construction (q175, q201).
   */
 object HoltWinters {
+
+  /** Holt level `l` and trend `b` after `n` observations. */
+  final case class HoltState(l: Double, b: Double, n: Long) {
+    def step(y: Double, alpha: Double, beta: Double): HoltState =
+      if (n == 0L) HoltState(y, 0.0, 1L)
+      else {
+        val lNew = alpha * y + (1 - alpha) * (l + b)
+        HoltState(lNew, beta * (lNew - l) + (1 - beta) * b, n + 1)
+      }
+  }
+
+  /** Kalman level `x` and posterior variance `p` after `n` observations. */
+  final case class KalmanState(x: Double, p: Double, n: Long) {
+    def step(y: Double, qVar: Double, rVar: Double): KalmanState =
+      if (n == 0L) KalmanState(y, 1.0, 1L)
+      else {
+        val pPred = p + qVar
+        val kGain = pPred / (pPred + rVar)
+        KalmanState(x + kGain * (y - x), (1 - kGain) * pPred, n + 1)
+      }
+  }
+
+  private def doubles(names: String*): Seq[StructField] =
+    names.map(StructField(_, DoubleType, nullable = true))
 
   def withHolt(df: DataFrame, keyCol: String, ordCol: String, valCol: String,
       alpha: Double, beta: Double, levelCol: String = "level",
       trendCol: String = "trend"): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ Seq(
-      StructField(levelCol, DoubleType, nullable = true),
-      StructField(trendCol, DoubleType, nullable = true)))
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val valIdx = inSchema.fieldIndex(valCol)
-    val sorted =
-      df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
-      var has = false
-      var l = 0.0
-      var b = 0.0
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k; has = false; l = 0.0; b = 0.0
-        }
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
-        if (!row.isNullAt(valIdx)) {
-          val y = row.getDouble(valIdx)
-          if (!has) { l = y; b = 0.0; has = true }
-          else {
-            val lNew = alpha * y + (1 - alpha) * (l + b)
-            b = beta * (lNew - l) + (1 - beta) * b
-            l = lNew
-          }
-        }
-        out(inSchema.length) = if (has) java.lang.Double.valueOf(l) else null
-        out(inSchema.length + 1) = if (has) java.lang.Double.valueOf(b) else null
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
+    val valIdx = df.schema.fieldIndex(valCol)
+    OrderedScan(df, keyCol, ordCol, doubles(levelCol, trendCol)) { () =>
+      var s = HoltState(0.0, 0.0, 0L)
+      (row, out) => {
+        if (!row.isNullAt(valIdx)) s = s.step(row.getDouble(valIdx), alpha, beta)
+        if (s.n > 0) { out(0) = s.l; out(1) = s.b }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Holt–Winters ADDITIVE seasonal smoothing (Winters 1960), period `m`:
@@ -79,37 +76,20 @@ object HoltWinters {
     * values exist), which the q180 oracle mirrors by carrying a
     * zero-seeded fixed-length list through its recursive CTE. First
     * observation per key: l = y, b = 0, s = 0. State per key: m + 2
-    * doubles; one ordered scan.
+    * doubles; one ordered scan. A null value carries level and trend
+    * forward and emits a NULL seasonal.
     */
   def withHoltWintersSeasonal(df: DataFrame, keyCol: String, ordCol: String,
       valCol: String, alpha: Double, beta: Double, gamma: Double,
       m: Int): DataFrame = {
     require(m >= 1, s"seasonal period m must be >= 1 (got $m)")
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ Seq(
-      StructField("level", DoubleType, nullable = true),
-      StructField("trend", DoubleType, nullable = true),
-      StructField("seasonal", DoubleType, nullable = true)))
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val valIdx = inSchema.fieldIndex(valCol)
-    val sorted =
-      df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
+    val valIdx = df.schema.fieldIndex(valCol)
+    OrderedScan(df, keyCol, ordCol, doubles("level", "trend", "seasonal")) { () =>
       var n = 0L
       var l = 0.0
       var b = 0.0
       val ring = new Array[Double](m)
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k; n = 0L; l = 0.0; b = 0.0
-          java.util.Arrays.fill(ring, 0.0)
-        }
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
+      (row, out) => {
         if (!row.isNullAt(valIdx)) {
           val y = row.getDouble(valIdx)
           val idx = (n % m).toInt
@@ -120,20 +100,13 @@ object HoltWinters {
             b = beta * (lNew - l) + (1 - beta) * b
             l = lNew
           }
-          val sNew = gamma * (y - l) + (1 - gamma) * sPrev
-          ring(idx) = sNew
+          ring(idx) = gamma * (y - l) + (1 - gamma) * sPrev
           n += 1
-          out(inSchema.length) = java.lang.Double.valueOf(l)
-          out(inSchema.length + 1) = java.lang.Double.valueOf(b)
-          out(inSchema.length + 2) = java.lang.Double.valueOf(sNew)
-        } else {
-          out(inSchema.length) = if (n > 0) java.lang.Double.valueOf(l) else null
-          out(inSchema.length + 1) = if (n > 0) java.lang.Double.valueOf(b) else null
-          out(inSchema.length + 2) = null
+          out(2) = ring(idx)
         }
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
+        if (n > 0) { out(0) = l; out(1) = b }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Kalman filter, local-level model (Harvey 1989): process variance
@@ -143,46 +116,17 @@ object HoltWinters {
     * }}}
     * init x = y₁, P = 1. Two doubles of state per key, one ordered scan;
     * the q181 oracle carries (x, P) through a recursive CTE with the
-    * identical operation order.
+    * identical operation order. Null values carry the state forward.
     */
   def withKalmanLevel(df: DataFrame, keyCol: String, ordCol: String,
       valCol: String, qVar: Double, rVar: Double): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ Seq(
-      StructField("x", DoubleType, nullable = true),
-      StructField("p", DoubleType, nullable = true)))
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val valIdx = inSchema.fieldIndex(valCol)
-    val sorted =
-      df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
-      var has = false
-      var x = 0.0
-      var p = 0.0
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k; has = false; x = 0.0; p = 0.0
-        }
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
-        if (!row.isNullAt(valIdx)) {
-          val y = row.getDouble(valIdx)
-          if (!has) { x = y; p = 1.0; has = true }
-          else {
-            val pPred = p + qVar
-            val kGain = pPred / (pPred + rVar)
-            x = x + kGain * (y - x)
-            p = (1 - kGain) * pPred
-          }
-        }
-        out(inSchema.length) = if (has) java.lang.Double.valueOf(x) else null
-        out(inSchema.length + 1) = if (has) java.lang.Double.valueOf(p) else null
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
+    val valIdx = df.schema.fieldIndex(valCol)
+    OrderedScan(df, keyCol, ordCol, doubles("x", "p")) { () =>
+      var s = KalmanState(0.0, 0.0, 0L)
+      (row, out) => {
+        if (!row.isNullAt(valIdx)) s = s.step(row.getDouble(valIdx), qVar, rVar)
+        if (s.n > 0) { out(0) = s.x; out(1) = s.p }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 }

@@ -1,9 +1,9 @@
 package graft.ohlcv
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField}
 
 /** Second technical-analysis indicator pack (SURVEY.md §2.8 F14) — the
   * remaining `add_all_ta_features` families the reference appends
@@ -14,10 +14,10 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField, StructT
   *
   * Shapes mirror [[Features]]: bounded row-frame windows (codegen'd) for
   * rolling statistics, collected-frame sequential HOF sums where the
-  * oracle must reproduce summation order bit-for-bit, and ordered
-  * per-key `mapPartitions` scans ONLY for the genuinely sequential
-  * recurrences (NVI's gated product, PSAR's trend-flip state machine) —
-  * sequential per series, parallel across series, O(1) state. EMA stages
+  * oracle must reproduce summation order bit-for-bit, and an
+  * [[OrderedScan]] ONLY for the genuinely sequential recurrences (NVI's
+  * gated product, PSAR's trend-flip state machine) — sequential per
+  * series, parallel across series, O(1) state. EMA stages
   * (TSI, mass index, PVO, STC) are [[Features.withEma]] window columns.
   *
   * A NULL or NaN bar is missing, as NaN is to pandas and the `ta` loops:
@@ -87,37 +87,22 @@ object Indicators {
     */
   def withNvi(df: DataFrame, keyCol: String, ordCol: String,
       start: Double = 1000.0, outCol: String = "nvi"): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields :+
-      StructField(outCol, DoubleType, nullable = true))
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val closeIdx = inSchema.fieldIndex("close")
-    val volIdx = inSchema.fieldIndex("volume")
-    val sorted = df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
+    val closeIdx = df.schema.fieldIndex("close")
+    val volIdx = df.schema.fieldIndex("volume")
+    OrderedScan(df, keyCol, ordCol, Seq(StructField(outCol, DoubleType, nullable = true))) { () =>
       var nvi = start
       var pc = 0.0
       var pv = 0.0
       var first = true
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k; nvi = start; first = true
-        }
+      (row, out) => {
         val c = Features.doubleOrNaN(row, closeIdx)
         val v = Features.doubleOrNaN(row, volIdx)
         if (!first && v < pv && pc != 0.0)
           nvi = nvi * (1.0 + (c - pc) / pc)
         first = false; pc = c; pv = v
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
-        out(inSchema.length) = java.lang.Double.valueOf(nvi)
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
+        out(0) = nvi
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   /** Ulcer index(w=14): percentage drawdown from the trailing-w max,
@@ -374,18 +359,12 @@ object Indicators {
     */
   def withPsar(df: DataFrame, keyCol: String, ordCol: String,
       step: Double = 0.02, maxStep: Double = 0.2): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ Seq(
-      StructField("psar", DoubleType, nullable = true),
-      StructField("psar_up_trend", BooleanType, nullable = true)))
-    val keyIdx = inSchema.fieldIndex(keyCol)
-    val hIdx = inSchema.fieldIndex("high")
-    val lIdx = inSchema.fieldIndex("low")
-    val cIdx = inSchema.fieldIndex("close")
-    val sorted = df.repartition(col(keyCol)).sortWithinPartitions(col(keyCol), col(ordCol))
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
+    val hIdx = df.schema.fieldIndex("high")
+    val lIdx = df.schema.fieldIndex("low")
+    val cIdx = df.schema.fieldIndex("close")
+    OrderedScan(df, keyCol, ordCol, Seq(
+        StructField("psar", DoubleType, nullable = true),
+        StructField("psar_up_trend", BooleanType, nullable = true))) { () =>
       var n = 0L
       var upTrend = true
       var af = step
@@ -393,18 +372,11 @@ object Indicators {
       var dtl = 0.0 // down-trend extreme low
       var psar = 0.0
       var h1 = 0.0; var h2 = 0.0; var l1 = 0.0; var l2 = 0.0
-      rows.map { row =>
-        val k = row.get(keyIdx)
-        if (!started || k != curKey) {
-          started = true; curKey = k; n = 0L
-          upTrend = true; af = step
-        }
+      (row, out) => {
         val h = Features.doubleOrNaN(row, hIdx)
         val l = Features.doubleOrNaN(row, lIdx)
         val c = Features.doubleOrNaN(row, cIdx)
         n += 1
-        var emit: java.lang.Double = null
-        var emitTrend: java.lang.Boolean = null
         if (n == 1) { uth = h; dtl = l }
         else if (n == 2) { psar = c }
         else {
@@ -429,17 +401,11 @@ object Indicators {
             psar = s
           }
           if (reversal) upTrend = !upTrend
-          emit = java.lang.Double.valueOf(psar)
-          emitTrend = java.lang.Boolean.valueOf(upTrend)
+          out(0) = psar
+          out(1) = upTrend
         }
         h2 = h1; h1 = h; l2 = l1; l1 = l
-        val out = new Array[Any](outSchema.length)
-        var i = 0
-        while (i < inSchema.length) { out(i) = row.get(i); i += 1 }
-        out(inSchema.length) = emit
-        out(inSchema.length + 1) = emitTrend
-        new org.apache.spark.sql.catalyst.expressions.GenericRow(out): Row
       }
-    }(Encoders.row(outSchema))
+    }
   }
 }

@@ -95,13 +95,15 @@ object TimeSeriesOps {
   /** OHLCV resample (reference `preprocess.py:99-122`, A1): per right-closed
     * bucket: open→first, high→max, low→min, close→last, volume→sum, with
     * first/last meaning earliest/latest by timestamp inside the bucket.
-    * When `emitEmpty`, interior gap buckets are emitted with null aggregates
-    * (pandas emits NaN rows for empty buckets).
+    * When `emitEmpty`, interior gap buckets are emitted with null open,
+    * high, low and close (pandas emits NaN rows for empty buckets).
     *
     * A NULL or NaN value is missing, as NaN is to pandas' `first`, `last`,
     * `max`, `min` and `sum`: open and close are the earliest and latest
-    * present values of the bucket, the other three skip it, and a column
-    * with no present value in the bucket aggregates to NULL.
+    * present values of the bucket, the other three skip it, and a price
+    * column with no present value in the bucket aggregates to NULL. Volume
+    * is pandas' `sum` with `min_count=0`: 0 for an empty or all-missing
+    * bucket.
     */
   def resampleOhlcv(df: DataFrame, keyCol: String, tsCol: String, deltaSec: Long,
       open: String = "open", high: String = "high", low: String = "low",
@@ -118,7 +120,7 @@ object TimeSeriesOps {
         max(present(high)).as(high),
         min(present(low)).as(low),
         max_by(col(close), presentAt(close)).as(close),
-        sum(present(volume)).as(volume))
+        coalesce(sum(present(volume)), lit(0)).as(volume))
     if (!emitEmpty) agged
     else {
       // Dense bucket scaffold per key: sequence-join (J1 machinery), chunked
@@ -128,6 +130,7 @@ object TimeSeriesOps {
       val scaffold = denseLongs(spans, keyCol, "__lo", "__hi", deltaSec)
         .withColumn(tsCol, timestamp_seconds(col("__v"))).drop("__v")
       scaffold.join(agged, Seq(keyCol, tsCol), "left")
+        .withColumn(volume, coalesce(col(volume), lit(0)))
     }
   }
 

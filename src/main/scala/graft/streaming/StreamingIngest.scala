@@ -1,9 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, Trigger}
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType,
+  ShortType, StructField, StructType, TimestampType}
+import graft.ohlcv.HoltWinters.{HoltState, KalmanState}
 
 /** Structured-Streaming mappings of the reference's incremental-ingest
   * semantics (SURVEY.md §2.9; reference `core/data/cdd.py:100-110` — the
@@ -72,208 +76,103 @@ object StreamingIngest {
       .select(col(keyCol), col("window.start").as("bucket_start"),
         col("mean_value"), col("n_events"))
 
-  /** Streaming EMA via `flatMapGroupsWithState` — the custom-state
-    * streaming twin of [[graft.ohlcv.Features.withEma]] (W4): per key,
-    * the state carries (ema, observations) across micro-batches; each
-    * batch's rows are ordered by (ts, tie) inside the group and folded
-    * through the same `α·x + (1−α)·ema` recurrence, emitting one row per
-    * event once `minPeriods` observations are seen. With a single
-    * AvailableNow batch the output is exactly the batch EMA over the
-    * full series (oracle-checked as q106); across batches the state
-    * makes it incremental. Requires per-key event-time order across
-    * batches (true for append-only time-series ingest).
+  /** The keyed fold behind [[streamingEma]], [[streamingHolt]] and
+    * [[streamingKalman]]: per key, the state `S` is carried across
+    * micro-batches by `flatMapGroupsWithState`; each batch's rows are
+    * ordered by (ts, tie) inside the group, folded through `step` from the
+    * stored state (`zero` for a new key), and emit one row per event:
+    * (key, ts) then `emit(state)` as the double columns `outCols`.
     *
     * Type contract: `keyCol` and `tieCol` must be integral (they are cast
     * to long — the output `key` is LongType regardless of input width);
     * `tsCol` may be a timestamp (folded at µs resolution) or any integral
     * column. Non-integral keys would need a Row-encoder groupByKey — not
-    * plumbed, so the schema states the long contract honestly.
+    * plumbed, so the schema states the long contract honestly. Requires
+    * per-key event-time order across batches (true for append-only
+    * time-series ingest).
     */
-  final case class EmaState(ema: Double, n: Long)
-
-  def streamingEma(events: DataFrame, keyCol: String, tsCol: String,
-      tieCol: String, valCol: String, alpha: Double, minPeriods: Int): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.GroupStateTimeout
+  private def keyedFold[S <: Product : TypeTag](op: String, events: DataFrame,
+      keyCol: String, tsCol: String, tieCol: String, valCol: String,
+      outCols: Seq[String], zero: S)(step: (S, Double) => S)(
+      emit: S => Seq[Any]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     // Normalize the event time to a sortable long (µs for real
     // timestamps; raw long columns — e.g. nanos-shimmed parquet — pass
     // through unchanged).
     val tsLong = events.schema(tsCol).dataType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(col(tsCol))
+      case TimestampType => unix_micros(col(tsCol))
       case _ => col(tsCol).cast("long")
     }
-    {
-      import org.apache.spark.sql.types._
-      val integral: Set[org.apache.spark.sql.types.DataType] =
-        Set(ByteType, ShortType, IntegerType, LongType)
-      Seq(keyCol, tieCol).foreach { c =>
-        require(integral(events.schema(c).dataType),
-          s"streamingEma: column '$c' must be integral (got " +
-            s"${events.schema(c).dataType.simpleString}); long keys are the " +
-            "plumbed contract")
-      }
+    val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
+    Seq(keyCol, tieCol).foreach { c =>
+      require(integral(events.schema(c).dataType),
+        s"$op: column '$c' must be integral (got " +
+          s"${events.schema(c).dataType.simpleString}); long keys are the " +
+          "plumbed contract")
     }
-    val outSchema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ema",
-        org.apache.spark.sql.types.DoubleType)))
-    implicit val rowEnc = Encoders.row(outSchema)
+    val outSchema = StructType(Seq(StructField("key", LongType), StructField("ts", LongType)) ++
+      outCols.map(StructField(_, DoubleType)))
     events
       .select(col(keyCol).cast("long").as("key"), tsLong.as("ts"),
         col(tieCol).cast("long").as("tie"), col(valCol).cast("double").as("v"))
       .as[(Long, Long, Long, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: org.apache.spark.sql.streaming.GroupState[EmaState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var (ema, n) = state.getOption.map(s => (s.ema, s.n)).getOrElse((0.0, 0L))
-          val out = sorted.map { case (_, ts, _, v) =>
-            if (n == 0L) ema = v else ema = alpha * v + (1 - alpha) * ema
-            n += 1
-            Row(key, ts, if (n >= minPeriods) ema else null)
+        (key: Long, rows: Iterator[(Long, Long, Long, Double)], state: GroupState[S]) =>
+          var s = state.getOption.getOrElse(zero)
+          val out = rows.toSeq.sortBy(r => (r._2, r._3)).map { case (_, ts, _, v) =>
+            s = step(s, v)
+            Row.fromSeq(key +: ts +: emit(s))
           }
-          state.update(EmaState(ema, n))
+          state.update(s)
           out.iterator
-      }
+      }(Encoders.product[S], Encoders.row(outSchema))
   }
+
+  /** Streaming EMA — the custom-state streaming twin of
+    * [[graft.ohlcv.Features.withEma]] (W4): the state carries (ema,
+    * observations) across micro-batches, folded through the same
+    * `α·x + (1−α)·ema` recurrence, emitting `ema` once `minPeriods`
+    * observations are seen. With a single AvailableNow batch the output is
+    * exactly the batch EMA over the full series (oracle-checked as q106);
+    * across batches the state makes it incremental. Key/tie contract as
+    * [[keyedFold]].
+    */
+  final case class EmaState(ema: Double, n: Long)
+
+  def streamingEma(events: DataFrame, keyCol: String, tsCol: String,
+      tieCol: String, valCol: String, alpha: Double, minPeriods: Int): DataFrame =
+    keyedFold("streamingEma", events, keyCol, tsCol, tieCol, valCol, Seq("ema"),
+        EmaState(0.0, 0L)) { (s, v) =>
+      EmaState(if (s.n == 0L) v else alpha * v + (1 - alpha) * s.ema, s.n + 1)
+    } { s => Seq(if (s.n >= minPeriods) s.ema else null) }
 
   /** Streaming Holt linear-trend smoothing: the q163 batch recurrence
-    * (ohlcv.HoltWinters) carried as (level, trend, n) state across
-    * micro-batches via `flatMapGroupsWithState` — same per-step operation
-    * order, so one AvailableNow pass over a parquet stream equals the
-    * batch scan bit-for-bit (oracle q175). Same long key/tie contract as
-    * [[streamingEma]].
+    * carried as [[HoltState]] across micro-batches — the same step as
+    * [[graft.ohlcv.HoltWinters.withHolt]], so one AvailableNow pass over a
+    * parquet stream equals the batch scan bit-for-bit (oracle q175).
+    * `level`/`trend` are NULL until `minPeriods` observations.
     */
-  final case class HoltState(l: Double, b: Double, n: Long)
-
   def streamingHolt(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, alpha: Double, beta: Double,
-      minPeriods: Int): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val spark = events.sparkSession
-    import spark.implicits._
-    val tsLong = events.schema(tsCol).dataType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(col(tsCol))
-      case _ => col(tsCol).cast("long")
-    }
-    {
-      import org.apache.spark.sql.types._
-      val integral: Set[org.apache.spark.sql.types.DataType] =
-        Set(ByteType, ShortType, IntegerType, LongType)
-      Seq(keyCol, tieCol).foreach { c =>
-        require(integral(events.schema(c).dataType),
-          s"streamingHolt: column '$c' must be integral (got " +
-            s"${events.schema(c).dataType.simpleString}); long keys are the " +
-            "plumbed contract")
-      }
-    }
-    val outSchema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("level",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("trend",
-        org.apache.spark.sql.types.DoubleType)))
-    implicit val rowEnc = Encoders.row(outSchema)
-    events
-      .select(col(keyCol).cast("long").as("key"), tsLong.as("ts"),
-        col(tieCol).cast("long").as("tie"), col(valCol).cast("double").as("v"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: org.apache.spark.sql.streaming.GroupState[HoltState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var (l, b, n) = state.getOption.map(s => (s.l, s.b, s.n))
-            .getOrElse((0.0, 0.0, 0L))
-          val out = sorted.map { case (_, ts, _, v) =>
-            if (n == 0L) { l = v; b = 0.0 }
-            else {
-              val lNew = alpha * v + (1 - alpha) * (l + b)
-              b = beta * (lNew - l) + (1 - beta) * b
-              l = lNew
-            }
-            n += 1
-            if (n >= minPeriods) Row(key, ts, l, b) else Row(key, ts, null, null)
-          }
-          state.update(HoltState(l, b, n))
-          out.iterator
-      }
-  }
+      minPeriods: Int): DataFrame =
+    keyedFold("streamingHolt", events, keyCol, tsCol, tieCol, valCol,
+        Seq("level", "trend"), HoltState(0.0, 0.0, 0L)) { (s, v) =>
+      s.step(v, alpha, beta)
+    } { s => if (s.n >= minPeriods) Seq(s.l, s.b) else Seq(null, null) }
 
-  /** Streaming Kalman local-level filter: the q181 recurrence with
-    * (x, P, n) state across micro-batches — same operation order as
-    * ohlcv.HoltWinters.withKalmanLevel, so an AvailableNow pass equals
-    * the batch scan bit-for-bit (oracle q201).
+  /** Streaming Kalman local-level filter: the q181 recurrence carried as
+    * [[KalmanState]] across micro-batches — the same step as
+    * [[graft.ohlcv.HoltWinters.withKalmanLevel]], so an AvailableNow pass
+    * equals the batch scan bit-for-bit (oracle q201).
     */
-  final case class KalmanState(x: Double, p: Double, n: Long)
-
   def streamingKalman(events: DataFrame, keyCol: String, tsCol: String,
-      tieCol: String, valCol: String, qVar: Double, rVar: Double): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    val spark = events.sparkSession
-    import spark.implicits._
-    val tsLong = events.schema(tsCol).dataType match {
-      case org.apache.spark.sql.types.TimestampType => unix_micros(col(tsCol))
-      case _ => col(tsCol).cast("long")
-    }
-    {
-      import org.apache.spark.sql.types._
-      val integral: Set[org.apache.spark.sql.types.DataType] =
-        Set(ByteType, ShortType, IntegerType, LongType)
-      Seq(keyCol, tieCol).foreach { c =>
-        require(integral(events.schema(c).dataType),
-          s"streamingKalman: column '$c' must be integral (got " +
-            s"${events.schema(c).dataType.simpleString}); long keys are the " +
-            "plumbed contract")
-      }
-    }
-    val outSchema = StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("x",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("p",
-        org.apache.spark.sql.types.DoubleType)))
-    implicit val rowEnc = Encoders.row(outSchema)
-    events
-      .select(col(keyCol).cast("long").as("key"), tsLong.as("ts"),
-        col(tieCol).cast("long").as("tie"), col(valCol).cast("double").as("v"))
-      .as[(Long, Long, Long, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)],
-         state: org.apache.spark.sql.streaming.GroupState[KalmanState]) =>
-          val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-          var (x, p, n) = state.getOption.map(s => (s.x, s.p, s.n))
-            .getOrElse((0.0, 0.0, 0L))
-          val out = sorted.map { case (_, ts, _, v) =>
-            if (n == 0L) { x = v; p = 1.0 }
-            else {
-              val pPred = p + qVar
-              val kGain = pPred / (pPred + rVar)
-              x = x + kGain * (v - x)
-              p = (1 - kGain) * pPred
-            }
-            n += 1
-            Row(key, ts, x, p)
-          }
-          state.update(KalmanState(x, p, n))
-          out.iterator
-      }
-  }
+      tieCol: String, valCol: String, qVar: Double, rVar: Double): DataFrame =
+    keyedFold("streamingKalman", events, keyCol, tsCol, tieCol, valCol,
+        Seq("x", "p"), KalmanState(0.0, 0.0, 0L)) { (s, v) =>
+      s.step(v, qVar, rVar)
+    } { s => Seq(s.x, s.p) }
 
   /** The reference's cache-merge upsert (`cdd.py:108-110`): each
     * micro-batch unions with the sink table and keeps the newest row per
@@ -281,7 +180,7 @@ object StreamingIngest {
     * upsert semantics onto a parquet table.
     */
   def foreachBatchUpsert(stream: DataFrame, sinkDir: String, keys: Seq[String],
-      arrivalCol: String, checkpoint: String): DataStreamWriter[org.apache.spark.sql.Row] =
+      arrivalCol: String, checkpoint: String): DataStreamWriter[Row] =
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
@@ -299,7 +198,7 @@ object StreamingIngest {
           if (fs.exists(dst)) spark.read.parquet(sinkDir)
           else if (fs.exists(oldP)) spark.read.parquet(sinkDir + "__old")
           else spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema)
+            spark.sparkContext.emptyRDD[Row], batch.schema)
         val merged = graft.ohlcv.TimeSeriesOps.dedupKeepLast(
           existing.unionByName(batch), keys, col(arrivalCol))
         // Write to a temp dir then swap — parquet sinks can't be read and

@@ -1,6 +1,8 @@
 package graft.text
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -25,19 +27,21 @@ object Packing {
           .otherwise(lit("test")))
   }
 
-  /** Sequence packing: documents ordered by `idCol` form one token
-    * stream; each document is assigned the batch containing its first
-    * token (`batch_id = ⌊exclusive-cumsum / budget⌋`) plus its offset in
-    * that batch.
-    *
-    * Scale shape: a global cumulative sum WITHOUT the single-partition
-    * global-window collapse — range-partition by id, per-partition token
-    * totals (one tiny row per partition) are prefix-summed on the driver
-    * and broadcast back, then each partition streams once adding its
-    * offset. The driver handles #partitions values, never rows.
+  /** The two-pass distributed exclusive prefix sum behind
+    * [[packSequences]] and [[snakeShards]], WITHOUT the single-partition
+    * global-window collapse. The (id, n_tokens) frame is range-partitioned
+    * and sorted by `order`, then materialized once; each partition reports
+    * one tiny stats row (its `weight` total and its first row's (n_tokens,
+    * id)), collected and prefix-summed with the partitions ordered by
+    * `firstOrder` on that first row — partitions hold disjoint ranges of
+    * `order`, so this recovers the global partition order — and the
+    * offsets are broadcast; each partition then streams once, emitting
+    * (id, n_tokens, `outCol`) with `outCol` the sum of `weight` over all
+    * earlier rows. Only #partitions values are collected, never rows.
     */
-  def packSequences(df: DataFrame, idCol: String, tokens: Column,
-      budget: Long): DataFrame = {
+  private def exclusivePrefixSum(df: DataFrame, idCol: String, tokens: Column,
+      order: Seq[Column], firstOrder: Ordering[(Long, Long)], weight: Row => Long,
+      outCol: String): DataFrame = {
     val spark = df.sparkSession
     // localCheckpoint (eager): the two passes below MUST see identical
     // partition contents — recomputing the lineage per pass would (a) run
@@ -49,29 +53,25 @@ object Packing {
     // the result is dereferenced.
     val base = df
       .select(col(idCol).cast("long").as("id"), tokens.cast("long").as("n_tokens"))
-      .repartitionByRange(col("id"))
-      .sortWithinPartitions("id")
+      .repartitionByRange(order: _*)
+      .sortWithinPartitions(order: _*)
       .localCheckpoint(true)
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("n_tokens", LongType),
-      StructField("cum_excl", LongType)))
-    // Pass 1: (partitionId, tokenSum, minId) — one row per partition.
+    // Pass 1: (partitionId, weight total, first n_tokens, first id).
     val partStats = base.mapPartitions { rows =>
-      var s = 0L
-      var mn = Long.MaxValue
-      var any = false
-      rows.foreach { r => any = true; s += r.getLong(1); mn = math.min(mn, r.getLong(0)) }
-      if (any)
-        Iterator(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-          Array[Any](org.apache.spark.TaskContext.getPartitionId().toLong, s, mn)): Row)
-      else Iterator.empty
+      if (!rows.hasNext) Iterator.empty
+      else {
+        val first = rows.next()
+        var s = weight(first)
+        rows.foreach(r => s += weight(r))
+        Iterator(new GenericRow(Array[Any](TaskContext.getPartitionId().toLong, s,
+          first.getLong(1), first.getLong(0))): Row)
+      }
     }(Encoders.row(StructType(Seq(
       StructField("pid", LongType), StructField("psum", LongType),
-      StructField("pmin", LongType))))).collect()
-    // Driver prefix-sum in id order (partitions hold disjoint id ranges).
+      StructField("ftok", LongType), StructField("fid", LongType))))).collect()
     val offsets: Map[Long, Long] = {
       var acc = 0L
-      partStats.sortBy(_.getLong(2)).map { r =>
+      partStats.sortBy(r => (r.getLong(2), r.getLong(3)))(firstOrder).map { r =>
         val o = r.getLong(0) -> acc
         acc += r.getLong(1)
         o
@@ -79,21 +79,32 @@ object Packing {
     }
     val bc = spark.sparkContext.broadcast(offsets)
     // Pass 2: stream each partition once, starting from its offset.
-    val cumulative = base.mapPartitions { rows =>
+    base.mapPartitions { rows =>
       var cum = -1L
       rows.map { r =>
-        if (cum < 0) cum = bc.value(org.apache.spark.TaskContext.getPartitionId().toLong)
-        val out = new org.apache.spark.sql.catalyst.expressions.GenericRow(
-          Array[Any](r.getLong(0), r.getLong(1), cum)): Row
-        cum += r.getLong(1)
+        if (cum < 0) cum = bc.value(TaskContext.getPartitionId().toLong)
+        val out = new GenericRow(Array[Any](r.getLong(0), r.getLong(1), cum)): Row
+        cum += weight(r)
         out
       }
-    }(Encoders.row(schema))
-    cumulative
+    }(Encoders.row(StructType(Seq(
+      StructField("id", LongType), StructField("n_tokens", LongType),
+      StructField(outCol, LongType)))))
+  }
+
+  /** Sequence packing: documents ordered by `idCol` form one token
+    * stream; each document is assigned the batch containing its first
+    * token (`batch_id = ⌊exclusive-cumsum / budget⌋`) plus its offset in
+    * that batch. The cumulative sum is [[exclusivePrefixSum]] over id
+    * order, weighted by token count.
+    */
+  def packSequences(df: DataFrame, idCol: String, tokens: Column,
+      budget: Long): DataFrame =
+    exclusivePrefixSum(df, idCol, tokens, Seq(col("id")),
+        Ordering.by[(Long, Long), Long](_._2), _.getLong(1), "cum_excl")
       .withColumn("batch_id", expr(s"cum_excl div $budget"))
       .withColumn("batch_offset", col("cum_excl") % budget)
       .select(col("id").as(idCol), col("n_tokens"), col("batch_id"), col("batch_offset"))
-  }
 
   /** Token-balanced shard assignment by folded ("snake") round-robin over
     * the size-descending order: rank documents by (n_tokens DESC, id),
@@ -106,66 +117,14 @@ object Packing {
     * across runs and engines (unlike greedy LPT, whose argmin depends on
     * float accumulation order).
     *
-    * Scale shape: the global rank is the same two-pass distributed
-    * pattern as [[packSequences]] — range-partition by the sort key,
-    * count rows per partition (one tiny row each), prefix-sum the counts
-    * on the driver, then stream each partition once adding its offset.
-    * No global window, no single-partition collapse; the driver touches
-    * #partitions values, never rows.
+    * The global rank is [[exclusivePrefixSum]] over (n_tokens DESC, id),
+    * each row weighing 1: no global window, no single-partition collapse.
     */
   def snakeShards(df: DataFrame, idCol: String, tokens: Column,
       numShards: Int): DataFrame = {
-    val spark = df.sparkSession
-    val base = df
-      .select(col(idCol).cast("long").as("id"), tokens.cast("long").as("n_tokens"))
-      .repartitionByRange(col("n_tokens").desc, col("id"))
-      .sortWithinPartitions(col("n_tokens").desc, col("id"))
-      .localCheckpoint(true)
-    // Pass 1: (partitionId, rowCount, first key) — one row per partition.
-    // Partitions hold disjoint (n_tokens desc, id) key ranges, so sorting
-    // the stats by the first key in that same order recovers the global
-    // partition order for the prefix sum.
-    val partStats = base.mapPartitions { rows =>
-      var n = 0L
-      var firstTok = 0L
-      var firstId = 0L
-      var any = false
-      rows.foreach { r =>
-        if (!any) { firstTok = r.getLong(1); firstId = r.getLong(0) }
-        any = true; n += 1
-      }
-      if (any)
-        Iterator(new org.apache.spark.sql.catalyst.expressions.GenericRow(
-          Array[Any](org.apache.spark.TaskContext.getPartitionId().toLong,
-            n, firstTok, firstId)): Row)
-      else Iterator.empty
-    }(Encoders.row(StructType(Seq(
-      StructField("pid", LongType), StructField("pcnt", LongType),
-      StructField("ftok", LongType), StructField("fid", LongType))))).collect()
-    val offsets: Map[Long, Long] = {
-      var acc = 0L
-      partStats.sortBy(r => (-r.getLong(2), r.getLong(3))).map { r =>
-        val o = r.getLong(0) -> acc
-        acc += r.getLong(1)
-        o
-      }.toMap
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
     val s = numShards.toLong
-    val schema = StructType(Seq(
-      StructField("id", LongType), StructField("n_tokens", LongType),
-      StructField("rk", LongType)))
-    val ranked = base.mapPartitions { rows =>
-      var rk = -1L
-      rows.map { r =>
-        if (rk < 0) rk = bc.value(org.apache.spark.TaskContext.getPartitionId().toLong)
-        val out = new org.apache.spark.sql.catalyst.expressions.GenericRow(
-          Array[Any](r.getLong(0), r.getLong(1), rk)): Row
-        rk += 1
-        out
-      }
-    }(Encoders.row(schema))
-    ranked
+    exclusivePrefixSum(df, idCol, tokens, Seq(col("n_tokens").desc, col("id")),
+        Ordering.by[(Long, Long), (Long, Long)] { case (tok, id) => (-tok, id) }, _ => 1L, "rk")
       .withColumn("shard",
         when(expr(s"(rk div $s) % 2") === 0, col("rk") % s)
           .otherwise(lit(s - 1) - col("rk") % s))

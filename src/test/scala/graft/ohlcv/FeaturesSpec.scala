@@ -115,6 +115,32 @@ class FeaturesSpec extends SparkSpec {
     assert(approx(out(1).getDouble(1), 3.0)) // seed (4+2)/2
   }
 
+  test("trueRange: a missing term is skipped, as ta's pandas max(axis=1) skips NaN") {
+    // pandas 2.2.2, ta's _true_range:
+    //   pc = close.shift(1)
+    //   pd.DataFrame({"tr1": high - low, "tr2": (high - pc).abs(),
+    //                 "tr3": (low - pc).abs()}).max(axis=1)
+    //   high  = [10, 12, 13, nan, 14, 15], low = [8, 8, 11, 11, 12, 13]
+    //   close = [9, nan, 12, nan, 13, 14]
+    //   -> [2.0, 4.0, 2.0, 1.0, 2.0, 2.0]
+    val nan = Double.NaN
+    val df = Seq[(Long, java.lang.Double, java.lang.Double, java.lang.Double)](
+      (0L, 10.0, 8.0, 9.0), (1L, 12.0, 8.0, null), (2L, 13.0, 11.0, 12.0),
+      (3L, nan, 11.0, nan), (4L, 14.0, 12.0, 13.0), (5L, 15.0, 13.0, 14.0))
+      .map { case (i, h, l, c) => ("a", i, h, l, c) }
+      .toDF("symbol", "idx", "high", "low", "close")
+    val tr = df.withColumn("tr", Features.trueRange("symbol", "idx", "high", "low", "close"))
+      .orderBy("idx").select("tr").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    // the first row stays NULL (no previous close; withAtr drops it)
+    assert(tr == Seq(None, Some(4.0), Some(2.0), Some(1.0), Some(2.0), Some(2.0)))
+    val atr = Features.withAtr(df, "symbol", "idx", w = 2)
+      .orderBy("idx").select("atr").collect()
+      .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
+    // seed (4+2)/2, then (3·1+1)/2, (2+2)/2, (2+2)/2
+    assert(atr == Seq(None, Some(3.0), Some(2.0), Some(2.0), Some(2.0)))
+  }
+
   test("withObv: ta sign convention (first/flat bars positive)") {
     val df = bars((0, 0, 0, 10, 1), (1, 0, 0, 11, 2), (2, 0, 0, 11, 3), (3, 0, 0, 9, 4))
     val out = Features.withObv(df, "symbol", "idx")

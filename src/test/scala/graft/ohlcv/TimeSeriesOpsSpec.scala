@@ -42,6 +42,7 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(first.getAs[Double]("close") == 18.0)  // latest row's close
     assert(first.getAs[Double]("volume") == 3.0)
     assert(out(1).isNullAt(out(1).fieldIndex("close"))) // empty bucket
+    assert(out(1).getAs[java.lang.Double]("volume") == 0.0) // pandas sum, min_count=0
     assert(out(2).getAs[Double]("close") == 17.5)
   }
 
@@ -67,8 +68,10 @@ class TimeSeriesOpsSpec extends SparkSpec {
     assert(at(0, "high") == 16.0 && at(0, "low") == 8.0 && at(0, "volume") == 6.0)
     // the same with NULL
     assert(at(1, "open") == 4.2 && at(1, "close") == 4.5)
-    // nothing present: NULL, never NaN
-    Seq("open", "high", "low", "close", "volume").foreach(c => assert(at(2, c) == null, c))
+    // nothing present: NULL prices, never NaN; volume is pandas' sum of
+    // nothing (min_count=0)
+    Seq("open", "high", "low", "close").foreach(c => assert(at(2, c) == null, c))
+    assert(at(2, "volume") == 0.0)
   }
 
   test("dedupKeepLast keeps greatest arrival, not an arbitrary row") {

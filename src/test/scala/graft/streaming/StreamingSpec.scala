@@ -131,6 +131,55 @@ class StreamingSpec extends SparkSpec {
     assert(second.toSeq == Seq(10.0, 15.0, 25.0)) // 0.5·35 + 0.5·15 — not a fresh seed
   }
 
+  test("streamingHolt and streamingKalman over two micro-batches equal the batch scans bit for bit") {
+    val batch1 = Seq(
+      (1L, ts("2024-01-01 00:00:00"), 1L, 10.0), (2L, ts("2024-01-01 00:01:00"), 2L, 50.0),
+      (3L, ts("2024-01-01 00:02:00"), 1L, 12.5), (4L, ts("2024-01-01 00:03:00"), 1L, 11.0),
+      (5L, ts("2024-01-01 00:04:00"), 2L, 47.25))
+    val batch2 = Seq(
+      (6L, ts("2024-01-01 00:05:00"), 1L, 15.75), (7L, ts("2024-01-01 00:06:00"), 2L, 52.0),
+      (8L, ts("2024-01-01 00:07:00"), 1L, 14.0), (9L, ts("2024-01-01 00:08:00"), 2L, 49.5))
+    /** Deliver batch1 then batch2 to a restarted query, as the EMA test does. */
+    def streamed(name: String)(op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Seq[(Long, Long, Double, Double)] = {
+      val src = Files.createTempDirectory(s"graft_stream_$name").toString
+      val ckpt = Files.createTempDirectory(s"graft_${name}_ckpt").toString
+      val out = Files.createTempDirectory(s"graft_${name}_out").toString + "/table"
+      writeBatch(src, batch1)
+      val schema = spark.read.parquet(src).schema
+      def run(): Unit = {
+        val q = op(StreamingIngest.readEvents(spark, src, schema)).writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.write.mode("append").parquet(out); ()
+          }.start()
+        q.awaitTermination(60000); q.stop()
+      }
+      run()
+      writeBatch(src, batch2)
+      run()
+      spark.read.parquet(out).as[(Long, Long, Double, Double)].collect().toSeq.sorted
+    }
+    val all = (batch1 ++ batch2).toDF("event_id", "ts", "user_id", "value")
+    def batched(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.select(col("user_id"), unix_micros(col("ts")), col(a), col(b))
+        .as[(Long, Long, Double, Double)].collect().toSeq.sorted
+    def bits(rows: Seq[(Long, Long, Double, Double)]) = rows.map { case (k, t, a, b) =>
+      (k, t, java.lang.Double.doubleToRawLongBits(a), java.lang.Double.doubleToRawLongBits(b))
+    }
+    val holt = streamed("holt")(StreamingIngest.streamingHolt(_, "user_id", "ts", "event_id",
+      "value", alpha = 0.5, beta = 0.25, minPeriods = 1))
+    assert(holt.length == 9)
+    assert(bits(holt) == bits(batched(graft.ohlcv.HoltWinters.withHolt(all, "user_id", "ts",
+      "value", alpha = 0.5, beta = 0.25), "level", "trend")))
+    val kalman = streamed("kalman")(StreamingIngest.streamingKalman(_, "user_id", "ts",
+      "event_id", "value", qVar = 0.01, rVar = 1.0))
+    assert(kalman.length == 9)
+    assert(bits(kalman) == bits(batched(graft.ohlcv.HoltWinters.withKalmanLevel(all, "user_id",
+      "ts", "value", qVar = 0.01, rVar = 1.0), "x", "p")))
+  }
+
   test("foreachBatchUpsert merges micro-batches with keep-last semantics") {
     val src = Files.createTempDirectory("graft_stream3").toString
     val sink = Files.createTempDirectory("graft_sink").toString + "/table"
