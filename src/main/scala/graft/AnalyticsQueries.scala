@@ -313,15 +313,13 @@ object AnalyticsQueries {
       (s, d) => {
         import graft.text.{Dedup, TextOps}
         val docs = Tables.documents(s, d)
-        val fps = Dedup.simhashAgg(docs, "doc_id",
-          TextOps.wordShingles(col("text"), 3), 60)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val fps = Cached.persist(Dedup.simhashAgg(docs, "doc_id",
+          TextOps.wordShingles(col("text"), 3), 60))
         fps.count()
         val pairs = Dedup.simhashNearDupPairs(fps, "doc_id", "simhash",
           maxHamming = 6, bits = 60)
-        val pr = graft.sim.Graph.pageRankFixedPoint(pairs, "id_a", "id_b", 5)
-        fps.unpersist()
-        pr.select(col("id").as("doc_id"), col("r")).orderBy("doc_id")
+        graft.sim.Graph.pageRankFixedPoint(pairs, "id_a", "id_b", 5)
+          .select(col("id").as("doc_id"), col("r")).orderBy("doc_id")
       },
       Some {
         val sub = VectorTextQueries.simhashSql(60)

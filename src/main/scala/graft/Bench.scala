@@ -11,8 +11,9 @@ package graft
   * directory gets every query's warm-min (`queries`), cold, warm spread
   * and task seconds, its largest compiled whole-stage method
   * (`max_method_bytes`, see [[Profile]]), plus `warm_shares_cache`: the
-  * queries whose warm reps ran against intermediates an earlier rep
-  * persisted (their standalone cost is the cold column). Failures are
+  * queries that left a persisted frame no [[Cached]] scope owned
+  * (`persisted_after` > 0), which their warm reps may have read; empty
+  * when nothing leaks. Failures are
   * LOUD — a query that throws gets an entry in `errors` and -1 timings.
   *
   * Calibration: q01 is re-timed cold at the start, middle and end of the

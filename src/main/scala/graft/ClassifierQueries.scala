@@ -159,7 +159,7 @@ object ClassifierQueries {
       : (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long]) = {
     val bt = featureTable(s, d)
     val gauged = LocalTier.Clf.budget > 0
-    if (gauged) bt.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (gauged) Cached.persist(bt)
     try {
       LocalTier.collect(LocalTier.Clf, bt)(LocalTier.Gauge(bt.count())) { rows =>
         Some(rows.map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))))
@@ -167,7 +167,7 @@ object ClassifierQueries {
         case Some(cells) => clfFitLocal(cells)
         case None => clfFitDistributedOn(s, bt)
       }
-    } finally { if (gauged) bt.unpersist(); () }
+    } finally { if (gauged) Cached.release(bt) }
   }
 
   /** Local tier of the fit: same per-doc µ-unit quantization (the same
@@ -233,9 +233,7 @@ object ClassifierQueries {
       : (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long]) = {
     import s.implicits._
     val B = ClfBuckets
-    val bt = bt0
-      .repartition(col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bt = Cached.persist(bt0.repartition(col("doc_id")))
     try {
       // nDocs = bias-cell count off the persisted frame: exactly one
       // bias pseudo-cell (b = B) exists per `documents` row, so this
@@ -254,7 +252,7 @@ object ClassifierQueries {
         // product per doc (bias rides as bucket B), then the per-doc
         // residual/xent quantized to µ-units BEFORE any cross-doc sum.
         val mp = col("m").cast("double") / lit(1e6)
-        val res = bt.join(broadcast(wdf), "b")
+        val res = Cached.persist(bt.join(broadcast(wdf), "b")
           .groupBy("doc_id", "source")
           .agg(sum(col("c") * col("wq")).as("m"))
           .select(col("doc_id"),
@@ -274,8 +272,7 @@ object ClassifierQueries {
           .withColumn("xq", floor(
             (greatest(mp, lit(0.0)) + log(lit(1.0) + exp(-abs(mp)))
               - col("y") * mp) * lit(1e6) + lit(0.5))
-            .cast("long"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .cast("long")))
         try {
           val l = res.agg(sum("xq").as("x"), sum("y").as("p"),
             count(lit(1)).as("n")).collect().head
@@ -291,13 +288,10 @@ object ClassifierQueries {
           }
           rows += ((e.toLong, xent, nPos, n - nPos, wq(B),
             wq.view.take(B).map(math.abs).sum, wq.view.take(B).count(_ != 0L).toLong))
-        } finally { res.unpersist(); () }
+        } finally Cached.release(res)
       }
       (rows.toSeq, wq)
-    } finally {
-      bt.unpersist()
-      ()
-    }
+    } finally Cached.release(bt)
   }
 
   /** DuckDB mirror of the whole fit: the feature table, w0 = 0, and the
@@ -485,11 +479,10 @@ object ClassifierQueries {
         val q = stream.writeStream.option("checkpointLocation", ckpt)
           .outputMode("append").trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val scored = marginsOf(s, batch, wq)
+            val scored = Cached.persist(marginsOf(s, batch, wq)
               .select(col("doc_id"), col("source"),
                 col("m").as("margin_unats"),
-                (col("m") >= thrQ).as("kept"))
-              .persist()
+                (col("m") >= thrQ).as("kept")))
             try {
               scored.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
               scored.agg(
@@ -498,7 +491,7 @@ object ClassifierQueries {
                 .select(lit(batchId).as("batch_id"), col("nk").as("n_kept"),
                   (col("nd") - col("nk")).as("n_dropped"))
                 .write.mode("overwrite").parquet(s"$counts/batch=$batchId")
-            } finally { scored.unpersist(); () }
+            } finally Cached.release(scored)
             ()
           }.start()
         try require(q.awaitTermination(300000),

@@ -161,21 +161,18 @@ object CrossModalQueries {
     * round piled on the session).
     */
   private[graft] def boundedMinLabels(pairs: DataFrame, rounds: Int): DataFrame = {
-    import org.apache.spark.sql.graft.CheckpointRelease
-    val edges = pairs
+    val edges = Cached.checkpoint(pairs
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(true)
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
     for (r <- 1 to rounds) {
-      val next = Graph.minLabelRound(edges, labels, "lbl")
-        .select("id", "lbl")
-        .localCheckpoint(true)
-      if (r > 1) CheckpointRelease.release(labels)
+      val next = Cached.checkpoint(Graph.minLabelRound(edges, labels, "lbl")
+        .select("id", "lbl"))
+      if (r > 1) Cached.release(labels)
       labels = next
     }
-    CheckpointRelease.release(edges)
+    Cached.release(edges)
     labels
   }
 
@@ -196,9 +193,7 @@ object CrossModalQueries {
   private[graft] def tierAudit(s: SparkSession, tier: String, pairs: DataFrame,
       gauged: Long): (String, Long, Long, Long, Long, Long, Option[Double],
       Long, Long, Long, String) = {
-    import org.apache.spark.sql.graft.CheckpointRelease
-    val p = pairs.select("id_a", "id_b")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = Cached.persist(pairs.select("id_a", "id_b"))
     try {
       val pAgg = p.agg(count(lit(1)).as("np"),
         count_distinct(col("id_b")).as("ll")).collect().head
@@ -220,8 +215,7 @@ object CrossModalQueries {
         val changed = if (lAgg.isNullAt(0)) 0L else lAgg.getLong(0)
         val ccLosers = if (lAgg.isNullAt(1)) 0L else lAgg.getLong(1)
         val converged = if (changed == 0L) 1L else 0L
-        val sizes = labels.groupBy("lbl").agg(count(lit(1)).as("sz"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val sizes = Cached.persist(labels.groupBy("lbl").agg(count(lit(1)).as("sz")))
         val (top, m, docsIn) =
           try {
             val rows = sizes.orderBy(col("sz").desc, col("lbl").asc)
@@ -231,7 +225,7 @@ object CrossModalQueries {
             if (rows.isEmpty) (Array.empty[Long], 0L, 0L)
             else (rows.map(_.getLong(1)), rows.head.getLong(2),
               if (rows.head.isNullAt(3)) 0L else rows.head.getLong(3))
-          } finally { sizes.unpersist(); () }
+          } finally Cached.release(sizes)
         // q280's Hill math verbatim at the single planning k.
         val n = m + (gauged - docsIn)
         val kEff = math.min(AuditHillK, n - 1)
@@ -246,8 +240,8 @@ object CrossModalQueries {
           if (converged == 0L || alpha.exists(_ <= 2.0)) "pair_local" else "cc"
         (tier, gauged, nPairs, docsIn, m, converged, alpha, survCc, survLocal,
           survLocal - survCc, policy)
-      } finally { CheckpointRelease.release(labels); () }
-    } finally { p.unpersist(); () }
+      } finally Cached.release(labels)
+    } finally Cached.release(p)
   }
 
   /** The four tier audits, run CONCURRENTLY over the shared session
@@ -263,7 +257,6 @@ object CrossModalQueries {
       String)] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    import org.apache.spark.sql.graft.CheckpointRelease
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
@@ -273,13 +266,13 @@ object CrossModalQueries {
           val fp = MediaQueries.audioFingerprints(s, d)
           try tierAudit(s, "audio", MediaQueries.audioPairsFrom(fp),
             fp.count())
-          finally CheckpointRelease.release(fp)
+          finally Cached.release(fp)
         },
         Future {
           val fp = MediaQueries.imageFingerprints(s, d)
           try tierAudit(s, "image", MediaQueries.imagePairsFrom(fp),
             fp.count())
-          finally CheckpointRelease.release(fp)
+          finally Cached.release(fp)
         },
         Future(tierAudit(s, "text",
           PipelineQueries.bandedVerifiedPairs(s, d),
@@ -288,7 +281,7 @@ object CrossModalQueries {
           val fr = MediaQueries.videoFrameHashes(s, d)
           try tierAudit(s, "video", MediaQueries.videoPairsBandedOf(fr),
             fr.select("doc_id").distinct().count())
-          finally CheckpointRelease.release(fr)
+          finally Cached.release(fr)
         })
       Await.result(Future.sequence(fs), Duration.Inf)
     } finally pool.shutdown()

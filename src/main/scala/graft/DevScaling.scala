@@ -101,13 +101,10 @@ object DevScaling {
 
     def warm(name: String, dir: String): (Double, Long) = {
       val fn = SparkEntry.queries(name)
-      var rows = 0L
-      rows = fn(spark, dir).count() // cold rep: JIT + file listing
-      Profile.dropPersisted(spark)
+      var rows = Cached.scope(fn(spark, dir).count()) // cold rep: JIT + file listing
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        rows = fn(spark, dir).count()
-        Profile.dropPersisted(spark)
+        rows = Cached.scope(fn(spark, dir).count())
         (System.nanoTime() - t0) / 1e9
       }
       (times.min, rows)

@@ -646,15 +646,13 @@ object ExtraQueries {
       // tier, and q34's bucket equi-join for the approx tier.
       Q("q236_ann_recall",
         (s, d) => {
-          val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
           val emb = Tables.embeddings(s, d)
             .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
           val thr = emb.agg(count(lit(1)).as("c"))
             .select(floor(lit(64L * 4294967296L).cast("double") /
               col("c").cast("double")).as("thr"))
-          val tagged = emb.crossJoin(broadcast(thr))
-            .withColumn("is_q", Hashing.hash32(col("vec_id")) < col("thr"))
-            .persist(lvl)
+          val tagged = Cached.persist(emb.crossJoin(broadcast(thr))
+            .withColumn("is_q", Hashing.hash32(col("vec_id")) < col("thr")))
           val queries = tagged.filter(col("is_q"))
             .select(col("vec_id").as("query_id"), col("embedding").as("query_vec"))
           val corpus = tagged.filter(!col("is_q")).select("vec_id", "embedding")

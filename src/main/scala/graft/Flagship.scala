@@ -78,17 +78,17 @@ object Flagship {
     *
     * The embedded-windows frame feeds seven consumers across
     * evaluate/forecastAndScore (corpus, queries, bounds, follow-ons,
-    * targets) — persist + materialize it once; Spark's cache manager
-    * dedups by canonicalized plan, so the l1/cosine/summary variants in
-    * one session share the same cached copy.
+    * targets) — persist + materialize it once. The frame belongs to the
+    * running query's [[Cached]] scope, so each variant (l1, cosine,
+    * summary, PCA, LSH) builds and releases its own copy.
     */
   def scoredQueries(s: SparkSession, dir: String, metric: String = "l1",
       seqLen: Int = SeqLen, predWindow: Int = PredWindow, stride: Int = Stride,
       k: Int = TopK, embedDim: Int = EmbedDim,
       lshPlanes: Option[Array[Array[Double]]] = None,
       projection: Option[Array[Array[Double]]] = None): DataFrame = {
-    val wins = embeddedWindows(filledSeries(s, dir), seqLen, embedDim, projection)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val wins = Cached.persist(
+      embeddedWindows(filledSeries(s, dir), seqLen, embedDim, projection))
     // The materializing count doubles as the broadcast-decision hint — no
     // extra planning-time action. Post-stride queries ≈ winCount/stride;
     // the per-key stride remainder adds ≤1 per key (1024 slack covers any
@@ -97,14 +97,11 @@ object Flagship {
     val queryHint = winCount / stride + 1024
     val top = Forecast.evaluate(wins, "user_id", seqLen, predWindow, stride, k, metric,
       lshPlanes, queryCountHint = Some(queryHint))
-    // Small (one row per evaluation query); persisting lets the summary
-    // query (q62) reuse the identical-plan result via the cache manager.
     // broadcastTop under the same bound that broadcasts the query side
     // (round-18, §3.1): the top frame is ≤ k rows per query, and the
     // hint removes two windows-sized exchanges in forecastAndScore.
     Forecast.forecastAndScore(top, wins, "user_id", seqLen, predWindow,
       broadcastTop = queryHint <= (1L << 18))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** The reference's actual evaluation protocol (test.ipynb cell 20):
@@ -116,11 +113,10 @@ object Flagship {
       seqLen: Int = SeqLen, predWindow: Int = PredWindow, stride: Int = Stride,
       k: Int = TopK, embedDim: Int = EmbedDim, valRatio: Double = 0.15): DataFrame = {
     val split = Windows.withTailSplit(series, "user_id", "idx", valRatio)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val trainWins = embeddedWindows(split.filter(!col("is_val")).drop("is_val"),
-      seqLen, embedDim).persist(lvl)
-    val valWins = embeddedWindows(split.filter(col("is_val")).drop("is_val"),
-      seqLen, embedDim).persist(lvl)
+    val trainWins = Cached.persist(embeddedWindows(
+      split.filter(!col("is_val")).drop("is_val"), seqLen, embedDim))
+    val valWins = Cached.persist(embeddedWindows(
+      split.filter(col("is_val")).drop("is_val"), seqLen, embedDim))
     trainWins.count()
     val valCount = valWins.count()
     val queryHint = valCount / stride + 1024

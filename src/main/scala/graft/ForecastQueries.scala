@@ -637,7 +637,7 @@ object ForecastQueries {
 
   private[graft] def pairCorrLsh(s: SparkSession, d: String,
       minSupport: Int = 8, p: Int = 10, t: Int = 16, dim: Int = 64,
-      k: Int = 20, persistFrames: Boolean = true): DataFrame = {
+      k: Int = 20): DataFrame = {
     // The dense-returns subtree (scan → resample → lag window → support
     // prune) feeds FOUR plan consumers (both signature self-join sides
     // via sigs, ra, rb); without a persist Spark computes it four times
@@ -648,12 +648,9 @@ object ForecastQueries {
     // U × T rows. The eager sigs.count() materializes both in one tiny
     // job so the main job's concurrent consumers can't race the cache
     // fill.
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val r0 = lshDense(s, d, minSupport, dim)
-    val r = if (persistFrames) r0.persist(lvl) else r0
-    val sigs0 = lshSigs(r, p, t, dim)
-    val sigs = if (persistFrames) sigs0.persist(lvl) else sigs0
-    if (persistFrames) sigs.count()
+    val r = Cached.persist(lshDense(s, d, minSupport, dim))
+    val sigs = Cached.persist(lshSigs(r, p, t, dim))
+    sigs.count()
     val cand = lshCand(sigs)
     val ra = r.select(col("user_id").as("u"), col("bucket_s"), col("r_q").as("x"))
     val rb = r.select(col("user_id").as("v"), col("bucket_s"), col("r_q").as("y"))
@@ -1612,12 +1609,11 @@ object ForecastQueries {
           .withColumn("r", log(col("close")) - log(lag(col("close"), 1).over(w)))
           .filter(col("r").isNotNull)
           .withColumn("rq", floor(col("r") * 1e6 + 0.5).cast("long"))
-        val pairs = r
+        val pairs = Cached.persist(r
           .withColumn("yq", lead(col("rq"), 1).over(w))
           .filter(col("yq").isNotNull)
           .select((col("rq").cast("double") / 1e6).as("x"),
-            (col("yq").cast("double") / 1e6).as("y"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            (col("yq").cast("double") / 1e6).as("y")))
         val n = pairs.count()
         var (wt, bt, mw, mb, sw, sb) = (0.0, 0.0, 0.0, 0.0, 0.0, 0.0)
         val traj = (1 to epochs).map { t =>
@@ -1639,7 +1635,6 @@ object ForecastQueries {
           bt = bt - 0.0625 * (mb / bc1) / (math.sqrt(sb / bc2) + 1e-8)
           (t, wt, bt, gw, gb)
         }
-        pairs.unpersist()
         import s.implicits._
         traj.toDF("epoch", "w", "b", "gw", "gb")
           .select(col("epoch"), pround(col("w"), 9).as("w"),

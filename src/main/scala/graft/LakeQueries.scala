@@ -39,15 +39,14 @@ object LakeQueries {
           Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
           ot, 8, "o_orderkey", Seq("o_orderkey"))
         try {
-          Bucketed.read(s, lt)
+          Cached.checkpoint(Bucketed.read(s, lt)
             .join(Bucketed.read(s, ot),
               col("l_orderkey") === col("o_orderkey"))
             .groupBy("o_orderpriority")
             .agg(count(lit(1)).as("n"),
               pround(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2)
                 .as("revenue"))
-            .orderBy("o_orderpriority")
-            .localCheckpoint(true)
+            .orderBy("o_orderpriority"))
         } finally {
           Bucketed.drop(s, lt); Bucketed.drop(s, ot)
         }

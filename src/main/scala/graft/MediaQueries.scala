@@ -42,17 +42,15 @@ object MediaQueries {
   /** Image fingerprint frame (doc_id, phash), materialized ONCE per
     * consumer: both sides of the band self-join read it, and without
     * this the payload column — the heavy bytes — would be scanned twice
-    * (plan-audited round 15). localCheckpoint(true) over persist:
-    * blocks reclaim on dereference (the Dedup.connectedComponents
-    * pattern), so repeated invocations don't accumulate CacheManager
-    * entries.
+    * (plan-audited round 15). A checkpoint, not a persist: it leaves no
+    * CacheManager entry, and the query's [[Cached]] scope releases its
+    * blocks.
     */
   private[graft] def imageFingerprints(s: SparkSession, d: String): DataFrame =
-    imageDocs(s, d)
+    Cached.checkpoint(imageDocs(s, d)
       .select(col("doc_id"),
         PerceptualHashExpressions.dhash60(col("payload")).as("phash"))
-      .filter(col("phash").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("phash").isNotNull))
 
   /** Verified image near-dup pairs at hamming ≤ 6 over the dHash
     * fingerprint — the q285 tier as a reusable frame.
@@ -78,14 +76,13 @@ object MediaQueries {
     * fingerprint over 61 equal frames (q290's tier).
     */
   private[graft] def audioFingerprints(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+    Cached.checkpoint(Tables.documents(s, d)
       .filter(length(col("text")) >= 61 &&
         col("text").rlike("^[\\x00-\\x7F]*$"))
       .select(col("doc_id"),
         PerceptualHashExpressions.audiohash60(col("text").cast("binary"))
           .as("phash"))
-      .filter(col("phash").isNotNull)
-      .localCheckpoint(true)
+      .filter(col("phash").isNotNull))
 
   private[graft] def audioPairsFrom(fp: DataFrame): DataFrame =
     Dedup.simhashNearDupPairs(fp, "doc_id", "phash",
@@ -329,12 +326,11 @@ object MediaQueries {
     * twice.
     */
   private[graft] def videoFrameHashes(s: SparkSession, d: String): DataFrame =
-    videoFrameHashesOf(
+    Cached.checkpoint(videoFrameHashesOf(
       Tables.documents(s, d)
         .filter(length(col("text")) >= VideoFrameBytes &&
           col("text").rlike("^[\\x00-\\x7F]*$"))
-        .select(col("doc_id"), col("text").cast("binary").as("payload")))
-      .localCheckpoint(true)
+        .select(col("doc_id"), col("text").cast("binary").as("payload"))))
 
   /** Doubled-position pigeonhole candidate join + exact verify.
     *
@@ -563,13 +559,11 @@ object MediaQueries {
       (s, d) => {
         import graft.streaming.StreamHarness
         import org.apache.spark.sql.streaming.Trigger
-        import org.apache.spark.sql.graft.CheckpointRelease
         val MaxH = 6
-        val ref = Dedup.pigeonholeBands(imageFingerprints(s, d),
+        val ref = Cached.checkpoint(Dedup.pigeonholeBands(imageFingerprints(s, d),
             "phash", MaxH, bits = 60)
           .select(col("band"), col("band_val"),
-            col("doc_id").as("ref_id"), col("phash").as("ref_phash"))
-          .localCheckpoint(true)
+            col("doc_id").as("ref_id"), col("phash").as("ref_phash")))
         val base = StreamHarness.scratchDir("graft_q298")
         val sink = base + "/gate"
         val counts = base + "/counts"
@@ -592,9 +586,8 @@ object MediaQueries {
               .filter(col("ref_id") < col("doc_id") &&
                 Dedup.hamming(col("phash"), col("ref_phash")) <= MaxH)
               .groupBy("doc_id").agg(min("ref_id").as("dup_of"))
-            val out = fps.join(dup, Seq("doc_id"), "left")
-              .withColumn("kept", col("dup_of").isNull)
-              .persist()
+            val out = Cached.persist(fps.join(dup, Seq("doc_id"), "left")
+              .withColumn("kept", col("dup_of").isNull))
             try {
               out.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
               out.agg(sum(when(col("kept"), 1L).otherwise(0L)).as("nk"),
@@ -602,12 +595,12 @@ object MediaQueries {
                 .select(lit(batchId).as("batch_id"), col("nk").as("n_kept"),
                   (col("nd") - col("nk")).as("n_dup"))
                 .write.mode("overwrite").parquet(s"$counts/batch=$batchId")
-            } finally { out.unpersist(); () }
+            } finally Cached.release(out)
             ()
           }.start()
         try require(q.awaitTermination(300000),
           "q298: streaming query did not terminate within 300 s")
-        finally { q.stop(); CheckpointRelease.release(ref) }
+        finally { q.stop(); Cached.release(ref) }
         val perDoc = s.read.parquet(sink)
           .select("doc_id", "phash", "kept", "dup_of")
         val c = s.read.parquet(counts)

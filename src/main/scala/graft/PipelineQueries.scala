@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointRelease
 
 import graft.Queries.Q
 import graft.Rounding.{pround, sqlRound}
@@ -66,12 +65,11 @@ object PipelineQueries {
   private[graft] def nbDocScores(s: SparkSession, d: String): DataFrame = {
     def qln(c: org.apache.spark.sql.Column) =
       floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
-    val nb = Tables.documents(s, d)
+    val nb = Cached.checkpoint(Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         explode(TextOps.tokens(col("text"))).as("w0"))
       .select(col("doc_id"), col("source"), lower(col("w0")).as("w"))
-      .groupBy("doc_id", "source", "w").agg(count(lit(1)).as("nb"))
-      .localCheckpoint(true)
+      .groupBy("doc_id", "source", "w").agg(count(lit(1)).as("nb")))
     val byTok = nb.groupBy("w").agg(
       sum(when(col("source") === "src0", col("nb")).otherwise(0L)).as("chi"),
       sum(when(col("source") =!= "src0", col("nb")).otherwise(0L)).as("clo"))
@@ -180,12 +178,11 @@ object PipelineQueries {
     * boundary-safe ";sym;" initial encoding (shared BPE base). The
     * trainer that builds it releases the checkpoint when it returns. */
   private def bpeWords(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+    Cached.checkpoint(Tables.documents(s, d)
       .select(explode(TextOps.tokens(col("text"))).as("w"))
       .filter(col("w").rlike("^[A-Za-z0-9]+$"))
       .groupBy("w").agg(count(lit(1)).as("freq"))
-      .withColumn("enc", regexp_replace(col("w"), "(.)", ";$1;"))
-      .localCheckpoint(true)
+      .withColumn("enc", regexp_replace(col("w"), "(.)", ";$1;")))
 
   /** The BPE trainers' [[LocalTier.Bpe]] dispatch: one agg (rows + total
     * chars) on the already-checkpointed seed gauges it — q221/q230's
@@ -283,7 +280,7 @@ object PipelineQueries {
     try collectSmallState(words) match {
       case Some(st) => bpeMergesLocal(st, k)
       case None => bpeMergesDistributed(words, k)
-    } finally CheckpointRelease.release(words)
+    } finally Cached.release(words)
   }
 
   /** The distributed step loop — the 100 TB tier of [[bpeMerges]],
@@ -417,7 +414,7 @@ object PipelineQueries {
     try collectSmallState(words) match {
       case Some(st) => bpeBatchedMergesLocal(st, rounds)
       case None => bpeBatchedMergesDistributed(words, rounds)
-    } finally CheckpointRelease.release(words)
+    } finally Cached.release(words)
   }
 
   /** Local tier of [[bpeBatchedMerges]]: same pair counts, same top-W
@@ -471,14 +468,14 @@ object PipelineQueries {
         val encK = accepted.foldLeft(col("enc")) { case (e, (l, r, _)) =>
           replace(e, lit(s";$l;;$r;"), lit(s";$l$r;"))
         }
-        val next = cur.withColumn("enc", encK).localCheckpoint(true)
+        val next = Cached.checkpoint(cur.withColumn("enc", encK))
         // A round's checkpoint is released once its successor exists;
         // the seed belongs to the caller.
-        if (cur ne words) CheckpointRelease.release(cur)
+        if (cur ne words) Cached.release(cur)
         cur = next
       }
     }
-    if (cur ne words) CheckpointRelease.release(cur)
+    if (cur ne words) Cached.release(cur)
     out.toSeq
   }
 
@@ -572,15 +569,14 @@ object PipelineQueries {
     * [[phraseBpeMerges]] releases the checkpoint when it returns.
     */
   private[graft] def phraseSeqs(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+    Cached.checkpoint(Tables.documents(s, d)
       .select(concat(lit(";"),
         array_join(filter(transform(TextOps.tokens(col("text")),
           w => regexp_replace(w, "[^A-Za-z0-9]", "")),
           x => length(x) > 0), ";;"),
         lit(";")).as("enc"))
       .filter(col("enc") =!= ";;")
-      .groupBy("enc").agg(count(lit(1)).as("freq"))
-      .localCheckpoint(true)
+      .groupBy("enc").agg(count(lit(1)).as("freq")))
 
   /** L-level locally-dominant batch acceptance over the rank-ordered
     * candidate pool — the parallel-greedy-matching shape (an edge that is
@@ -723,7 +719,7 @@ object PipelineQueries {
       levels: Int = PhraseBpeLevels)
       : Seq[(Long, Long, String, String, Long)] = {
     val seqs = phraseSeqs(s, d)
-    try phraseBpeMergesOn(s, seqs, levels) finally CheckpointRelease.release(seqs)
+    try phraseBpeMergesOn(s, seqs, levels) finally Cached.release(seqs)
   }
 
   /** Dispatch over a caller-supplied seed state — the tier gauge itself,
@@ -966,7 +962,7 @@ object PipelineQueries {
     while (round < PhraseBpeRoundCap && tot < PhraseBpeTarget && !exhausted) {
       round += 1
       val pool = phraseBpePoolRdd(cur)
-      if (prevState != null) { prevState.unpersist(false); prevState = null }
+      if (prevState != null) { Cached.release(prevState); prevState = null }
       val accepted = phraseBpeAccept(pool, levels)
       // Loud totality guard, not a silent truncation: acceptance is
       // naturally matching-bounded (observed ≤ 47/round); a corpus that
@@ -982,18 +978,17 @@ object PipelineQueries {
         // LAZY localCheckpoint: the new state materializes as a side
         // effect of the NEXT round's pair-count job instead of paying a
         // dedicated materialization job per round.
-        val next = phraseBpeApplyRdd(s, cur,
-          accepted.map { case (l, r, _, _) => (l, r) })
-        next.localCheckpoint()
+        val next = Cached.checkpoint(phraseBpeApplyRdd(s, cur,
+          accepted.map { case (l, r, _, _) => (l, r) }))
         prevState = cur
         cur = next
         tot += accepted.size
       }
     }
-    if (prevState != null) prevState.unpersist(false)
+    if (prevState != null) Cached.release(prevState)
     // Drop the final state's cache too: the trajectory in `out` is the
     // query's whole payload — nothing downstream reads the state.
-    cur.unpersist(false)
+    Cached.release(cur)
     out.toSeq
   }
 
@@ -1467,11 +1462,10 @@ object PipelineQueries {
       (s, d) => {
         import graft.streaming.StreamHarness
         import org.apache.spark.sql.streaming.Trigger
-        val bench = Tables.documents(s, d)
+        val bench = Cached.persist(Tables.documents(s, d)
           .filter(col("source") === "src0")
           .select(explode(TextOps.wordShingles(col("text"), 8)).as("__g"))
-          .select(TextOps.md5Hash60(col("__g")).as("__h")).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(TextOps.md5Hash60(col("__g")).as("__h")).distinct())
         bench.count()
         val base = StreamHarness.scratchDir("graft_q209")
         val sink = base + "/flags"
@@ -1504,7 +1498,6 @@ object PipelineQueries {
         val res = StreamHarness.localize(
           s.read.parquet(sink)
             .select("doc_id", "n_shared", "contaminated").orderBy("doc_id"))
-        bench.unpersist()
         StreamHarness.deleteRecursively(base)
         res
       },
@@ -1771,9 +1764,8 @@ object PipelineQueries {
   private def dedupSurvivors(s: SparkSession, d: String): DataFrame = {
     import graft.text.Dedup
     val docs = Tables.documents(s, d)
-    val fps = Dedup.simhashAgg(docs, "doc_id",
-      TextOps.wordShingles(col("text"), 3), 60)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fps = Cached.persist(Dedup.simhashAgg(docs, "doc_id",
+      TextOps.wordShingles(col("text"), 3), 60))
     fps.count()
     val pairs = Dedup.simhashNearDupPairs(fps, "doc_id", "simhash",
       maxHamming = 6, bits = 60)
@@ -1781,7 +1773,7 @@ object PipelineQueries {
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as("doc_id"))
     val out = docs.join(losers, Seq("doc_id"), "left_anti")
-    fps.unpersist()
+    Cached.release(fps)
     out
   }
 
@@ -2643,14 +2635,13 @@ object PipelineQueries {
         // same double wherever it's evaluated, so the pair stage's
         // cosine — dot/(na·nb) — is bit-identical to the oracle's
         // inline form while paying ONE dot per pair instead of three.
-        val assigned = v.crossJoin(broadcast(cents))
+        val assigned = Cached.checkpoint(v.crossJoin(broadcast(cents))
           .withColumn("d2", pround(arraySqDiff(col("emb"), col("c")), 6))
           .groupBy("vec_id")
           .agg(min(struct(col("d2"), col("cl"), col("emb"))).as("m"))
           .select(col("vec_id"), col("m.cl").as("cluster"),
             col("m.d2").as("d2"), col("m.emb").as("emb"))
-          .withColumn("nrm", sqrt(arrayDot(col("emb"), col("emb"))))
-          .localCheckpoint(true)
+          .withColumn("nrm", sqrt(arrayDot(col("emb"), col("emb")))))
         val a = assigned.select(col("cluster"), col("vec_id").as("ida"),
           col("d2").as("d2a"), col("emb").as("ea"), col("nrm").as("na"))
         val b = assigned.select(col("cluster"), col("vec_id").as("idb"),
@@ -2730,12 +2721,11 @@ object PipelineQueries {
         // to leak) and every downstream aggregate — both distribution
         // fits, the totals, and the per-doc score — reads the partials,
         // not the corpus. The md5-per-token cost is paid exactly once.
-        val nb = Tables.documents(s, d)
+        val nb = Cached.checkpoint(Tables.documents(s, d)
           .select(col("doc_id"), col("lang"),
             explode(TextOps.tokens(col("text"))).as("w"))
           .withColumn("b", TextOps.md5Hash60(lower(col("w"))) % 1024)
-          .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("nb"))
-          .localCheckpoint(true)
+          .groupBy("doc_id", "lang", "b").agg(count(lit(1)).as("nb")))
         val rawCt = nb.groupBy("b").agg(sum(col("nb")).as("cq"))
         val tgtCt = nb.filter(col("lang") === "en")
           .groupBy("b").agg(sum(col("nb")).as("cp"))
@@ -2808,12 +2798,11 @@ object PipelineQueries {
             x => x.getField("cv")).as("c"))
         // One materialized assignment (localCheckpoint) feeds both pair
         // sides and the verdict join — same discipline as q212.
-        val assigned = sig.join(cents, "cluster")
+        val assigned = Cached.checkpoint(sig.join(cents, "cluster")
           .withColumn("d2", pround(arraySqDiff(col("emb"), col("c")), 6))
           .withColumn("nrm", sqrt(arrayDot(col("emb"), col("emb"))))
           .select(col("cluster"), col("vec_id"), col("d2"), col("emb"),
-            col("nrm"))
-          .localCheckpoint(true)
+            col("nrm")))
         val a = assigned.select(col("cluster"), col("vec_id").as("ida"),
           col("d2").as("d2a"), col("emb").as("ea"), col("nrm").as("na"))
         val b = assigned.select(col("cluster"), col("vec_id").as("idb"),
@@ -3313,13 +3302,12 @@ object PipelineQueries {
     Q("q223_lsh_dedup_eval",
       (s, d) => {
         import graft.text.Dedup
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val cand = Dedup.minhashLshPairs(Tables.documents(s, d), "doc_id",
+        val cand = Cached.persist(Dedup.minhashLshPairs(Tables.documents(s, d), "doc_id",
           "text", shingleN = 3, numHashes = 12, bands = 4)
-          .select("id_a", "id_b").persist(lvl)
-        val truth = Dedup.ngramJaccardPairs(Tables.documents(s, d), "doc_id",
+          .select("id_a", "id_b"))
+        val truth = Cached.persist(Dedup.ngramJaccardPairs(Tables.documents(s, d), "doc_id",
           "text", shingleN = 3, threshold = 0.5)
-          .select("id_a", "id_b").persist(lvl)
+          .select("id_a", "id_b"))
         cand.agg(count(lit(1)).as("n_candidates"))
           .crossJoin(truth.agg(count(lit(1)).as("n_true")))
           .crossJoin(cand.join(truth, Seq("id_a", "id_b"))
@@ -3378,15 +3366,14 @@ object PipelineQueries {
     Q("q224_lsh_eval_sampled",
       (s, d) => {
         import graft.text.Dedup
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val sdocs = Tables.documents(s, d)
           .filter(Hashing.hash32(col("doc_id")) < lit(2147483648L))
-        val cand = Dedup.minhashLshPairs(sdocs, "doc_id",
+        val cand = Cached.persist(Dedup.minhashLshPairs(sdocs, "doc_id",
           "text", shingleN = 3, numHashes = 12, bands = 4)
-          .select("id_a", "id_b").persist(lvl)
-        val truth = Dedup.ngramJaccardPairs(sdocs, "doc_id",
+          .select("id_a", "id_b"))
+        val truth = Cached.persist(Dedup.ngramJaccardPairs(sdocs, "doc_id",
           "text", shingleN = 3, threshold = 0.5)
-          .select("id_a", "id_b").persist(lvl)
+          .select("id_a", "id_b"))
         cand.agg(count(lit(1)).as("n_candidates"))
           .crossJoin(truth.agg(count(lit(1)).as("n_true")))
           .crossJoin(cand.join(truth, Seq("id_a", "id_b"))
@@ -3457,7 +3444,6 @@ object PipelineQueries {
     Q("q229_dedup_eval_budget",
       (s, d) => {
         import graft.text.Dedup
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val docs = Tables.documents(s, d)
         val thr = docs.agg(count(lit(1)).as("c"))
           .select(floor(lit(250L * 4294967296L).cast("double") /
@@ -3465,15 +3451,15 @@ object PipelineQueries {
         // Persist the M-sized sample: one corpus scan feeds the filter;
         // candidate tier, truth tier, and the n_docs audit column all
         // reuse the cached bounded set.
-        val sdocs = docs.crossJoin(broadcast(thr))
+        val sdocs = Cached.persist(docs.crossJoin(broadcast(thr))
           .filter(Hashing.hash32(col("doc_id")) < col("thr"))
-          .drop("thr").persist(lvl)
-        val cand = Dedup.minhashLshPairs(sdocs, "doc_id",
+          .drop("thr"))
+        val cand = Cached.persist(Dedup.minhashLshPairs(sdocs, "doc_id",
           "text", shingleN = 3, numHashes = 12, bands = 4)
-          .select("id_a", "id_b").persist(lvl)
-        val truth = Dedup.ngramJaccardPairs(sdocs, "doc_id",
+          .select("id_a", "id_b"))
+        val truth = Cached.persist(Dedup.ngramJaccardPairs(sdocs, "doc_id",
           "text", shingleN = 3, threshold = 0.5)
-          .select("id_a", "id_b").persist(lvl)
+          .select("id_a", "id_b"))
         sdocs.agg(count(lit(1)).as("n_docs"))
           .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
           .crossJoin(truth.agg(count(lit(1)).as("n_true")))
@@ -3641,13 +3627,12 @@ object PipelineQueries {
     Q("q227_winnow_pairs",
       (s, d) => {
         val dfMax = 64; val minShared = 2; val kTop = 50
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
         val f = TextOps.winnowingFingerprints(
           Tables.documents(s, d), "doc_id", "text", k = 4, w = 5)
         val rare = f.groupBy("fp")
           .agg(count(lit(1)).as("df")).filter(col("df") <= dfMax)
           .select("fp")
-        val rf = f.join(rare, "fp").persist(lvl)
+        val rf = Cached.persist(f.join(rare, "fp"))
         rf.count()
         val sizes = rf.groupBy("doc_id").agg(count(lit(1)).as("sz"))
         val a = rf.select(col("fp"), col("doc_id").as("doc_a"))
@@ -4575,8 +4560,7 @@ object PipelineQueries {
         // evidence, and its J ≥ 0.5 filter IS the verified pair set —
         // recomputing the tier per consumer would double the only
         // corpus-scale stage in the plan.
-        val co = bandedCandidateOverlap(s, d)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val co = Cached.persist(bandedCandidateOverlap(s, d))
         val streamDrop = co.select(col("id_b").as("doc_id")).distinct()
           .withColumn("__sd", lit(1))
         val verified = co.filter(col("n_inter").cast("double") /
@@ -4811,7 +4795,7 @@ object PipelineQueries {
       TextOps.wordShingles(col("text"), 3), 60)
     // Both join sides read the fingerprint frame — persist so the
     // shingle+hash kernel runs once (the q49/q107 convention).
-    val fpsP = fps.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fpsP = Cached.persist(fps)
     fpsP.count()
     cand
       .join(fpsP.select(col("doc_id").as("id_a"), col("simhash").as("__fa")), "id_a")
@@ -5348,19 +5332,14 @@ object PipelineQueries {
         import graft.text.Dedup
         import graft.Rounding.dround
         val kMax = HillKs.max.toInt
-        val sizes = Dedup.connectedComponents(bandedVerifiedPairs(s, d))
-          .groupBy("cluster").agg(count(lit(1)).as("sz"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (top, m, docsIn) =
-          try {
-            val t = sizes.orderBy(col("sz").desc, col("cluster").asc)
-              .limit(kMax + 1).collect().map(_.getLong(1))
-            val a = sizes.agg(count(lit(1)).as("m"), sum("sz").as("di"))
-              .collect().head
-            // sum over zero clusters is NULL — a dup-free corpus is a
-            // legal input, and the SQL twin coalesces the same way.
-            (t, a.getLong(0), if (a.isNullAt(1)) 0L else a.getLong(1))
-          } finally { sizes.unpersist(); () }
+        val sizes = Cached.persist(Dedup.connectedComponents(bandedVerifiedPairs(s, d))
+          .groupBy("cluster").agg(count(lit(1)).as("sz")))
+        val top = sizes.orderBy(col("sz").desc, col("cluster").asc)
+          .limit(kMax + 1).collect().map(_.getLong(1))
+        val a = sizes.agg(count(lit(1)).as("m"), sum("sz").as("di")).collect().head
+        // sum over zero clusters is NULL — a dup-free corpus is a
+        // legal input, and the SQL twin coalesces the same way.
+        val (m, docsIn) = (a.getLong(0), if (a.isNullAt(1)) 0L else a.getLong(1))
         val total = Tables.documents(s, d).count()
         val n = m + (total - docsIn) // singleton docs are size-1 clusters
         val rows = HillKs.map { kReq =>

@@ -5,18 +5,21 @@ import org.apache.spark.sql.graft.{CodegenStats, ListenerBridge}
 
 /** The one measurement protocol for registered queries, shared by this
   * main and [[Bench]]: a cold rep, then `warmReps` warm reps, each a
-  * `count()` of the query's frame. A [[Rec]] carries the row count, the
-  * cold wall, the fastest warm wall and the warm spread (max − min), the
-  * [[TaskCounters]] deltas of the fastest warm rep (of the cold rep when
-  * there are none), `persisted_after`: the persisted RDDs still
-  * resident when the last rep ends (intra-query caches and leaks alike),
-  * and `max_method_bytes`: the largest compiled whole-stage method of any
+  * `count()` of the query's frame inside its own [[Cached.scope]], so a
+  * warm rep never reads an earlier rep's cache. A [[Rec]] carries the
+  * run conditions (`master`, `shuffle_partitions`, `sf`), the row count,
+  * the cold wall, the fastest warm wall and the warm spread (max − min),
+  * the [[TaskCounters]] deltas of the fastest warm rep (of the cold rep
+  * when there are none), `persisted_after` and `cached_after`: the
+  * persisted RDDs and the CacheManager entries still registered after the
+  * last rep's scope closed, i.e. frames no scope owned (leaks),
+  * `max_method_bytes`: the largest compiled whole-stage method of any
   * SQL execution the reps ran — past [[CodegenStats.HugeMethodLimit]]
   * that stage runs interpreted, and `tiers`: the last [[LocalTier]]
   * decision of each iterative operator the reps ran (`local` or
   * `distributed`, with its gauge).
-  * Whatever the query left behind is then dropped, so the next query
-  * starts from an empty cache.
+  * Whatever a leaking query left behind is then dropped, so the next
+  * query starts from an empty cache.
   *
   * Usage, sf dir from SPARK_GRAFT_SF_DIR:
   * {{{
@@ -30,22 +33,26 @@ object Profile {
 
   def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-  final case class Rec(query: String, rows: Long, coldS: Double,
+  final case class Rec(query: String, master: String, shufflePartitions: String,
+      sf: String, rows: Long, coldS: Double,
       warmMinS: Double, warmSpreadS: Double, tasks: TaskCounters.Snap,
-      persistedAfter: Int, maxMethodBytes: Int,
+      persistedAfter: Int, cachedAfter: Int, maxMethodBytes: Int,
       tiers: Seq[(String, LocalTier.Decision)], error: String = null) {
     def ok: Boolean = error == null
     def taskS: Double = tasks.runMs / 1e3
     def json: String = {
       def s(v: Double) = f"$v%.3f"
       val err = if (ok) "" else s""","error":"$error""""
-      s"""{"query":"$query","rows":$rows,"cold_s":${s(coldS)},""" +
+      s"""{"query":"$query","master":"$master",""" +
+        s""""shuffle_partitions":$shufflePartitions,"sf":"$sf",""" +
+        s""""rows":$rows,"cold_s":${s(coldS)},""" +
         s""""warm_min_s":${s(warmMinS)},"warm_spread_s":${s(warmSpreadS)},""" +
         s""""task_s":${s(taskS)},"gc_s":${s(tasks.gcMs / 1e3)},""" +
         s""""sched_delay_s":${s(tasks.schedDelayMs / 1e3)},"tasks":${tasks.tasks},""" +
         s""""jobs":${tasks.jobs},""" +
         s""""shuffle_write_bytes":${tasks.shuffleWriteBytes},""" +
         s""""spill_bytes":${tasks.spillBytes},"persisted_after":$persistedAfter,""" +
+        s""""cached_after":$cachedAfter,""" +
         s""""max_method_bytes":$maxMethodBytes,""" +
         s""""tiers":{${tiers.map { case (op, d) => s""""$op":${d.json}""" }.mkString(",")}}$err}"""
     }
@@ -57,6 +64,10 @@ object Profile {
       .replaceAll("[\\p{Cntrl}]", " ")
       .replace("\\", "\\\\").replace("\"", "'").take(120)
 
+  /** The guard against a leaking [[QueryFn]] (one that persists outside
+    * [[Cached]]): drop every persisted RDD and cached plan, so its frames
+    * cannot skew the next query. A no-op after a query whose scope owned
+    * everything it made. */
   def dropPersisted(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     spark.sharedState.cacheManager.clearCache()
@@ -64,10 +75,8 @@ object Profile {
 
   /** One untimed q01 run, so even a cold rep measures the query rather
     * than first-ever class loading and session start-up. */
-  def warmUp(spark: SparkSession, sf: String): Unit = {
-    SparkEntry.queries("q01_pricing_summary")(spark, sf).count()
-    dropPersisted(spark)
-  }
+  def warmUp(spark: SparkSession, sf: String): Unit =
+    Cached.scope(SparkEntry.queries("q01_pricing_summary")(spark, sf).count())
 
   def measure(spark: SparkSession, counters: TaskCounters, sf: String,
       name: String, fn: QueryFn, warmReps: Int = 2): Rec = {
@@ -75,12 +84,18 @@ object Profile {
       ListenerBridge.waitUntilListenerBusEmpty(spark)
       val before = counters.snapshot()
       val t0 = System.nanoTime()
-      val rows = fn(spark, sf).count()
+      val rows = Cached.scope(fn(spark, sf).count())
       val wall = (System.nanoTime() - t0) / 1e9
       ListenerBridge.waitUntilListenerBusEmpty(spark)
       (rows, wall, counters.snapshot().minus(before))
     }
     LocalTier.drain()
+    def rec(rows: Long, cold: Double, warmMin: Double, spread: Double,
+        tasks: TaskCounters.Snap, maxMethodBytes: Int, error: String = null) =
+      Rec(name, spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"),
+        sf, rows, cold, warmMin, spread, tasks, spark.sparkContext.getPersistentRDDs.size,
+        ListenerBridge.cachedEntries(spark), maxMethodBytes,
+        LocalTier.drain(), error)
     try {
       val ((cold, warm), maxMethodBytes) = CodegenStats.largestMethodDuring(spark) {
         val cold = rep()
@@ -88,12 +103,10 @@ object Profile {
       }
       val best = if (warm.isEmpty) cold else warm.minBy(_._2)
       val spread = if (warm.isEmpty) 0.0 else warm.map(_._2).max - warm.map(_._2).min
-      Rec(name, cold._1, cold._2, best._2, spread, best._3,
-        spark.sparkContext.getPersistentRDDs.size, maxMethodBytes, LocalTier.drain())
+      rec(cold._1, cold._2, best._2, spread, best._3, maxMethodBytes)
     } catch {
       case e: Throwable =>
-        Rec(name, -1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0),
-          spark.sparkContext.getPersistentRDDs.size, -1, LocalTier.drain(), sanitize(e))
+        rec(-1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0), -1, sanitize(e))
     } finally dropPersisted(spark)
   }
 
@@ -109,10 +122,7 @@ object Profile {
     warmUp(spark, sfDir)
     fns.foreach { case (n, fn) =>
       println(measure(spark, counters, sfDir, n, fn).json)
-      if (explain) {
-        fn(spark, sfDir).explain("formatted")
-        dropPersisted(spark)
-      }
+      if (explain) Cached.scope(fn(spark, sfDir).explain("formatted"))
     }
     spark.stop()
   }

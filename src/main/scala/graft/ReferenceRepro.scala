@@ -56,7 +56,6 @@ object ReferenceRepro {
     // Reference protocol: tail split per symbol; with `all`, matches may
     // come from any symbol (one concatenated index space).
     val split = Windows.withTailSplit(series, "user_id", "idx", 0.15)
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val projection =
       if (!usePca) None
       else {
@@ -70,12 +69,10 @@ object ReferenceRepro {
         else
           Some(Encode.pcaMatrix(zwins, "z", SeqLen, Dim, sampleFraction = None))
       }
-    val trainWins = Flagship.embeddedWindows(
-      split.filter(!col("is_val")).drop("is_val"), SeqLen, Dim, projection)
-      .persist(lvl)
-    val valWins = Flagship.embeddedWindows(
-      split.filter(col("is_val")).drop("is_val"), SeqLen, Dim, projection)
-      .persist(lvl)
+    val trainWins = Cached.persist(Flagship.embeddedWindows(
+      split.filter(!col("is_val")).drop("is_val"), SeqLen, Dim, projection))
+    val valWins = Cached.persist(Flagship.embeddedWindows(
+      split.filter(col("is_val")).drop("is_val"), SeqLen, Dim, projection))
     val trainCount = trainWins.count()
     val valCount = valWins.count()
     println(s"== train windows: $trainCount, val windows: $valCount")

@@ -46,9 +46,9 @@ object Session {
   def get(): SparkSession = {
     val s = builder().getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // Eager checkpoint release (CheckpointRelease / Bench's
-    // dropLeakedBlocks) unpersists locally-checkpointed RDDs on purpose,
-    // after their last consumer — Spark warns on every such unpersist
+    // Checkpoint release (`Cached.release` and a `Cached.scope`'s close)
+    // unpersists locally-checkpointed RDDs on purpose, after their last
+    // consumer — Spark warns on every such unpersist
     // ("lineage has been truncated and cannot be recomputed"), hundreds
     // of lines per run that drowned the driver's tail capture in r16.
     // The warning is correct-but-expected here; silence just the RDD

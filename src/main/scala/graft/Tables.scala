@@ -7,7 +7,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All loads are plain `spark.read.parquet` so Catalyst retains full
   * pushdown/pruning freedom; no caching here — the 100 TB posture is that
   * a table never fits in memory, so operators must be correct on cold
-  * scans and callers opt into `.cache()` only for genuinely small frames.
+  * scans and callers opt into `Cached.persist` only for genuinely small
+  * frames.
   */
 object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame =

@@ -778,8 +778,7 @@ object TuningQueries {
     import graft.Rounding.dround
     val toks = Tables.documents(s, d)
       .select(col("source"), explode(TextOps.tokens(col("text"))).as("w"))
-    val cw = toks.groupBy("source", "w").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cw = Cached.persist(toks.groupBy("source", "w").agg(count(lit(1)).as("c")))
     try {
           val nd = cw.groupBy("source").agg(sum("c").as("n"))
             .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -834,7 +833,7 @@ object TuningQueries {
               rows += ((t.toLong, src, nd(src), excess(src), alpha(src))))
           }
           rows.toSeq
-        } finally cw.unpersist()
+        } finally Cached.release(cw)
   }
 
   /** The q275 oracle's CTE chain (header + T unrolled steps), shared
@@ -1213,14 +1212,13 @@ object TuningQueries {
         val q = stream.writeStream.option("checkpointLocation", ckpt)
           .outputMode("append").trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val scored = dsirBucketedOf(
+            val scored = Cached.persist(dsirBucketedOf(
                 batch.filter(col("source") =!= DsirTarget))
               .join(broadcast(dsirModelDf(s, model)), "b")
               .groupBy("doc_id", "source")
               .agg(count(lit(1)).as("n_tokens"),
                 sum(col("ll")).as("logw_unats"))
-              .withColumn("kept", col("logw_unats") >= tau)
-              .persist()
+              .withColumn("kept", col("logw_unats") >= tau))
             try {
               scored.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
               scored.agg(
@@ -1229,7 +1227,7 @@ object TuningQueries {
                 .select(lit(batchId).as("batch_id"), col("nk").as("n_kept"),
                   (col("nd") - col("nk")).as("n_dropped"))
                 .write.mode("overwrite").parquet(s"$counts/batch=$batchId")
-            } finally { scored.unpersist(); () }
+            } finally Cached.release(scored)
             ()
           }.start()
         try require(q.awaitTermination(300000),

@@ -233,9 +233,8 @@ object VectorTextQueries {
         // The registered 100 TB path is q256_simhash_banded: minhash
         // band candidates (measured linear) → exact hamming verify of
         // candidates only — see `scaleLimited` below.
-        val fps = Dedup.simhashAgg(Tables.documents(s, d), "doc_id",
-          TextOps.wordShingles(col("text"), 3), 60)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val fps = Cached.persist(Dedup.simhashAgg(Tables.documents(s, d), "doc_id",
+          TextOps.wordShingles(col("text"), 3), 60))
         fps.count()
         Dedup.simhashNearDupPairs(fps, "doc_id", "simhash", maxHamming = 6, bits = 60)
           .orderBy("id_a", "id_b")
@@ -261,9 +260,8 @@ object VectorTextQueries {
     // closure recursion and takes the min reachable id.
     Q("q107_dedup_clusters",
       (s, d) => {
-        val fps = Dedup.simhashAgg(Tables.documents(s, d), "doc_id",
-          TextOps.wordShingles(col("text"), 3), 60)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val fps = Cached.persist(Dedup.simhashAgg(Tables.documents(s, d), "doc_id",
+          TextOps.wordShingles(col("text"), 3), 60))
         fps.count()
         val pairs = Dedup.simhashNearDupPairs(fps, "doc_id", "simhash",
           maxHamming = 6, bits = 60)
@@ -306,9 +304,8 @@ object VectorTextQueries {
     // the corpus size (DupPrevalenceSpec asserts it).
     Q("q235_dup_prevalence",
       (s, d) => {
-        val fps = Dedup.simhashAgg(Tables.documents(s, d), "doc_id",
-          TextOps.wordShingles(col("text"), 3), 60)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val fps = Cached.persist(Dedup.simhashAgg(Tables.documents(s, d), "doc_id",
+          TextOps.wordShingles(col("text"), 3), 60))
         fps.count()
         val pairs = Dedup.simhashNearDupPairs(fps, "doc_id", "simhash",
           maxHamming = 6, bits = 60)

@@ -24,15 +24,16 @@ object Verify {
     // queries block on micro-batch commits — run serially the suite
     // outgrew the driver's gate budget (round 4 recorded an empty
     // CORRECTNESS file). 8 lanes keeps 32 cores busy without thrashing
-    // the shuffle dirs.
+    // the shuffle dirs. Each query runs in its own Cached scope, so its
+    // caches are released when its dump is written.
     val lanes = math.min(8, math.max(1, selected.size))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(lanes)
     val done = new java.util.concurrent.CountDownLatch(selected.size)
     selected.foreach { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit = {
-          try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          try Cached.scope(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name"))
           catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           } finally done.countDown()

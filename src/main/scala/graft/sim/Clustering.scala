@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftExpressions.arraySqDiff
-import org.apache.spark.storage.StorageLevel
+import graft.Cached
 
 /** Iterative clustering driven from the driver with O(iterations) tiny
   * actions — the loop discipline of the distributed tier of
@@ -31,9 +31,8 @@ object Clustering {
     */
   def kmeans(df: DataFrame, idCol: String, vecCol: String, k: Int,
       maxIter: Int = 20, seeds: Option[DataFrame] = None): (DataFrame, DataFrame) = {
-    val v = df.select(col(idCol).cast("long").as("__id"),
-      col(vecCol).cast("array<double>").as("__v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val v = Cached.persist(df.select(col(idCol).cast("long").as("__id"),
+      col(vecCol).cast("array<double>").as("__v")))
     def recenter(assign: DataFrame): DataFrame =
       v.join(assign, "__id")
         .select(col("__cl"), posexplode(col("__v")))
@@ -57,30 +56,29 @@ object Clustering {
     var cents = seedRows.orderBy("__id")
       .withColumn("__cl", (row_number().over(Window.orderBy("__id")) - 1).cast("int"))
       .select(col("__cl"), col("__v").as("__c"), lit(1L).as("n"))
-    var current = assign(cents).persist(StorageLevel.MEMORY_AND_DISK)
+    var current = Cached.persist(assign(cents))
     var changed = 1L
     var iter = 0
     while (changed > 0 && iter < maxIter) {
       cents = recenter(current)
-      val next = assign(cents).persist(StorageLevel.MEMORY_AND_DISK)
+      val next = Cached.persist(assign(cents))
       // Change count: the ONLY thing the driver materializes. (Rename
       // before the join — both sides share lineage, and Spark's
       // ambiguous-self-join check rejects df("col") disambiguation.)
       changed = next.withColumnRenamed("__cl", "__cl_next")
         .join(current.withColumnRenamed("__cl", "__cl_prev"), "__id")
         .filter(col("__cl_next") =!= col("__cl_prev")).count()
-      current.unpersist()
+      Cached.release(current)
       current = next
       iter += 1
     }
     // Materialize BEFORE dropping the caches the plans lean on.
-    val assignments = current.select(col("__id").as(idCol), col("__cl").as("cluster"))
-      .localCheckpoint(true)
-    val centroids = cents
-      .select(col("__cl").as("cluster"), col("__c").as("c"), col("n"))
-      .localCheckpoint(true)
-    current.unpersist()
-    v.unpersist()
+    val assignments = Cached.checkpoint(
+      current.select(col("__id").as(idCol), col("__cl").as("cluster")))
+    val centroids = Cached.checkpoint(
+      cents.select(col("__cl").as("cluster"), col("__c").as("c"), col("n")))
+    Cached.release(current)
+    Cached.release(v)
     (assignments, centroids)
   }
 }

@@ -2,11 +2,9 @@ package graft.sim
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointRelease
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
-import graft.LocalTier
+import graft.{Cached, LocalTier}
 
 /** Distributed graph analytics over edge DataFrames.
   *
@@ -27,10 +25,9 @@ object Graph {
     */
   private[graft] def edgeTiers(tier: LocalTier.Tier, pairs: DataFrame,
       a: String, b: String): (DataFrame, Option[Array[(Long, Long)]]) = {
-    val edges = pairs.select(col(a).as("src"), col(b).as("dst"))
+    val edges = Cached.persist(pairs.select(col(a).as("src"), col(b).as("dst"))
       .union(pairs.select(col(b).as("src"), col(a).as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = edges.count()
     val local =
       if (Seq(a, b).exists(c => pairs.schema(c).dataType != LongType)) None
@@ -41,7 +38,7 @@ object Graph {
           None
         } else Some(rows.map(r => (r.getLong(0), r.getLong(1))))
       }
-    if (local.isDefined) edges.unpersist(false)
+    if (local.isDefined) Cached.release(edges)
     (edges, local)
   }
 
@@ -139,11 +136,10 @@ object Graph {
     */
   private[graft] def pageRankDistributed(s: SparkSession, und: DataFrame,
       iters: Int): DataFrame = {
-    val lvl = StorageLevel.MEMORY_AND_DISK
-    val deg = und.groupBy("src").agg(count(lit(1)).as("deg")).persist(lvl)
+    val deg = Cached.persist(und.groupBy("src").agg(count(lit(1)).as("deg")))
     val n = deg.count()
     if (n == 0) {
-      und.unpersist(); deg.unpersist()
+      Cached.release(und); Cached.release(deg)
       return s.emptyDataFrame
         .withColumn("id", lit(0L)).withColumn("r", lit(0L)).limit(0)
     }
@@ -155,23 +151,22 @@ object Graph {
       // in depth every round — fine at 5 iterations, pathological at 50.
       // The checkpointed frame is nodes-sized; results are unchanged
       // (every step is exact integer arithmetic).
-      val next = und
+      val next = Cached.checkpoint(und
         .join(ranks, und("src") === ranks("id"))
         .join(deg, "src")
         .select(col("dst"), expr("r div deg").as("__c"))
         .groupBy("dst")
         .agg(sum("__c").as("__s"))
         .select(col("dst").as("id"),
-          (lit(base) + expr("(85 * __s) div 100")).as("r"))
-        .localCheckpoint(true)
+          (lit(base) + expr("(85 * __s) div 100")).as("r")))
       // The superseded round is dead once its successor is materialized;
       // release its blocks now rather than at GC (no-op on the first
       // round's projection of `deg`).
-      CheckpointRelease.release(ranks)
+      Cached.release(ranks)
       ranks = next
     }
-    und.unpersist()
-    deg.unpersist()
+    Cached.release(und)
+    Cached.release(deg)
     ranks
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import scala.reflect.runtime.universe.TypeTag
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
   OutputMode, Trigger}
@@ -81,7 +81,9 @@ object StreamingIngest {
     * micro-batches by `flatMapGroupsWithState`; each batch's rows are
     * ordered by (ts, tie) inside the group, folded through `step` from the
     * stored state (`zero` for a new key), and emit one row per event:
-    * (key, ts) then `emit(state)` as the double columns `outCols`.
+    * (key, ts) then `emit(state)` as the double columns `outCols`. A NULL
+    * `value` skips the step, so the state carries over, as in the batch
+    * scans.
     *
     * Type contract: `keyCol` and `tieCol` must be integral (they are cast
     * to long — the output `key` is LongType regardless of input width);
@@ -92,7 +94,7 @@ object StreamingIngest {
     * time-series ingest).
     */
   private def keyedFold[S <: Product : TypeTag](op: String, events: DataFrame,
-      keyCol: String, tsCol: String, tieCol: String, valCol: String,
+      keyCol: String, tsCol: String, tieCol: String, value: Column,
       outCols: Seq[String], zero: S)(step: (S, Double) => S)(
       emit: S => Seq[Any]): DataFrame = {
     val spark = events.sparkSession
@@ -115,14 +117,14 @@ object StreamingIngest {
       outCols.map(StructField(_, DoubleType)))
     events
       .select(col(keyCol).cast("long").as("key"), tsLong.as("ts"),
-        col(tieCol).cast("long").as("tie"), col(valCol).cast("double").as("v"))
-      .as[(Long, Long, Long, Double)]
+        col(tieCol).cast("long").as("tie"), value.cast("double").as("v"))
+      .as[(Long, Long, Long, Option[Double])]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: Long, rows: Iterator[(Long, Long, Long, Double)], state: GroupState[S]) =>
+        (key: Long, rows: Iterator[(Long, Long, Long, Option[Double])], state: GroupState[S]) =>
           var s = state.getOption.getOrElse(zero)
           val out = rows.toSeq.sortBy(r => (r._2, r._3)).map { case (_, ts, _, v) =>
-            s = step(s, v)
+            v.foreach(y => s = step(s, y))
             Row.fromSeq(key +: ts +: emit(s))
           }
           state.update(s)
@@ -137,14 +139,16 @@ object StreamingIngest {
     * observations are seen. With a single AvailableNow batch the output is
     * exactly the batch EMA over the full series (oracle-checked as q106);
     * across batches the state makes it incremental. Key/tie contract as
-    * [[keyedFold]].
+    * [[keyedFold]]. A NULL value fails the query: pandas decays the
+    * weights across a missing bar, which this state cannot express.
     */
   final case class EmaState(ema: Double, n: Long)
 
   def streamingEma(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, alpha: Double, minPeriods: Int): DataFrame =
-    keyedFold("streamingEma", events, keyCol, tsCol, tieCol, valCol, Seq("ema"),
-        EmaState(0.0, 0L)) { (s, v) =>
+    keyedFold("streamingEma", events, keyCol, tsCol, tieCol,
+        when(col(valCol).isNull, raise_error(lit(s"streamingEma: NULL '$valCol'")))
+          .otherwise(col(valCol)), Seq("ema"), EmaState(0.0, 0L)) { (s, v) =>
       EmaState(if (s.n == 0L) v else alpha * v + (1 - alpha) * s.ema, s.n + 1)
     } { s => Seq(if (s.n >= minPeriods) s.ema else null) }
 
@@ -157,7 +161,7 @@ object StreamingIngest {
   def streamingHolt(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, alpha: Double, beta: Double,
       minPeriods: Int): DataFrame =
-    keyedFold("streamingHolt", events, keyCol, tsCol, tieCol, valCol,
+    keyedFold("streamingHolt", events, keyCol, tsCol, tieCol, col(valCol),
         Seq("level", "trend"), HoltState(0.0, 0.0, 0L)) { (s, v) =>
       s.step(v, alpha, beta)
     } { s => if (s.n >= minPeriods) Seq(s.l, s.b) else Seq(null, null) }
@@ -169,10 +173,10 @@ object StreamingIngest {
     */
   def streamingKalman(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, qVar: Double, rVar: Double): DataFrame =
-    keyedFold("streamingKalman", events, keyCol, tsCol, tieCol, valCol,
+    keyedFold("streamingKalman", events, keyCol, tsCol, tieCol, col(valCol),
         Seq("x", "p"), KalmanState(0.0, 0.0, 0L)) { (s, v) =>
       s.step(v, qVar, rVar)
-    } { s => Seq(s.x, s.p) }
+    } { s => if (s.n > 0) Seq(s.x, s.p) else Seq(null, null) }
 
   /** The reference's cache-merge upsert (`cdd.py:108-110`): each
     * micro-batch unions with the sink table and keeps the newest row per

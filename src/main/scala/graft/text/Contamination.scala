@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Cached
 
 /** Cross-corpus n-gram machinery for training-data hygiene:
   * benchmark-contamination detection and paragraph-level (chunk)
@@ -95,8 +96,7 @@ object Contamination {
       .select(col(idCol), benchPred.as("__bench"),
         explode(TextOps.wordShingles(col(textCol), n)).as("__g"))
       .select(col(idCol), col("__bench"), TextOps.md5Hash60(col("__g")).as("__h"))
-    val bench = hashed.filter(col("__bench")).select("__h").distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bench = Cached.persist(hashed.filter(col("__bench")).select("__h").distinct())
     // One pass over the (small) benchmark side sizes the sketch exactly;
     // the build itself is a treeAggregate of mergeable filters.
     val nBench = math.max(bench.count(), 1L)
@@ -116,9 +116,9 @@ object Contamination {
         (coalesce(col("__n"), lit(0L)) > 0).as("contaminated"))
     // The caller's action runs with `bench` cached (it is read twice:
     // sketch build + verify join); hand back an un-cached plan.
-    val materialized = out.localCheckpoint(true)
-    bench.unpersist()
-    bfB.unpersist()
+    val materialized = Cached.checkpoint(out)
+    Cached.release(bench)
+    bfB.destroy()
     materialized
   }
 

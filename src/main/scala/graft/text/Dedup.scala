@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.LocalTier
+import graft.{Cached, LocalTier}
 import graft.Rounding.pround
 import graft.sim.Graph
 
@@ -231,7 +231,7 @@ object Dedup {
     // reads this single cached frame, so the pipeline pays one persist
     // and one eager count() instead of round 2's three serializing
     // barriers. MEMORY_AND_DISK: at large SF the index spills, not OOMs.
-    val ranked = df
+    val ranked = Cached.persist(df
       .select(col(idCol), explode(array_distinct(
         TextOps.wordShingles(col(textCol), shingleN))).as("__s"))
       .select(col(idCol), TextOps.md5Hash60(col("__s")).as("shingle"))
@@ -240,8 +240,7 @@ object Dedup {
       .withColumn("__f", count(lit(1)).over(Window.partitionBy("shingle")))
       .withColumn("__r", row_number().over(
         Window.partitionBy(idCol).orderBy(col("__f").asc, col("shingle").asc)))
-      .withColumn("__n", count(lit(1)).over(Window.partitionBy(idCol)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy(idCol))))
     ranked.count() // eager: keeps the downstream stages on the cached copy
     // instead of racing AQE re-plans against cache fill.
     val prefix = ranked
@@ -343,7 +342,6 @@ object Dedup {
   private[graft] def connectedComponentsDistributed(edges: DataFrame,
       maxIter: Int = 25,
       roundsOut: java.util.concurrent.atomic.AtomicInteger = null): DataFrame = {
-    import org.apache.spark.sql.graft.CheckpointRelease
     // Round 1 fused into initialization: with identity labels the first
     // iteration's edges⋈labels join maps src→src, so its neighbor-min is
     // just min(src) grouped by dst — one aggregation straight off the
@@ -354,7 +352,7 @@ object Dedup {
     //
     // Round-18: each round is materialized with localCheckpoint(true)
     // instead of persist, and the superseded round's blocks are released
-    // eagerly (CheckpointRelease — the Graph.pageRankDistributed
+    // eagerly (Cached.release — the Graph.pageRankDistributed
     // discipline). persist caches DATA but keeps the LOGICAL plan
     // growing one join deeper per round, so Catalyst re-analyzed a
     // depth-i tree on every iteration — fine at near-dup depth 2–4,
@@ -362,11 +360,10 @@ object Dedup {
     // spent minutes in plan re-analysis/rendering before the first kill;
     // the 100 TB tier is exactly where deep chains can appear). Results
     // are unchanged: every step is exact integer/min arithmetic.
-    var ckpt = edges.groupBy(col("dst"))
+    var ckpt = Cached.checkpoint(edges.groupBy(col("dst"))
       .agg(min(col("src")).as("__m"))
       .select(col("dst").as("id"),
-        least(col("dst"), col("__m")).as("cluster"))
-      .localCheckpoint(true)
+        least(col("dst"), col("__m")).as("cluster")))
     var labels = ckpt
     var converged = false
     var i = 1
@@ -374,9 +371,9 @@ object Dedup {
       // The round carries the previous label through, so convergence is a
       // FILTER+COUNT on the frame we already materialize — not an extra
       // next⋈labels join (one fewer shuffle per iteration).
-      val next = Graph.minLabelRound(edges, labels, "cluster").localCheckpoint(true)
+      val next = Cached.checkpoint(Graph.minLabelRound(edges, labels, "cluster"))
       val changed = next.filter(col("cluster") < col("__old")).count()
-      CheckpointRelease.release(ckpt)
+      Cached.release(ckpt)
       ckpt = next
       labels = next.select("id", "cluster")
       converged = changed == 0
@@ -396,11 +393,10 @@ object Dedup {
       s"connectedComponents: min-label loop did not converge within " +
         s"maxIter=$maxIter rounds — component diameter exceeds the cap; " +
         "raise maxIter (labels would not be component minima)")
-    edges.unpersist()
-    // The final round's frame is ALREADY a materialized localCheckpoint
-    // (its blocks are reclaimed by the ContextCleaner once the result is
-    // dereferenced), and no CacheManager entry exists to leak — `labels`
-    // is the checkpoint itself (round 1) or a projection over it.
+    Cached.release(edges)
+    // The final round's frame is ALREADY a materialized localCheckpoint,
+    // owned by the query's Cached scope — `labels` is the checkpoint
+    // itself (round 1) or a projection over it.
     labels
   }
 

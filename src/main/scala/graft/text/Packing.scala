@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.Cached
 
 /** Training-batch assembly operators: deterministic train/val/test hash
   * split and GPT-style sequence packing (concatenate the token stream in
@@ -49,13 +50,11 @@ object Packing {
     // quality + sampling above this) and (b) trust that range
     // re-partitioning lands every row in the same partition id both
     // times. Materializing the tiny (id, n_tokens) frame makes the
-    // offset map correct by construction; blocks are GC-reclaimed once
-    // the result is dereferenced.
-    val base = df
+    // offset map correct by construction; the query's scope releases it.
+    val base = Cached.checkpoint(df
       .select(col(idCol).cast("long").as("id"), tokens.cast("long").as("n_tokens"))
       .repartitionByRange(order: _*)
-      .sortWithinPartitions(order: _*)
-      .localCheckpoint(true)
+      .sortWithinPartitions(order: _*))
     // Pass 1: (partitionId, weight total, first n_tokens, first id).
     val partStats = base.mapPartitions { rows =>
       if (!rows.hasNext) Iterator.empty

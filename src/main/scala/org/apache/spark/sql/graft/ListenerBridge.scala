@@ -16,4 +16,9 @@ import org.apache.spark.sql.SparkSession
 object ListenerBridge {
   def waitUntilListenerBusEmpty(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** The CacheManager's entry count (private[sql]): the cached plans still
+    * registered, materialized or not. */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.sharedState.cacheManager.numCachedEntries
 }

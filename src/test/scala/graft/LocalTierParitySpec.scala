@@ -226,7 +226,7 @@ class LocalTierParitySpec extends SparkSpec {
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after <= before + 1, s"persisted RDDs $before -> $after")
     assert(sortedLabels(ranks) == local)
-    org.apache.spark.sql.graft.CheckpointRelease.release(ranks)
+    Cached.release(ranks)
   }
 
   test("forced-distributed (budget=0): phraseBpeMerges dispatch matches local tier") {

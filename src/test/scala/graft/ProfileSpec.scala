@@ -22,9 +22,14 @@ class ProfileSpec extends SparkSpec {
     assert(rec.coldS > 0 && rec.warmMinS > 0 && rec.taskS > 0, rec.json)
     assert(rec.warmSpreadS >= 0 && rec.tasks.tasks > 0, rec.json)
     val js = new ObjectMapper().readTree(rec.json)
-    Seq("query", "rows", "cold_s", "warm_min_s", "warm_spread_s", "task_s",
-      "gc_s", "sched_delay_s", "tasks", "jobs", "shuffle_write_bytes", "spill_bytes",
-      "persisted_after", "max_method_bytes", "tiers").foreach(k => assert(js.has(k), s"record lacks $k"))
+    Seq("query", "master", "shuffle_partitions", "sf", "rows", "cold_s", "warm_min_s",
+      "warm_spread_s", "task_s", "gc_s", "sched_delay_s", "tasks", "jobs",
+      "shuffle_write_bytes", "spill_bytes", "persisted_after", "cached_after",
+      "max_method_bytes", "tiers").foreach(k => assert(js.has(k), s"record lacks $k"))
+    assert(js.get("master").asText == spark.sparkContext.master)
+    assert(js.get("shuffle_partitions").asInt ==
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    assert(js.get("sf").asText == sf)
     // q01 runs no iterative operator
     assert(js.get("tiers").size == 0, rec.json)
     assert(js.get("rows").asLong == rec.rows)
@@ -66,6 +71,24 @@ class ProfileSpec extends SparkSpec {
     assert(!rec.ok && rec.coldS == -1.0 && rec.warmMinS == -1.0)
     val js = new ObjectMapper().readTree(rec.json)
     assert(js.get("error").asText.startsWith("IllegalStateException: bad 'plan'"))
+  }
+
+  // Every frame a registered query caches or checkpoints belongs to the
+  // rep's Cached scope: once the scope closes, no persisted RDD and no
+  // CacheManager entry is left for the guard to drop.
+  test("every registered query at sf0.001 leaves nothing persisted after its scope closes") {
+    Profile.dropPersisted(spark) // what earlier suites left is not a query's leak
+    val recs = withCounters { c =>
+      SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
+        Profile.measure(spark, c, sf, n, fn, warmReps = 0)
+      }
+    }
+    assert(recs.size == SparkEntry.queries.size)
+    val failed = recs.filterNot(_.ok).map(_.json)
+    assert(failed.isEmpty, failed.mkString("\n"))
+    val leaked = recs.filter(r => r.persistedAfter != 0 || r.cachedAfter != 0)
+      .map(r => s"${r.query}: persisted_after=${r.persistedAfter} cached_after=${r.cachedAfter}")
+    assert(leaked.isEmpty, leaked.mkString("\n"))
   }
 
   test("every Bench headline name is a registered query") {

@@ -180,6 +180,37 @@ class StreamingSpec extends SparkSpec {
       "ts", "value", qVar = 0.01, rVar = 1.0), "x", "p")))
   }
 
+  test("streamingHolt and streamingKalman skip a NULL value and carry the state, as the batch scans do") {
+    val rows = Seq((1L, ts("2024-01-01 00:00:00"), 1L, Option(10.0)),
+      (2L, ts("2024-01-01 00:01:00"), 1L, Option.empty[Double]),
+      (3L, ts("2024-01-01 00:02:00"), 1L, Option(12.0)))
+    val src = Files.createTempDirectory("graft_stream_null").toString
+    rows.toDF("event_id", "ts", "user_id", "value").coalesce(1).write.mode("append").parquet(src)
+    val all = spark.read.parquet(src)
+    def streamed(op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
+        : Seq[(Long, Option[Double], Option[Double])] = {
+      val name = s"null_${System.nanoTime()}"
+      op(StreamingIngest.readEvents(spark, src, all.schema)).writeStream
+        .format("memory").queryName(name)
+        .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
+        .start().awaitTermination(60000)
+      spark.table(name).as[(Long, Long, Option[Double], Option[Double])]
+        .collect().toSeq.map(r => (r._2, r._3, r._4)).sorted
+    }
+    def batched(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
+      df.select(unix_micros(col("ts")), col(a), col(b))
+        .as[(Long, Option[Double], Option[Double])].collect().toSeq.sorted
+    val holt = streamed(StreamingIngest.streamingHolt(_, "user_id", "ts", "event_id",
+      "value", alpha = 0.5, beta = 0.25, minPeriods = 1))
+    assert(holt.map(_._2) == Seq(Some(10.0), Some(10.0), Some(11.0)))
+    assert(holt == batched(graft.ohlcv.HoltWinters.withHolt(all, "user_id", "ts", "value",
+      alpha = 0.5, beta = 0.25), "level", "trend"))
+    val kalman = streamed(StreamingIngest.streamingKalman(_, "user_id", "ts", "event_id",
+      "value", qVar = 0.01, rVar = 1.0))
+    assert(kalman == batched(graft.ohlcv.HoltWinters.withKalmanLevel(all, "user_id", "ts",
+      "value", qVar = 0.01, rVar = 1.0), "x", "p"))
+  }
+
   test("foreachBatchUpsert merges micro-batches with keep-last semantics") {
     val src = Files.createTempDirectory("graft_stream3").toString
     val sink = Files.createTempDirectory("graft_sink").toString + "/table"

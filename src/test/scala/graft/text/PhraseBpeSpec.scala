@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.{LocalTier, PipelineQueries, SparkSpec}
+import graft.{Cached, LocalTier, PipelineQueries, SparkSpec}
 
 /** Semantic pins for q260_bpe_phrase_1k (the ≥1k-merge phrase-BPE
   * trainer). Hash-level engine/oracle parity lives in the DuckDB
@@ -127,11 +127,11 @@ class PhraseBpeSpec extends SparkSpec {
 
   test("phraseBpeMergesOn leaves a caller's seed alone") {
     val seed = PipelineQueries.phraseSeqs(spark, sf)
-    val rdd = org.apache.spark.sql.graft.CheckpointRelease.checkpointRdd(seed)
+    val rdd = Cached.checkpointRdd(seed)
     assert(rdd.isDefined)
     try {
       PipelineQueries.phraseBpeMergesOn(spark, seed, levels = 2)
       assert(spark.sparkContext.getPersistentRDDs.contains(rdd.get.id))
-    } finally org.apache.spark.sql.graft.CheckpointRelease.release(seed)
+    } finally Cached.release(seed)
   }
 }
