@@ -21,6 +21,10 @@ import org.apache.spark.storage.StorageLevel
   * the caller's scope. Outside any scope `persist`/`checkpoint` are the
   * plain Spark calls and `release` drops the frame at once, so callers
   * that run operators directly (the benchmark, unit tests) see no change.
+  * Frames with the same plan share one CacheManager entry (concurrent
+  * `Verify` lanes persist identical plans): a persisted frame is dropped
+  * from the cache only when no other frame persisted in an open scope
+  * still maps to its entry.
   */
 object Cached {
 
@@ -30,7 +34,7 @@ object Cached {
     private val frames = scala.collection.mutable.ArrayBuffer.empty[AnyRef]
     private var open = true
 
-    def add(x: AnyRef): Unit = synchronized { if (open) frames += x }
+    def add(x: AnyRef): Boolean = synchronized { if (open) frames += x; open }
     def remove(x: AnyRef): Unit = synchronized { frames.filterInPlace(_ ne x) }
     def close(): Unit = synchronized {
       open = false
@@ -59,9 +63,18 @@ object Cached {
     x
   }
 
-  /** `df.persist(MEMORY_AND_DISK)`, owned by the open scope. */
-  def persist[T](df: Dataset[T]): Dataset[T] =
-    register(df.persist(StorageLevel.MEMORY_AND_DISK))
+  /** Every frame persisted in a scope and not yet dropped. */
+  private val owners = scala.collection.mutable.ArrayBuffer.empty[classic.Dataset[_]]
+
+  /** `df.persist(MEMORY_AND_DISK)`, owned by the open scope. The frame is
+    * listed first, so a concurrent drop of the same plan keeps the entry. */
+  def persist[T](df: Dataset[T]): Dataset[T] = {
+    if (Option(current.get).exists(_.add(df))) df match {
+      case c: classic.Dataset[_] => owners.synchronized(owners += c)
+      case _ =>
+    }
+    df.persist(StorageLevel.MEMORY_AND_DISK)
+  }
 
   /** `df.localCheckpoint(eager = true)`, owned by the open scope. */
   def checkpoint[T](df: Dataset[T]): Dataset[T] = register(df.localCheckpoint(true))
@@ -97,7 +110,15 @@ object Cached {
     case rdd: RDD[_] => rdd.unpersist(blocking = false)
     case df: Dataset[_] => checkpointRdd(df) match {
       case Some(rdd) => rdd.unpersist(blocking = false)
-      case None => df.unpersist(blocking = false)
+      case None => owners.synchronized {
+        owners.filterInPlace(_ ne df)
+        val entry = df match {
+          case c: classic.Dataset[_] => c.sparkSession.sharedState.cacheManager.lookupCachedData(c)
+          case _ => None
+        }
+        if (!entry.exists(e => owners.exists(_.queryExecution.normalized.sameResult(e.plan))))
+          df.unpersist(blocking = false)
+      }
     }
   }
 }

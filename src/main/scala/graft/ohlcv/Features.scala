@@ -179,35 +179,37 @@ object Features {
       .filter(col("__rn") > n)
       .drop("__rn")
 
-  /** True range: max(high−low, |high−prevClose|, |low−prevClose|), the
-    * `ta` library's `_true_range`: a row-wise pandas `max` that skips a
-    * missing term, so the bar after a missing close has high − low. A NULL
-    * or NaN term is missing (Spark's `greatest` would rank NaN highest).
-    * NULL when every term is missing, and on each key's first row (no
-    * previous close).
+  /** Adds `outCol`, the true range: max(high−low, |high−prevClose|,
+    * |low−prevClose|), the `ta` library's `_true_range`: a row-wise pandas
+    * `max` that skips a missing term, so the bar after a missing close has
+    * high − low. A NULL or NaN term is missing (Spark's `greatest` would
+    * rank NaN highest). NULL when every term is missing, and on each key's
+    * first row (no previous close).
     */
-  def trueRange(keyCol: String, ordCol: String, highCol: String, lowCol: String,
-      closeCol: String): Column = {
+  def withTrueRange(df: DataFrame, keyCol: String, ordCol: String, highCol: String,
+      lowCol: String, closeCol: String, outCol: String): DataFrame = {
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
-    val pc = lag(closeCol, 1).over(win)
+    val pc = col("__pc")
     def term(c: Column): Column = nanvl(c, lit(null).cast("double"))
-    when(row_number().over(win) > 1,
-      greatest(term(col(highCol) - col(lowCol)), term(abs(col(highCol) - pc)),
-        term(abs(col(lowCol) - pc))))
+    df.withColumn("__pc", lag(closeCol, 1).over(win))
+      .withColumn(outCol, when(row_number().over(win) > 1,
+        greatest(term(col(highCol) - col(lowCol)), term(abs(col(highCol) - pc)),
+          term(abs(col(lowCol) - pc)))))
+      .drop("__pc")
   }
 
   /** ATR(w): Wilder-smoothed true range (reference pulls it via
     * `add_all_ta_features`, `core/data/preprocess.py:11-16`). The first
     * row per key (undefined TR) is dropped from the output frame, and no
     * other. A bar whose true-range terms are all missing (see
-    * [[trueRange]]) has a NULL true range, which [[withWilder]] reads as
+    * [[withTrueRange]]) has a NULL true range, which [[withWilder]] reads as
     * missing: left out of the seed mean, NULL ATR from there on.
     */
   def withAtr(df: DataFrame, keyCol: String, ordCol: String, w: Int = 14,
       highCol: String = "high", lowCol: String = "low",
       closeCol: String = "close", outCol: String = "atr"): DataFrame = {
     val withTr = dropHeadRows(
-      df.withColumn("__tr", trueRange(keyCol, ordCol, highCol, lowCol, closeCol)),
+      withTrueRange(df, keyCol, ordCol, highCol, lowCol, closeCol, "__tr"),
       keyCol, ordCol, 1)
     withWilder(withTr, keyCol, ordCol, Seq("__tr" -> outCol), w).drop("__tr")
   }
@@ -260,8 +262,7 @@ object Features {
     val pl = lag(lowCol, 1).over(win)
     val up = col(highCol) - ph
     val dn = pl - col(lowCol)
-    val base = df
-      .withColumn("__tr", trueRange(keyCol, ordCol, highCol, lowCol, closeCol))
+    val base = withTrueRange(df, keyCol, ordCol, highCol, lowCol, closeCol, "__tr")
       .withColumn("__dmp", when(up > dn && up > 0, up).otherwise(lit(0.0)))
       .withColumn("__dmm", when(dn > up && dn > 0, dn).otherwise(lit(0.0)))
       .filter(col("__tr").isNotNull)
@@ -298,10 +299,11 @@ object Features {
   def withRoc(df: DataFrame, keyCol: String, ordCol: String, valCol: String,
       n: Int = 12, outCol: String = "roc"): DataFrame = {
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
-    val prev = lag(valCol, n).over(win)
-    df.withColumn(outCol,
-      when(prev.isNotNull && prev =!= 0.0,
+    val prev = col("__prev")
+    df.withColumn("__prev", lag(valCol, n).over(win))
+      .withColumn(outCol, when(prev.isNotNull && prev =!= 0.0,
         lit(100.0) * (col(valCol) - prev) / prev))
+      .drop("__prev")
   }
 
   /** CCI(w): (tp − SMA(tp,w)) / (c·MAD(tp,w)) where tp = (high+low+close)/3
@@ -407,10 +409,11 @@ object Features {
     val e2 = withEma(e1, keyCol, ordCol, "__e1", Seq(emaSpanSpec("__e2", span)))
     val e3 = withEma(e2, keyCol, ordCol, "__e2", Seq(emaSpanSpec("__e3", span)))
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
-    val pe3 = lag("__e3", 1).over(win)
-    e3.withColumn(outCol,
-      when(pe3.isNotNull && pe3 =!= 0.0, lit(100.0) * (col("__e3") - pe3) / pe3))
-      .drop("__e1", "__e2", "__e3")
+    val pe3 = col("__pe3")
+    e3.withColumn("__pe3", lag("__e3", 1).over(win))
+      .withColumn(outCol,
+        when(pe3.isNotNull && pe3 =!= 0.0, lit(100.0) * (col("__e3") - pe3) / pe3))
+      .drop("__e1", "__e2", "__e3", "__pe3")
   }
 
   /** Money flow index(w): typical-price money flow split by tp direction,
@@ -464,10 +467,11 @@ object Features {
   def withDpo(df: DataFrame, keyCol: String, ordCol: String, w: Int = 20,
       valCol: String = "close", outCol: String = "dpo"): DataFrame = {
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
-    val shifted = lag(valCol, w / 2 + 1).over(win)
-    df.withColumn(outCol,
-      when(shifted.isNotNull,
+    val shifted = col("__shifted")
+    df.withColumn("__shifted", lag(valCol, w / 2 + 1).over(win))
+      .withColumn(outCol, when(shifted.isNotNull,
         shifted - sma(col(valCol), col(keyCol), col(ordCol), w)))
+      .drop("__shifted")
   }
 
   /** Percentage price oscillator(fast, slow, signal): MACD's percentage

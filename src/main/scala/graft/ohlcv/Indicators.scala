@@ -66,14 +66,14 @@ object Indicators {
   def withVpt(df: DataFrame, keyCol: String, ordCol: String,
       outCol: String = "vpt"): DataFrame = {
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
-    val pc = lag("close", 1).over(win)
+    val pc = col("__pc")
     val term = when(pc.isNotNull && pc =!= 0.0,
       col("volume") * (col("close") - pc) / pc)
-    val cum = Window.partitionBy(keyCol).orderBy(ordCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn("__vpt_n", count(term).over(cum))
+    val cum = win.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn("__pc", lag("close", 1).over(win))
+      .withColumn("__vpt_n", count(term).over(cum))
       .withColumn(outCol, when(col("__vpt_n") > 0, sum(term).over(cum)))
-      .drop("__vpt_n")
+      .drop("__pc", "__vpt_n")
   }
 
   /** Negative volume index: starts at 1000 on each key's first bar; on

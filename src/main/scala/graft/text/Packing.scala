@@ -30,13 +30,14 @@ object Packing {
 
   /** The two-pass distributed exclusive prefix sum behind
     * [[packSequences]] and [[snakeShards]], WITHOUT the single-partition
-    * global-window collapse. The (id, n_tokens) frame is range-partitioned
-    * and sorted by `order`, then materialized once; each partition reports
-    * one tiny stats row (its `weight` total and its first row's (n_tokens,
-    * id)), collected and prefix-summed with the partitions ordered by
-    * `firstOrder` on that first row — partitions hold disjoint ranges of
-    * `order`, so this recovers the global partition order — and the
-    * offsets are broadcast; each partition then streams once, emitting
+    * global-window collapse. The (id, n_tokens) frame is materialized once,
+    * then range-partitioned and sorted by `order` and materialized again;
+    * each partition reports one tiny stats row (its `weight` total and its
+    * first row's (n_tokens, id)), collected and prefix-summed with the
+    * partitions ordered by `firstOrder` on that first row — partitions
+    * hold disjoint ranges of `order`, so this recovers the global
+    * partition order — and the offsets are broadcast; each partition then
+    * streams once, emitting
     * (id, n_tokens, `outCol`) with `outCol` the sum of `weight` over all
     * earlier rows. Only #partitions values are collected, never rows.
     */
@@ -44,17 +45,17 @@ object Packing {
       order: Seq[Column], firstOrder: Ordering[(Long, Long)], weight: Row => Long,
       outCol: String): DataFrame = {
     val spark = df.sparkSession
-    // localCheckpoint (eager): the two passes below MUST see identical
-    // partition contents — recomputing the lineage per pass would (a) run
-    // an arbitrarily expensive upstream twice (q117 chains dedup +
-    // quality + sampling above this) and (b) trust that range
-    // re-partitioning lands every row in the same partition id both
-    // times. Materializing the tiny (id, n_tokens) frame makes the
+    // The upstream (q117: dedup + quality + sampling) runs once: the
+    // narrow frame is checkpointed before the range shuffle, whose sampler
+    // job and map stage would each re-run it. `base` is checkpointed so
+    // both passes below see identical partition contents, which makes the
     // offset map correct by construction; the query's scope releases it.
-    val base = Cached.checkpoint(df
-      .select(col(idCol).cast("long").as("id"), tokens.cast("long").as("n_tokens"))
+    val narrow = Cached.checkpoint(df
+      .select(col(idCol).cast("long").as("id"), tokens.cast("long").as("n_tokens")))
+    val base = Cached.checkpoint(narrow
       .repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*))
+    Cached.release(narrow)
     // Pass 1: (partitionId, weight total, first n_tokens, first id).
     val partStats = base.mapPartitions { rows =>
       if (!rows.hasNext) Iterator.empty

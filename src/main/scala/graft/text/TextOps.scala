@@ -2,14 +2,17 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TextStatsExpressions.textStats
 import graft.Rounding.pround
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * language ID, quality scoring, token counting, fingerprinting.
   *
-  * Everything is built from codegen'd `functions._` expressions (no UDFs)
-  * so a 100 TB `documents` scan stays in whole-stage codegen with the
-  * parquet reader pruning to the `text` column only.
+  * Built from `functions._` expressions and codegen'd kernels (no UDFs).
+  * The `filter`/`transform`/`aggregate` lambdas of [[tokens]],
+  * [[wordShingles]] and [[withLangId]] are `CodegenFallback` (interpreted
+  * per element); the per-document counts run on one kernel,
+  * [[org.apache.spark.sql.graft.TextStats]], that scans each text once.
   */
 object TextOps {
 
@@ -29,15 +32,21 @@ object TextOps {
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), t => length(t) > 0)
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(tokens(text))
+  /** `size` of a NULL array (-1 or NULL): what a NULL text counts as. */
+  private def nullSize: Column = size(lit(null).cast("array<string>"))
+
+  /** One field of a text's `graft_text_stats`; for a NULL text, [[nullSize]]. */
+  private def stat(stats: Column, field: String): Column =
+    coalesce(stats.getField(field), nullSize)
+
+  /** Whitespace token count, `size(tokens(text))`, in one text scan. */
+  def tokenCount(text: Column): Column = stat(textStats(text), "n_tokens")
 
   /** BPE-ish subword count: matches of `[A-Za-z0-9]{1,4}|[^A-Za-z0-9\s]`
     * — a public approximation of byte-pair tokenizers' ~4-chars-per-token
-    * behavior, exact enough for budget accounting.
+    * behavior, exact enough for budget accounting. Counted in one text scan.
     */
-  def subwordCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Za-z0-9]{1,4}|[^A-Za-z0-9\\s]"), lit(0)))
+  def subwordCount(text: Column): Column = stat(textStats(text), "n_subwords")
 
   /** Word n-gram shingles of the whitespace tokens, joined by a single
     * space. Output: array of strings, length max(0, #tokens − n + 1).
@@ -99,20 +108,19 @@ object TextOps {
   val StopWords: Seq[String] = Seq("the", "a", "of", "and", "to", "in", "is",
     "that", "it", "for", "on", "as", "with", "at", "by", "from")
 
+  /** The five features come from one scan of each text, bound once as a
+    * column so the projections above read its fields and do not re-run it. */
   def withQualityFeatures(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val toks = tokens(t)
-    val nTok = size(toks)
-    val stopArr = array(StopWords.map(lit): _*)
-    val nStop = size(filter(toks, w => array_contains(stopArr, lower(w))))
-    val nPunct = size(regexp_extract_all(t, lit("[^A-Za-z0-9\\s]"), lit(0)))
-    val nChars = length(t)
-    df.withColumn("n_chars_m", nChars.cast("long"))
+    val withStats = df.withColumn("__ts", textStats(col(textCol)))
+    val nTok = stat(col("__ts"), "n_tokens")
+    val nChars = col("__ts.n_chars")
+    withStats.withColumn("n_chars_m", nChars.cast("long"))
       .withColumn("n_tokens", nTok.cast("long"))
       .withColumn("mean_word_len",
-        when(nTok > 0, aggregate(toks, lit(0.0), (a, w) => a + length(w)) / nTok))
-      .withColumn("stopword_ratio", when(nTok > 0, nStop.cast("double") / nTok))
-      .withColumn("punct_ratio", when(nChars > 0, nPunct.cast("double") / nChars))
+        when(nTok > 0, col("__ts.token_chars").cast("double") / nTok))
+      .withColumn("stopword_ratio", when(nTok > 0, col("__ts.n_stop").cast("double") / nTok))
+      .withColumn("punct_ratio", when(nChars > 0, col("__ts.n_punct").cast("double") / nChars))
+      .drop("__ts")
   }
 
   /** Composite quality score in [0,1]: penalties for too-short docs, low

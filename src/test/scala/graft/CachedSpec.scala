@@ -68,4 +68,45 @@ class CachedSpec extends SparkSpec {
     Cached.release(df)
     assert(df.storageLevel == StorageLevel.NONE)
   }
+
+  test("two scopes that persist the same plan share its cache entry until the last one closes") {
+    val persisted = new java.util.concurrent.CountDownLatch(2)
+    val firstClosed = new java.util.concurrent.CountDownLatch(1)
+    @volatile var afterFirst = StorageLevel.NONE
+    @volatile var second: DataFrame = null
+    def lane(body: DataFrame => Unit): Thread = new Thread(() => Cached.scope {
+      val df = Cached.persist(frame(31))
+      df.count()
+      persisted.countDown()
+      persisted.await()
+      body(df)
+    })
+    val first = lane(_ => ())
+    val other = lane { df =>
+      second = df
+      firstClosed.await()
+      afterFirst = df.storageLevel
+    }
+    Seq(first, other).foreach(_.start())
+    first.join()
+    firstClosed.countDown()
+    other.join()
+    assert(afterFirst != StorageLevel.NONE, "the first scope to close uncached the other's frame")
+    assert(second.storageLevel == StorageLevel.NONE, "the last owner left the entry cached")
+  }
+
+  test("an early release of a parent keeps the dependent entry that two scopes share") {
+    Cached.scope {
+      val parent = Cached.persist(frame(37))
+      val outer = Cached.persist(parent.filter("x > 10"))
+      Cached.scope {
+        val inner = Cached.persist(frame(37).filter("x > 10"))
+        // Not loaded yet, so the dependent entry is rebuilt as a new object.
+        Cached.release(parent)
+        assert(inner.count() == outer.count())
+      }
+      assert(outer.storageLevel != StorageLevel.NONE, "the inner scope uncached the outer's frame")
+    }
+    assert(frame(37).filter("x > 10").storageLevel == StorageLevel.NONE)
+  }
 }

@@ -129,7 +129,7 @@ class FeaturesSpec extends SparkSpec {
       (3L, nan, 11.0, nan), (4L, 14.0, 12.0, 13.0), (5L, 15.0, 13.0, 14.0))
       .map { case (i, h, l, c) => ("a", i, h, l, c) }
       .toDF("symbol", "idx", "high", "low", "close")
-    val tr = df.withColumn("tr", Features.trueRange("symbol", "idx", "high", "low", "close"))
+    val tr = Features.withTrueRange(df, "symbol", "idx", "high", "low", "close", "tr")
       .orderBy("idx").select("tr").collect()
       .map(r => if (r.isNullAt(0)) None else Some(r.getDouble(0))).toSeq
     // the first row stays NULL (no previous close; withAtr drops it)

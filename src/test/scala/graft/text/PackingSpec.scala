@@ -35,6 +35,21 @@ class PackingSpec extends SparkSpec {
     assert(ids.toSeq == (0L until ids.length).toSeq)
   }
 
+  test("packSequences computes its upstream once per row") {
+    // Before the narrow (id, n_tokens) checkpoint, repartitionByRange's
+    // sampler job re-ran the upstream and this counted 2 per row.
+    val rows = spark.sparkContext.longAccumulator("upstream rows")
+    val docs = (1L to 300L).map(i => (i, "tok " * (i % 13 + 1).toInt))
+      .toDF("doc_id", "text")
+      .repartition(5)
+      .map { r => rows.add(1); (r.getLong(0), r.getString(1)) }
+      .toDF("doc_id", "text")
+    val packed = Packing.packSequences(docs, "doc_id",
+      TextOps.tokenCount(col("text")), budget = 64L).collect()
+    assert(packed.length == 300)
+    assert(rows.value == 300L, s"the upstream ran ${rows.value} times for 300 rows")
+  }
+
   test("hashSplit: deterministic buckets, split fractions roughly honored") {
     val docs = (1L to 500L).map(i => (i, s"document number $i with words"))
       .toDF("doc_id", "text")
