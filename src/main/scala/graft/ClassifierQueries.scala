@@ -43,7 +43,7 @@ import graft.text.TextOps
   * join + B-cell gradient aggregation. Driver traffic per epoch is
   * B+1 gradient cells plus a 1-row loss summary. Scoring (q288/q289)
   * is one broadcast join + N-cell aggregation against the per-dir fit
-  * artifact (the LloydFit consumer discipline).
+  * artifact, which the consumers reuse (see [[Fits]]).
   */
 object ClassifierQueries {
 
@@ -61,17 +61,8 @@ object ClassifierQueries {
     * (step, xent_unats, n_pos, n_neg, bias_unats, w_l1_unats, w_nnz) —
     * xent measured at the step's ENTRY weights, weight stats at EXIT.
     */
-  private[graft] object ClfFit {
-    private val fits = new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long])]()
-    def get(dir: String): Option[
-        (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long])] =
-      Option(fits.get(dir))
-    def put(dir: String,
-        v: (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long])): Unit =
-      fits.put(dir, v)
-    private[graft] def clear(): Unit = fits.clear()
-  }
+  private val ClfRuns =
+    new Fits.Slot[(Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long])]
 
   /** The hashed feature table: per-(doc, bucket) token counts plus one
     * bias pseudo-bucket (b = B, c = 1) per doc, so the bias trains and
@@ -139,14 +130,8 @@ object ClassifierQueries {
        |      * 1e6 + 0.5) AS BIGINT) END AS tq FROM cnn)""".stripMargin
 
   private[graft] def clfFit(s: SparkSession, d: String, reuse: Boolean = false)
-      : (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long]) = {
-    val cached = if (reuse) ClfFit.get(d) else None
-    cached.getOrElse {
-      val fitted = clfFitRun(s, d)
-      ClfFit.put(d, fitted)
-      fitted
-    }
-  }
+      : (Seq[(Long, Long, Long, Long, Long, Long, Long)], Array[Long]) =
+    ClfRuns.fit(d, reuse)(clfFitRun(s, d))
 
   /** The fit's [[LocalTier.Clf]] dispatch: every per-doc number is
     * quantized to µ-unit BIGINTs BEFORE any cross-doc sum, so a driver
@@ -449,7 +434,7 @@ object ClassifierQueries {
   // pipeline applies its quality/importance filter as data lands.
   // Documents arrive as a file stream; each micro-batch is scored with
   // the q287 classifier (the per-dir fit artifact as a broadcast
-  // (B+1)-row table — the LloydFit consumer discipline) and gated at
+  // (B+1)-row table, reused from the fit) and gated at
   // the q288 prior-odds threshold. The gate is PER-DOC LOCAL — no
   // cross-batch state — so no watermark is needed (a watermark bounds
   // STATE, and a stateless row filter has none) and the committed

@@ -47,7 +47,7 @@ object CrossModalQueries {
       (s, d) => {
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
-            size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+            TextOps.tokenCount(col("text")).cast("long").as("nt"))
         val tl = PipelineQueries.keepBestLosers(s, d).withColumn("__t", lit(1L))
         val il = MediaQueries.imagePairLocalLosers(s, d).withColumn("__i", lit(1L))
         val al = MediaQueries.audioPairLocalLosers(s, d).withColumn("__a", lit(1L))

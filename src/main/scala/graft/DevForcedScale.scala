@@ -21,7 +21,7 @@ object DevForcedScale {
     DevScaling.buildBlowup(spark, base, out, factor)
     SparkEntry.queries("q01_pricing_summary")(spark, base).count()
     def time(name: String, dir: String): Double = {
-      ClassifierQueries.ClfFit.clear()
+      Fits.clearAll()
       val t0 = System.nanoTime()
       Cached.scope(SparkEntry.queries(name)(spark, dir).count())
       (System.nanoTime() - t0) / 1e9

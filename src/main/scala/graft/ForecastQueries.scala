@@ -574,22 +574,8 @@ object ForecastQueries {
     math.max(4, p)
   }
 
-  /** Run-time bridge from q207's derived P(U) to its dynamic oracle —
-    * the same dir-keyed mechanism as ExtraQueries.PcaFit.
-    */
-  private[graft] object CohortFit {
-    private val ps = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    def put(dir: String, p: Int): Unit = ps.put(dir, p)
-    // Explicit dump dir: exact match only (no single-fit fallback — see
-    // LloydFit.lookup's rationale); lookup(None) keeps the convenience.
-    def lookup(dir: Option[String]): Option[Int] =
-      dir match {
-        case Some(dd) => Option(ps.get(dd)).map(_.toInt)
-        case None =>
-          if (ps.size == 1) Some(ps.values.iterator.next().toInt) else None
-      }
-    private[graft] def clear(): Unit = ps.clear()
-  }
+  /** q207's derived P(U) per sf dir, for its dynamic oracle. */
+  private[graft] val CohortPlaneCounts = new Fits.Slot[Int]
 
   /** Cohort-LSH pair-correlation screen (q207's core): T signature
     * tables of P sign-projections each; candidates are cohort
@@ -774,17 +760,12 @@ object ForecastQueries {
         // only planning action (parameter learning, like q204's PCA fit).
         val users = Tables.events(s, d).select("user_id").distinct().count()
         val p = cohortPlanes(users)
-        CohortFit.put(d, p)
+        CohortPlaneCounts.put(d, p)
         pairCorrLsh(s, d, minSupport = 8, p = p)
       },
       oracle = None,
-      oracleDyn = Some { () =>
-        CohortFit.lookup(Queries.OracleDumpContext.sfDir) match {
-          case Some(p) => pairCorrLshSql(minSupport = 8, p = p)
-          case None =>
-            "SELECT 'q207 oracle requested before the query ran for this dir' AS err"
-        }
-      }),
+      oracleDyn = Some(() =>
+        CohortPlaneCounts.oracle("q207")(p => pairCorrLshSql(minSupport = 8, p = p)))),
 
     // Lo–MacKinlay variance-ratio test statistic VR(q) = var(q-period
     // returns)/(q·var(1-period)) per user for q ∈ {2, 4} — the classic

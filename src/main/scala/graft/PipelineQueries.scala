@@ -21,22 +21,10 @@ object PipelineQueries {
   private def shinglesW(n: Int): String =
     s"[array_to_string(w[i:i+${n - 1}], ' ') FOR i IN range(1, len(w) - ${n - 2})]"
 
-  /** Run-time-derived hyperplane count for q214's LSH-bucket SemDeDup:
-    * stores P per sf dir so the dynamic oracle embeds the SAME planes the
-    * query hashed with (the q207 CohortFit pattern).
+  /** q214's derived hyperplane count P(N) per sf dir, so the dynamic
+    * oracle embeds the SAME planes the query hashed with.
     */
-  private[graft] object SemFit {
-    private val ps = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-    def put(dir: String, p: Int): Unit = ps.put(dir, p)
-    // Explicit dump dir: exact match only (no single-fit fallback — see
-    // LloydFit.lookup's rationale); lookup(None) keeps the convenience.
-    def lookup(dir: Option[String]): Option[Int] =
-      dir match {
-        case Some(dd) => Option(ps.get(dd)).map(_.toInt)
-        case None =>
-          if (ps.size == 1) Some(ps.values.iterator.next().toInt) else None
-      }
-  }
+  private val SemPlaneCounts = new Fits.Slot[Int]
 
   private val SemDedupSeed = 7L
 
@@ -2784,7 +2772,7 @@ object PipelineQueries {
         // derive P(N) (parameter learning, like q207's cohort planes).
         val n = v.count()
         val p = semPlanes(n)
-        SemFit.put(d, p)
+        SemPlaneCounts.put(d, p)
         val mat = graft.ohlcv.Encode.randomProjectionMatrix(64, p, SemDedupSeed)
         val sig = v.withColumn("cluster",
           graft.sim.Lsh.hyperplaneSignature(col("emb"), mat))
@@ -2823,13 +2811,7 @@ object PipelineQueries {
           .orderBy("cluster", "vec_id")
       },
       oracle = None,
-      oracleDyn = Some { () =>
-        SemFit.lookup(Queries.OracleDumpContext.sfDir) match {
-          case Some(p) => semdedupLshSql(p)
-          case None =>
-            "SELECT 'q214 oracle requested before the query ran for this dir' AS err"
-        }
-      }),
+      oracleDyn = Some(() => SemPlaneCounts.oracle("q214")(semdedupLshSql))),
 
     // Model-based quality filtering (the fastText-classifier stage of
     // CCNet/LLaMA-style corpus pipelines, simplified to its distributable
@@ -2933,7 +2915,7 @@ object PipelineQueries {
         val budget = 500L
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
-            size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
+            TextOps.tokenCount(col("text")).cast("long").as("n_tokens"),
             (TextOps.md5Hash60(concat(lit("budget:"),
               col("doc_id").cast("string")))).as("pri"))
         val wsrc = Window.partitionBy("source").orderBy(col("pri"), col("doc_id"))
@@ -2973,7 +2955,7 @@ object PipelineQueries {
     Q("q218_ngram_diversity",
       (s, d) => {
         val counts = Tables.documents(s, d)
-          .filter(size(TextOps.tokens(col("text"))) >= 3)
+          .filter(TextOps.tokenCount(col("text")) >= 3)
           .select(col("source"),
             explode(TextOps.wordShingles(col("text"), 3)).as("g"))
           .groupBy("source", "g").agg(count(lit(1)).as("n"))
@@ -3596,7 +3578,7 @@ object PipelineQueries {
         Tables.documents(s, d)
           .select(col("source"), splitOf(col("doc_id")).as("split"),
             col("n_chars"),
-            size(TextOps.tokens(col("text"))).cast("long").as("n_toks"))
+            TextOps.tokenCount(col("text")).cast("long").as("n_toks"))
           .groupBy("source", "split")
           .agg(count(lit(1)).as("n_docs"),
             sum("n_chars").as("sum_chars"),
@@ -3737,7 +3719,7 @@ object PipelineQueries {
       (s, d) => {
         val per = Tables.documents(s, d)
           .select(col("source"),
-            size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+            TextOps.tokenCount(col("text")).cast("long").as("nt"))
           .groupBy("source").agg(sum("nt").as("n_tokens"))
           .withColumn("s_q",
             floor(sqrt(col("n_tokens").cast("double")) * 1e6 + 0.5)
@@ -3786,7 +3768,7 @@ object PipelineQueries {
       (s, d) => {
         val tok = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
-            size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+            TextOps.tokenCount(col("text")).cast("long").as("nt"))
         val kept = dedupSurvivors(s, d)
           .select(col("doc_id")).withColumn("__kept", lit(1L))
         tok.join(kept, Seq("doc_id"), "left")
@@ -3847,7 +3829,7 @@ object PipelineQueries {
       (s, d) => {
         val per = Tables.documents(s, d)
           .select(col("source"),
-            size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+            TextOps.tokenCount(col("text")).cast("long").as("nt"))
           .groupBy("source").agg(sum("nt").as("n_tokens"))
           .withColumn("s_q",
             floor(sqrt(col("n_tokens").cast("double")) * 1e6 + 0.5)
@@ -3917,7 +3899,7 @@ object PipelineQueries {
       (s, d) =>
         graft.text.Packing.snakeShards(
           Tables.documents(s, d), "doc_id",
-          size(TextOps.tokens(col("text"))), numShards = 16)
+          TextOps.tokenCount(col("text")), numShards = 16)
           .orderBy("doc_id"),
       Some(s"""WITH t AS (SELECT doc_id,
               |    CAST(len($sqlToks) AS BIGINT) AS n_tokens FROM documents),
@@ -4021,7 +4003,7 @@ object PipelineQueries {
         import org.apache.spark.sql.expressions.Window
         val manifest = graft.text.Packing.snakeShards(
           Tables.documents(s, d), "doc_id",
-          size(TextOps.tokens(col("text"))), numShards = 16)
+          TextOps.tokenCount(col("text")), numShards = 16)
         val e = manifest
           .withColumn("epoch",
             explode(array((0 to 3).map(i => lit(i.toLong)): _*)))
@@ -4080,7 +4062,7 @@ object PipelineQueries {
           .filter(col("id") =!= col("cluster"))
           .select(col("id").as("doc_id")).withColumn("__lost", lit(1L))
         val tok = docs.select(col("doc_id"), col("source"),
-          size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+          TextOps.tokenCount(col("text")).cast("long").as("nt"))
         tok.join(losers, Seq("doc_id"), "left")
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"),
@@ -4195,7 +4177,7 @@ object PipelineQueries {
           .select(col("id").as("doc_id")).withColumn("__lost", lit(1L))
         val per = Tables.documents(s, d)
           .select(col("doc_id"), col("source"),
-            size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+            TextOps.tokenCount(col("text")).cast("long").as("nt"))
           .join(losers, Seq("doc_id"), "left")
           .groupBy("source")
           .agg(count(lit(1)).as("n_docs"), sum("nt").as("n_tokens"),
@@ -4554,7 +4536,7 @@ object PipelineQueries {
       (s, d) => {
         import graft.text.Dedup
         val docs = Tables.documents(s, d).select(col("doc_id"),
-          size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+          TextOps.tokenCount(col("text")).cast("long").as("nt"))
         // One banded build feeds BOTH verdicts (the q207 persist
         // pattern): the candidate frame IS the stream tier's drop
         // evidence, and its J ≥ 0.5 filter IS the verified pair set —
@@ -4617,7 +4599,7 @@ object PipelineQueries {
       (s, d) => {
         val shards = graft.text.Packing.snakeShards(
             Tables.documents(s, d), "doc_id",
-            size(TextOps.tokens(col("text"))), numShards = 16)
+            TextOps.tokenCount(col("text")), numShards = 16)
           .select("doc_id", "shard")
         bandedVerifiedPairs(s, d)
           .join(shards.select(col("doc_id").as("id_a"),
@@ -4992,7 +4974,7 @@ object PipelineQueries {
           .filter(col("id") =!= col("cluster"))
           .select(col("id").as("doc_id")).withColumn("__lost", lit(1L))
         val base = docs.select(col("doc_id"), col("source"),
-            size(TextOps.tokens(col("text"))).cast("long").as("nt"))
+            TextOps.tokenCount(col("text")).cast("long").as("nt"))
           .join(losers, Seq("doc_id"), "left")
           .withColumn("split", splitOf(col("doc_id")))
         val surv = base.filter(col("__lost").isNull).select("doc_id", "split")

@@ -10,7 +10,8 @@ import org.apache.spark.sql.graft.{CodegenStats, ListenerBridge}
   * run conditions (`master`, `shuffle_partitions`, `sf`), the row count,
   * the cold wall, the fastest warm wall and the warm spread (max − min),
   * the [[TaskCounters]] deltas of the fastest warm rep (of the cold rep
-  * when there are none), `persisted_after` and `cached_after`: the
+  * when there are none), `fit_hits`: the fits that rep read from
+  * [[Fits]] instead of refitting, `persisted_after` and `cached_after`: the
   * persisted RDDs and the CacheManager entries still registered after the
   * last rep's scope closed, i.e. frames no scope owned (leaks),
   * `max_method_bytes`: the largest compiled whole-stage method of any
@@ -36,7 +37,7 @@ object Profile {
   final case class Rec(query: String, master: String, shufflePartitions: String,
       sf: String, rows: Long, coldS: Double,
       warmMinS: Double, warmSpreadS: Double, tasks: TaskCounters.Snap,
-      persistedAfter: Int, cachedAfter: Int, maxMethodBytes: Int,
+      fitHits: Long, persistedAfter: Int, cachedAfter: Int, maxMethodBytes: Int,
       tiers: Seq[(String, LocalTier.Decision)], error: String = null) {
     def ok: Boolean = error == null
     def taskS: Double = tasks.runMs / 1e3
@@ -51,7 +52,8 @@ object Profile {
         s""""sched_delay_s":${s(tasks.schedDelayMs / 1e3)},"tasks":${tasks.tasks},""" +
         s""""jobs":${tasks.jobs},""" +
         s""""shuffle_write_bytes":${tasks.shuffleWriteBytes},""" +
-        s""""spill_bytes":${tasks.spillBytes},"persisted_after":$persistedAfter,""" +
+        s""""spill_bytes":${tasks.spillBytes},"fit_hits":$fitHits,""" +
+        s""""persisted_after":$persistedAfter,""" +
         s""""cached_after":$cachedAfter,""" +
         s""""max_method_bytes":$maxMethodBytes,""" +
         s""""tiers":{${tiers.map { case (op, d) => s""""$op":${d.json}""" }.mkString(",")}}$err}"""
@@ -80,20 +82,22 @@ object Profile {
 
   def measure(spark: SparkSession, counters: TaskCounters, sf: String,
       name: String, fn: QueryFn, warmReps: Int = 2): Rec = {
-    def rep(): (Long, Double, TaskCounters.Snap) = {
+    def rep(): (Long, Double, TaskCounters.Snap, Long) = {
       ListenerBridge.waitUntilListenerBusEmpty(spark)
       val before = counters.snapshot()
+      val hitsBefore = Fits.hitCount
       val t0 = System.nanoTime()
       val rows = Cached.scope(fn(spark, sf).count())
       val wall = (System.nanoTime() - t0) / 1e9
       ListenerBridge.waitUntilListenerBusEmpty(spark)
-      (rows, wall, counters.snapshot().minus(before))
+      (rows, wall, counters.snapshot().minus(before), Fits.hitCount - hitsBefore)
     }
     LocalTier.drain()
     def rec(rows: Long, cold: Double, warmMin: Double, spread: Double,
-        tasks: TaskCounters.Snap, maxMethodBytes: Int, error: String = null) =
+        tasks: TaskCounters.Snap, fitHits: Long, maxMethodBytes: Int, error: String = null) =
       Rec(name, spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"),
-        sf, rows, cold, warmMin, spread, tasks, spark.sparkContext.getPersistentRDDs.size,
+        sf, rows, cold, warmMin, spread, tasks, fitHits,
+        spark.sparkContext.getPersistentRDDs.size,
         ListenerBridge.cachedEntries(spark), maxMethodBytes,
         LocalTier.drain(), error)
     try {
@@ -103,10 +107,10 @@ object Profile {
       }
       val best = if (warm.isEmpty) cold else warm.minBy(_._2)
       val spread = if (warm.isEmpty) 0.0 else warm.map(_._2).max - warm.map(_._2).min
-      rec(cold._1, cold._2, best._2, spread, best._3, maxMethodBytes)
+      rec(cold._1, cold._2, best._2, spread, best._3, best._4, maxMethodBytes)
     } catch {
       case e: Throwable =>
-        rec(-1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0), -1, sanitize(e))
+        rec(-1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0), 0L, -1, sanitize(e))
     } finally dropPersisted(spark)
   }
 

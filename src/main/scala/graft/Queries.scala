@@ -24,11 +24,11 @@ object Queries {
 
   /** `oracle` is the usual static DuckDB mirror. `oracleDyn` exists for
     * the fit-transform queries whose mirror must embed values LEARNED
-    * during the run (q204's PCA matrix): Verify dumps `oracle_sql.json`
-    * AFTER executing every query, so a dynamic oracle generated at dump
-    * time can carry the fitted parameters as SQL literals — the same
-    * plan-literal technique as q101, with the literals bound at run time
-    * instead of registration time.
+    * during the run (q204's PCA matrix, kept in a [[Fits]] slot): Verify
+    * dumps `oracle_sql.json` AFTER executing every query, so a dynamic
+    * oracle generated at dump time can carry the fitted parameters as SQL
+    * literals — the same plan-literal technique as q101, with the
+    * literals bound at run time instead of registration time.
     */
   /** `scaleLimited`, when set, marks a query whose registered plan grows
     * super-linearly in the input by SEMANTIC necessity (e.g. exact
@@ -45,16 +45,6 @@ object Queries {
       oracle: Option[String],
       oracleDyn: Option[() => String] = None,
       scaleLimited: Option[String] = None)
-
-  /** Set by [[Verify]] before the oracle dump: the sf dir the dump
-    * targets, so a dynamic oracle can look up the run-time-learned
-    * parameters for the RIGHT dataset if one JVM ran its query against
-    * several dirs (the driver contract keeps `oracleSql` parameterless,
-    * hence a context instead of an argument).
-    */
-  private[graft] object OracleDumpContext {
-    @volatile var sfDir: Option[String] = None
-  }
 
   // ------------------------------------------------------------------
   // Relational coverage (TPC-H-ish; SURVEY.md §2.3 note: the harness

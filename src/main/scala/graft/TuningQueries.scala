@@ -39,34 +39,14 @@ object TuningQueries {
     */
   private val LloydK = 10
 
-  /** Per-(dataset dir) Lloyd fit artifact — the q204/FitArtifacts
-    * discipline: the fit is bit-reproducible (per-iteration centroids
-    * are 6-dp-rounded, so the trajectory is exact on both engines),
-    * hence reuse is value-identical to refit, and the dynamic oracle
-    * (q266) reads the same centroid literals the engine plan used.
+  /** Per-dir Lloyd fit artifact: the fit is bit-reproducible
+    * (per-iteration centroids are 6-dp-rounded, so the trajectory is
+    * exact on both engines), hence reuse is value-identical to refit, and
+    * the dynamic oracles (q266, q271) read the same centroid literals the
+    * engine plan used.
     */
-  private[graft] object LloydFit {
-    private val fits = new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(Long, Long, Long, Long, Long)], Seq[(Long, Array[Double])])]()
-    def get(dir: String): Option[
-        (Seq[(Long, Long, Long, Long, Long)], Seq[(Long, Array[Double])])] =
-      Option(fits.get(dir))
-    def put(dir: String,
-        v: (Seq[(Long, Long, Long, Long, Long)], Seq[(Long, Array[Double])])): Unit =
-      fits.put(dir, v)
-    // An EXPLICIT dump dir must match exactly — falling back to "the
-    // single cached fit" on a miss would silently embed another dir's
-    // centroids into the oracle SQL (round-13 advice). The single-fit
-    // convenience applies only when no dump context exists at all.
-    def lookup(dir: Option[String])
-        : Option[(Seq[(Long, Long, Long, Long, Long)], Seq[(Long, Array[Double])])] =
-      dir match {
-        case Some(d) => Option(fits.get(d))
-        case None =>
-          if (fits.size == 1) Some(fits.values.iterator.next()) else None
-      }
-    private[graft] def clear(): Unit = fits.clear()
-  }
+  private[graft] val LloydRuns =
+    new Fits.Slot[(Seq[(Long, Long, Long, Long, Long)], Seq[(Long, Array[Double])])]
 
   /** Distributed Lloyd's k-means (Lloyd 1982 / MacQueen 1967, public
     * knowledge) over the embedding corpus, seeded deterministically
@@ -97,9 +77,8 @@ object TuningQueries {
     */
   private[graft] def lloydFit(s: SparkSession, d: String,
       iters: Int = LloydIters, reuse: Boolean = false)
-      : (Seq[(Long, Long, Long, Long, Long)], Seq[(Long, Array[Double])]) = {
-    val cached = if (reuse) LloydFit.get(d) else None
-    cached.getOrElse {
+      : (Seq[(Long, Long, Long, Long, Long)], Seq[(Long, Array[Double])]) =
+    LloydRuns.fit(d, reuse) {
       import org.apache.spark.sql.graft.GraftExpressions.arraySqDiff
       val v = Tables.embeddings(s, d)
         .select(col("label").cast("long").as("cl"),
@@ -152,11 +131,8 @@ object TuningQueries {
         }
         cents = newCents
       }
-      val out = (stats.toSeq, cents)
-      LloydFit.put(d, out)
-      out
+      (stats.toSeq, cents)
     }
-  }
 
   /** DuckDB mirror of [[lloydFit]]'s full trajectory: seed = per-label
     * 6-dp-rounded means, then `iters` unrolled
@@ -408,66 +384,63 @@ object TuningQueries {
       },
       oracle = None,
       oracleDyn = Some { () =>
-        LloydFit.lookup(Queries.OracleDumpContext.sfDir) match {
-          case Some((_, cents)) =>
-            val centRows = cents.map(_._2).zipWithIndex.map { case (c, i) =>
-              s"(CAST($i AS BIGINT), ${arrLit(c)}::DOUBLE[])"
-            }.mkString(",\n    ")
-            def sq(a: String, b: String) =
-              s"list_sum(list_transform(range(1, ${Dim + 1}), j -> ($a[j]-$b[j])*($a[j]-$b[j])))"
-            s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-               |nn AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM e),
-               |thr AS (SELECT floor(CAST(64 * 4294967296 AS DOUBLE)
-               |    / CAST(cnt AS DOUBLE)) AS t FROM nn),
-               |q AS (SELECT vec_id AS query_id, v AS qv FROM e, thr
-               |  WHERE ${Hashing.sqlHash32("vec_id")} < t),
-               |co AS (SELECT vec_id, v FROM e, thr
-               |  WHERE NOT (${Hashing.sqlHash32("vec_id")} < t)),
-               |cents AS (SELECT * FROM (VALUES
-               |    $centRows) t(li, cv)),
-               |asg0 AS (SELECT co.vec_id, co.v, cents.li,
-               |    ${sq("co.v", "cents.cv")} AS d2 FROM co, cents),
-               |asgc AS (SELECT vec_id, v, li AS list FROM
-               |  (SELECT *, row_number() OVER (PARTITION BY vec_id
-               |      ORDER BY d2 ASC, li ASC) AS rn FROM asg0) WHERE rn = 1),
-               |qp0 AS (SELECT q.query_id, q.qv, cents.li,
-               |    ${sq("q.qv", "cents.cv")} AS d2 FROM q, cents),
-               |qprobe AS (SELECT query_id, qv, li AS list,
-               |    row_number() OVER (PARTITION BY query_id
-               |      ORDER BY d2 ASC, li ASC) AS prank FROM qp0),
-               |tr0 AS (SELECT q.query_id, co.vec_id, ${sq("co.v", "q.qv")} AS d2
-               |  FROM co, q),
-               |truth AS (SELECT query_id, vec_id FROM
-               |  (SELECT *, row_number() OVER (PARTITION BY query_id
-               |      ORDER BY d2 ASC, vec_id ASC) AS rn FROM tr0) WHERE rn <= 10),
-               |np AS (SELECT unnest([1, 2, 4, 8]) AS nprobe),
-               |cand AS (SELECT np.nprobe, p.query_id, a.vec_id,
-               |    ${sq("a.v", "p.qv")} AS d2
-               |  FROM np, qprobe p JOIN asgc a ON a.list = p.list
-               |  WHERE p.prank <= np.nprobe),
-               |top10 AS (SELECT nprobe, query_id, vec_id FROM
-               |  (SELECT *, row_number() OVER (PARTITION BY nprobe, query_id
-               |      ORDER BY d2 ASC, vec_id ASC) AS rn FROM cand) WHERE rn <= 10),
-               |hits AS (SELECT t.nprobe, t.query_id,
-               |    CAST(count(*) AS BIGINT) AS n_hits
-               |  FROM top10 t JOIN truth USING (query_id, vec_id) GROUP BY 1, 2),
-               |sc AS (SELECT nprobe, query_id, CAST(count(*) AS BIGINT) AS n_cand
-               |  FROM cand GROUP BY 1, 2),
-               |base AS (SELECT np.nprobe, q.query_id FROM np, q),
-               |j AS (SELECT b.nprobe, b.query_id,
-               |    coalesce(h.n_hits, 0) AS n_hits, coalesce(sc.n_cand, 0) AS n_cand
-               |  FROM base b
-               |  LEFT JOIN hits h ON b.nprobe = h.nprobe AND b.query_id = h.query_id
-               |  LEFT JOIN sc ON b.nprobe = sc.nprobe AND b.query_id = sc.query_id)
-               |SELECT CAST(nprobe AS BIGINT) AS nprobe,
-               |  CAST(count(*) AS BIGINT) AS n_queries,
-               |  ${sqlRound("CAST(sum(n_hits) AS DOUBLE) / (10.0 * count(*))", 6)}
-               |    AS mean_recall_at_10,
-               |  ${sqlRound("CAST(sum(n_cand) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * (SELECT CAST(count(*) AS DOUBLE) FROM co))", 6)}
-               |    AS mean_cand_frac
-               |FROM j GROUP BY nprobe ORDER BY nprobe""".stripMargin
-          case None =>
-            "SELECT 'q266 oracle requested before the query ran for this dir' AS err"
+        LloydRuns.oracle("q266") { case (_, cents) =>
+          val centRows = cents.map(_._2).zipWithIndex.map { case (c, i) =>
+            s"(CAST($i AS BIGINT), ${arrLit(c)}::DOUBLE[])"
+          }.mkString(",\n    ")
+          def sq(a: String, b: String) =
+            s"list_sum(list_transform(range(1, ${Dim + 1}), j -> ($a[j]-$b[j])*($a[j]-$b[j])))"
+          s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+             |nn AS (SELECT CAST(count(*) AS BIGINT) AS cnt FROM e),
+             |thr AS (SELECT floor(CAST(64 * 4294967296 AS DOUBLE)
+             |    / CAST(cnt AS DOUBLE)) AS t FROM nn),
+             |q AS (SELECT vec_id AS query_id, v AS qv FROM e, thr
+             |  WHERE ${Hashing.sqlHash32("vec_id")} < t),
+             |co AS (SELECT vec_id, v FROM e, thr
+             |  WHERE NOT (${Hashing.sqlHash32("vec_id")} < t)),
+             |cents AS (SELECT * FROM (VALUES
+             |    $centRows) t(li, cv)),
+             |asg0 AS (SELECT co.vec_id, co.v, cents.li,
+             |    ${sq("co.v", "cents.cv")} AS d2 FROM co, cents),
+             |asgc AS (SELECT vec_id, v, li AS list FROM
+             |  (SELECT *, row_number() OVER (PARTITION BY vec_id
+             |      ORDER BY d2 ASC, li ASC) AS rn FROM asg0) WHERE rn = 1),
+             |qp0 AS (SELECT q.query_id, q.qv, cents.li,
+             |    ${sq("q.qv", "cents.cv")} AS d2 FROM q, cents),
+             |qprobe AS (SELECT query_id, qv, li AS list,
+             |    row_number() OVER (PARTITION BY query_id
+             |      ORDER BY d2 ASC, li ASC) AS prank FROM qp0),
+             |tr0 AS (SELECT q.query_id, co.vec_id, ${sq("co.v", "q.qv")} AS d2
+             |  FROM co, q),
+             |truth AS (SELECT query_id, vec_id FROM
+             |  (SELECT *, row_number() OVER (PARTITION BY query_id
+             |      ORDER BY d2 ASC, vec_id ASC) AS rn FROM tr0) WHERE rn <= 10),
+             |np AS (SELECT unnest([1, 2, 4, 8]) AS nprobe),
+             |cand AS (SELECT np.nprobe, p.query_id, a.vec_id,
+             |    ${sq("a.v", "p.qv")} AS d2
+             |  FROM np, qprobe p JOIN asgc a ON a.list = p.list
+             |  WHERE p.prank <= np.nprobe),
+             |top10 AS (SELECT nprobe, query_id, vec_id FROM
+             |  (SELECT *, row_number() OVER (PARTITION BY nprobe, query_id
+             |      ORDER BY d2 ASC, vec_id ASC) AS rn FROM cand) WHERE rn <= 10),
+             |hits AS (SELECT t.nprobe, t.query_id,
+             |    CAST(count(*) AS BIGINT) AS n_hits
+             |  FROM top10 t JOIN truth USING (query_id, vec_id) GROUP BY 1, 2),
+             |sc AS (SELECT nprobe, query_id, CAST(count(*) AS BIGINT) AS n_cand
+             |  FROM cand GROUP BY 1, 2),
+             |base AS (SELECT np.nprobe, q.query_id FROM np, q),
+             |j AS (SELECT b.nprobe, b.query_id,
+             |    coalesce(h.n_hits, 0) AS n_hits, coalesce(sc.n_cand, 0) AS n_cand
+             |  FROM base b
+             |  LEFT JOIN hits h ON b.nprobe = h.nprobe AND b.query_id = h.query_id
+             |  LEFT JOIN sc ON b.nprobe = sc.nprobe AND b.query_id = sc.query_id)
+             |SELECT CAST(nprobe AS BIGINT) AS nprobe,
+             |  CAST(count(*) AS BIGINT) AS n_queries,
+             |  ${sqlRound("CAST(sum(n_hits) AS DOUBLE) / (10.0 * count(*))", 6)}
+             |    AS mean_recall_at_10,
+             |  ${sqlRound("CAST(sum(n_cand) AS DOUBLE) / (CAST(count(*) AS DOUBLE) * (SELECT CAST(count(*) AS DOUBLE) FROM co))", 6)}
+             |    AS mean_cand_frac
+             |FROM j GROUP BY nprobe ORDER BY nprobe""".stripMargin
         }
       }),
 
@@ -508,34 +481,31 @@ object TuningQueries {
       },
       oracle = None,
       oracleDyn = Some { () =>
-        LloydFit.lookup(Queries.OracleDumpContext.sfDir) match {
-          case Some((_, cents)) =>
-            val k = cents.length
-            val centRows = cents.map(_._2).zipWithIndex.map { case (c, i) =>
-              s"(CAST($i AS BIGINT), ${arrLit(c)}::DOUBLE[])"
-            }.mkString(",\n    ")
-            def sq(a: String, b: String) =
-              s"list_sum(list_transform(range(1, ${Dim + 1}), j -> ($a[j]-$b[j])*($a[j]-$b[j])))"
-            s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-               |cents AS (SELECT * FROM (VALUES
-               |    $centRows) t(li, cv)),
-               |asg0 AS (SELECT e.vec_id, cents.li, ${sq("e.v", "cents.cv")} AS d2
-               |  FROM e, cents),
-               |asgc AS (SELECT vec_id, li AS list FROM
-               |  (SELECT *, row_number() OVER (PARTITION BY vec_id
-               |      ORDER BY d2 ASC, li ASC) AS rn FROM asg0) WHERE rn = 1),
-               |sz AS (SELECT list, CAST(count(*) AS BIGINT) AS n_vecs
-               |  FROM asgc GROUP BY 1),
-               |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM asgc),
-               |ls AS (SELECT unnest(range(0, $k)) AS list)
-               |SELECT CAST(ls.list AS BIGINT) AS list,
-               |  coalesce(sz.n_vecs, 0) AS n_vecs,
-               |  ${sqlRound("CAST(coalesce(sz.n_vecs, 0) AS DOUBLE) / CAST(tot.n_total AS DOUBLE)", 6)} AS frac,
-               |  ${sqlRound(s"CAST(coalesce(sz.n_vecs, 0) AS DOUBLE) * $k.0 / CAST(tot.n_total AS DOUBLE)", 6)} AS load
-               |FROM ls LEFT JOIN sz ON sz.list = ls.list CROSS JOIN tot
-               |ORDER BY list""".stripMargin
-          case None =>
-            "SELECT 'q271 oracle requested before the query ran for this dir' AS err"
+        LloydRuns.oracle("q271") { case (_, cents) =>
+          val k = cents.length
+          val centRows = cents.map(_._2).zipWithIndex.map { case (c, i) =>
+            s"(CAST($i AS BIGINT), ${arrLit(c)}::DOUBLE[])"
+          }.mkString(",\n    ")
+          def sq(a: String, b: String) =
+            s"list_sum(list_transform(range(1, ${Dim + 1}), j -> ($a[j]-$b[j])*($a[j]-$b[j])))"
+          s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+             |cents AS (SELECT * FROM (VALUES
+             |    $centRows) t(li, cv)),
+             |asg0 AS (SELECT e.vec_id, cents.li, ${sq("e.v", "cents.cv")} AS d2
+             |  FROM e, cents),
+             |asgc AS (SELECT vec_id, li AS list FROM
+             |  (SELECT *, row_number() OVER (PARTITION BY vec_id
+             |      ORDER BY d2 ASC, li ASC) AS rn FROM asg0) WHERE rn = 1),
+             |sz AS (SELECT list, CAST(count(*) AS BIGINT) AS n_vecs
+             |  FROM asgc GROUP BY 1),
+             |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM asgc),
+             |ls AS (SELECT unnest(range(0, $k)) AS list)
+             |SELECT CAST(ls.list AS BIGINT) AS list,
+             |  coalesce(sz.n_vecs, 0) AS n_vecs,
+             |  ${sqlRound("CAST(coalesce(sz.n_vecs, 0) AS DOUBLE) / CAST(tot.n_total AS DOUBLE)", 6)} AS frac,
+             |  ${sqlRound(s"CAST(coalesce(sz.n_vecs, 0) AS DOUBLE) * $k.0 / CAST(tot.n_total AS DOUBLE)", 6)} AS load
+             |FROM ls LEFT JOIN sz ON sz.list = ls.list CROSS JOIN tot
+             |ORDER BY list""".stripMargin
         }
       }),
 
@@ -741,21 +711,12 @@ object TuningQueries {
   // excess_unats, alpha) for all T×D steps — the full learned
   // trajectory, constant-size at any corpus.
   // --------------------------------------------------------------------
-  /** Per-dir DoReMi trajectory artifact — the LloydFit discipline
-    * (round-13 lesson): the trajectory-emitting query (q275) always
-    * REFITS so its measured cost is the fit's; consumers (q277) reuse.
-    * The fit is deterministic (quantized masses, 6 dp weights), so
-    * reuse is value-identical to refit.
+  /** Per-dir DoReMi trajectory artifact: the trajectory-emitting query
+    * (q275) always REFITS so its measured cost is the fit's; consumers
+    * (q277) reuse. The fit is deterministic (quantized masses, 6 dp
+    * weights), so reuse is value-identical to refit.
     */
-  private[graft] object DoremiFit {
-    private val fits = new java.util.concurrent.ConcurrentHashMap[
-      String, Seq[(Long, String, Long, Long, Double)]]()
-    def get(dir: String): Option[Seq[(Long, String, Long, Long, Double)]] =
-      Option(fits.get(dir))
-    def put(dir: String, v: Seq[(Long, String, Long, Long, Double)]): Unit =
-      fits.put(dir, v)
-    private[graft] def clear(): Unit = fits.clear()
-  }
+  private val DoremiTrajectories = new Fits.Slot[Seq[(Long, String, Long, Long, Double)]]
 
   /** The q275 training loop (see the q275 block comment below for the
     * algorithm and determinism argument) — shared by the trajectory
@@ -763,14 +724,8 @@ object TuningQueries {
     * excess_unats, alpha) rows for steps 1..T.
     */
   private[graft] def doremiTrajectory(s: SparkSession, d: String,
-      reuse: Boolean = false): Seq[(Long, String, Long, Long, Double)] = {
-    val cached = if (reuse) DoremiFit.get(d) else None
-    cached.getOrElse {
-      val fitted = doremiFitRun(s, d)
-      DoremiFit.put(d, fitted)
-      fitted
-    }
-  }
+      reuse: Boolean = false): Seq[(Long, String, Long, Long, Double)] =
+    DoremiTrajectories.fit(d, reuse)(doremiFitRun(s, d))
 
   private def doremiFitRun(s: SparkSession, d: String)
       : Seq[(Long, String, Long, Long, Double)] = {
@@ -913,7 +868,7 @@ object TuningQueries {
   // (the data-constrained up-sampling regime; Muennighoff et al. 2023,
   // public knowledge); < 1 means down-sampling. Drift-proofing: the
   // engine consumes the SAME trajectory function (per-dir artifact,
-  // consumer-reuse per the LloydFit discipline) and the oracle nests
+  // consumers reuse it, see [[Fits]]) and the oracle nests
   // [[doremiSqlCtes]] verbatim, so plan and audit can never disagree
   // with the mixture they apply. 100 TB: the fit's cost (q275's, flat
   // octaves) plus a D-sized rollup — nothing else.
@@ -1415,7 +1370,7 @@ object TuningQueries {
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1)
           .groupBy("source")
-          .agg(sum(size(TextOps.tokens(col("text"))).cast("long")).as("u"))
+          .agg(sum(TextOps.tokenCount(col("text")).cast("long")).as("u"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         val rows = budgets.keys.toSeq.sorted.map { src =>
           val b = budgets(src)

@@ -258,13 +258,14 @@ object Features {
       highCol: String = "high", lowCol: String = "low",
       closeCol: String = "close"): DataFrame = {
     val win = Window.partitionBy(keyCol).orderBy(ordCol)
-    val ph = lag(highCol, 1).over(win)
-    val pl = lag(lowCol, 1).over(win)
-    val up = col(highCol) - ph
-    val dn = pl - col(lowCol)
+    val up = col(highCol) - col("__ph")
+    val dn = col("__pl") - col(lowCol)
     val base = withTrueRange(df, keyCol, ordCol, highCol, lowCol, closeCol, "__tr")
+      .withColumn("__ph", lag(highCol, 1).over(win))
+      .withColumn("__pl", lag(lowCol, 1).over(win))
       .withColumn("__dmp", when(up > dn && up > 0, up).otherwise(lit(0.0)))
       .withColumn("__dmm", when(dn > up && dn > 0, dn).otherwise(lit(0.0)))
+      .drop("__ph", "__pl")
       .filter(col("__tr").isNotNull)
     val smoothed = withWilder(base, keyCol, ordCol,
       Seq("__tr" -> "__satr", "__dmp" -> "__sdmp", "__dmm" -> "__sdmm"), w)

@@ -115,10 +115,9 @@ object Forecast {
     val corpus0 = corpusWins.join(broadcast(maxIdx), Seq(keyCol))
       .filter(col("start_idx") <= col("__max_idx") - seqLen)
       .select(col(keyCol), col("start_idx"), col("center"), col("scale"), col("embedding"))
-    val minIdx = queryWins.groupBy(keyCol).agg(min("start_idx").as("__min_idx"))
-    val qMaxIdx = queryWins.groupBy(keyCol).agg(max("start_idx").as("__qmax_idx"))
-    val queries0 = queryWins.join(broadcast(minIdx), Seq(keyCol))
-      .join(broadcast(qMaxIdx), Seq(keyCol))
+    val qBounds = queryWins.groupBy(keyCol)
+      .agg(min("start_idx").as("__min_idx"), max("start_idx").as("__qmax_idx"))
+    val queries0 = queryWins.join(broadcast(qBounds), Seq(keyCol))
       .filter(((col("start_idx") - col("__min_idx")) % stride === 0) &&
         col("start_idx") <= col("__qmax_idx") - seqLen)
       .select(col(keyCol).as("q_key"), col("start_idx").as("q_start"),

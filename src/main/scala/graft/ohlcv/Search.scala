@@ -96,14 +96,4 @@ object Search {
       .filter(col("rank") <= k)
       .drop(queryVec)
   }
-
-  /** Single-query top-k (`orderBy + limit` → TakeOrderedAndProject). */
-  def topK(corpus: DataFrame, queryVec: Seq[Double], corpusVec: String, k: Int,
-      metricName: String, distCol: String = "dist"): DataFrame = {
-    val qlit = array(queryVec.map(lit): _*)
-    corpus
-      .withColumn(distCol, metric(metricName)(col(corpusVec), qlit))
-      .orderBy(col(distCol).asc)
-      .limit(k)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -120,73 +120,5 @@ object Knn {
       }
     }(Encoders.row(schema))
       .dropDuplicates("id_a", "id_b")
-  }
-
-  /** Exact k-NN of every query against the corpus (block-nested-loop).
-    * Metric: "cosine_dist" (1 − cos) or "l2". Ties break by corpus id.
-    */
-  def bruteKnn(corpus: DataFrame, queries: DataFrame, corpusId: String,
-      corpusVec: String, queryId: String, queryVec: String, k: Int,
-      metricName: String): DataFrame = {
-    val spark = corpus.sparkSession
-    val bc = spark.sparkContext.broadcast(collectVecs(queries, queryId, queryVec))
-    val schema = StructType(Seq(
-      StructField("query_id", LongType), StructField("rank", IntegerType),
-      StructField("corpus_id", LongType), StructField("dist", DoubleType)))
-    val left = corpus.select(col(corpusId).cast("long").as("id"),
-      col(corpusVec).cast("array<double>").as("v"))
-    // Per-partition: distances for all queries; shuffle only
-    // (queries × k × partitions) candidates, then a final top-k.
-    val candidates = left.mapPartitions { rows =>
-      val qs = bc.value
-      val heaps = Array.fill(qs.length)(
-        new java.util.PriorityQueue[(Double, Long)](k + 1,
-          Ordering.by[(Double, Long), (Double, Long)](t => (-t._1, -t._2))))
-      rows.foreach { r =>
-        val id = r.getLong(0)
-        val v = r.getSeq[Double](1).toArray
-        var s = 0.0
-        var i = 0
-        while (i < v.length) { s += v(i) * v(i); i += 1 }
-        val nrm = math.max(math.sqrt(s), 1e-8)
-        var qi = 0
-        while (qi < qs.length) {
-          val q = qs(qi)
-          val d = metricName match {
-            case "cosine_dist" => 1.0 - dot(v, q.v) / (nrm * q.norm)
-            case "l2" =>
-              var acc = 0.0
-              var j = 0
-              while (j < v.length) {
-                val diff = v(j) - q.v(j); acc += diff * diff; j += 1
-              }
-              math.sqrt(acc)
-            case "l1" =>
-              var acc = 0.0
-              var j = 0
-              while (j < v.length) { acc += math.abs(v(j) - q.v(j)); j += 1 }
-              acc
-            case other => throw new IllegalArgumentException(other)
-          }
-          val h = heaps(qi)
-          h.add((d, id))
-          if (h.size > k) h.poll()
-          qi += 1
-        }
-      }
-      heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-        val qid = bc.value(qi).id
-        import scala.jdk.CollectionConverters._
-        h.iterator().asScala.map { case (d, id) =>
-          new org.apache.spark.sql.catalyst.expressions.GenericRow(
-            Array[Any](qid, 0, id, d)): Row
-        }
-      }
-    }(Encoders.row(schema))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id").orderBy(col("dist").asc, col("corpus_id").asc)
-    candidates
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
   }
 }

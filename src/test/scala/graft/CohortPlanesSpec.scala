@@ -40,17 +40,20 @@ class CohortPlanesSpec extends AnyFunSuite {
   }
 
   test("CohortFit keys derived P by dir (dynamic-oracle bridge)") {
-    ForecastQueries.CohortFit.clear()
+    val planes = ForecastQueries.CohortPlaneCounts
+    planes.clear()
     try {
-      ForecastQueries.CohortFit.put("/a", 5)
-      assert(ForecastQueries.CohortFit.lookup(Some("/a")).contains(5))
-      assert(ForecastQueries.CohortFit.lookup(None).contains(5))
-      // Explicit-but-unmatched dir: no single-fit fallback (round-13
-      // advice) — must miss loudly, not reuse /a's fit.
-      assert(ForecastQueries.CohortFit.lookup(Some("/zz")).isEmpty)
-      ForecastQueries.CohortFit.put("/b", 8)
-      assert(ForecastQueries.CohortFit.lookup(Some("/b")).contains(8))
-      assert(ForecastQueries.CohortFit.lookup(None).isEmpty)
-    } finally ForecastQueries.CohortFit.clear()
+      // A primitive fit: a miss is None, never an unboxed 0.
+      assert(planes.lookup(Some("/a")).isEmpty && planes.lookup(None).isEmpty)
+      planes.put("/a", 5)
+      assert(planes.lookup(Some("/a")).contains(5))
+      assert(planes.lookup(None).contains(5))
+      // Explicit-but-unmatched dir: no single-fit fallback — must miss
+      // loudly, not reuse /a's fit.
+      assert(planes.lookup(Some("/zz")).isEmpty)
+      planes.put("/b", 8)
+      assert(planes.lookup(Some("/b")).contains(8))
+      assert(planes.lookup(None).isEmpty)
+    } finally planes.clear()
   }
 }

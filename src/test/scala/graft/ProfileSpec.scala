@@ -24,14 +24,15 @@ class ProfileSpec extends SparkSpec {
     val js = new ObjectMapper().readTree(rec.json)
     Seq("query", "master", "shuffle_partitions", "sf", "rows", "cold_s", "warm_min_s",
       "warm_spread_s", "task_s", "gc_s", "sched_delay_s", "tasks", "jobs",
-      "shuffle_write_bytes", "spill_bytes", "persisted_after", "cached_after",
+      "shuffle_write_bytes", "spill_bytes", "fit_hits", "persisted_after", "cached_after",
       "max_method_bytes", "tiers").foreach(k => assert(js.has(k), s"record lacks $k"))
     assert(js.get("master").asText == spark.sparkContext.master)
     assert(js.get("shuffle_partitions").asInt ==
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     assert(js.get("sf").asText == sf)
-    // q01 runs no iterative operator
+    // q01 runs no iterative operator and reads no stored fit
     assert(js.get("tiers").size == 0, rec.json)
+    assert(rec.fitHits == 0 && js.get("fit_hits").asLong == 0, rec.json)
     assert(js.get("rows").asLong == rec.rows)
     assert(rec.tasks.jobs > 0 && js.get("jobs").asLong == rec.tasks.jobs, rec.json)
     // q01 aggregates in a codegen stage, so some method was compiled.
@@ -63,6 +64,17 @@ class ProfileSpec extends SparkSpec {
     assert(tiers.size == 1, rec.json)
     assert(tiers.get("cc").get("tier").asText == "local", rec.json)
     assert(tiers.get("cc").get("gauge").asLong == 4L, rec.json)
+  }
+
+  test("fit_hits: q204's warm rep reads its stored fit, a refit reads none") {
+    val q = "q204_flagship_pca"
+    val fn = SparkEntry.queries(q)
+    ExtraQueries.PcaMatrices.clear()
+    val cold = withCounters(Profile.measure(spark, _, sf, q, fn, warmReps = 0))
+    assert(cold.ok && cold.fitHits == 0, cold.json)
+    val warm = withCounters(Profile.measure(spark, _, sf, q, fn, warmReps = 1))
+    assert(warm.ok && warm.fitHits >= 1, warm.json)
+    assert(new ObjectMapper().readTree(warm.json).get("fit_hits").asLong == warm.fitHits)
   }
 
   test("a failing query yields an error record with -1 timings, not an exception") {

@@ -190,19 +190,19 @@ class TuningSpec extends SparkSpec {
   }
 
   test("LloydFit.lookup: explicit dir never falls back to another dir's fit") {
-    import TuningQueries.LloydFit
-    LloydFit.clear()
+    val lloyd = TuningQueries.LloydRuns
+    lloyd.clear()
     try {
       val fit = (Seq((1L, 0L, 1L, 0L, 0L)), Seq((0L, Array(1.0))))
-      LloydFit.put("/data/a", fit)
-      assert(LloydFit.lookup(Some("/data/a")).isDefined)
+      lloyd.put("/data/a", fit)
+      assert(lloyd.lookup(Some("/data/a")).isDefined)
       // Single-fit convenience applies ONLY without a dump context.
-      assert(LloydFit.lookup(None).isDefined)
+      assert(lloyd.lookup(None).isDefined)
       // An explicit-but-unmatched dir must MISS (loud oracle error
       // branch), not silently embed /data/a's centroids.
-      assert(LloydFit.lookup(Some("/data/other")).isEmpty,
+      assert(lloyd.lookup(Some("/data/other")).isEmpty,
         "mismatched explicit dir fell back to another dir's fit")
-    } finally LloydFit.clear()
+    } finally lloyd.clear()
   }
 
   test("q275: DoReMi trajectory — simplex weights, clipped excess, EG direction, no leak") {

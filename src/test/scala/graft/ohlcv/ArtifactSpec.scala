@@ -42,59 +42,59 @@ class ArtifactSpec extends SparkSpec {
   }
 
   test("PcaFit keys fitted matrices by sf dir; ambiguous only multi-dir without context") {
-    import graft.ExtraQueries.PcaFit
-    PcaFit.clear()
+    import graft.ExtraQueries.PcaMatrices
+    PcaMatrices.clear()
     val mA = Array(Array(1.0, 0.0))
     val mB = Array(Array(0.0, 1.0))
     try {
-      PcaFit.put("/data/a", mA)
+      PcaMatrices.put("/data/a", mA)
       // Single fit: resolvable with or without a dump context.
-      assert(PcaFit.lookup(Some("/data/a")).contains(mA))
-      assert(PcaFit.lookup(None).contains(mA))
-      // Explicit-but-unmatched dir: no single-fit fallback (round-13
-      // advice) — the oracle's loud error branch beats wrong literals.
-      assert(PcaFit.lookup(Some("/data/zz")).isEmpty)
-      PcaFit.put("/data/b", mB)
+      assert(PcaMatrices.lookup(Some("/data/a")).contains(mA))
+      assert(PcaMatrices.lookup(None).contains(mA))
+      // Explicit-but-unmatched dir: no single-fit fallback — the
+      // oracle's loud error branch beats another dir's literals.
+      assert(PcaMatrices.lookup(Some("/data/zz")).isEmpty)
+      PcaMatrices.put("/data/b", mB)
       // Two dirs: the context picks the right fit; no context is ambiguous.
-      assert(PcaFit.lookup(Some("/data/a")).contains(mA))
-      assert(PcaFit.lookup(Some("/data/b")).contains(mB))
-      assert(PcaFit.lookup(None).isEmpty)
+      assert(PcaMatrices.lookup(Some("/data/a")).contains(mA))
+      assert(PcaMatrices.lookup(Some("/data/b")).contains(mB))
+      assert(PcaMatrices.lookup(None).isEmpty)
       // Re-running against one dir overwrites only that dir's fit.
       val mA2 = Array(Array(2.0, 2.0))
-      PcaFit.put("/data/a", mA2)
-      assert(PcaFit.lookup(Some("/data/a")).contains(mA2))
-      assert(PcaFit.lookup(Some("/data/b")).contains(mB))
-    } finally PcaFit.clear()
+      PcaMatrices.put("/data/a", mA2)
+      assert(PcaMatrices.lookup(Some("/data/a")).contains(mA2))
+      assert(PcaMatrices.lookup(Some("/data/b")).contains(mB))
+    } finally PcaMatrices.clear()
   }
 
   test("q204 fit artifact: miss then hit, and fresh refits are deep-equal") {
     import graft.ExtraQueries
-    import graft.ExtraQueries.FitArtifacts
+    import graft.ExtraQueries.PcaMatrices
     val sf = "/root/testdata/sf0.001"
-    val key = ExtraQueries.q204FitKey(sf)
-    FitArtifacts.clear()
+    def stored = PcaMatrices.lookup(Some(sf))
+    PcaMatrices.clear()
     try {
       // Rep 1 (cold): artifact miss — the full users_count/fit/artifact
       // path runs and stores the matrix.
-      assert(FitArtifacts.get(key).isEmpty)
+      assert(stored.isEmpty)
       ExtraQueries.q204Pipeline(spark, sf).count()
-      val first = FitArtifacts.get(key)
+      val first = stored
       assert(first.isDefined, "the cold rep stored no fit artifact")
       // Rep 2 (warm): artifact HIT — the stored matrix itself is reused
       // (a refit would have stored a new instance).
       ExtraQueries.q204Pipeline(spark, sf).count()
-      assert(FitArtifacts.get(key).exists(_ eq first.get),
+      assert(stored.exists(_ eq first.get),
         "the warm rep refit instead of reusing the artifact")
-      // Independent refit (cache cleared): the fit is bit-reproducible,
+      // Independent refit (store cleared): the fit is bit-reproducible,
       // so two fresh fits must agree entry for entry, bit for bit.
-      FitArtifacts.clear()
+      PcaMatrices.clear()
       ExtraQueries.q204Pipeline(spark, sf).count()
-      val refit = FitArtifacts.get(key)
-      assert(refit.exists(_ ne first.get), "the cleared cache was not refit")
+      val refit = stored
+      assert(refit.exists(_ ne first.get), "the cleared store was not refit")
       assert(java.util.Arrays.deepEquals(
         refit.get.asInstanceOf[Array[AnyRef]], first.get.asInstanceOf[Array[AnyRef]]),
         "fit literals drifted across fresh refits")
-    } finally FitArtifacts.clear()
+    } finally PcaMatrices.clear()
   }
 
   test("selectNumeric keeps numeric + protected columns only (P5)") {

@@ -32,18 +32,6 @@ class KnnMultimodalSpec extends SparkSpec {
     assert(bucketed == full && bucketed.nonEmpty)
   }
 
-  test("bruteKnn matches knnJoin ranks") {
-    val corpus = randVecs(50, 8).toDF("vec_id", "embedding")
-    val queries = randVecs(3, 8).map { case (i, v) => (i + 100, v) }.toDF("qid", "qv")
-    val a = Knn.bruteKnn(corpus, queries, "vec_id", "embedding", "qid", "qv", 5, "l2")
-      .select(col("query_id"), col("rank"), col("corpus_id"))
-      .as[(Long, Int, Long)].collect().toSet
-    val b = graft.ohlcv.Search.knnJoin(corpus, queries, "vec_id", "embedding", "qid", "qv", 5, "l2")
-      .select(col("qid"), col("rank"), col("vec_id"))
-      .as[(Long, Int, Long)].collect().toSet
-    assert(a == b)
-  }
-
   test("approxKnn returns a subset of exact knn candidates with correct local ranks") {
     val corpus = randVecs(100, 8).toDF("vec_id", "embedding")
     val queries = randVecs(2, 8).map { case (i, v) => (i + 500, v) }.toDF("qid", "qv")
