@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Queries.Q
 import graft.Rounding.{pround, sqlRound}
-import graft.VectorTextQueries.{sqlHash60, sqlToks}
+import graft.VectorTextQueries.{sqlHash60, sqlShingles, sqlToks}
 import graft.operators.Funnel
 import graft.text.{Bpe, Contamination, Sampling, TextOps}
 
@@ -15,10 +15,6 @@ import graft.text.{Bpe, Contamination, Sampling, TextOps}
   * with a DuckDB oracle.
   */
 object AnalyticsQueries {
-
-  /** DuckDB n-gram shingles over a token column named `w`. */
-  private def shinglesW(n: Int): String =
-    s"[array_to_string(w[i:i+${n - 1}], ' ') FOR i IN range(1, len(w) - ${n - 2})]"
 
   private val funnel: Seq[Q] = Seq(
     // Ordered conversion funnel signup → view → click → purchase: stage k
@@ -136,7 +132,7 @@ object AnalyticsQueries {
           "doc_id", "text", col("source") === "src0", n = 6)
         .orderBy("doc_id"),
       Some(s"""WITH t AS (SELECT doc_id, source, $sqlToks AS w FROM documents),
-              |sh AS (SELECT doc_id, source, unnest(${shinglesW(6)}) AS g FROM t),
+              |sh AS (SELECT doc_id, source, unnest(${sqlShingles(6, "w")}) AS g FROM t),
               |hh AS (SELECT doc_id, source, ${sqlHash60("g")} AS h FROM sh),
               |b AS (SELECT DISTINCT h FROM hh WHERE source = 'src0'),
               |c AS (SELECT DISTINCT doc_id, h FROM hh WHERE source <> 'src0'),

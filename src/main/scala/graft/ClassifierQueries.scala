@@ -451,52 +451,14 @@ object ClassifierQueries {
     Q("q289_stream_quality_gate",
       (s, d) => {
         import graft.streaming.StreamHarness
-        import org.apache.spark.sql.streaming.Trigger
         val wq = clfFit(s, d, reuse = true)._2
         val thrQ = priorThresholdQ(s, d)
-        val base = StreamHarness.scratchDir("graft_q289")
-        val sink = base + "/gate"
-        val counts = base + "/counts"
-        val ckpt = base + "/ckpt"
-        val stream = s.readStream
-          .schema(StreamHarness.sourceSchema(s, d, "documents"))
-          .parquet(StreamHarness.sourceDir(d, "documents"))
-        val q = stream.writeStream.option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val scored = Cached.persist(marginsOf(s, batch, wq)
-              .select(col("doc_id"), col("source"),
-                col("m").as("margin_unats"),
-                (col("m") >= thrQ).as("kept")))
-            try {
-              scored.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-              scored.agg(
-                  sum(when(col("kept"), 1L).otherwise(0L)).as("nk"),
-                  count(lit(1)).as("nd"))
-                .select(lit(batchId).as("batch_id"), col("nk").as("n_kept"),
-                  (col("nd") - col("nk")).as("n_dropped"))
-                .write.mode("overwrite").parquet(s"$counts/batch=$batchId")
-            } finally Cached.release(scored)
-            ()
-          }.start()
-        try require(q.awaitTermination(300000),
-          "q289: streaming query did not terminate within 300 s")
-        finally q.stop()
-        val perDoc = s.read.parquet(sink)
-          .select("doc_id", "source", "margin_unats", "kept")
-        // Admission-counter reconciliation: Σ per-batch counters must
-        // equal the committed final state — loud, not logged.
-        val c = s.read.parquet(counts)
-          .agg(sum("n_kept").as("k"), sum("n_dropped").as("dr"))
-          .collect().head
-        val kTot = perDoc.filter(col("kept")).count()
-        val tot = perDoc.count()
-        require(c.getLong(0) == kTot && c.getLong(1) == tot - kTot,
-          s"q289: batch counters (${c.getLong(0)}/${c.getLong(1)}) do not " +
-            s"reconcile with final state ($kTot/${tot - kTot})")
-        val res = StreamHarness.localize(perDoc.orderBy("doc_id"))
-        StreamHarness.deleteRecursively(base)
-        res
+        StreamHarness.runGate(StreamHarness.documentStream(s, d), "q289",
+            Seq("doc_id", "source", "margin_unats", "kept")) { batch =>
+          marginsOf(s, batch, wq)
+            .select(col("doc_id"), col("source"), col("m").as("margin_unats"),
+              (col("m") >= thrQ).as("kept"))
+        }
       },
       Some {
         val E = ClfEpochs

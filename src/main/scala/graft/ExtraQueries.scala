@@ -7,9 +7,9 @@ import org.apache.spark.sql.functions._
 import graft.ohlcv.{Encode, Features, TimeSeriesOps, Windows}
 import graft.multimodal.Multimodal
 import graft.sim.Lsh
-import graft.Queries.Q
+import graft.Queries.{hourlyBars, Q}
 import graft.Rounding.{pround, sqlRound}
-import graft.VectorTextQueries.{arrLit, dlit}
+import graft.VectorTextQueries.{arrLit, dlit, sigSql}
 
 /** Second query batch: positional filters, union+dedup, train/val split,
   * Savitzky–Golay, LSH approx-kNN, weighted split-vector distance, IVF
@@ -287,10 +287,6 @@ object ExtraQueries {
     val LshPlanes = 4
     val LshSeed = 42L
     val planes = Encode.randomProjectionMatrix(64, LshPlanes, LshSeed)
-    def sigSql(v: String): String =
-      planes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product($v, ${arrLit(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
-      }.mkString("(", " + ", ")")
 
     val IvfSeed = 123L
     val centroids = Encode.randomProjectionMatrix(64, 8, IvfSeed)
@@ -314,8 +310,8 @@ object ExtraQueries {
             .orderBy("query_id", "rank")
         },
         Some(s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-                |c AS (SELECT vec_id, v, ${sigSql("v")} AS sig FROM e WHERE vec_id >= 5),
-                |q AS (SELECT vec_id AS query_id, v AS qv, ${sigSql("v")} AS sig
+                |c AS (SELECT vec_id, v, ${sigSql("v", planes)} AS sig FROM e WHERE vec_id >= 5),
+                |q AS (SELECT vec_id AS query_id, v AS qv, ${sigSql("v", planes)} AS sig
                 |  FROM e WHERE vec_id < 5),
                 |j AS (SELECT query_id, c.vec_id, list_distance(c.v, q.qv) AS dist
                 |  FROM c JOIN q ON c.sig = q.sig),
@@ -568,7 +564,7 @@ object ExtraQueries {
         },
         Some(s"""WITH e AS (SELECT vec_id, label, embedding::DOUBLE[] AS v
                |  FROM embeddings),
-               |b AS (SELECT vec_id, label, v, ${sigSql("v")} AS bkt FROM e),
+               |b AS (SELECT vec_id, label, v, ${sigSql("v", planes)} AS bkt FROM e),
                |nb AS (SELECT a.vec_id AS vid, a.label AS la,
                |    n.vec_id AS nid, n.label AS ln,
                |    ${sqlRound(VectorTextQueries.sqlCosine("a.v", "n.v"), 6)} AS sim
@@ -636,9 +632,9 @@ object ExtraQueries {
                |nn AS (SELECT CAST(count(*) AS BIGINT) AS c FROM e),
                |thr AS (SELECT floor(CAST(64 * 4294967296 AS DOUBLE)
                |    / CAST(c AS DOUBLE)) AS t FROM nn),
-               |q AS (SELECT vec_id AS query_id, v AS qv, ${sigSql("v")} AS sig
+               |q AS (SELECT vec_id AS query_id, v AS qv, ${sigSql("v", planes)} AS sig
                |  FROM e, thr WHERE ${Hashing.sqlHash32("vec_id")} < t),
-               |c AS (SELECT vec_id, v, ${sigSql("v")} AS sig
+               |c AS (SELECT vec_id, v, ${sigSql("v", planes)} AS sig
                |  FROM e, thr WHERE ${Hashing.sqlHash32("vec_id")} >= t),
                |bt AS (SELECT query_id, vec_id FROM (
                |    SELECT q.query_id, c.vec_id,
@@ -736,10 +732,6 @@ object ExtraQueries {
     // 6-dim embeddings; the candidate join gains a bucket equality, the
     // re-rank stays exact. Planes are plan+SQL literals from one matrix.
     val FlagPlanes = Encode.randomProjectionMatrix(Dim, 3, 77L)
-    val flagSigSql: String => String = v =>
-      FlagPlanes.zipWithIndex.map { case (p, i) =>
-        s"(CASE WHEN list_dot_product($v, ${arrLit(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
-      }.mkString("(", " + ", ")")
     def flagshipQ(name: String, metric: String,
         lshPlanes: Option[Array[Array[Double]]] = None): Q = Q(name,
       (s, d) =>
@@ -749,7 +741,7 @@ object ExtraQueries {
           .select(col("q_key"), col("q_start"), pround(col("mae_err"), 6).as("mae_err"))
           .orderBy("q_key", "q_start"),
       Some(flagshipSql(metric, rounded = true,
-        lshSig = lshPlanes.map(_ => flagSigSql))))
+        lshSig = lshPlanes.map(_ => sigSql(_, FlagPlanes)))))
     def flagshipSql(metric: String, rounded: Boolean,
         lshSig: Option[String => String] = None,
         embSql: String = meanPool): String =
@@ -1255,10 +1247,6 @@ object ExtraQueries {
   // Donchian, Keltner, CMF, force index, TRIX — the highest-traffic
   // indicators `add_all_ta_features` appends after the first batch.
   // ------------------------------------------------------------------
-
-  private def hourlyBars(s: SparkSession, d: String) =
-    Queries.hourlyResampled(s, d, emitEmpty = false)
-      .select("user_id", "bucket_s", "high", "low", "close", "volume")
 
   private val ta2: Seq[Q] = Seq(
     Q("q48_williams_r",

@@ -25,16 +25,9 @@ object ForecastQueries {
     * entries stay BIGINT-exact, so the cohort hash is order-free and
     * engine-portable — no float fold anywhere in the blocking key.
     */
-  private def rademacherSigns(dim: Int, planes: Int): Array[Array[Long]] = {
-    def splitmix(x0: Long): Long = {
-      var x = x0 + 0x9e3779b97f4a7c15L
-      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-      x ^ (x >>> 31)
-    }
+  private def rademacherSigns(dim: Int, planes: Int): Array[Array[Long]] =
     Array.tabulate(planes, dim)((b, i) =>
-      if (((splitmix(b * 7919L + i + 1L) >>> 17) & 1L) == 1L) 1L else -1L)
-  }
+      if (((graft.ohlcv.Encode.splitmix(b * 7919L + i + 1L) >>> 17) & 1L) == 1L) 1L else -1L)
 
   private val forecasting: Seq[Q] = Seq(
     // Holt linear-trend smoothing (α=.5, β=.25 — exactly representable,

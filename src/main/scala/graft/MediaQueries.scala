@@ -558,62 +558,28 @@ object MediaQueries {
     Q("q298_stream_media_gate",
       (s, d) => {
         import graft.streaming.StreamHarness
-        import org.apache.spark.sql.streaming.Trigger
         val MaxH = 6
         val ref = Cached.checkpoint(Dedup.pigeonholeBands(imageFingerprints(s, d),
             "phash", MaxH, bits = 60)
           .select(col("band"), col("band_val"),
             col("doc_id").as("ref_id"), col("phash").as("ref_phash")))
-        val base = StreamHarness.scratchDir("graft_q298")
-        val sink = base + "/gate"
-        val counts = base + "/counts"
-        val ckpt = base + "/ckpt"
-        val stream = s.readStream
-          .schema(StreamHarness.sourceSchema(s, d, "documents"))
-          .parquet(StreamHarness.sourceDir(d, "documents"))
-        val q = stream.writeStream.option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val fps = batch
-              .filter(length(col("text")) >= 8 &&
-                col("text").rlike("^[\\x00-\\x7F]*$"))
-              .select(col("doc_id"),
-                PerceptualHashExpressions.dhash60(col("text").cast("binary"))
-                  .as("phash"))
-              .filter(col("phash").isNotNull)
-            val dup = Dedup.pigeonholeBands(fps, "phash", MaxH, bits = 60)
-              .join(broadcast(ref), Seq("band", "band_val"))
-              .filter(col("ref_id") < col("doc_id") &&
-                Dedup.hamming(col("phash"), col("ref_phash")) <= MaxH)
-              .groupBy("doc_id").agg(min("ref_id").as("dup_of"))
-            val out = Cached.persist(fps.join(dup, Seq("doc_id"), "left")
-              .withColumn("kept", col("dup_of").isNull))
-            try {
-              out.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-              out.agg(sum(when(col("kept"), 1L).otherwise(0L)).as("nk"),
-                  count(lit(1)).as("nd"))
-                .select(lit(batchId).as("batch_id"), col("nk").as("n_kept"),
-                  (col("nd") - col("nk")).as("n_dup"))
-                .write.mode("overwrite").parquet(s"$counts/batch=$batchId")
-            } finally Cached.release(out)
-            ()
-          }.start()
-        try require(q.awaitTermination(300000),
-          "q298: streaming query did not terminate within 300 s")
-        finally { q.stop(); Cached.release(ref) }
-        val perDoc = s.read.parquet(sink)
-          .select("doc_id", "phash", "kept", "dup_of")
-        val c = s.read.parquet(counts)
-          .agg(sum("n_kept").as("k"), sum("n_dup").as("dr"))
-          .collect().head
-        val kTot = perDoc.filter(col("kept")).count()
-        val tot = perDoc.count()
-        require(c.getLong(0) == kTot && c.getLong(1) == tot - kTot,
-          s"q298: batch counters (${c.getLong(0)}/${c.getLong(1)}) do not " +
-            s"reconcile with final state ($kTot/${tot - kTot})")
-        val res = StreamHarness.localize(perDoc.orderBy("doc_id"))
-        StreamHarness.deleteRecursively(base)
-        res
+        try StreamHarness.runGate(StreamHarness.documentStream(s, d), "q298",
+            Seq("doc_id", "phash", "kept", "dup_of")) { batch =>
+          val fps = batch
+            .filter(length(col("text")) >= 8 &&
+              col("text").rlike("^[\\x00-\\x7F]*$"))
+            .select(col("doc_id"),
+              PerceptualHashExpressions.dhash60(col("text").cast("binary"))
+                .as("phash"))
+            .filter(col("phash").isNotNull)
+          val dup = Dedup.pigeonholeBands(fps, "phash", MaxH, bits = 60)
+            .join(broadcast(ref), Seq("band", "band_val"))
+            .filter(col("ref_id") < col("doc_id") &&
+              Dedup.hamming(col("phash"), col("ref_phash")) <= MaxH)
+            .groupBy("doc_id").agg(min("ref_id").as("dup_of"))
+          fps.join(dup, Seq("doc_id"), "left")
+            .withColumn("kept", col("dup_of").isNull)
+        } finally Cached.release(ref)
       },
       Some {
         s"""WITH $imagePairSqlCtes,

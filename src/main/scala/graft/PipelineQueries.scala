@@ -17,14 +17,15 @@ import graft.text.{Contamination, Sampling, TextOps}
   */
 object PipelineQueries {
 
-  /** DuckDB n-gram shingles over a token column named `w`. */
-  private def shinglesW(n: Int): String =
-    s"[array_to_string(w[i:i+${n - 1}], ' ') FOR i IN range(1, len(w) - ${n - 2})]"
-
   /** q214's derived hyperplane count P(N) per sf dir, so the dynamic
     * oracle embeds the SAME planes the query hashed with.
     */
   private val SemPlaneCounts = new Fits.Slot[Int]
+
+  /** ln(c) as a long in nano-nats, rounded half up: the integer log every
+    * DSIR / NB / PMI score here sums, so the sums are order-free. */
+  private def qln(c: Column): Column =
+    floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
 
   private val SemDedupSeed = 7L
 
@@ -51,8 +52,6 @@ object PipelineQueries {
     * drop the hint and let the equi-join shuffle — same rows either way.
     */
   private[graft] def nbDocScores(s: SparkSession, d: String): DataFrame = {
-    def qln(c: org.apache.spark.sql.Column) =
-      floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
     val nb = Cached.checkpoint(Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         explode(TextOps.tokens(col("text"))).as("w0"))
@@ -1098,10 +1097,10 @@ object PipelineQueries {
       (s, d) => TextOps.repetitionStats(Tables.documents(s, d), "doc_id", "text")
         .orderBy("doc_id"),
       Some(s"""WITH t AS (SELECT doc_id, len(text) AS nc, $sqlToks AS w FROM documents),
-              |b AS (SELECT doc_id, unnest(${shinglesW(2)}) AS g FROM t),
+              |b AS (SELECT doc_id, unnest(${sqlShingles(2, "w")}) AS g FROM t),
               |bc AS (SELECT doc_id, g, count(*) AS c FROM b GROUP BY 1, 2),
               |bt AS (SELECT doc_id, max(c * len(g)) AS topchars FROM bc GROUP BY 1),
-              |f AS (SELECT doc_id, unnest(${shinglesW(3)}) AS g FROM t),
+              |f AS (SELECT doc_id, unnest(${sqlShingles(3, "w")}) AS g FROM t),
               |fc AS (SELECT doc_id, g, count(*) AS c FROM f GROUP BY 1, 2),
               |fd AS (SELECT doc_id, CAST(sum(c * len(g)) AS BIGINT) AS dupchars
               |  FROM fc WHERE c >= 2 GROUP BY 1)
@@ -1118,7 +1117,7 @@ object PipelineQueries {
           "doc_id", "text", col("source") === "src0", n = 8)
         .orderBy("doc_id"),
       Some(s"""WITH t AS (SELECT doc_id, source, $sqlToks AS w FROM documents),
-              |sh AS (SELECT doc_id, source, unnest(${shinglesW(8)}) AS g FROM t),
+              |sh AS (SELECT doc_id, source, unnest(${sqlShingles(8, "w")}) AS g FROM t),
               |hh AS (SELECT doc_id, source, ${sqlHash60("g")} AS h FROM sh),
               |b AS (SELECT DISTINCT h FROM hh WHERE source = 'src0'),
               |c AS (SELECT DISTINCT doc_id, h FROM hh WHERE source <> 'src0'),
@@ -1449,21 +1448,13 @@ object PipelineQueries {
     Q("q209_stream_decontam",
       (s, d) => {
         import graft.streaming.StreamHarness
-        import org.apache.spark.sql.streaming.Trigger
         val bench = Cached.persist(Tables.documents(s, d)
           .filter(col("source") === "src0")
           .select(explode(TextOps.wordShingles(col("text"), 8)).as("__g"))
           .select(TextOps.md5Hash60(col("__g")).as("__h")).distinct())
         bench.count()
-        val base = StreamHarness.scratchDir("graft_q209")
-        val sink = base + "/flags"
-        val ckpt = base + "/ckpt"
-        val stream = s.readStream
-          .schema(StreamHarness.sourceSchema(s, d, "documents"))
-          .parquet(StreamHarness.sourceDir(d, "documents"))
-        val q = stream.writeStream.option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        StreamHarness.runForeachBatch(StreamHarness.documentStream(s, d), "q209") {
+          (batch, batchId, sink) =>
             val cand = batch.filter(col("source") =!= "src0")
               .select(col("doc_id"),
                 explode(TextOps.wordShingles(col("text"), 8)).as("__g"))
@@ -1478,19 +1469,13 @@ object PipelineQueries {
                 (coalesce(col("__n"), lit(0L)) > 0).as("contaminated"))
               // batch=<id> partition-style subdir + overwrite = replay-safe.
               .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-            ()
-          }.start()
-        try require(q.awaitTermination(300000),
-          "q209: streaming query did not terminate within 300 s")
-        finally q.stop()
-        val res = StreamHarness.localize(
+        } { sink =>
           s.read.parquet(sink)
-            .select("doc_id", "n_shared", "contaminated").orderBy("doc_id"))
-        StreamHarness.deleteRecursively(base)
-        res
+            .select("doc_id", "n_shared", "contaminated").orderBy("doc_id")
+        }
       },
       Some(s"""WITH t AS (SELECT doc_id, source, $sqlToks AS w FROM documents),
-              |sh AS (SELECT doc_id, source, unnest(${shinglesW(8)}) AS g FROM t),
+              |sh AS (SELECT doc_id, source, unnest(${sqlShingles(8, "w")}) AS g FROM t),
               |hh AS (SELECT doc_id, source, ${sqlHash60("g")} AS h FROM sh),
               |b AS (SELECT DISTINCT h FROM hh WHERE source = 'src0'),
               |c AS (SELECT DISTINCT doc_id, h FROM hh WHERE source <> 'src0'),
@@ -2702,8 +2687,6 @@ object PipelineQueries {
     // linear shuffles, no driver state.
     Q("q213_dsir_weights",
       (s, d) => {
-        def qln(c: org.apache.spark.sql.Column) =
-          floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
         // ONE tokenize+hash pass: the (doc, lang, bucket) partial counts
         // are materialized once (localCheckpoint — no CacheManager entry
         // to leak) and every downstream aggregate — both distribution
@@ -2849,8 +2832,6 @@ object PipelineQueries {
     // the same 100 TB posture as q187/q215.
     Q("q216_pmi_collocations",
       (s, d) => {
-        def qln(c: org.apache.spark.sql.Column) =
-          floor(log(c.cast("double")) * 1e9 + 0.5).cast("long")
         val toks = Tables.documents(s, d)
           .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
           .filter(size(col("toks")) >= 2)
@@ -5410,7 +5391,7 @@ object PipelineQueries {
           .orderBy("source", "band")
       },
       Some(s"""WITH t AS (SELECT doc_id, source, $sqlToks AS w FROM documents),
-              |sh AS (SELECT doc_id, source, unnest(${shinglesW(8)}) AS g FROM t),
+              |sh AS (SELECT doc_id, source, unnest(${sqlShingles(8, "w")}) AS g FROM t),
               |hh AS (SELECT doc_id, source, ${sqlHash60("g")} AS h FROM sh),
               |b AS (SELECT DISTINCT h FROM hh WHERE source = 'src0'),
               |c AS (SELECT DISTINCT doc_id, h FROM hh WHERE source <> 'src0'),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.{CodegenStats, ListenerBridge}
+import graft.streaming.StreamHarness
 
 /** The one measurement protocol for registered queries, shared by this
   * main and [[Bench]]: a cold rep, then `warmReps` warm reps, each a
@@ -16,9 +17,11 @@ import org.apache.spark.sql.graft.{CodegenStats, ListenerBridge}
   * last rep's scope closed, i.e. frames no scope owned (leaks),
   * `max_method_bytes`: the largest compiled whole-stage method of any
   * SQL execution the reps ran — past [[CodegenStats.HugeMethodLimit]]
-  * that stage runs interpreted, and `tiers`: the last [[LocalTier]]
+  * that stage runs interpreted, `tiers`: the last [[LocalTier]]
   * decision of each iterative operator the reps ran (`local` or
-  * `distributed`, with its gauge).
+  * `distributed`, with its gauge), and `stream`: where the micro-batch
+  * time of that rep's streaming runs went ([[StreamHarness.Stats]]; `{}`
+  * when it ran none).
   * Whatever a leaking query left behind is then dropped, so the next
   * query starts from an empty cache.
   *
@@ -38,7 +41,8 @@ object Profile {
       sf: String, rows: Long, coldS: Double,
       warmMinS: Double, warmSpreadS: Double, tasks: TaskCounters.Snap,
       fitHits: Long, persistedAfter: Int, cachedAfter: Int, maxMethodBytes: Int,
-      tiers: Seq[(String, LocalTier.Decision)], error: String = null) {
+      tiers: Seq[(String, LocalTier.Decision)], stream: StreamHarness.Stats,
+      error: String = null) {
     def ok: Boolean = error == null
     def taskS: Double = tasks.runMs / 1e3
     def json: String = {
@@ -56,7 +60,8 @@ object Profile {
         s""""persisted_after":$persistedAfter,""" +
         s""""cached_after":$cachedAfter,""" +
         s""""max_method_bytes":$maxMethodBytes,""" +
-        s""""tiers":{${tiers.map { case (op, d) => s""""$op":${d.json}""" }.mkString(",")}}$err}"""
+        s""""tiers":{${tiers.map { case (op, d) => s""""$op":${d.json}""" }.mkString(",")}},""" +
+        s""""stream":${stream.json}$err}"""
     }
   }
 
@@ -82,24 +87,27 @@ object Profile {
 
   def measure(spark: SparkSession, counters: TaskCounters, sf: String,
       name: String, fn: QueryFn, warmReps: Int = 2): Rec = {
-    def rep(): (Long, Double, TaskCounters.Snap, Long) = {
+    def rep(): (Long, Double, TaskCounters.Snap, Long, StreamHarness.Stats) = {
       ListenerBridge.waitUntilListenerBusEmpty(spark)
       val before = counters.snapshot()
       val hitsBefore = Fits.hitCount
+      StreamHarness.drainStats()
       val t0 = System.nanoTime()
       val rows = Cached.scope(fn(spark, sf).count())
       val wall = (System.nanoTime() - t0) / 1e9
       ListenerBridge.waitUntilListenerBusEmpty(spark)
-      (rows, wall, counters.snapshot().minus(before), Fits.hitCount - hitsBefore)
+      (rows, wall, counters.snapshot().minus(before), Fits.hitCount - hitsBefore,
+        StreamHarness.drainStats())
     }
     LocalTier.drain()
     def rec(rows: Long, cold: Double, warmMin: Double, spread: Double,
-        tasks: TaskCounters.Snap, fitHits: Long, maxMethodBytes: Int, error: String = null) =
+        tasks: TaskCounters.Snap, fitHits: Long, maxMethodBytes: Int,
+        stream: StreamHarness.Stats, error: String = null) =
       Rec(name, spark.sparkContext.master, spark.conf.get("spark.sql.shuffle.partitions"),
         sf, rows, cold, warmMin, spread, tasks, fitHits,
         spark.sparkContext.getPersistentRDDs.size,
         ListenerBridge.cachedEntries(spark), maxMethodBytes,
-        LocalTier.drain(), error)
+        LocalTier.drain(), stream, error)
     try {
       val ((cold, warm), maxMethodBytes) = CodegenStats.largestMethodDuring(spark) {
         val cold = rep()
@@ -107,10 +115,11 @@ object Profile {
       }
       val best = if (warm.isEmpty) cold else warm.minBy(_._2)
       val spread = if (warm.isEmpty) 0.0 else warm.map(_._2).max - warm.map(_._2).min
-      rec(cold._1, cold._2, best._2, spread, best._3, best._4, maxMethodBytes)
+      rec(cold._1, cold._2, best._2, spread, best._3, best._4, maxMethodBytes, best._5)
     } catch {
       case e: Throwable =>
-        rec(-1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0), 0L, -1, sanitize(e))
+        rec(-1L, -1.0, -1.0, -1.0, TaskCounters.Snap(0, 0, 0, 0, 0, 0, 0), 0L, -1,
+          StreamHarness.Stats(), sanitize(e))
     } finally dropPersisted(spark)
   }
 

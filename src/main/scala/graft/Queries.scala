@@ -308,6 +308,11 @@ object Queries {
   private[graft] def hourlyResampled(s: SparkSession, d: String, emitEmpty: Boolean): DataFrame =
     barsResampled(s, d, 3600, emitEmpty)
 
+  /** Hourly OHLCV bars without empty buckets, as the indicator queries read them. */
+  private[graft] def hourlyBars(s: SparkSession, d: String): DataFrame =
+    hourlyResampled(s, d, emitEmpty = false)
+      .select("user_id", "bucket_s", "high", "low", "close", "volume")
+
   /** Shared oracle CTE: hourly right-closed close per user. */
   private[graft] val HourlyCloseCte =
     """agg AS (

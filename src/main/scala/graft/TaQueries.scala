@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ohlcv.{Features, Indicators}
-import graft.Queries.Q
+import graft.Queries.{hourlyBars, Q}
 import graft.Rounding.{pround, sqlRound}
 
 /** Fourth TA-query batch (F14 completion): the `add_all_ta_features`
@@ -16,10 +16,6 @@ import graft.Rounding.{pround, sqlRound}
   * `MATERIALIZED` bridges between chained recursions).
   */
 object TaQueries {
-
-  private def hourlyBars(s: SparkSession, d: String) =
-    Queries.hourlyResampled(s, d, emitEmpty = false)
-      .select("user_id", "bucket_s", "high", "low", "close", "volume")
 
   private def hourlyClose(s: SparkSession, d: String) =
     Queries.hourlyResampled(s, d, emitEmpty = false)
@@ -608,25 +604,17 @@ object TaQueries {
     Q("q103_stream_upsert",
       (s, d) => {
         import graft.streaming.{StreamHarness, StreamingIngest}
-        val base = StreamHarness.scratchDir("graft_q103")
-        val sink = base + "/table"
-        val ckpt = base + "/ckpt"
         val stream = StreamHarness.eventStream(s, d)
           .withColumn("__arr", struct(col("ts"), col("event_id")))
-        val q = StreamingIngest.foreachBatchUpsert(stream, sink,
-          Seq("user_id", "event_type"), "__arr", ckpt).start()
-        try require(q.awaitTermination(300000),
-          "q103: streaming query did not terminate within 300 s")
-        finally q.stop()
-        val res = StreamHarness.localize(
+        StreamHarness.runFileSink(s, "q103") { (sink, ckpt) =>
+          StreamingIngest.foreachBatchUpsert(stream, sink,
+            Seq("user_id", "event_type"), "__arr", ckpt)
+        } { sink =>
           s.read.parquet(sink)
             .select(col("user_id"), col("event_type"), col("event_id"),
               col("value"))
-            .orderBy("user_id", "event_type"))
-        // Sink + checkpoint are per-call scratch; drop them once the
-        // committed table is materialized.
-        StreamHarness.deleteRecursively(base)
-        res
+            .orderBy("user_id", "event_type")
+        }
       },
       Some("""SELECT user_id, event_type, event_id, value FROM events
              |QUALIFY row_number() OVER (PARTITION BY user_id, event_type

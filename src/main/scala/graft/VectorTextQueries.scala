@@ -28,9 +28,10 @@ object VectorTextQueries {
   /** DuckDB rendering of TextOps.tokens (whitespace split, empties out). */
   private[graft] val sqlToks = """list_filter(string_split_regex(text, '\s+'), t -> len(t) > 0)"""
 
-  /** DuckDB word-n-gram shingles over `toks` (1-based inclusive slices). */
-  private[graft] def sqlShingles(n: Int): String =
-    s"[array_to_string(toks[i:i+${n - 1}], ' ') FOR i IN range(1, len(toks) - ${n - 2})]"
+  /** DuckDB word-n-gram shingles over the token list column `toks`
+    * (1-based inclusive slices). */
+  private[graft] def sqlShingles(n: Int, toks: String = "toks"): String =
+    s"[array_to_string($toks[i:i+${n - 1}], ' ') FOR i IN range(1, len($toks) - ${n - 2})]"
 
   /** DuckDB mirror of Search.cosine (incl. the 1e-8 norm guards and the
     * sequential-sum dot products).
@@ -50,7 +51,7 @@ object VectorTextQueries {
     a.map(dlit).mkString("[", ", ", "]")
 
   /** DuckDB mirror of Lsh.hyperplaneSignature over plane literals. */
-  private def sigSql(v: String, planes: Array[Array[Double]]): String =
+  private[graft] def sigSql(v: String, planes: Array[Array[Double]]): String =
     planes.zipWithIndex.map { case (p, i) =>
       s"(CASE WHEN list_dot_product($v, ${arrLit(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString("(", " + ", ")")

@@ -100,18 +100,20 @@ object Encode {
   def linearProject(arr: Column, matrix: Array[Array[Double]]): Column =
     org.apache.spark.sql.graft.GraftExpressions.matVecStrict(arr, matrix)
 
+  /** The splitmix64 finalizer: a bijective 64-bit mix of `x0`. */
+  def splitmix(x0: Long): Long = {
+    var x = x0 + 0x9e3779b97f4a7c15L
+    x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+    x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
+    x ^ (x >>> 31)
+  }
+
   /** Deterministic pseudo-random projection matrix (outDim × inLen) seeded
     * by `seed` — a public Johnson–Lindenstrauss-style stand-in when no
     * trained projection exists. Uses a splitmix64-derived uniform in
     * [−1, 1] scaled by 1/√inLen.
     */
   def randomProjectionMatrix(inLen: Int, outDim: Int, seed: Long): Array[Array[Double]] = {
-    def splitmix(x0: Long): Long = {
-      var x = x0 + 0x9e3779b97f4a7c15L
-      x = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
-      x = (x ^ (x >>> 27)) * 0x94d049bb133111ebL
-      x ^ (x >>> 31)
-    }
     val norm = 1.0 / math.sqrt(inLen.toDouble)
     Array.tabulate(outDim, inLen) { (i, j) =>
       val h = splitmix(seed * 1000003L + i * 65537L + j)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.RunningEma
 import org.apache.spark.sql.types.{DoubleType, StructField}
+import Indicators.hsum
 
 /** Technical-analysis feature operators (SURVEY.md §2.5 W3–W5, §2.8 F14).
   *
@@ -514,7 +515,6 @@ object Features {
       (collect_list(col("__bp")).over(frame), collect_list(col("__utr")).over(frame))
     }
     val (b1, t1) = avgAt(w1); val (b2, t2) = avgAt(w2); val (b3, t3) = avgAt(w3)
-    def hsum(c: Column): Column = aggregate(c, lit(0.0), (a, x) => a + x)
     val lists = base
       .withColumn("__b1", b1).withColumn("__t1", t1)
       .withColumn("__b2", b2).withColumn("__t2", t2)
@@ -547,7 +547,6 @@ object Features {
       .filter(col("__pc").isNotNull)
       .drop("__ph", "__pl", "__pc")
     val frame = Window.partitionBy(keyCol).orderBy(ordCol).rowsBetween(-(w - 1), 0)
-    def hsum(c: Column): Column = aggregate(c, lit(0.0), (a, x) => a + x)
     val lists = base
       .withColumn("__vps", collect_list(col("__vmp")).over(frame))
       .withColumn("__vms", collect_list(col("__vmm")).over(frame))

@@ -63,12 +63,12 @@ object Forecast {
     * `test.ipynb` cell 20: queries come from the VALIDATION windows,
     * matches from the disjoint TRAIN windows — no overlap leakage).
     * `excludeSelf` only matters when both sides are the same frame.
-    */
-  /** With `crossKey`, matches may come from ANY series key — the
+    *
+    * With `crossKey`, matches may come from ANY series key — the
     * reference's multi-symbol union corpus searched as one index space
     * (U2, `train.py:42-43` ConcatDataset consumed at `test.ipynb:812`).
-    */
-  /** With `lshPlanes`, candidate generation is bucketed: both sides get a
+    *
+    * With `lshPlanes`, candidate generation is bucketed: both sides get a
     * random-hyperplane signature over the embedding and the join adds an
     * equality on it — the sub-linear search path the reference asks for
     * (`README.md:155`), with the exact metric re-ranking inside each

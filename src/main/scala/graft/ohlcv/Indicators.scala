@@ -26,7 +26,9 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StructField}
   */
 object Indicators {
 
-  private def hsum(c: Column): Column =
+  /** Sequential left-to-right sum of a double array (a HOF fold, so the
+    * addition order is the list order). */
+  private[ohlcv] def hsum(c: Column): Column =
     aggregate(c, lit(0.0), (a, x) => a + x)
 
   /** VWAP(w=14): rolling Σ(tp·vol)/Σ(vol) over typical price

@@ -1,83 +1,71 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.UUID
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerBridge
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryListener,
+  StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.Cached
 
-/** Shared fixture for the oracle-checked streaming query family
-  * (q103/q106/q112/q118/q124/q131/q137/q151/q175/q201).
+/** The one runner of the oracle-checked streaming queries (q103, q106,
+  * q112, q118, q124, q131, q137, q151, q175, q201, q209, q251, q289, q295,
+  * q298), and their shared sources.
   *
-  * Each streaming query used to pay its own fixed setup: a fresh temp
-  * dir + symlink so the file source sees a directory, a parquet footer
-  * read for the schema, and a 32-partition state-store fleet per
-  * stateful stage. None of that is part of the operator under test —
-  * it's harness tax (~2-3 s per query in the sf0.1 bench). This object
-  * shares the prepared source directory and schema per (sfDir, table)
-  * across the whole family and bounds the per-query state partitioning,
-  * while making the run contract strict: termination is ASSERTED (a
-  * timeout throws instead of silently returning a partial sink) and the
-  * memory-sink table is dropped after the result is materialized, so
-  * repeated harness/bench runs don't accumulate driver memory.
+  * Every run passes through one lifecycle ([[run]]): a fresh scratch dir
+  * holds the query's checkpoint (and its file sink); the query runs under
+  * `AvailableNow`; its termination within 300 s is ASSERTED (a timeout
+  * throws instead of reading a partial sink); its read-back is collected
+  * into a local relation. On every exit path, exceptions included, the
+  * query is stopped if it is still active and the scratch dir is deleted.
+  * A progress listener per run counts its data batches and sums where its
+  * micro-batch time went, for [[graft.Profile]]'s `stream` field
+  * ([[drainStats]]).
+  *
+  * Two forms call the lifecycle: [[runMemory]] (a memory sink, the
+  * stateful operator queries) and [[runFileSink]] (q103's upsert sink,
+  * and through [[runForeachBatch]] / [[runGate]] the `foreachBatch`
+  * bodies of q209, q289, q295 and q298).
   */
 object StreamHarness {
+
+  /** Shuffle/state partitions of a memory-sink run. A fresh checkpoint is
+    * made per run, so the value only sets how many state-store instances
+    * spin up, never results; 8 keeps the local fixed cost low. */
+  private val StatePartitions = 8
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
 
   /** Guards the shuffle-partitions set→start→restore in [[runMemory]]. */
   private val startLock = new Object
 
-  /** RAM-backed scratch root (/dev/shm) when the host offers one. */
-  private lazy val ramRoot: Option[java.nio.file.Path] = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-      Some(shm)
-    else None
+  /** Where per-run scratch (checkpoints, file sinks) goes: RAM-backed
+    * `/dev/shm` when the host offers it writable, else the JVM temp dir.
+    * Every run makes a FRESH checkpoint, so cross-process durability is
+    * not part of what these runs exercise (the crash-recovery specs keep
+    * their own checkpoints on the real filesystem). What the tmpfs
+    * removes is the per-micro-batch offset/commit-log fsync, measured as
+    * the dominant share of the streaming family's ~1.7 s/query fixed
+    * floor. A production deployment points checkpoints at durable
+    * storage.
+    */
+  private[graft] lazy val scratchRoot: Path = {
+    val shm = Paths.get("/dev/shm")
+    if (Files.isDirectory(shm) && Files.isWritable(shm)) shm
+    else Paths.get(System.getProperty("java.io.tmpdir"))
   }
 
-  /** Per-call streaming scratch (checkpoints, sinks, source farms):
-    * RAM-backed when available, else the JVM temp dir. Correctness
-    * semantics are unchanged — every registered streaming query creates
-    * a FRESH checkpoint per call, so cross-process durability is not
-    * part of what those runs exercise (the crash-recovery specs create
-    * their own checkpoint dirs on the real filesystem and keep their
-    * durability guarantees). What the tmpfs removes is the
-    * per-micro-batch offset/commit-log fsync, measured as the dominant
-    * share of the streaming family's ~1.7 s/query fixed floor. A
-    * production deployment points checkpoints at durable storage; this
-    * root is harness scratch, deleted after each call.
-    */
-  def scratchDir(prefix: String): String =
-    (ramRoot match {
-      case Some(root) => java.nio.file.Files.createTempDirectory(root, prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
-    }).toString
+  private val srcSchemas = new ConcurrentHashMap[String, StructType]()
 
-  private val srcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val srcSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  /** Directory exposing `<sfDir>/<table>.parquet` to the file stream
-    * source (which requires a directory, not a file). Created once per
-    * JVM per (sfDir, table) and reused — the symlink farm is shared by
-    * every streaming query in the suite.
+  /** The path the file stream source reads `<sfDir>/<table>.parquet`
+    * from. A plain file path fails ("Option 'basePath' must be a
+    * directory"); a one-file Hadoop glob does not, and a glob over a
+    * Spark-written table directory lists its part-files.
     */
-  def sourceDir(sfDir: String, table: String): String =
-    srcDirs.computeIfAbsent(s"$sfDir#$table", _ => {
-      import java.nio.file.{Files, Paths}
-      val base = scratchDir(s"graft_stream_$table")
-      val target = Paths.get(sfDir, table + ".parquet")
-      if (Files.isDirectory(target)) {
-        // Spark-written table directory: the file source does not
-        // recurse, so link each contained data file flat.
-        import scala.jdk.CollectionConverters._
-        val ls = Files.list(target)
-        try ls.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .foreach(f => Files.createSymbolicLink(
-            Paths.get(base, f.getFileName.toString), f))
-        finally ls.close()
-      } else {
-        Files.createSymbolicLink(Paths.get(base, table + ".parquet"), target)
-      }
-      base
-    })
+  def sourceDir(sfDir: String, table: String): String = s"$sfDir/{$table.parquet}"
 
   /** Schema of the shared source — one parquet footer read per
     * (sfDir, table) per JVM instead of one per query.
@@ -100,7 +88,6 @@ object StreamHarness {
     * query touches the raw file type directly.
     */
   def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val raw = StreamingIngest.readEvents(spark, sourceDir(sfDir, "events"),
       sourceSchema(spark, sfDir, "events"))
     raw.schema("ts").dataType match {
@@ -117,106 +104,193 @@ object StreamHarness {
     }
   }
 
-  /** Run `out` through an AvailableNow memory sink and return
-    * `finish(sinkTable)` materialized as a local relation.
-    *
-    * - `awaitTermination`'s boolean is asserted: a 300 s timeout THROWS
-    *   rather than letting the caller read a partially-populated sink.
-    * - The UUID-named memory table is dropped before returning (the
-    *   result is collected first — a memory sink is driver-resident by
-    *   construction, so the collect adds no scale exposure beyond what
-    *   the sink already holds).
-    * - `statePartitions` pins the query's shuffle/state partitioning via
-    *   the cloned-at-start session conf. A fresh checkpoint is created
-    *   per call, so the value only sets how many state-store instances
-    *   spin up — never results. 8 keeps local-bench fixed cost low; a
-    *   production deployment would size it to the cluster instead.
-    * - `requireSingleBatch` ASSERTS (from the query's progress log) that
-    *   all input rows arrived in one micro-batch. Queries whose oracle is
-    *   order-free but whose stateful emit rule is arrival-order dependent
-    *   (q251's admit-iff-band-min: a doc processed in an earlier batch
-    *   than a smaller-id collider would be admitted by the stream but
-    *   rejected by the oracle) pin their single-batch precondition here
-    *   instead of relying on the file source's default batching.
+  /** The documents table as a file-source stream over the shared fixture. */
+  def documentStream(spark: SparkSession, sfDir: String): DataFrame =
+    spark.readStream.schema(sourceSchema(spark, sfDir, "documents"))
+      .parquet(sourceDir(sfDir, "documents"))
+
+  /** The `durationMs` phases a [[Stats]] sums. */
+  private val Phases = Seq("addBatch", "getBatch", "queryPlanning", "walCommit",
+    "triggerExecution")
+
+  /** Where the micro-batch time of streaming runs went: the runs, their
+    * data batches (progress events with input rows), and per phase the sum
+    * of the progress events' `durationMs`, aligned with [[Phases]]. */
+  final case class Stats(runs: Long = 0L, batches: Long = 0L,
+      phaseMs: Seq[Long] = Phases.map(_ => 0L)) {
+    def +(o: Stats): Stats = Stats(runs + o.runs, batches + o.batches,
+      phaseMs.zip(o.phaseMs).map { case (a, b) => a + b })
+    def json: String =
+      if (runs == 0L) "{}"
+      else (Seq("runs" -> runs, "batches" -> batches) ++ Phases.map(_ + "_ms").zip(phaseMs))
+        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+  }
+
+  private def statsOf(p: StreamingQueryProgress): Stats =
+    Stats(0L, if (p.numInputRows > 0) 1L else 0L,
+      Phases.map(k => Option(p.durationMs.get(k)).fold(0L)(_.longValue)))
+
+  /** Sums progress events per run id. Registered before the start, it
+    * cannot miss an early event; unlike `q.recentProgress` it keeps no
+    * bounded window that many empty triggers could evict a data batch
+    * from. */
+  private final class Progress extends StreamingQueryListener {
+    import StreamingQueryListener._
+    private val byRun = new ConcurrentHashMap[UUID, Stats]()
+    override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+    override def onQueryProgress(e: QueryProgressEvent): Unit =
+      byRun.merge(e.progress.runId, statsOf(e.progress), _ + _)
+    override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    def of(q: StreamingQuery): Stats = byRun.getOrDefault(q.runId, Stats()).copy(runs = 1L)
+  }
+
+  private val undrained = new AtomicReference(Stats())
+
+  /** The summed [[Stats]] of the runs finished since the last drain. */
+  def drainStats(): Stats = undrained.getAndSet(Stats())
+
+  /** The lifecycle of one run: `start(dir)` starts the query with its
+    * checkpoint (and sink) under a fresh scratch `dir`; once it has
+    * terminated, `readBack(dir, stats)` is collected into a local relation.
     */
-  def runMemory(out: DataFrame, tag: String, statePartitions: Int = 8,
-      requireSingleBatch: Boolean = false)(
+  private def run(spark: SparkSession, tag: String)(start: String => StreamingQuery)(
+      readBack: (String, Stats) => DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory(scratchRoot, s"graft_${tag}_").toString
+    val progress = new Progress
+    spark.streams.addListener(progress)
+    var q: StreamingQuery = null
+    try {
+      q = start(dir)
+      require(q.awaitTermination(300000L),
+        s"$tag: streaming query did not terminate within 300 s")
+      q.stop()
+      // Listener delivery is async: drain the bus before reading the sums.
+      ListenerBridge.waitUntilListenerBusEmpty(spark)
+      val stats = progress.of(q)
+      undrained.accumulateAndGet(stats, _ + _)
+      localize(readBack(dir, stats))
+    } finally {
+      spark.streams.removeListener(progress)
+      if (q != null && q.isActive) q.stop()
+      deleteRecursively(dir)
+    }
+  }
+
+  /** Run `out` through an AvailableNow memory sink and return
+    * `finish(sinkTable)` through the lifecycle; the UUID-named memory
+    * table is dropped after the result is collected.
+    *
+    * - The query's shuffle/state partitioning is pinned to
+    *   [[StatePartitions]] via the session conf, which the query clones at
+    *   start.
+    * - `requireSingleBatch` ASSERTS that all input rows arrived in one
+    *   micro-batch. Queries whose oracle is order-free but whose stateful
+    *   emit rule is arrival-order dependent (q251's admit-iff-band-min: a
+    *   doc processed in an earlier batch than a smaller-id collider would
+    *   be admitted by the stream but rejected by the oracle) pin their
+    *   single-batch precondition here instead of relying on the file
+    *   source's default batching.
+    */
+  def runMemory(out: DataFrame, tag: String, requireSingleBatch: Boolean = false)(
       finish: DataFrame => DataFrame): DataFrame = {
     val spark = out.sparkSession
-    val qn = "graft_" + tag + "_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    // Explicit RAM-backed checkpoint (see scratchDir): without one Spark
-    // creates its temp checkpoint under java.io.tmpdir — a real disk on
-    // this host — and pays ~µbatch-count fsyncs per query.
-    val ckpt = scratchDir("graft_ckpt_" + tag)
-    // StreamExecution clones the session conf at start(), so the
-    // override is frozen into the query and restored immediately. The
-    // whole set→start→restore sequence is SERIALIZED: two concurrent
-    // lanes interleaving it could otherwise read each other's override
-    // as `prev` and leave the session pinned at `statePartitions` after
-    // both restores (lost-restore). Inside the lock, a concurrent BATCH
-    // query planned in the short window can still pick up the lower
-    // setting — benign: shuffle partition count affects parallelism,
-    // never results.
-    // Data-batch counter registered BEFORE start so no progress event
-    // can precede it. q.recentProgress is NOT used for the guard: it
-    // retains only the last numRecentProgressUpdates (default 100)
-    // entries, so a run with many empty-trigger progress events could
-    // evict the data batch(es) and pass the guard vacuously — failing
-    // open on exactly the precondition it exists to pin (round-12
-    // ADVICE #2). The listener accumulates without bound; the bus is
-    // drained before the count is read (delivery is async).
-    val dataBatches = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-      override def onQueryProgress(e: QueryProgressEvent): Unit =
-        if (e.progress.name == qn && e.progress.numInputRows > 0)
-          dataBatches.incrementAndGet()
-      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-    }
-    if (requireSingleBatch) spark.streams.addListener(listener)
-    val q = startLock.synchronized {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-      try out.writeStream.format("memory").queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-    try {
-      val finished = q.awaitTermination(300000L)
-      require(finished, s"$tag: streaming query did not terminate within 300 s")
-      if (requireSingleBatch) {
-        org.apache.spark.sql.graft.ListenerBridge.waitUntilListenerBusEmpty(spark)
-        require(dataBatches.get() <= 1,
-          s"$tag: input spanned ${dataBatches.get()} micro-batches but the " +
-            "query's emit rule is arrival-order dependent and its oracle " +
-            "order-free — single-batch delivery is a registered " +
-            "precondition (set maxFilesPerTrigger to cover all files)")
+    val qn = s"graft_${tag}_" + UUID.randomUUID.toString.replace("-", "")
+    try run(spark, tag) { dir =>
+      // The whole set→start→restore sequence is SERIALIZED: two
+      // concurrent lanes interleaving it could otherwise read each other's
+      // override as `prev` and leave the session pinned after both
+      // restores (lost-restore). A concurrent BATCH query planned in the
+      // short window can still pick up the setting — benign: shuffle
+      // partition count affects parallelism, never results.
+      startLock.synchronized {
+        val prev = spark.conf.get(ShufflePartitions)
+        spark.conf.set(ShufflePartitions, StatePartitions.toString)
+        try out.writeStream.format("memory").queryName(qn)
+          .option("checkpointLocation", s"$dir/ckpt")
+          .outputMode("append").trigger(Trigger.AvailableNow()).start()
+        finally spark.conf.set(ShufflePartitions, prev)
       }
-      q.stop()
-      localize(finish(spark.table(qn)))
-    } finally {
-      if (requireSingleBatch) spark.streams.removeListener(listener)
-      if (q.isActive) q.stop()
-      spark.catalog.dropTempView(qn)
-      deleteRecursively(ckpt)
-    }
+    } { (_, stats) =>
+      require(!requireSingleBatch || stats.batches <= 1L,
+        s"$tag: input spanned ${stats.batches} micro-batches but the " +
+          "query's emit rule is arrival-order dependent and its oracle " +
+          "order-free — single-batch delivery is a registered " +
+          "precondition (set maxFilesPerTrigger to cover all files)")
+      finish(spark.table(qn))
+    } finally spark.catalog.dropTempView(qn)
+  }
+
+  /** Start `writer(sink, checkpoint)` through the lifecycle and return
+    * `readBack(sink)`: a file sink whose every write stays under `sink`
+    * (q103's [[StreamingIngest.foreachBatchUpsert]]). */
+  def runFileSink(spark: SparkSession, tag: String)(
+      writer: (String, String) => DataStreamWriter[Row])(readBack: String => DataFrame): DataFrame =
+    run(spark, tag)(dir => writer(s"$dir/sink", s"$dir/ckpt").start())(
+      (dir, _) => readBack(s"$dir/sink"))
+
+  /** [[runFileSink]] with `body(batch, batchId, sink)` run on each
+    * micro-batch of `stream`. `foreachBatch` is at-least-once, so a body
+    * writes only under its batchId-keyed path below `sink`, with
+    * overwrite: a batch replayed after a crash-before-commit rewrites the
+    * same rows instead of duplicating them. */
+  def runForeachBatch(stream: DataFrame, tag: String)(body: (DataFrame, Long, String) => Unit)(
+      readBack: String => DataFrame): DataFrame =
+    runFileSink(stream.sparkSession, tag) { (sink, ckpt) =>
+      stream.writeStream.option("checkpointLocation", ckpt)
+        .outputMode("append").trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, batchId: Long) => body(batch, batchId, sink) }
+    }(readBack)
+
+  /** An admission gate on arrival: each micro-batch of `stream` is
+    * `decide`d into rows with a boolean `kept`, committed with the batch's
+    * (n_kept, n_dropped) counters ([[commitGate]]); the result is the
+    * committed `cols` by doc_id once the counters reconcile with them
+    * ([[gateResult]]). */
+  def runGate(stream: DataFrame, tag: String, cols: Seq[String])(
+      decide: DataFrame => DataFrame): DataFrame =
+    runForeachBatch(stream, tag)((batch, batchId, sink) =>
+      commitGate(decide(batch), sink, batchId))(
+      sink => gateResult(stream.sparkSession, tag, sink, cols))
+
+  /** Write one batch's gate rows to `<sink>/gate/batch=<id>` and their
+    * counters to `<sink>/counts/batch=<id>`, each an overwrite. */
+  private def commitGate(out: DataFrame, sink: String, batchId: Long): Unit = {
+    val rows = Cached.persist(out)
+    try {
+      rows.write.mode("overwrite").parquet(s"$sink/gate/batch=$batchId")
+      rows.agg(sum(when(col("kept"), 1L).otherwise(0L)).as("nk"), count(lit(1)).as("nd"))
+        .select(lit(batchId).as("batch_id"), col("nk").as("n_kept"),
+          (col("nd") - col("nk")).as("n_dropped"))
+        .write.mode("overwrite").parquet(s"$sink/counts/batch=$batchId")
+    } finally Cached.release(rows)
+  }
+
+  /** The committed gate rows, after requiring that Σ per-batch counters
+    * equal the final state — loud, not logged. */
+  private def gateResult(spark: SparkSession, tag: String, sink: String,
+      cols: Seq[String]): DataFrame = {
+    val perDoc = spark.read.parquet(s"$sink/gate").select(cols.map(col): _*)
+    val c = spark.read.parquet(s"$sink/counts")
+      .agg(sum("n_kept"), sum("n_dropped")).collect().head
+    val kTot = perDoc.filter(col("kept")).count()
+    val tot = perDoc.count()
+    require(c.getLong(0) == kTot && c.getLong(1) == tot - kTot,
+      s"$tag: batch counters (${c.getLong(0)}/${c.getLong(1)}) do not " +
+        s"reconcile with final state ($kTot/${tot - kTot})")
+    perDoc.orderBy("doc_id")
   }
 
   /** Collect `df` into a LocalRelation so its source (memory table,
     * temp sink dir) can be released before the result is consumed.
     * Row order is preserved.
     */
-  def localize(df: DataFrame): DataFrame = {
+  private def localize(df: DataFrame): DataFrame = {
     val rows: java.util.List[Row] = java.util.Arrays.asList(df.collect(): _*)
     df.sparkSession.createDataFrame(rows, df.schema)
   }
 
-  /** Delete a per-call scratch directory (sink/checkpoint) bottom-up. */
-  def deleteRecursively(path: String): Unit = {
-    import java.nio.file.{Files, Paths}
+  /** Delete a per-run scratch directory bottom-up. */
+  private def deleteRecursively(path: String): Unit = {
     import scala.jdk.CollectionConverters._
     val root = Paths.get(path)
     if (Files.exists(root)) {

@@ -81,9 +81,9 @@ object StreamingIngest {
     * micro-batches by `flatMapGroupsWithState`; each batch's rows are
     * ordered by (ts, tie) inside the group, folded through `step` from the
     * stored state (`zero` for a new key), and emit one row per event:
-    * (key, ts) then `emit(state)` as the double columns `outCols`. A NULL
-    * `value` skips the step, so the state carries over, as in the batch
-    * scans.
+    * (key, ts) then `emit(state)` as the double columns `outCols`. `step`
+    * gets the value as read, None for a NULL, and applies its own
+    * operator's rule for a missing value.
     *
     * Type contract: `keyCol` and `tieCol` must be integral (they are cast
     * to long — the output `key` is LongType regardless of input width);
@@ -95,7 +95,7 @@ object StreamingIngest {
     */
   private def keyedFold[S <: Product : TypeTag](op: String, events: DataFrame,
       keyCol: String, tsCol: String, tieCol: String, value: Column,
-      outCols: Seq[String], zero: S)(step: (S, Double) => S)(
+      outCols: Seq[String], zero: S)(step: (S, Option[Double]) => S)(
       emit: S => Seq[Any]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -124,7 +124,7 @@ object StreamingIngest {
         (key: Long, rows: Iterator[(Long, Long, Long, Option[Double])], state: GroupState[S]) =>
           var s = state.getOption.getOrElse(zero)
           val out = rows.toSeq.sortBy(r => (r._2, r._3)).map { case (_, ts, _, v) =>
-            v.foreach(y => s = step(s, y))
+            s = step(s, v)
             Row.fromSeq(key +: ts +: emit(s))
           }
           state.update(s)
@@ -133,49 +133,60 @@ object StreamingIngest {
   }
 
   /** Streaming EMA — the custom-state streaming twin of
-    * [[graft.ohlcv.Features.withEma]] (W4): the state carries (ema,
-    * observations) across micro-batches, folded through the same
-    * `α·x + (1−α)·ema` recurrence, emitting `ema` once `minPeriods`
-    * observations are seen. With a single AvailableNow batch the output is
-    * exactly the batch EMA over the full series (oracle-checked as q106);
-    * across batches the state makes it incremental. Key/tie contract as
-    * [[keyedFold]]. A NULL value fails the query: pandas decays the
-    * weights across a missing bar, which this state cannot express.
+    * [[graft.ohlcv.Features.withEma]] (W4). The state is
+    * [[org.apache.spark.sql.graft.RunningEma]]'s buffer (ema, w, n),
+    * carried across micro-batches and updated by the same rule in the same
+    * operation order: a NULL or NaN bar is missing and decays the weight
+    * `w` of the carried EMA, as pandas' `ignore_na=False` does. So the
+    * output equals the batch EMA over the full series bit for bit however
+    * the input is split into micro-batches (oracle-checked as q106).
+    * Key/tie contract as [[keyedFold]].
     */
-  final case class EmaState(ema: Double, n: Long)
+  final case class EmaState(ema: Double, w: Double, n: Long)
 
   def streamingEma(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, alpha: Double, minPeriods: Int): DataFrame =
-    keyedFold("streamingEma", events, keyCol, tsCol, tieCol,
-        when(col(valCol).isNull, raise_error(lit(s"streamingEma: NULL '$valCol'")))
-          .otherwise(col(valCol)), Seq("ema"), EmaState(0.0, 0L)) { (s, v) =>
-      EmaState(if (s.n == 0L) v else alpha * v + (1 - alpha) * s.ema, s.n + 1)
-    } { s => Seq(if (s.n >= minPeriods) s.ema else null) }
+    keyedFold("streamingEma", events, keyCol, tsCol, tieCol, col(valCol), Seq("ema"),
+        EmaState(Double.NaN, 1.0, 0L)) { (s, v) =>
+      val seeded = !s.ema.isNaN
+      v.filterNot(_.isNaN) match {
+        case Some(x) =>
+          val decayed = s.w * (1 - alpha)
+          val ema =
+            if (!seeded) x
+            else if (s.w == 1.0) alpha * x + (1 - alpha) * s.ema
+            else (decayed * s.ema + alpha * x) / (decayed + alpha)
+          EmaState(ema, 1.0, s.n + 1)
+        case None => EmaState(s.ema, if (seeded) s.w * (1 - alpha) else s.w, s.n)
+      }
+    } { s => Seq(if (!s.ema.isNaN && s.n >= minPeriods) s.ema else null) }
 
   /** Streaming Holt linear-trend smoothing: the q163 batch recurrence
     * carried as [[HoltState]] across micro-batches — the same step as
     * [[graft.ohlcv.HoltWinters.withHolt]], so one AvailableNow pass over a
     * parquet stream equals the batch scan bit-for-bit (oracle q175).
-    * `level`/`trend` are NULL until `minPeriods` observations.
+    * `level`/`trend` are NULL until `minPeriods` observations. A NULL
+    * value is skipped and NaN taken as a value, as in the batch scan.
     */
   def streamingHolt(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, alpha: Double, beta: Double,
       minPeriods: Int): DataFrame =
     keyedFold("streamingHolt", events, keyCol, tsCol, tieCol, col(valCol),
         Seq("level", "trend"), HoltState(0.0, 0.0, 0L)) { (s, v) =>
-      s.step(v, alpha, beta)
+      v.fold(s)(s.step(_, alpha, beta))
     } { s => if (s.n >= minPeriods) Seq(s.l, s.b) else Seq(null, null) }
 
   /** Streaming Kalman local-level filter: the q181 recurrence carried as
     * [[KalmanState]] across micro-batches — the same step as
     * [[graft.ohlcv.HoltWinters.withKalmanLevel]], so an AvailableNow pass
-    * equals the batch scan bit-for-bit (oracle q201).
+    * equals the batch scan bit-for-bit (oracle q201). A NULL value is
+    * skipped and NaN taken as a value, as in the batch scan.
     */
   def streamingKalman(events: DataFrame, keyCol: String, tsCol: String,
       tieCol: String, valCol: String, qVar: Double, rVar: Double): DataFrame =
     keyedFold("streamingKalman", events, keyCol, tsCol, tieCol, col(valCol),
         Seq("x", "p"), KalmanState(0.0, 0.0, 0L)) { (s, v) =>
-      s.step(v, qVar, rVar)
+      v.fold(s)(s.step(_, qVar, rVar))
     } { s => if (s.n > 0) Seq(s.x, s.p) else Seq(null, null) }
 
   /** The reference's cache-merge upsert (`cdd.py:108-110`): each

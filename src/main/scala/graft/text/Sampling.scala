@@ -14,20 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Balanced stratified sample: keep each row of stratum `l` with
-    * probability `min_count / count(l)`, so every stratum's expected
-    * sampled size equals the SMALLEST stratum's size.
-    *
-    * Selection is a deterministic hash coin: row kept iff
-    * `md5Hash60(salt ':' id) mod 1e6 < floor(min_count·1e6 / count(l))`.
-    * Pure integer arithmetic end-to-end (no floating-point rate, no RNG
-    * state), so the sample is reproducible on any cluster layout, stable
-    * under re-partitioning, and oracle-checkable.
-    *
-    * Shape at 100 TB: one aggregation for the stratum histogram (tiny),
-    * broadcast back as an equi-join on the stratum key, then a codegen'd
-    * hash filter — the corpus itself is scanned once and never shuffled.
-    */
   /** Temperature-based mixture reweighting (the multilingual-LM α-sampling
     * rule: q_s ∝ p_s^α, Lample & Conneau 2019 §3.1 — α < 1 upsamples rare
     * strata without the hard floor of [[balancedSample]]).
@@ -61,6 +47,20 @@ object Sampling {
       .withColumn("q", powA(col("p")) / sum(powA(col("p"))).over(full))
   }
 
+  /** Balanced stratified sample: keep each row of stratum `l` with
+    * probability `min_count / count(l)`, so every stratum's expected
+    * sampled size equals the SMALLEST stratum's size.
+    *
+    * Selection is a deterministic hash coin: row kept iff
+    * `md5Hash60(salt ':' id) mod 1e6 < floor(min_count·1e6 / count(l))`.
+    * Pure integer arithmetic end-to-end (no floating-point rate, no RNG
+    * state), so the sample is reproducible on any cluster layout, stable
+    * under re-partitioning, and oracle-checkable.
+    *
+    * Shape at 100 TB: one aggregation for the stratum histogram (tiny),
+    * broadcast back as an equi-join on the stratum key, then a codegen'd
+    * hash filter — the corpus itself is scanned once and never shuffled.
+    */
   def balancedSample(df: DataFrame, idCol: String, stratumCol: String,
       salt: String): DataFrame = {
     val counts = df.groupBy(stratumCol).count()

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.graft.CodegenStats
 
@@ -25,13 +26,14 @@ class ProfileSpec extends SparkSpec {
     Seq("query", "master", "shuffle_partitions", "sf", "rows", "cold_s", "warm_min_s",
       "warm_spread_s", "task_s", "gc_s", "sched_delay_s", "tasks", "jobs",
       "shuffle_write_bytes", "spill_bytes", "fit_hits", "persisted_after", "cached_after",
-      "max_method_bytes", "tiers").foreach(k => assert(js.has(k), s"record lacks $k"))
+      "max_method_bytes", "tiers", "stream").foreach(k => assert(js.has(k), s"record lacks $k"))
     assert(js.get("master").asText == spark.sparkContext.master)
     assert(js.get("shuffle_partitions").asInt ==
       spark.conf.get("spark.sql.shuffle.partitions").toInt)
     assert(js.get("sf").asText == sf)
-    // q01 runs no iterative operator and reads no stored fit
+    // q01 runs no iterative operator, no streaming query and reads no stored fit
     assert(js.get("tiers").size == 0, rec.json)
+    assert(js.get("stream").size == 0 && rec.stream.runs == 0, rec.json)
     assert(rec.fitHits == 0 && js.get("fit_hits").asLong == 0, rec.json)
     assert(js.get("rows").asLong == rec.rows)
     assert(rec.tasks.jobs > 0 && js.get("jobs").asLong == rec.tasks.jobs, rec.json)
@@ -77,6 +79,15 @@ class ProfileSpec extends SparkSpec {
     assert(new ObjectMapper().readTree(warm.json).get("fit_hits").asLong == warm.fitHits)
   }
 
+  test("stream: q106's record carries its run's micro-batch count and phase times") {
+    val q = "q106_stream_ema"
+    val rec = withCounters(Profile.measure(spark, _, sf, q, SparkEntry.queries(q), warmReps = 1))
+    assert(rec.ok, rec.json)
+    val st = new ObjectMapper().readTree(rec.json).get("stream")
+    assert(st.get("runs").asLong == 1 && st.get("batches").asLong >= 1, rec.json)
+    assert(st.get("triggerExecution_ms").asLong >= st.get("addBatch_ms").asLong, rec.json)
+  }
+
   test("a failing query yields an error record with -1 timings, not an exception") {
     val failing: Profile.QueryFn = (_, _) => throw new IllegalStateException("bad \"plan\"\n")
     val rec = withCounters(Profile.measure(spark, _, sf, "failing", failing))
@@ -90,6 +101,13 @@ class ProfileSpec extends SparkSpec {
   // CacheManager entry is left for the guard to drop.
   test("every registered query at sf0.001 leaves nothing persisted after its scope closes") {
     Profile.dropPersisted(spark) // what earlier suites left is not a query's leak
+    val root = graft.streaming.StreamHarness.scratchRoot
+    def scratch(): Set[String] = {
+      val ls = java.nio.file.Files.list(root)
+      try ls.iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("graft_")).toSet
+      finally ls.close()
+    }
+    val scratchBefore = scratch()
     val recs = withCounters { c =>
       SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
         Profile.measure(spark, c, sf, n, fn, warmReps = 0)
@@ -101,6 +119,8 @@ class ProfileSpec extends SparkSpec {
     val leaked = recs.filter(r => r.persistedAfter != 0 || r.cachedAfter != 0)
       .map(r => s"${r.query}: persisted_after=${r.persistedAfter} cached_after=${r.cachedAfter}")
     assert(leaked.isEmpty, leaked.mkString("\n"))
+    val leftScratch = scratch() -- scratchBefore
+    assert(leftScratch.isEmpty, s"scratch left in $root: $leftScratch")
   }
 
   test("every Bench headline name is a registered query") {

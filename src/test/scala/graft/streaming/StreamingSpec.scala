@@ -20,7 +20,6 @@ class StreamingSpec extends SparkSpec {
     (1L to 5L).map(i => (i, i * 2.0)).toDF("k", "v")
       .repartition(2).write.parquet(base + "/t.parquet")
     val src = StreamHarness.sourceDir(base, "t")
-    // Flat links only (the file stream source does not recurse).
     assert(spark.read.parquet(src).count() == 5)
     val schema = StreamHarness.sourceSchema(spark, base, "t")
     val q = spark.readStream.schema(schema).parquet(src)
@@ -41,6 +40,8 @@ class StreamingSpec extends SparkSpec {
       (i, ts(f"2024-01-01 00:0${i % 10}:00"), i % 2, i.toDouble)))
     val schema = spark.read.parquet(dir).schema
     val before = spark.conf.get("spark.sql.shuffle.partitions")
+    // A value other than the runs' own pin, so a lost restore shows.
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -49,13 +50,36 @@ class StreamingSpec extends SparkSpec {
       Future {
         val out = StreamHarness.runMemory(
           StreamingIngest.readEvents(spark, dir, schema).select("event_id"),
-          s"conc$i", statePartitions = 2 + i)(identity)
+          s"conc$i")(identity)
         out.count()
       }
     }
-    val rows = Await.result(Future.sequence(runs), 120.seconds)
+    val rows = try Await.result(Future.sequence(runs), 120.seconds)
+      finally {
+        val after = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", before)
+        assert(after == "3")
+      }
     assert(rows.forall(_ == 8L))
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+  }
+
+  test("a file-sink run whose batch body throws stops its query and deletes its scratch") {
+    val dir = Files.createTempDirectory("graft_stream_fail").toString
+    writeBatch(dir, Seq((1L, ts("2024-01-01 00:00:00"), 1L, 1.0)))
+    val schema = spark.read.parquet(dir).schema
+    var sinkSeen: String = null
+    val e = intercept[Exception] {
+      StreamHarness.runForeachBatch(StreamingIngest.readEvents(spark, dir, schema), "fail") {
+        (_, _, sink) =>
+          sinkSeen = sink
+          throw new IllegalStateException("batch body failed")
+      }(sink => spark.read.parquet(sink))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("batch body failed")), e.toString)
+    assert(sinkSeen != null)
+    assert(spark.streams.active.isEmpty)
+    assert(!Files.exists(java.nio.file.Paths.get(sinkSeen).getParent))
   }
 
   test("tumblingOhlcv streams windowed OHLCV aggregates") {
@@ -129,6 +153,47 @@ class StreamingSpec extends SparkSpec {
     val second = spark.read.parquet(out).orderBy("ts").select("ema")
       .collect().map(_.getDouble(0))
     assert(second.toSeq == Seq(10.0, 15.0, 25.0)) // 0.5·35 + 0.5·15 — not a fresh seed
+  }
+
+  test("streamingEma reads NULL and NaN bars as withEma does, in one or two micro-batches") {
+    val rows = Seq(
+      (1L, ts("2024-01-01 00:00:00"), 1L, Option(10.0)), (2L, ts("2024-01-01 00:01:00"), 2L, None),
+      (3L, ts("2024-01-01 00:02:00"), 1L, None), (4L, ts("2024-01-01 00:03:00"), 2L, Option(7.5)),
+      (5L, ts("2024-01-01 00:04:00"), 1L, Option(Double.NaN)), (6L, ts("2024-01-01 00:05:00"), 2L, Option(8.25)),
+      (7L, ts("2024-01-01 00:06:00"), 1L, Option(13.0)), (8L, ts("2024-01-01 00:07:00"), 2L, Option(Double.NaN)),
+      (9L, ts("2024-01-01 00:08:00"), 1L, Option(12.5)), (10L, ts("2024-01-01 00:09:00"), 2L, Option(9.0)),
+      (11L, ts("2024-01-01 00:10:00"), 1L, None), (12L, ts("2024-01-01 00:11:00"), 1L, Option(11.0)))
+    def write(dir: String, part: Seq[(Long, Timestamp, Long, Option[Double])]): Unit =
+      part.toDF("event_id", "ts", "user_id", "value").coalesce(1).write.mode("append").parquet(dir)
+    val (alpha, minPeriods) = (0.4, 2)
+    def bits(rows: Seq[(Long, Long, Option[Double])]) =
+      rows.map { case (k, t, e) => (k, t, e.map(java.lang.Double.doubleToRawLongBits)) }
+    val all = Files.createTempDirectory("graft_ema_all").toString
+    write(all, rows)
+    val batch = bits(graft.ohlcv.Features.withEma(spark.read.parquet(all), "user_id", "ts", "value",
+        Seq(("ema", alpha, minPeriods)))
+      .select(col("user_id"), unix_micros(col("ts")), col("ema"))
+      .as[(Long, Long, Option[Double])].collect().toSeq.sorted)
+    assert(batch.length == rows.length && batch.exists(_._3.isEmpty) && batch.exists(_._3.nonEmpty))
+    for (split <- Seq(rows.length, 5)) {
+      val src = Files.createTempDirectory("graft_ema_src").toString
+      val ckpt = Files.createTempDirectory("graft_ema_ckpt").toString
+      val out = Files.createTempDirectory("graft_ema_out").toString + "/table"
+      val schema = spark.read.parquet(all).schema
+      for (part <- Seq(rows.take(split), rows.drop(split)) if part.nonEmpty) {
+        write(src, part)
+        val q = StreamingIngest.streamingEma(StreamingIngest.readEvents(spark, src, schema),
+            "user_id", "ts", "event_id", "value", alpha, minPeriods).writeStream
+          .option("checkpointLocation", ckpt)
+          .outputMode(OutputMode.Append).trigger(Trigger.AvailableNow())
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.write.mode("append").parquet(out); ()
+          }.start()
+        assert(q.awaitTermination(60000)); q.stop()
+      }
+      val streamed = spark.read.parquet(out).as[(Long, Long, Option[Double])].collect().toSeq.sorted
+      assert(bits(streamed) == batch, s"split at $split")
+    }
   }
 
   test("streamingHolt and streamingKalman over two micro-batches equal the batch scans bit for bit") {
